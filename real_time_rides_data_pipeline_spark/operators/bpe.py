@@ -108,31 +108,38 @@ def train_bpe(
     # sizes the loop session: a vocab-sized table iterates in a narrow
     # clone (AQE off, width ~rows/250k — the CC star-loop pattern); the
     # argmax rows are plain Python literals, so nothing needs rebinding
-    # back to the parent. Measured (scripts/ab_bpe_clone.py, in-process
-    # interleaved min-of-4, count included in the clone leg):
+    # back to the parent. Measured (in-process interleaved min-of-4,
+    # count included in the clone leg):
     # q_bpe_train 2.08 → 1.79 s, clone faster on every rep.
     n_words = words.count()
     w = words
     if 0 < n_words <= NARROW_LOOP_ROWS:
         w, _parent, _rebind = narrow_loop_session(words, n_words)
-    seg = w.select(F.col("n"), chars_of("word").alias("seg"))
-    merges: list[tuple[int, str, str, str, int]] = []
-    for step in range(1, n_merges + 1):
-        best = (
-            seg.select(
-                "n", F.explode(adjacent_pairs(F.col("seg"))).alias("p")
+    try:
+        seg = w.select(F.col("n"), chars_of("word").alias("seg"))
+        merges: list[tuple[int, str, str, str, int]] = []
+        for step in range(1, n_merges + 1):
+            best = (
+                seg.select(
+                    "n", F.explode(adjacent_pairs(F.col("seg"))).alias("p")
+                )
+                .groupBy("p.l", "p.r")
+                .agg(F.sum("n").alias("freq"))
+                .orderBy(
+                    F.col("freq").desc(), F.col("l").asc(), F.col("r").asc()
+                )
+                .limit(1)
+                .collect()  # bounded: exactly one argmax row per round
             )
-            .groupBy("p.l", "p.r")
-            .agg(F.sum("n").alias("freq"))
-            .orderBy(
-                F.col("freq").desc(), F.col("l").asc(), F.col("r").asc()
-            )
-            .limit(1)
-            .collect()  # bounded: exactly one argmax row per round
-        )
-        if not best:
-            break
-        l, r, freq = best[0]["l"], best[0]["r"], int(best[0]["freq"])
-        merges.append((step, l, r, l + r, freq))
-        seg = seg.select("n", merge_pair(F.col("seg"), l, r).alias("seg"))
+            if not best:
+                break
+            l, r, freq = best[0]["l"], best[0]["r"], int(best[0]["freq"])
+            merges.append((step, l, r, l + r, freq))
+            seg = seg.select("n", merge_pair(F.col("seg"), l, r).alias("seg"))
+    finally:
+        # Release the checkpoint's RDD blocks once the merges are on the
+        # driver: DataFrame.unpersist only reaches the CacheManager, and a
+        # localCheckpoint's blocks otherwise live as long as the
+        # SparkContext, one set per call.
+        words._jdf.queryExecution().analyzed().rdd().unpersist(False)
     return merges

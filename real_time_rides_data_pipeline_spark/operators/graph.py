@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from real_time_rides_data_pipeline_spark.session import narrow_loop_session
+
 
 def connected_components(
     vertices: DataFrame,
@@ -136,51 +138,6 @@ def _signature(e: DataFrame) -> tuple[int, int]:
 #: one task many times over below this bound. Above it, the parent session
 #: (default width, AQE on — the 100 TB configuration) is used unchanged.
 _NARROW_LOOP_EDGES = 500_000
-#: Star rounds executed between convergence-signature driver syncs.
-#: MEASURED (round 15, in-process interleaved A/B on the materialized
-#: semdedup/minhash pair graphs, scripts/cc_batch_ab.py): batching 2
-#: rounds per sync LOSES — mh min 1.86 s at batch=1 vs 2.95 s at
-#: batch=2, sd 4.33 vs 5.69 — because convergence detection then costs
-#: a whole redundant no-op BATCH (2 extra star rounds) while a
-#: signature sync costs only one small aggregate job; per-round rewrite
-#: work dominates the sync at every graph size tried. Kept as a
-#: parameter with the measured answer pinned to 1.
-_ROUNDS_PER_SYNC = 1
-#: First star round whose convergence signature is checked. Rounds before
-#: this stay LAZY (their localCheckpoint materializes inside the first
-#: checked round's aggregate cascade), so each skipped check saves one
-#: driver round-trip + one aggregate job. Convergence detection compares
-#: CONSECUTIVE signatures, so a graph whose fixpoint lands before this
-#: round is detected one round late — a redundant no-op round.
-#: MEASURED (round 16, scripts/ab_cc_syncskip.py, in-process interleaved
-#: min-of-4 on the materialized sf0.1 pair graphs): skipping is pinned
-#: OFF (=1) because no safe skip bound derives from graph size — the
-#: 920-edge semdedup graph needs 6 rounds while the 1358-edge minhash
-#: graph converges in 2 (edge count ANTICORRELATES with depth here), a
-#: skipped sync saves only ~0.07 s (sd start=3: 3.01→2.79 s, 7→5 sigs)
-#: while one overshoot round costs ~0.4-0.8 s (mh start=3: 1.35→2.17 s).
-_FIRST_SYNC_ROUND = 1
-
-
-def _loop_session(df: DataFrame, n_edges: int):
-    """Return ``df`` rebound to a session sized for an ``n_edges``-edge
-    iteration, plus a ``rebind(frame)`` to hand results back to the parent
-    — session.narrow_loop_session, shared with the BPE fit loop.
-
-    Kept and re-vindicated in round 16 (VERDICT item 1 asked for the A/B):
-    scripts/ab_cc_clone.py ran the REAL registered CC queries under
-    bench.py's protocol, clone vs parent-session loop, in-process
-    interleaved min-of-4 — clone wins on q_semdedup (6.85 vs 8.39 s) and
-    q_dup_clusters (2.91 vs 5.01 s), ties q_minhash_cc_clusters (3.78 vs
-    3.77 s). The round-15 driver's 10.6 s q_semdedup reading was host
-    regime, not the clone: byte-identical code read 7.37 s in this
-    round's full-bench baseline an hour after the driver's run."""
-    from real_time_rides_data_pipeline_spark.session import (
-        narrow_loop_session,
-    )
-
-    return narrow_loop_session(df, n_edges)
-
 
 def _cc_star(
     e: DataFrame, max_iter: int, assume_distinct: bool = False
@@ -197,34 +154,21 @@ def _cc_star(
         return edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
     parent = rebind = None
     if sig[0] <= _NARROW_LOOP_EDGES:
-        edges, parent, rebind = _loop_session(edges, sig[0])
+        edges, parent, rebind = narrow_loop_session(edges, sig[0])
     orig = edges  # checkpointed — reused by the final consistency gate
     converged = False
-    rounds_done = 0
-    for _ in range((max_iter + _ROUNDS_PER_SYNC - 1) // _ROUNDS_PER_SYNC):
-        # _ROUNDS_PER_SYNC alternating star rounds per driver sync: each
-        # signature check is a full driver round-trip, and rounds past
-        # the fixed point are no-ops (large-star/small-star map a fixed
-        # point to itself), so batching trades at most one redundant
-        # cheap batch for fewer syncs. EVERY round stays individually
-        # localCheckpoint'd (lazy): each star rewrite references its
-        # input from MULTIPLE subtrees (sym twice in large-star, oriented
-        # three times in small-star), so an uncheckpointed intermediate
-        # round is recomputed several times inside the next round's DAG —
-        # measured as a 2x regression when the intermediate checkpoint
-        # was dropped. The single signature aggregate below materializes
-        # the lazily-persisted chain in one job cascade — one driver
-        # round-trip per batch.
-        for _r in range(_ROUNDS_PER_SYNC):
-            edges = _small_star(_large_star(edges)).localCheckpoint(
-                eager=False
-            )
-            rounds_done += 1
-        if rounds_done < _FIRST_SYNC_ROUND:
-            # Known-unconverged regime: no signature job; this round's
-            # (still lazily-persisted) chain materializes inside the
-            # first checked round's aggregate.
-            continue
+    for _ in range(max_iter):
+        # One alternating star round per driver sync (batching rounds per
+        # sync and skipping early syncs both measured as losses: a sync is
+        # one small aggregate job, a redundant no-op round is a full
+        # rewrite). EVERY round is individually localCheckpoint'd (lazy):
+        # each star rewrite references its input from MULTIPLE subtrees
+        # (sym twice in large-star, oriented three times in small-star),
+        # so an uncheckpointed round is recomputed several times inside
+        # the next round's DAG — measured as a 2x regression when the
+        # intermediate checkpoint was dropped. The signature aggregate
+        # below materializes the round in one job cascade.
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
         new_sig = _signature(edges)
         if new_sig == sig:
             converged = True

@@ -928,9 +928,10 @@ def q_bpe_encode(spark, sf_dir):
     ).filter(F.length("word") > 0)
     # The weighted word table feeds BOTH the fit (4 argmax rounds) and the
     # encode join below; localCheckpoint so the scan + explode + count
-    # aggregation runs once — train_bpe's persist then materializes
-    # through the checkpoint, and `enc` reuses the truncated plan instead
-    # of re-deriving the corpus wordcount (2 scans/explodes → 1).
+    # aggregation runs once — train_bpe's own eager localCheckpoint and
+    # count() materialize this lazy checkpoint, and `enc` reuses the
+    # truncated plan instead of re-deriving the corpus wordcount
+    # (2 scans/explodes → 1).
     words = (
         dw.groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))

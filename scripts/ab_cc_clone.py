@@ -1,9 +1,10 @@
 #!/usr/bin/env python
-"""In-process interleaved A/B: the CC _loop_session narrow clone ON vs OFF.
+"""In-process interleaved A/B: the CC narrow_loop_session clone ON vs OFF.
 
 Round-16 VERDICT item 1: q_semdedup read 10.6 s (c32) / 10.3 s (c8) in
 both driver runs vs 6.59 s in round 14; prime suspect is the
-per-invocation session clone (operators/graph.py:_loop_session). This
+per-invocation session clone (session.narrow_loop_session, called from
+operators/graph.py:_cc_star). This
 script runs the REAL registered queries (q_semdedup,
 q_minhash_cc_clusters, q_dup_clusters) exactly the way bench.py does
 (full fn from the registry, noop sink, unpersist-all after each), and

@@ -197,6 +197,45 @@ def test_connected_components_raises_on_non_convergence(spark):
         assert got == {i: 0 for i in range(6)}, algorithm
 
 
+def test_loop_threshold_keeps_cc_labels_and_bpe_merges(spark, monkeypatch):
+    """The star CC loop and the BPE fit iterate in a narrow session clone
+    below their row thresholds and in the caller's session above them:
+    both sides must give the same labels and merges, and the BPE fit must
+    release the RDD blocks of its word-table checkpoint."""
+    from real_time_rides_data_pipeline_spark import session
+    from real_time_rides_data_pipeline_spark.operators import graph
+    from real_time_rides_data_pipeline_spark.operators.bpe import train_bpe
+
+    vertices = spark.createDataFrame([(i,) for i in range(9)], "id long")
+    edges = spark.createDataFrame(
+        [(3, 2), (2, 1), (1, 0), (4, 5), (8, 7)], "src long, dst long"
+    )
+    words = spark.createDataFrame(
+        [("lower", 5), ("lowest", 2), ("newer", 6), ("wider", 3)],
+        "word string, n long",
+    )
+    def persistent_ids():
+        # ids, not a count: the ContextCleaner may drop other tests' RDDs
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def run():
+        labels = {
+            r.id: r.component
+            for r in graph.connected_components(vertices, edges).collect()
+        }
+        before = persistent_ids()
+        merges = train_bpe(words, n_merges=4)
+        assert not persistent_ids() - before, "train_bpe leaked its checkpoint"
+        return labels, merges
+
+    narrow = run()
+    assert narrow[0] == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 6, 7: 7, 8: 7}
+    assert len(narrow[1]) == 4
+    monkeypatch.setattr(graph, "_NARROW_LOOP_EDGES", 0)
+    monkeypatch.setattr(session, "NARROW_LOOP_ROWS", 0)
+    assert run() == narrow
+
+
 def test_kmeans_fit_is_deterministic_and_spherical(spark):
     from real_time_rides_data_pipeline_spark.operators import similarity as SIM
 
