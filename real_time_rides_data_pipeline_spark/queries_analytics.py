@@ -58,6 +58,7 @@ from real_time_rides_data_pipeline_spark.operators.joins import (
 from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
 from real_time_rides_data_pipeline_spark.session import scoped_writer_session
+from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
 
 # =========================================================================
 # Referential-integrity audit
@@ -510,17 +511,11 @@ def q_stream_decayed(spark, sf_dir):
     # pinned on a per-writer session clone, never the shared session conf
     writer = scoped_writer_session(spark, shuffle_partitions=16)
     stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
-    q = (
+    run_to_completion(
         foreach_batch_merge(
             running_decayed_scores(stream), out, ckpt, keys=("event_id",)
         )
-        .outputMode("update")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
         spark.read.parquet(out)
         .select("event_id", "user_id", "decayed")
@@ -1210,16 +1205,10 @@ def q_stream_ohlc(spark, sf_dir):
             num_partitions=8,
         )
 
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     bars = spark.read.parquet(state)
     return bars.select(
         "event_type",

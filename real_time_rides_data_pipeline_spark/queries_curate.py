@@ -26,6 +26,7 @@ from real_time_rides_data_pipeline_spark.functions import text as X
 from real_time_rides_data_pipeline_spark.functions.precision import cents
 from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
+from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
 
 # =========================================================================
 # Modern SQL surface: VARIANT JSON, LATERAL subquery
@@ -2125,16 +2126,10 @@ def q_stream_quantile_merge(spark, sf_dir):
             batch_id=batch_id,
         )
 
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     m = spark.read.parquet(state).select("bin", "n")
     w_cum = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
@@ -2310,16 +2305,10 @@ def q_stream_sliding_distinct(spark, sf_dir):
             batch_id=batch_id,
         )
 
-    q = (
+    run_to_completion(
         member.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     return spark.read.parquet(state).select(
         "window_start",

@@ -27,6 +27,7 @@ from real_time_rides_data_pipeline_spark.operators import textdedup as TD
 from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
 from real_time_rides_data_pipeline_spark.session import scoped_writer_session
+from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
 
 # =========================================================================
 # JSON extraction / as-of (SURVEY §2.9 q_json_extract, q_asof_latest)
@@ -1543,17 +1544,11 @@ def q_stateful_running(spark, sf_dir):
     # Pinned on a per-WRITER session clone, never the shared session conf.
     writer = scoped_writer_session(spark, shuffle_partitions=16)
     stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
-    q = (
+    run_to_completion(
         foreach_batch_merge(
             running_user_stats(stream), out, ckpt, keys=("user_id",)
         )
-        .outputMode("update")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(out)
 
 
@@ -1654,17 +1649,11 @@ def q_stream_dedup_ttl(spark, sf_dir):
         stream, keys=("event_id", "ts"), event_time_col="ts",
         watermark="45 days",
     )
-    q = (
+    run_to_completion(
         deduped.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(out)
 
 
@@ -1767,17 +1756,11 @@ def q_watermark(spark, sf_dir):
     writer = scoped_writer_session(spark, shuffle_partitions=2)
     stream = parquet_stream(writer, inp, schema, max_files_per_trigger=1)
     deduped = stream_dedup(stream, keys=("event_id", "ts"), event_time_col="ts")
-    q = (
+    run_to_completion(
         deduped.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(out)
 
 
@@ -1818,16 +1801,11 @@ def q_output_complete(spark, sf_dir):
         fare_col="value",
     ).withColumnRenamed("user_id", "driver_id")
     name = f"complete_out_{uuid.uuid4().hex[:8]}"
-    q = (
+    run_to_completion(
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # Memory sink registers its view in the session that STARTED the query.
     return writer.table(name)
 
@@ -1861,16 +1839,10 @@ def q_stream_dim_join(spark, sf_dir):
         stream, cust, on=stream.user_id == cust.c_custkey, how="left"
     ).select("event_id", "user_id", "c_name", "c_mktsegment")
     name = f"sdjoin_out_{uuid.uuid4().hex[:8]}"
-    q = (
+    run_to_completion(
         joined.writeStream.format("memory")
         .queryName(name)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 
@@ -1938,16 +1910,10 @@ def q_stream_stream_join(spark, sf_dir):
     # Width 8 (sweep: 4→3.7s, 8→4.2s, 16→3.9s, 32→5.7s at sf0.1) keeps 2×8
     # state-store instances instead of 2×32 for a few thousand buffered
     # rows.
-    q = (
+    run_to_completion(
         joined.writeStream.format("memory")
         .queryName(name)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return writer.table(name)
 
 
@@ -2076,16 +2042,10 @@ def q_stream_stream_join_outer(spark, sf_dir):
         )
     )
     name = f"ssjout_out_{uuid.uuid4().hex[:8]}"
-    q = (
+    run_to_completion(
         joined.writeStream.format("memory")
         .queryName(name)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # Sentinel rows (negative user ids) are dropped from the sink table —
     # a batch filter, safely pushable here.
     return writer.table(name).filter(F.col("user_id") >= 0)
@@ -2215,17 +2175,11 @@ def q_tws_top_values(spark, sf_dir):
     ev.repartition(2).write.parquet(inp)  # 2 files → 2 micro-batches
     writer = scoped_writer_session(spark, shuffle_partitions=8)
     stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
-    q = (
+    run_to_completion(
         foreach_batch_merge(
             running_top_values(stream), out, ckpt, keys=("user_id",)
         )
-        .outputMode("update")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(out)
 
 
@@ -2800,19 +2754,13 @@ def q_schema_evolve_stream(spark, sf_dir):
     # Stateless append streams: width irrelevant, keep the tiny default.
     writer = scoped_writer_session(spark, shuffle_partitions=2)
     for i, (src, schema) in enumerate(((in1, v1.schema), (in2, v2.schema))):
-        q = (
+        run_to_completion(
             parquet_stream(writer, src, schema, max_files_per_trigger=1)
             .writeStream.foreachBatch(
                 lambda bdf, _bid: bdf.write.mode("append").parquet(out)
             )
             .option("checkpointLocation", f"{work}/cp{i}")
-            .outputMode("append")
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     return spark.read.option("mergeSchema", "true").parquet(out)
 
 
@@ -2859,25 +2807,17 @@ def q_stream_restart_recovery(spark, sf_dir):
     def sink(bdf, _bid):
         bdf.write.mode("append").parquet(out)
 
-    def run_once():
-        q = (
-            parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    run_once()  # run 1: commits batch 0 (the first half)
+    replay = (
+        parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+    )
+    run_to_completion(replay)  # run 1: commits batch 0 (the first half)
     # New data lands while the query is down.
     ev.filter(F.col("event_id") % 8 == 7).coalesce(1).write.mode(
         "append"
     ).parquet(inp)
-    run_once()  # restart, SAME checkpoint: resumes past batch 0
+    run_to_completion(replay)  # restart, SAME checkpoint: resumes past batch 0
     return spark.read.parquet(out)
 
 
@@ -2936,24 +2876,22 @@ def q_stream_restart_evolve(spark, sf_dir):
     v1.coalesce(1).write.parquet(inp)
     writer = scoped_writer_session(spark, shuffle_partitions=2)
 
-    def run_once(schema):
-        q = (
-            parquet_stream(writer, inp, schema, max_files_per_trigger=1)
-            .writeStream.foreachBatch(
-                lambda bdf, _bid: bdf.write.mode("append").parquet(out)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    def sink(bdf, _bid):
+        bdf.write.mode("append").parquet(out)
 
-    run_once(v1.schema)  # run 1: commits the v1 file under ckpt
+    # run 1: commits the v1 file under ckpt
+    run_to_completion(
+        parquet_stream(writer, inp, v1.schema, max_files_per_trigger=1)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+    )
     # The schema change lands while the query is down (a deploy):
     # a v2 file with the new column appears in the SAME source dir.
     v2.coalesce(1).write.mode("append").parquet(inp)
-    run_once(v2.schema)  # RESTART: same checkpoint, evolved schema
+    # RESTART: same checkpoint, evolved schema
+    run_to_completion(
+        parquet_stream(writer, inp, v2.schema, max_files_per_trigger=1)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+    )
     return spark.read.option("mergeSchema", "true").parquet(out)

@@ -109,6 +109,7 @@ from real_time_rides_data_pipeline_spark.functions import text as X
 from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
 from real_time_rides_data_pipeline_spark.session import scoped_writer_session
+from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
 
 # =========================================================================
 # Dataset-mix health: exact rational Gini impurity
@@ -442,16 +443,10 @@ def q_stream_cms_merge(spark, sf_dir):
             batch_id=batch_id,
         )
 
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     sketch = spark.read.parquet(state)
     tok = d.select(F.explode(X.tokens(F.col("text"))).alias("term"))
     return _cms_attest(tok, sketch)
@@ -695,16 +690,10 @@ def q_stream_session(spark, sf_dir):
         )
     )
     name = f"sesstream_{uuid.uuid4().hex[:8]}"
-    q = (
+    run_to_completion(
         sessions.writeStream.format("memory")
         .queryName(name)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return writer.table(name).filter(F.col("user_id") >= 0)
 
 
@@ -1082,8 +1071,6 @@ def q_clamped_running_balance(spark, sf_dir):
     "late-data SLOs are enforced at any scale.",
 )
 def q_stream_late_metrics(spark, sf_dir):
-    import json
-
     from real_time_rides_data_pipeline_spark.operators import stream_dedup
     from real_time_rides_data_pipeline_spark.queries_ext import (
         _wm_staged_input,
@@ -1102,22 +1089,15 @@ def q_stream_late_metrics(spark, sf_dir):
     writer = scoped_writer_session(spark, shuffle_partitions=2)
     stream = parquet_stream(writer, inp, schema, max_files_per_trigger=1)
     deduped = stream_dedup(stream, keys=("event_id", "ts"), event_time_col="ts")
-    q = (
+    q = run_to_completion(
         deduped.writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-        progress = [json.loads(p.json) for p in q.recentProgress]
-    finally:
-        q.stop()
     n_dropped = sum(
-        so.get("numRowsDroppedByWatermark", 0)
-        for p in progress
-        for so in p.get("stateOperators", [])
+        so.numRowsDroppedByWatermark
+        for p in q.recentProgress
+        for so in p.stateOperators
     )
     n_output = spark.read.parquet(out).count()
     return spark.createDataFrame(
@@ -1415,16 +1395,10 @@ def q_stream_kmv(spark, sf_dir):
             batch_id=batch_id,
         )
 
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     # The folded sketch feeds EIGHT downstream references (est_a, est_b,
     # the union's two sides, and the intersection's ta/tb/common joins) —
@@ -1571,16 +1545,10 @@ def q_stream_leaderboard(spark, sf_dir):
             batch_id=batch_id,
         )
 
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     board = spark.read.parquet(state)
     w = W.partitionBy("event_type").orderBy(F.col("pk").desc())
     return board.select(

@@ -102,6 +102,7 @@ from real_time_rides_data_pipeline_spark.functions.vectors import as_double
 from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
 from real_time_rides_data_pipeline_spark.session import scoped_writer_session
+from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
 
 _KNUTH = 2654435761
 
@@ -214,16 +215,10 @@ def q_stream_linreg(spark, sf_dir):
             batch_id=batch_id,
         )
 
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return _linreg_solve(spark.read.parquet(state))
 
 
@@ -4101,16 +4096,10 @@ def q_stream_srm(spark, sf_dir):
             batch_id=batch_id,
         )
 
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return _srm_from_counts(
         spark.read.parquet(state).select("event_type", "n_arm0", "n_arm1")
     )

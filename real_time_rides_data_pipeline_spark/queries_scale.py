@@ -30,6 +30,7 @@ from real_time_rides_data_pipeline_spark.functions.precision import cents
 from real_time_rides_data_pipeline_spark.operators.clean import KNUTH_MULT
 from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
+from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
 
 # =========================================================================
 # Bloom-prefiltered decontamination
@@ -765,16 +766,10 @@ def q_cdc_stream(spark, sf_dir):
         )
 
     stream = parquet_stream(spark, inp, ev.schema, max_files_per_trigger=1)
-    q = (
+    run_to_completion(
         stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("append")
         .option("checkpointLocation", ckpt)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
         spark.read.parquet(target)
         .filter(F.col("last_op") != "error")
@@ -1537,16 +1532,10 @@ def q_stream_ivm_retract(spark, sf_dir):
             batch_id=batch_id,
         )
 
-    q = (
+    run_to_completion(
         ops.writeStream.foreachBatch(fold)
         .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
     return (
         spark.read.parquet(state)

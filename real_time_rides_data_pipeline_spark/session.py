@@ -170,8 +170,8 @@ _WRITER_CONF_KEYS = (
 #: per-query-stage planning latency, and a tiny working set on a wide
 #: shuffle pays scheduling for empty partitions. Above the bound the
 #: parent session (default width, AQE on — the 100 TB configuration) is
-#: used unchanged. Measured round 15/16: CC keys (ab_cc_clone.py,
-#: q_semdedup 6.85 vs 8.39 s, q_dup_clusters 2.91 vs 5.01 s) and the BPE
+#: used unchanged. Measured round 15/16 (OPTIMIZATION_r16.md): CC keys
+#: (q_semdedup 6.85 vs 8.39 s, q_dup_clusters 2.91 vs 5.01 s) and the BPE
 #: fit (1.79 vs 2.08 s) all favor the clone at fixture scale.
 NARROW_LOOP_ROWS = 500_000
 _NARROW_VIEW_SEQ = 0

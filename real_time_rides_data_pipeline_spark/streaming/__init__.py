@@ -1,10 +1,2 @@
-"""Streaming wiring re-exports (pipeline lives one level up for the
-batch/stream-unified transforms; this package holds stream-only helpers)."""
-
-from real_time_rides_data_pipeline_spark.pipeline import (
-    run_streaming_gold,
-    run_streaming_silver,
-)
-from real_time_rides_data_pipeline_spark.streaming.replay import replay_stream
-
-__all__ = ["run_streaming_silver", "run_streaming_gold", "replay_stream"]
+"""Stream-only helpers (the batch/stream-unified medallion transforms live
+one level up in ``pipeline.py``)."""

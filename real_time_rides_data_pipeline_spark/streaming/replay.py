@@ -1,32 +1,25 @@
-"""Micro-batch replay: drive any streaming query from a parquet directory,
-one file per trigger — the local stand-in for a Kafka topic (tests,
-benchmarks, backfills).
+"""Bounded stream runs over a file replay (tests, benchmarks, backfills):
+start a query, drain every available micro-batch, stop it — plus the
+sentinel file that flushes a watermark.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
-
-
-def replay_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema: T.StructType,
-    files_per_trigger: int = 1,
-) -> DataFrame:
-    return parquet_stream(spark, input_dir, schema, files_per_trigger)
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
-def run_to_completion(query) -> None:
-    """Process every available micro-batch synchronously, then stop —
-    deterministic stream execution for tests."""
+def run_to_completion(writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer``, process every available micro-batch synchronously,
+    then stop the query (also when a batch fails, whose
+    ``StreamingQueryException`` propagates). Returns the stopped query:
+    its ``recentProgress`` stays readable after the stop."""
+    query = writer.start()
     try:
         query.processAllAvailable()
     finally:
         query.stop()
+    return query
 
 
 def append_sentinel_file(

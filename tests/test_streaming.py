@@ -25,6 +25,7 @@ from real_time_rides_data_pipeline_spark.pipeline import (
 from real_time_rides_data_pipeline_spark.schemas import BRONZE_SCHEMA
 from real_time_rides_data_pipeline_spark.sinks import merge_upsert_parquet
 from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
+from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
 
 N_EVENTS = 600
 
@@ -1150,3 +1151,68 @@ def test_restart_evolve_one_checkpoint_two_schemas(spark, workdir):
         .collect()
     }
     assert rows == {(1, None), (2, None), (3, "s3")}, rows
+
+
+def _two_batch_replay(spark, work):
+    """A 2-file parquet directory replayed one file per trigger: 2 batches."""
+    inp = f"{work}/in"
+    for lo in (0, 10):
+        spark.range(lo, lo + 10).coalesce(1).write.mode("append").parquet(inp)
+    return parquet_stream(
+        spark, inp, spark.range(0).schema, max_files_per_trigger=1
+    )
+
+
+def test_run_to_completion_drains_then_stops(spark, workdir):
+    """The helper starts the writer, drains every available batch, stops
+    the query, and hands it back with its progress still readable."""
+    work = f"{workdir}/rtc_drain"
+    seen = []
+    q = run_to_completion(
+        _two_batch_replay(spark, work)
+        .writeStream.foreachBatch(lambda bdf, bid: seen.append((bid, bdf.count())))
+        .option("checkpointLocation", f"{work}/ckpt")
+    )
+    assert not q.isActive
+    assert [p.batchId for p in q.recentProgress] == [0, 1]
+    assert seen == [(0, 10), (1, 10)]
+
+
+def test_run_to_completion_stops_a_failed_query(spark, workdir):
+    """A batch that raises surfaces as StreamingQueryException, and the
+    query is stopped rather than left running in the session."""
+    from pyspark.errors import StreamingQueryException
+
+    work = f"{workdir}/rtc_fail"
+    name = "rtc_fail_on_batch_1"
+
+    def sink(bdf, bid):
+        if bid == 1:
+            raise RuntimeError("injected failure on batch 1")
+
+    with pytest.raises(StreamingQueryException, match="injected failure"):
+        run_to_completion(
+            _two_batch_replay(spark, work)
+            .writeStream.foreachBatch(sink)
+            .queryName(name)
+            .option("checkpointLocation", f"{work}/ckpt")
+        )
+    assert name not in {q.name for q in spark.streams.active}
+
+
+def test_query_modules_leave_stream_lifecycle_to_the_helper():
+    """Bounded streams in the registry start, drain and stop only through
+    ``streaming.replay.run_to_completion``: no query module drains a
+    query by hand."""
+    import glob
+
+    import real_time_rides_data_pipeline_spark as pkg
+
+    pkg_dir = os.path.dirname(pkg.__file__)
+    hits = {}
+    for path in sorted(glob.glob(f"{pkg_dir}/queries*.py")):
+        with open(path) as f:
+            n = f.read().count("processAllAvailable(")
+        if n:
+            hits[os.path.basename(path)] = n
+    assert hits == {}
