@@ -31,6 +31,63 @@ def sf_from_dir(path: str) -> float:
     return float(m.group(1).rstrip(".")) if m else -1.0
 
 
+def release_persisted(spark) -> None:
+    """Unpersist every persistent RDD in the process.
+
+    Frees the localCheckpoint RDDs a query pinned (embed_neardup,
+    mad_outlier, pmi_bigrams, bloom_decontaminate, ...): without this
+    every invocation leaks pinned blocks and two full passes accumulate
+    dozens — measured 2026-08-14: q_struct_star 1.20s in a leaking
+    158-key suite vs 0.38s with per-key cleanup.
+
+    CONSTRAINT: this drops EVERY persistent RDD in the process, so no
+    cross-invocation cache may ever memoize a localCheckpoint'd /
+    persisted DataFrame (truncated lineage + evicted blocks =
+    unrecoverable on reuse). Today's input-staging dicts
+    (_REPLAY_INPUTS, _CSV_ENCODE_DIRS, the ssjout/_PARTITIONED/
+    _BUCKETED layout paths) hold only paths / plain Python values —
+    keep it that way, or snapshot RDD ids before the run and unpersist
+    only the new ones. (Result memos of any kind are banned outright —
+    see tests/test_ml.py::test_fit_helpers_have_no_memo.)
+    """
+    jm = spark.sparkContext._jsc.getPersistentRDDs()
+    if jm.size():
+        it = jm.entrySet().iterator()
+        while it.hasNext():
+            it.next().getValue().unpersist(False)
+
+
+def run_key(spark, df) -> None:
+    """Force ``df`` end-to-end through the ``noop`` sink, then release
+    whatever it pinned."""
+    df.write.format("noop").mode("overwrite").save()
+    release_persisted(spark)
+
+
+def timed_passes(
+    spark, specs, keys, sf_dir: str, reps: int
+) -> dict[str, list[float]]:
+    """Warm up on ``q_window_hourly_agg`` (JVM JIT + codegen + parquet
+    footer caches), then time ``reps`` INTERLEAVED passes over ``keys``
+    (a pass runs each key once). Returns the seconds of each pass per key.
+
+    Back-to-back per-key reps share any sustained host stall window
+    (measured 2026-08-14 on a shared host: q_embed_neardup 5→33 s
+    across full runs with zero code change — both adjacent reps inside
+    the window, so plain min-of-2 kept 33 s); a key's passes here run
+    minutes apart, so a stall window hits different keys in each pass and
+    the min cancels it (min is safe under additive noise — it never
+    underestimates). Total cost identical to per-key min-of-N."""
+    run_key(spark, specs["q_window_hourly_agg"].fn(spark, sf_dir))
+    passes: dict[str, list[float]] = {k: [] for k in keys}
+    for _ in range(reps):
+        for key in keys:
+            t0 = time.perf_counter()
+            run_key(spark, specs[key].fn(spark, sf_dir))
+            passes[key].append(time.perf_counter() - t0)
+    return passes
+
+
 def main() -> None:
     from real_time_rides_data_pipeline_spark.session import get_spark
     from real_time_rides_data_pipeline_spark.queries import registry
@@ -44,52 +101,14 @@ def main() -> None:
     missing = [k for k in flagship if k not in specs]
     assert not missing, f"flagship keys missing from registry: {missing}"
 
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-        # Unpersist localCheckpoint RDDs the query pinned (embed_neardup,
-        # mad_outlier, pmi_bigrams, bloom_decontaminate, ...): without this
-        # every invocation leaks pinned blocks and two full passes
-        # accumulate dozens — measured 2026-08-14: q_struct_star 1.20s in
-        # a leaking 158-key suite vs 0.38s with per-key cleanup.
-        # CONSTRAINT: this drops EVERY persistent RDD in the process, so no
-        # cross-invocation cache may ever memoize a localCheckpoint'd /
-        # persisted DataFrame (truncated lineage + evicted blocks =
-        # unrecoverable on reuse). Today's input-staging dicts
-        # (_REPLAY_INPUTS, _CSV_ENCODE_DIRS, the ssjout/_PARTITIONED/
-        # _BUCKETED layout paths) hold only paths / plain Python values —
-        # keep it that way, or snapshot RDD ids before the run and
-        # unpersist only the new ones. (Result memos of any kind are
-        # banned outright — see tests/test_ml.py::test_fit_helpers_have_no_memo.)
-        jm = spark.sparkContext._jsc.getPersistentRDDs()
-        if jm.size():
-            it = jm.entrySet().iterator()
-            while it.hasNext():
-                it.next().getValue().unpersist(False)
-
-    # Warmup: JVM JIT + codegen + parquet footer caches.
-    run(specs["q_window_hourly_agg"].fn(spark, SF_DIR))
-
-    # Two INTERLEAVED full passes, min per key. Back-to-back per-key reps
-    # share any sustained host stall window (measured 2026-08-14 on the
-    # shared container: q_embed_neardup 5→33 s across full runs with zero
-    # code change — both adjacent reps inside the window, so plain
-    # min-of-2 kept 33 s); a key's two passes here run minutes apart, so a
-    # stall window hits different keys in each pass and the min cancels
-    # it (min is safe under additive noise — it never underestimates).
-    # Total cost identical to per-key min-of-2.
-    passes: dict[str, list[float]] = {k: [] for k in specs}
-    for _ in range(2):
-        for key in sorted(specs):
-            t0 = time.perf_counter()
-            run(specs[key].fn(spark, SF_DIR))
-            passes[key].append(time.perf_counter() - t0)
+    passes = timed_passes(spark, specs, sorted(specs), SF_DIR, reps=2)
     # Targeted third rep where the two passes STILL disagree >2× on a
     # non-trivial key (stall window spanned both passes for that key).
     for key in sorted(specs):
         reps = passes[key]
         if min(reps) > 1.0 and max(reps) > 2.0 * min(reps):
             t0 = time.perf_counter()
-            run(specs[key].fn(spark, SF_DIR))
+            run_key(spark, specs[key].fn(spark, SF_DIR))
             reps.append(time.perf_counter() - t0)
     timings = {k: round(min(v), 4) for k, v in passes.items()}
 

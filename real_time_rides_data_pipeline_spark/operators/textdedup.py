@@ -24,6 +24,18 @@ from real_time_rides_data_pipeline_spark.functions.vectors import (
 )
 
 
+def _require_free(df: DataFrame, *names: str) -> None:
+    """Raise if ``df`` already has a column the caller would lose when a
+    staging column of that name is added and then dropped."""
+    taken = {c.lower() for c in df.columns}
+    for name in names:
+        if name.lower() in taken:
+            raise ValueError(
+                f"input already has a column named {name!r}, which MinHash "
+                f"signing stages and drops; rename it first"
+            )
+
+
 def with_minhash_signature(
     df: DataFrame,
     text_col: str = "text",
@@ -40,7 +52,12 @@ def with_minhash_signature(
     shingle sets (LSH + exact verify) otherwise re-evaluates the
     tokenize→n-gram→array_distinct chain in the same projection — the
     staged column is referenced twice, so CollapseProject keeps it
-    materialized (round-16 A/B: 0.76× on the 64-hash signature pass)."""
+    materialized (round-16 A/B: 0.76× on the 64-hash signature pass).
+
+    Raises ``ValueError`` when ``df`` already has the staged ``__mh_sh``
+    column (checked only when ``shingles_col`` is None)."""
+    if shingles_col is None:
+        _require_free(df, "__mh_sh")
     keep = shingles_col or "__mh_sh"
     staged = df.withColumn(keep, word_shingles(F.col(text_col), shingle_words))
     sig = F.array(
@@ -98,9 +115,15 @@ def with_minhash_signature_portable(
     array_min lambdas (the q_simhash_est_hamming staging trick — one md5
     pass, not 16). ``shingles_col`` keeps the shingle array as an output
     column computed ONCE (see ``with_minhash_signature``; round-16 A/B:
-    0.63× on the signature projection when the caller needs both)."""
+    0.63× on the signature projection when the caller needs both).
+
+    Raises ``ValueError`` when ``df`` already has the staged ``_mh_base``
+    column, or ``_mh_sh`` when ``shingles_col`` is None."""
     from real_time_rides_data_pipeline_spark.functions.text import md5_int60
 
+    _require_free(df, "_mh_base")
+    if shingles_col is None:
+        _require_free(df, "_mh_sh")
     keep = shingles_col or "_mh_sh"
     staged = df.withColumn(
         keep, word_shingles(F.col(text_col), shingle_words)

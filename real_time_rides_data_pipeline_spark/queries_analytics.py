@@ -59,6 +59,7 @@ from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
 from real_time_rides_data_pipeline_spark.session import scoped_writer_session
 from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
+from real_time_rides_data_pipeline_spark.streaming.stateful import _DECAY_TAPS
 
 # =========================================================================
 # Referential-integrity audit
@@ -214,8 +215,6 @@ def q_interval_overlap_join(spark, sf_dir):
 # =========================================================================
 # Exponentially-decayed windowed counter
 # =========================================================================
-
-_DECAY_TAPS = 16
 
 
 @register(

@@ -521,13 +521,38 @@ def q_rolling_median(spark, sf_dir):
 # Fixed-radius spatial self-join via grid-cell bucketing
 # =========================================================================
 
-def _grid_radius_pairs(pts, radius: int = 32):
-    """The grid-join core over a (pid, x, y) frame: r-sized cells, 9-cell
-    neighbor expansion on the left side, equi-join on cell, exact integer
-    squared-distance verify, pairs canonical via id_a < id_b. Shared by
-    the registered query and the area-growing scale probe
-    (scripts/grid_area_probe.py) so the probe measures the production
-    plan, not a transcription of it."""
+_GRID_PTS_SQL = f"""SELECT o_orderkey AS pid,
+           ((o_orderkey % 1009) * ({_KNUTH} % 1009)) % 1009 AS x,
+           ((o_custkey % 1013) * ({_KNUTH} % 1013)) % 1013 AS y
+    FROM orders WHERE o_orderkey % 23 = 0"""
+
+
+@register(
+    "q_grid_join_radius",
+    f"""WITH pts AS ({_GRID_PTS_SQL})
+       SELECT a.pid AS id_a, b.pid AS id_b,
+              (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
+       FROM pts a JOIN pts b
+         ON a.pid < b.pid
+        AND (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 1024""",
+    "Fixed-radius (r=32) spatial self-join over deterministic planar "
+    "points: Spark buckets points into r-sized grid cells, expands ONE "
+    "side to its 9 neighbor cells, equi-joins on cell, and verifies with "
+    "exact integer squared distance (pairs canonical via id_a < id_b; "
+    "cell width = r guarantees every qualifying pair lands in exactly one "
+    "expanded/native cell combination). O(N·local density) work vs the "
+    "oracle's O(N²) cross join — the geo/embedding blocking shape that "
+    "survives 100 TB; skewed cells are handled by the same salting "
+    "machinery as any hot join key.",
+)
+def q_grid_join_radius(spark, sf_dir):
+    o = _t(spark, sf_dir, "orders")
+    pts = o.filter(F.col("o_orderkey") % 23 == 0).select(
+        F.col("o_orderkey").alias("pid"),
+        (F.pmod(F.col("o_orderkey"), 1009) * F.lit(_KNUTH % 1009) % 1009).alias("x"),
+        (F.pmod(F.col("o_custkey"), 1013) * F.lit(_KNUTH % 1013) % 1013).alias("y"),
+    )
+    radius = 32
     cells = pts.select(
         "pid", "x", "y",
         F.expr(f"x div {radius}").alias("cx"),
@@ -560,41 +585,6 @@ def _grid_radius_pairs(pts, radius: int = 32):
         .filter((F.col("id_a") < F.col("id_b")) & (d2 <= radius * radius))
         .select("id_a", "id_b", d2.alias("dist2"))
     )
-
-
-
-_GRID_PTS_SQL = f"""SELECT o_orderkey AS pid,
-           ((o_orderkey % 1009) * ({_KNUTH} % 1009)) % 1009 AS x,
-           ((o_custkey % 1013) * ({_KNUTH} % 1013)) % 1013 AS y
-    FROM orders WHERE o_orderkey % 23 = 0"""
-
-
-@register(
-    "q_grid_join_radius",
-    f"""WITH pts AS ({_GRID_PTS_SQL})
-       SELECT a.pid AS id_a, b.pid AS id_b,
-              (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
-       FROM pts a JOIN pts b
-         ON a.pid < b.pid
-        AND (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 1024""",
-    "Fixed-radius (r=32) spatial self-join over deterministic planar "
-    "points: Spark buckets points into r-sized grid cells, expands ONE "
-    "side to its 9 neighbor cells, equi-joins on cell, and verifies with "
-    "exact integer squared distance (pairs canonical via id_a < id_b; "
-    "cell width = r guarantees every qualifying pair lands in exactly one "
-    "expanded/native cell combination). O(N·local density) work vs the "
-    "oracle's O(N²) cross join — the geo/embedding blocking shape that "
-    "survives 100 TB; skewed cells are handled by the same salting "
-    "machinery as any hot join key.",
-)
-def q_grid_join_radius(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    pts = o.filter(F.col("o_orderkey") % 23 == 0).select(
-        F.col("o_orderkey").alias("pid"),
-        (F.pmod(F.col("o_orderkey"), 1009) * F.lit(_KNUTH % 1009) % 1009).alias("x"),
-        (F.pmod(F.col("o_custkey"), 1013) * F.lit(_KNUTH % 1013) % 1013).alias("y"),
-    )
-    return _grid_radius_pairs(pts)
 
 
 # =========================================================================

@@ -210,6 +210,9 @@ _DECAYED_STATE = T.StructType(
     ]
 )
 
+#: Taps of the dyadic decay. ``queries_analytics`` imports it for the
+#: batch lag-window leg and the oracle SQL of ``q_decayed_sum`` /
+#: ``q_stream_decayed``: stream≡batch holds only while both use one value.
 _DECAY_TAPS = 16
 
 

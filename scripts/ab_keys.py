@@ -1,13 +1,13 @@
-"""Targeted A/B timer: min-of-N for a few keys against an alternate repo
-checkout (VERDICT r11 item 1 — attribute driver-bench movements to code or
-host).
+"""Targeted A/B timer: min-of-N for a few keys (VERDICT r11 item 1 —
+attribute driver-bench movements to code or host).
 
-Usage: python scripts/ab_keys.py <repo_dir> <comma_keys> [reps]
-Runs each key ``reps`` times in interleaved passes (pass = each key once)
-inside ONE session built from <repo_dir>'s code, via the same noop-sink +
-unpersist protocol as bench.py, and prints one JSON line of min/all timings.
-Process-level interleave (caller alternates checkouts) cancels sustained
-host stalls the same way bench.py's two passes do.
+Usage: python scripts/ab_keys.py <comma_keys> [reps]
+Times the code of the checkout this script lives in: bench.py's warm-up
+plus ``reps`` interleaved passes (pass = each key once) inside ONE
+session, and prints one JSON line of min/all timings. To compare two
+checkouts, run each checkout's own copy of this script, alternating
+between them; the process-level interleave cancels sustained host stalls
+the same way bench.py's two passes do.
 """
 
 from __future__ import annotations
@@ -15,40 +15,26 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
+
+REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO_DIR not in sys.path:
+    sys.path.insert(0, REPO_DIR)
+
+from bench import CPUS, SF_DIR, timed_passes  # noqa: E402
 
 
 def main() -> None:
-    repo = os.path.abspath(sys.argv[1])
-    keys = sys.argv[2].split(",")
-    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    sys.path.insert(0, repo)
+    keys = sys.argv[1].split(",")
+    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
 
     from real_time_rides_data_pipeline_spark.session import get_spark
     from real_time_rides_data_pipeline_spark.queries import registry
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    spark = get_spark(app_name="ab_keys", cpus=cpus)
-    specs = registry()
-
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-        jm = spark.sparkContext._jsc.getPersistentRDDs()
-        if jm.size():
-            it = jm.entrySet().iterator()
-            while it.hasNext():
-                it.next().getValue().unpersist(False)
-
-    run(specs["q_window_hourly_agg"].fn(spark, sf_dir))  # warmup
-    passes: dict[str, list[float]] = {k: [] for k in keys}
-    for _ in range(reps):
-        for key in keys:
-            t0 = time.perf_counter()
-            run(specs[key].fn(spark, sf_dir))
-            passes[key].append(round(time.perf_counter() - t0, 4))
+    spark = get_spark(app_name="ab_keys", cpus=CPUS)
+    passes = timed_passes(spark, registry(), keys, SF_DIR, reps)
+    passes = {k: [round(t, 4) for t in v] for k, v in passes.items()}
     print(json.dumps({
-        "repo": repo,
+        "repo": REPO_DIR,
         "min": {k: min(v) for k, v in passes.items()},
         "all": passes,
     }))

@@ -23,8 +23,7 @@ REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_DIR not in sys.path:
     sys.path.insert(0, REPO_DIR)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+from bench import CPUS, SF_DIR, release_persisted  # noqa: E402
 
 JOIN_NODES = (
     "SortMergeJoin",
@@ -102,12 +101,7 @@ def main() -> None:
         s = summarize(plan)
         s["build_s"] = round(build_s, 3)
         summary[key] = s
-        # Free pinned localCheckpoint blocks like bench.py does.
-        jm = spark.sparkContext._jsc.getPersistentRDDs()
-        if jm.size():
-            it = jm.entrySet().iterator()
-            while it.hasNext():
-                it.next().getValue().unpersist(False)
+        release_persisted(spark)
 
     with open(os.path.join(out_dir, "_summary.json"), "w") as f:
         json.dump(summary, f, indent=1, sort_keys=True)

@@ -19,8 +19,8 @@ REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_DIR not in sys.path:
     sys.path.insert(0, REPO_DIR)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+from bench import CPUS, SF_DIR, release_persisted  # noqa: E402
+
 REPS = int(os.environ.get("REPS", 3))
 
 
@@ -49,13 +49,6 @@ def main() -> None:
 
     graph._signature = counting_sig
 
-    def unpersist_all():
-        jm = sc._jsc.getPersistentRDDs()
-        if jm.size():
-            it = jm.entrySet().iterator()
-            while it.hasNext():
-                it.next().getValue().unpersist(False)
-
     times: dict[str, list[float]] = {}
 
     def phase(name, fn):
@@ -77,7 +70,7 @@ def main() -> None:
             F.col("id_a").alias("src"), F.col("id_b").alias("dst")
         )
         phase("sd.A pairjoin noop", lambda: pp.write.format("noop").mode("overwrite").save())
-        unpersist_all()
+        release_persisted(spark)
         cents = _fitted_centroids(emb, SF_DIR)
         pp = SIM.cluster_pruned_pairs_above(emb, cents, 0.4).select(
             F.col("id_a").alias("src"), F.col("id_b").alias("dst")
@@ -95,11 +88,11 @@ def main() -> None:
             "id", F.coalesce("component", F.col("id")).alias("component")
         )
         phase("sd.D final join noop", lambda: out.write.format("noop").mode("overwrite").save())
-        unpersist_all()
+        release_persisted(spark)
 
         mpairs = _minhash_verified_pairs(spark, SF_DIR)
         phase("mh.A verified pairs noop", lambda: mpairs.write.format("noop").mode("overwrite").save())
-        unpersist_all()
+        release_persisted(spark)
         mp2 = (
             _minhash_verified_pairs(spark, SF_DIR)
             .filter(F.col("is_dup"))
@@ -117,7 +110,7 @@ def main() -> None:
             "id", F.coalesce("component", F.col("id")).alias("component")
         )
         phase("mh.D final join noop", lambda: mout.write.format("noop").mode("overwrite").save())
-        unpersist_all()
+        release_persisted(spark)
 
     print("\nmins:")
     for k, v in times.items():

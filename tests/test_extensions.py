@@ -4,6 +4,7 @@ multimodal fan-out must have the right shape."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_rides_data_pipeline_spark.operators import similarity as SIM
@@ -99,6 +100,31 @@ def test_minhash_no_false_negatives_on_exact_copies(spark):
     found = {(r.id_a, r.id_b) for r in pairs}
     for i in range(6):
         assert any(a % 100 == i and b % 100 == i for a, b in found), (i, found)
+
+
+def test_minhash_staging_columns_never_overwrite_input(spark):
+    """A caller column that shares a staging column's name must raise,
+    not vanish from the output: both signers add and then drop it."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta", 7)], "doc_id long, text string, x long"
+    )
+    for signer, staged in (
+        (TD.with_minhash_signature_portable, "_mh_base"),
+        (TD.with_minhash_signature_portable, "_mh_sh"),
+        (TD.with_minhash_signature, "__mh_sh"),
+    ):
+        with pytest.raises(ValueError, match=staged):
+            signer(docs.withColumnRenamed("x", staged))
+    # An explicit shingles_col replaces the auto-named one, but _mh_base is
+    # still staged.
+    with pytest.raises(ValueError, match="_mh_base"):
+        TD.with_minhash_signature_portable(
+            docs.withColumnRenamed("x", "_mh_base"), shingles_col="sh"
+        )
+    kept = TD.with_minhash_signature_portable(
+        docs.withColumnRenamed("x", "_mh_sh"), shingles_col="sh"
+    )
+    assert kept.select("_mh_sh").first()[0] == 7
 
 
 def test_bucketed_join_has_no_exchange(spark):
