@@ -186,29 +186,21 @@ def minhash_candidate_pairs(
 
 
 def exact_jaccard_pairs(
-    docs: DataFrame,
     pairs: DataFrame,
+    shingles: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_words: int = 3,
     threshold: float = 0.5,
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Exact-verify candidate pairs: join shingle sets back, compute
     |∩|/|∪|, keep pairs ≥ threshold. Output (id_a, id_b, jaccard).
 
-    ``shingles`` (an ``(id_col, sh)`` frame, typically already
-    materialized by the signature pass) skips the second docs scan +
-    tokenize entirely."""
-    # Materialized once: both candidate-side joins consume the shingle
-    # table — without the checkpoint each side re-derives the full
-    # docs scan + shingle chain (the with_minhash_signature rationale).
-    sh = shingles if shingles is not None else docs.select(
-        F.col(id_col), word_shingles(F.col(text_col), shingle_words).alias("sh")
-    ).localCheckpoint(eager=False)
+    ``shingles`` is an ``(id_col, sh)`` frame that must already be
+    materialized (the signature pass's checkpoint): both candidate-side
+    joins consume it, and an unmaterialized frame re-derives the full
+    docs scan + shingle chain on each side."""
     j = (
-        pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
+        pairs.join(shingles.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
+        .join(shingles.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
         .withColumn(
             "jaccard",
             F.round(
@@ -249,10 +241,7 @@ def minhash_near_duplicates(
     signed = signed.localCheckpoint(eager=True)
     cands = minhash_candidate_pairs(signed, id_col, "minhash", bands)
     shingles = signed.select(id_col, F.col("__sh").alias("sh"))
-    return exact_jaccard_pairs(
-        docs, cands, id_col, text_col, shingle_words, threshold,
-        shingles=shingles,
-    )
+    return exact_jaccard_pairs(cands, shingles, id_col, threshold)
 
 
 def simhash_near_duplicates(

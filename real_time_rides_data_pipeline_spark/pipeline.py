@@ -28,7 +28,10 @@ from real_time_rides_data_pipeline_spark.operators import (
 )
 from real_time_rides_data_pipeline_spark.schemas import RIDE_SCHEMA
 from real_time_rides_data_pipeline_spark.sinks import (
+    HAVE_DELTA,
     foreach_batch_merge,
+    merge_upsert_delta,
+    merge_upsert_parquet,
     stream_append_parquet,
 )
 
@@ -114,19 +117,22 @@ def run_streaming_gold(
     gold_path: str,
     checkpoint: str,
     trigger_seconds: int | None = None,
-    output_mode: str = "update",
     watermark: str = "10 minutes",
 ):
     """Silver stream → windowed agg → foreachBatch MERGE into Gold
-    (03:121-128 shape, bounded-state variant)."""
+    (03:121-128 shape, bounded-state variant). The Delta MERGE when
+    delta-spark is importable, else the parquet emulation; the choice is
+    made per call, so a wrapper patched onto ``merge_upsert_parquet`` sees
+    every Gold merge."""
     gold = gold_transform(silver_stream, watermark=watermark)
-    return (
-        foreach_batch_merge(
-            gold,
-            gold_path,
-            checkpoint,
-            GOLD_KEYS,
-            trigger_seconds,
-            output_mode=output_mode,
-        ).start()
+    merge = merge_upsert_delta if HAVE_DELTA else merge_upsert_parquet
+    writer = foreach_batch_merge(
+        gold,
+        checkpoint,
+        lambda batch_df, _batch_id: merge(
+            batch_df.sparkSession, batch_df, gold_path, GOLD_KEYS
+        ),
     )
+    if trigger_seconds is not None:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()

@@ -492,7 +492,10 @@ def q_null_impute(spark, sf_dir):
 def q_stream_decayed(spark, sf_dir):
 
     from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
-    from real_time_rides_data_pipeline_spark.sinks import foreach_batch_merge
+    from real_time_rides_data_pipeline_spark.sinks import (
+        foreach_batch_merge,
+        merge_upsert_parquet,
+    )
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
     from real_time_rides_data_pipeline_spark.streaming.stateful import (
         running_decayed_scores,
@@ -512,7 +515,11 @@ def q_stream_decayed(spark, sf_dir):
     stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
     run_to_completion(
         foreach_batch_merge(
-            running_decayed_scores(stream), out, ckpt, keys=("event_id",)
+            running_decayed_scores(stream),
+            ckpt,
+            lambda bdf, _bid: merge_upsert_parquet(
+                bdf.sparkSession, bdf, out, ("event_id",)
+            ),
         )
     )
     return (
@@ -1143,6 +1150,7 @@ def q_stream_ohlc(spark, sf_dir):
 
     from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
     from real_time_rides_data_pipeline_spark.sinks import (
+        foreach_batch_merge,
         merge_distributive_parquet,
     )
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
@@ -1183,8 +1191,6 @@ def q_stream_ohlc(spark, sf_dir):
         )
 
     def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         merge_distributive_parquet(
             batch_df.sparkSession,
             partials(batch_df),
@@ -1204,10 +1210,7 @@ def q_stream_ohlc(spark, sf_dir):
             num_partitions=8,
         )
 
-    run_to_completion(
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-    )
+    run_to_completion(foreach_batch_merge(stream, ckpt, fold))
     bars = spark.read.parquet(state)
     return bars.select(
         "event_type",

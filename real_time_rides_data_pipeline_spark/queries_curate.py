@@ -2076,7 +2076,7 @@ def q_negative_sample(spark, sf_dir):
     "q_histogram_quantile_merge, proving the histogram's merge algebra "
     "under incremental ingestion: events replay as a REAL 2-micro-batch "
     "stream, each batch reduces to its own per-bin counts, and "
-    "foreachBatch folds them through sinks.merge_additive_parquet "
+    "foreachBatch folds them through sinks.merge_distributive_parquet "
     "(per-bin SUM — associative, commutative, batch_id-idempotent, "
     "crash-ordered swap), so the folded state is BIT-IDENTICAL to the "
     "batch-built histogram and answers to the SAME oracle with the "
@@ -2094,7 +2094,8 @@ def q_stream_quantile_merge(spark, sf_dir):
         scoped_writer_session,
     )
     from real_time_rides_data_pipeline_spark.sinks import (
-        merge_additive_parquet,
+        foreach_batch_merge,
+        merge_distributive_parquet,
     )
     from real_time_rides_data_pipeline_spark.sources.files import (
         parquet_stream,
@@ -2108,8 +2109,6 @@ def q_stream_quantile_merge(spark, sf_dir):
     stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
 
     def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         partial = (
             batch_df.select(cents(F.col("value")).alias("value_cents"))
             # integral `div`, matching the batch twin above
@@ -2117,19 +2116,16 @@ def q_stream_quantile_merge(spark, sf_dir):
             .groupBy("bin")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        merge_additive_parquet(
+        merge_distributive_parquet(
             batch_df.sparkSession,
             partial,
             state,
             keys=("bin",),
-            sum_cols=("n",),
+            agg_spec={"n": "sum"},
             batch_id=batch_id,
         )
 
-    run_to_completion(
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-    )
+    run_to_completion(foreach_batch_merge(stream, ckpt, fold))
 
     m = spark.read.parquet(state).select("bin", "n")
     w_cum = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
@@ -2237,7 +2233,7 @@ def q_hapax_rate(spark, sf_dir):
     "dropDuplicatesWithinWatermark on (window_start, user_id) — keyed "
     "dedup STATE that persists across micro-batches, so a user seen for "
     "a window in batch 1 is suppressed when batch 2 delivers them again "
-    "— → foreachBatch ADDITIVE count merge (merge_additive_parquet, "
+    "— → foreachBatch ADDITIVE count merge (merge_distributive_parquet, "
     "batch-id idempotent): because the dedup guarantees each (window, "
     "user) membership passes exactly once, per-batch counts become a "
     "commutative monoid and the non-decomposable distinct turns "
@@ -2255,7 +2251,8 @@ def q_stream_sliding_distinct(spark, sf_dir):
         scoped_writer_session,
     )
     from real_time_rides_data_pipeline_spark.sinks import (
-        merge_additive_parquet,
+        foreach_batch_merge,
+        merge_distributive_parquet,
     )
     from real_time_rides_data_pipeline_spark.sources.files import (
         parquet_stream,
@@ -2291,24 +2288,19 @@ def q_stream_sliding_distinct(spark, sf_dir):
     )
 
     def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         partial = batch_df.groupBy("window_start").agg(
             F.count(F.lit(1)).alias("n_users")
         )
-        merge_additive_parquet(
+        merge_distributive_parquet(
             batch_df.sparkSession,
             partial,
             state,
             keys=("window_start",),
-            sum_cols=("n_users",),
+            agg_spec={"n_users": "sum"},
             batch_id=batch_id,
         )
 
-    run_to_completion(
-        member.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-    )
+    run_to_completion(foreach_batch_merge(member, ckpt, fold))
 
     return spark.read.parquet(state).select(
         "window_start",

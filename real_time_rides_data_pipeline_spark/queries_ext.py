@@ -1526,7 +1526,10 @@ def _replay_input(df, tag: str, sf_dir: str, n_files: int = 2) -> str:
 )
 def q_stateful_running(spark, sf_dir):
 
-    from real_time_rides_data_pipeline_spark.sinks import foreach_batch_merge
+    from real_time_rides_data_pipeline_spark.sinks import (
+        foreach_batch_merge,
+        merge_upsert_parquet,
+    )
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
     from real_time_rides_data_pipeline_spark.streaming.stateful import (
         running_user_stats,
@@ -1546,7 +1549,11 @@ def q_stateful_running(spark, sf_dir):
     stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
     run_to_completion(
         foreach_batch_merge(
-            running_user_stats(stream), out, ckpt, keys=("user_id",)
+            running_user_stats(stream),
+            ckpt,
+            lambda bdf, _bid: merge_upsert_parquet(
+                bdf.sparkSession, bdf, out, ("user_id",)
+            ),
         )
     )
     return spark.read.parquet(out)
@@ -2163,7 +2170,10 @@ def _register_tws(fn):
 @_register_tws
 def q_tws_top_values(spark, sf_dir):
 
-    from real_time_rides_data_pipeline_spark.sinks import foreach_batch_merge
+    from real_time_rides_data_pipeline_spark.sinks import (
+        foreach_batch_merge,
+        merge_upsert_parquet,
+    )
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
     from real_time_rides_data_pipeline_spark.streaming.stateful import (
         running_top_values,
@@ -2177,7 +2187,11 @@ def q_tws_top_values(spark, sf_dir):
     stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
     run_to_completion(
         foreach_batch_merge(
-            running_top_values(stream), out, ckpt, keys=("user_id",)
+            running_top_values(stream),
+            ckpt,
+            lambda bdf, _bid: merge_upsert_parquet(
+                bdf.sparkSession, bdf, out, ("user_id",)
+            ),
         )
     )
     return spark.read.parquet(out)

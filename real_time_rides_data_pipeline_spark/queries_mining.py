@@ -67,7 +67,7 @@ Third wave (same module):
   sibling of ``q_ks_drift``.
 - ``q_stream_cms_merge`` — the streaming twin of the count-min key:
   per-micro-batch partial sketches folded through an idempotent
-  additive parquet MERGE (``sinks.merge_additive_parquet``) into a
+  additive parquet MERGE (``sinks.merge_distributive_parquet``) into a
   sketch bit-identical to the batch build — live mergeability.
 - ``q_keyset_pagination`` — seek pagination under a total order, with
   OFFSET confined to a 1-row boundary probe and the page served by a
@@ -401,7 +401,7 @@ def q_cms_heavy_hitters(spark, sf_dir):
     "documents replay as a REAL 2-micro-batch stream; each batch builds "
     "its partial sketch (one map-side-combining aggregate over the "
     "batch) and foreachBatch folds it into a parquet sketch table by "
-    "CELL-WISE ADDITION (sinks.merge_additive_parquet — batch_id-marked "
+    "CELL-WISE ADDITION (sinks.merge_distributive_parquet — batch_id-marked "
     "idempotent, because an additive accumulator double-counts under "
     "at-least-once redelivery, and crash-ordered swap). Counts add, so "
     "the merged sketch is BIT-IDENTICAL to the single-pass batch sketch "
@@ -414,7 +414,10 @@ def q_stream_cms_merge(spark, sf_dir):
 
     from real_time_rides_data_pipeline_spark.operators.cms import build_cms
     from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
-    from real_time_rides_data_pipeline_spark.sinks import merge_additive_parquet
+    from real_time_rides_data_pipeline_spark.sinks import (
+        foreach_batch_merge,
+        merge_distributive_parquet,
+    )
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     d = _t(spark, sf_dir, "documents", parallel=True)
@@ -426,27 +429,22 @@ def q_stream_cms_merge(spark, sf_dir):
     stream = parquet_stream(writer, inp, docs.schema, max_files_per_trigger=1)
 
     def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         part = build_cms(
             batch_df.select(F.explode(X.tokens(F.col("text"))).alias("term")),
             "term",
             _CMS_DEPTH,
             _CMS_WIDTH,
         )
-        merge_additive_parquet(
+        merge_distributive_parquet(
             batch_df.sparkSession,
             part,
             state,
             keys=("row", "bucket"),
-            sum_cols=("cnt",),
+            agg_spec={"cnt": "sum"},
             batch_id=batch_id,
         )
 
-    run_to_completion(
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-    )
+    run_to_completion(foreach_batch_merge(stream, ckpt, fold))
     sketch = spark.read.parquet(state)
     tok = d.select(F.explode(X.tokens(F.col("text"))).alias("term"))
     return _cms_attest(tok, sketch)
@@ -1349,7 +1347,10 @@ def q_stream_kmv(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.functions.precision import cents
     from real_time_rides_data_pipeline_spark.operators import kmv
     from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
-    from real_time_rides_data_pipeline_spark.sinks import merge_topk_parquet
+    from real_time_rides_data_pipeline_spark.sinks import (
+        foreach_batch_merge,
+        merge_topk_parquet,
+    )
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
     from pyspark.sql import Window as W
 
@@ -1383,8 +1384,6 @@ def q_stream_kmv(spark, sf_dir):
         )
 
     def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         merge_topk_parquet(
             batch_df.sparkSession,
             partial_sketches(batch_df),
@@ -1395,10 +1394,7 @@ def q_stream_kmv(spark, sf_dir):
             batch_id=batch_id,
         )
 
-    run_to_completion(
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-    )
+    run_to_completion(foreach_batch_merge(stream, ckpt, fold))
 
     # The folded sketch feeds EIGHT downstream references (est_a, est_b,
     # the union's two sides, and the intersection's ta/tb/common joins) —
@@ -1483,7 +1479,10 @@ def q_stream_leaderboard(spark, sf_dir):
 
     from real_time_rides_data_pipeline_spark.functions.precision import cents
     from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
-    from real_time_rides_data_pipeline_spark.sinks import merge_topk_parquet
+    from real_time_rides_data_pipeline_spark.sinks import (
+        foreach_batch_merge,
+        merge_topk_parquet,
+    )
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
     from pyspark.sql import Window as W
 
@@ -1532,8 +1531,6 @@ def q_stream_leaderboard(spark, sf_dir):
         )
 
     def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         merge_topk_parquet(
             batch_df.sparkSession,
             partials(batch_df),
@@ -1545,10 +1542,7 @@ def q_stream_leaderboard(spark, sf_dir):
             batch_id=batch_id,
         )
 
-    run_to_completion(
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-    )
+    run_to_completion(foreach_batch_merge(stream, ckpt, fold))
     board = spark.read.parquet(state)
     w = W.partitionBy("event_type").orderBy(F.col("pk").desc())
     return board.select(

@@ -183,7 +183,7 @@ def _linreg_solve(m):
     "per-group moment PARTIALS (n, Σx, Σy, Σx², Σxy — one map-side-"
     "combining agg over the batch), and foreachBatch folds them into a "
     "parquet stats table by cell-wise addition "
-    "(sinks.merge_additive_parquet — batch_id-marked idempotent under "
+    "(sinks.merge_distributive_parquet — batch_id-marked idempotent under "
     "at-least-once redelivery, crash-ordered swap). Integer moments add "
     "exactly, so the merged fit is BIT-IDENTICAL to the batch fit and "
     "answers to the SAME oracle. At 100 TB this is per-shard/per-day "
@@ -193,7 +193,10 @@ def _linreg_solve(m):
 def q_stream_linreg(spark, sf_dir):
 
     from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
-    from real_time_rides_data_pipeline_spark.sinks import merge_additive_parquet
+    from real_time_rides_data_pipeline_spark.sinks import (
+        foreach_batch_merge,
+        merge_distributive_parquet,
+    )
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     ev = _t(spark, sf_dir, "events").select("event_type", "ts", "value")
@@ -204,21 +207,16 @@ def q_stream_linreg(spark, sf_dir):
     stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
 
     def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_additive_parquet(
+        merge_distributive_parquet(
             batch_df.sparkSession,
             _linreg_moments(batch_df),
             state,
             keys=("event_type",),
-            sum_cols=("n", "sx", "sy", "sxx", "sxy"),
+            agg_spec=dict.fromkeys(("n", "sx", "sy", "sxx", "sxy"), "sum"),
             batch_id=batch_id,
         )
 
-    run_to_completion(
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-    )
+    run_to_completion(foreach_batch_merge(stream, ckpt, fold))
     return _linreg_solve(spark.read.parquet(state))
 
 
@@ -4052,7 +4050,7 @@ def q_srm_check(spark, sf_dir):
     "its per-event_type arm-count PARTIALS (counts are a commutative "
     "monoid — one map-side-combining agg per batch), and foreachBatch "
     "folds them into a parquet counts table by cell-wise addition "
-    "(sinks.merge_additive_parquet — batch_id-marked idempotent under "
+    "(sinks.merge_distributive_parquet — batch_id-marked idempotent under "
     "at-least-once redelivery, crash-ordered swap). The merged counts "
     "are BIT-IDENTICAL to the batch counts, so the final chi-square "
     "answers to the SAME oracle as q_srm_check — the stream≡batch "
@@ -4064,7 +4062,10 @@ def q_srm_check(spark, sf_dir):
 def q_stream_srm(spark, sf_dir):
 
     from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
-    from real_time_rides_data_pipeline_spark.sinks import merge_additive_parquet
+    from real_time_rides_data_pipeline_spark.sinks import (
+        foreach_batch_merge,
+        merge_distributive_parquet,
+    )
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     ev = _t(spark, sf_dir, "events").select("event_type", "user_id")
@@ -4075,21 +4076,16 @@ def q_stream_srm(spark, sf_dir):
     stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
 
     def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        merge_additive_parquet(
+        merge_distributive_parquet(
             batch_df.sparkSession,
             _srm_partials(batch_df),
             state,
             keys=("event_type",),
-            sum_cols=("n_arm0", "n_arm1"),
+            agg_spec={"n_arm0": "sum", "n_arm1": "sum"},
             batch_id=batch_id,
         )
 
-    run_to_completion(
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-    )
+    run_to_completion(foreach_batch_merge(stream, ckpt, fold))
     return _srm_from_counts(
         spark.read.parquet(state).select("event_type", "n_arm0", "n_arm1")
     )

@@ -721,7 +721,10 @@ def q_profile_stats(spark, sf_dir):
 def q_cdc_stream(spark, sf_dir):
 
     from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
-    from real_time_rides_data_pipeline_spark.sinks import merge_cdc_parquet
+    from real_time_rides_data_pipeline_spark.sinks import (
+        foreach_batch_merge,
+        merge_cdc_parquet,
+    )
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     ev = _t(spark, sf_dir, "events").select(
@@ -732,8 +735,6 @@ def q_cdc_stream(spark, sf_dir):
     target, ckpt = f"{run_dir}/state", f"{run_dir}/ckpt"
 
     def apply_batch(bdf, batch_id):
-        if bdf.isEmpty():
-            return
         w = Window.partitionBy("user_id").orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
         )
@@ -766,10 +767,7 @@ def q_cdc_stream(spark, sf_dir):
         )
 
     stream = parquet_stream(spark, inp, ev.schema, max_files_per_trigger=1)
-    run_to_completion(
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-    )
+    run_to_completion(foreach_batch_merge(stream, ckpt, apply_batch))
     return (
         spark.read.parquet(target)
         .filter(F.col("last_op") != "error")
@@ -1472,7 +1470,7 @@ def q_ivm_agg_delta(spark, sf_dir):
     "in-stream to its op-log rows — one +1 insert, plus a -1 retraction "
     "for the base rows the q_ivm_agg_delta scenario later deletes "
     "(event_id%7=0 of the %10<>0 base) — and foreachBatch folds signed "
-    "(Σsign, Σsign·cents) into parquet state via merge_additive_parquet "
+    "(Σsign, Σsign·cents) into parquet state via merge_distributive_parquet "
     "across 2 REAL micro-batches (signed sums are still a commutative "
     "monoid, so the batch-id-idempotent additive MERGE machinery "
     "applies unchanged; a replayed batch cannot double-retract). Final "
@@ -1493,7 +1491,8 @@ def q_stream_ivm_retract(spark, sf_dir):
         scratch_dir as _scratch_dir,
     )
     from real_time_rides_data_pipeline_spark.sinks import (
-        merge_additive_parquet,
+        foreach_batch_merge,
+        merge_distributive_parquet,
     )
     from real_time_rides_data_pipeline_spark.sources.files import (
         parquet_stream,
@@ -1517,25 +1516,20 @@ def q_stream_ivm_retract(spark, sf_dir):
     )
 
     def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         partial = batch_df.groupBy("event_type").agg(
             F.sum("sign").alias("n_rows"),
             F.sum(F.col("sign") * F.col("c")).alias("sum_cents"),
         )
-        merge_additive_parquet(
+        merge_distributive_parquet(
             batch_df.sparkSession,
             partial,
             state,
             keys=("event_type",),
-            sum_cols=("n_rows", "sum_cents"),
+            agg_spec={"n_rows": "sum", "sum_cents": "sum"},
             batch_id=batch_id,
         )
 
-    run_to_completion(
-        ops.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-    )
+    run_to_completion(foreach_batch_merge(ops, ckpt, fold))
 
     return (
         spark.read.parquet(state)

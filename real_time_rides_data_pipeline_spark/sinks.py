@@ -1,13 +1,16 @@
-"""Sinks: streaming append, and the MERGE-upsert sink (foreachBatch).
+"""Sinks: streaming append, the parquet MERGE sinks, and the foreachBatch
+adapter that connects a stream to a merge.
 
 The reference's signature sink is a Delta MERGE keyed on
 (window_start, window_end, driver_id) per micro-batch
-(/root/reference/src/03_gold_realtime_rides.py:91-113, condition 03:108).
-delta-spark is not in this container, so ``merge_upsert_parquet`` emulates
-MERGE semantics over plain parquet (read-modify-swap with latest-wins keys);
-``foreach_batch_merge`` wires either implementation behind ``foreachBatch``
-exactly like the reference. With delta on the classpath, ``merge_upsert_delta``
-is the production path.
+(03_gold_realtime_rides.py:91-113, condition 03:108). Without delta-spark
+the ``merge_*_parquet`` sinks emulate MERGE over plain parquet. Each keeps
+only its merge rule (a ``fold`` of the existing table and the batch);
+``_merge_into`` is the one commit path they share: recover, replay guard,
+write-to-temp, stamp the batch id, crash-ordered swap.
+``foreach_batch_merge`` wires any merge behind ``foreachBatch`` exactly
+like the reference. With delta on the classpath, ``merge_upsert_delta`` is
+the production Gold path (``pipeline.run_streaming_gold`` picks it).
 """
 
 from __future__ import annotations
@@ -15,6 +18,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,23 +44,18 @@ def stream_append_parquet(
     path: str,
     checkpoint: str,
     trigger_seconds: int | None | object = _TRIGGER_UNSET,
-    merge_schema: bool = False,
     available_now: bool = False,
 ) -> DataStreamWriter:
     """Append sink with checkpoint + fixed micro-batch trigger — the Bronze/
     Silver sink shape (01_bronze:82-90, 02_silver:112-118). Returns the
     un-started writer so callers control lifecycle.
 
-    ``merge_schema`` twins the Silver sink's schema-evolution opt-in
-    (``.option("mergeSchema", "true")``, 02_silver:114) at the API level. On
-    a Delta sink the option makes the table schema evolve transactionally.
-    On THIS parquet sink the option itself is inert (mergeSchema is a
-    parquet read-side option): schema-divergent appends succeed regardless,
-    files with old and new schemas coexist, and readers opt into merging
-    with ``spark.read.option("mergeSchema", "true")`` — old rows read NULL
-    for the new columns, matching Delta's post-evolution view. The flag is
-    kept for call-site parity with the reference so a Delta-format port of
-    this sink changes one format string, not its callers.
+    The Silver sink's schema-evolution opt-in (``.option("mergeSchema",
+    "true")``, 02_silver:114) has no twin here: mergeSchema is a parquet
+    READ-side option. Schema-divergent appends succeed as they are, files
+    with old and new schemas coexist, and readers merge them with
+    ``spark.read.option("mergeSchema", "true")`` — old rows read NULL for
+    the new columns, matching Delta's post-evolution view.
     """
     w = (
         df.writeStream.format("parquet")
@@ -64,8 +63,6 @@ def stream_append_parquet(
         .option("checkpointLocation", checkpoint)
         .option("path", path)
     )
-    if merge_schema:
-        w = w.option("mergeSchema", "true")
     if available_now:
         # Trigger.AvailableNow: drain the current backlog in rate-limited
         # micro-batches, then terminate — the production mode for
@@ -96,11 +93,13 @@ def merge_upsert_parquet(
 
     whenMatchedUpdateAll + whenNotMatchedInsertAll ≡ anti-join the target
     against the updates' keys, then union the updates — the classic
-    merge-without-MERGE. The rewrite is atomic via write-to-temp + directory
-    swap. At 100 TB this full-table rewrite is why Delta exists (MERGE
-    rewrites only touched files); semantics here are identical.
+    merge-without-MERGE, committed through ``_merge_into``. Takes no
+    ``batch_id``: latest-wins replay is already idempotent, and a marker
+    would make a stream restarted on a fresh checkpoint skip every batch
+    id at or below the old one. At 100 TB this full-table rewrite is why
+    Delta exists (MERGE rewrites only touched files); semantics here are
+    identical.
     """
-    _recover_dir(target_path)
     # ``updates`` feeds TWO plan legs (the anti-join's key side and the
     # union) — without pinning, each leg re-executes the whole upstream
     # subtree. Inside foreachBatch that subtree can be a stateful
@@ -111,18 +110,17 @@ def merge_upsert_parquet(
     pin = not updates.is_cached
     if pin:
         updates.persist()
+
+    def fold(target: DataFrame | None) -> DataFrame:
+        if target is None:
+            return updates
+        keep = target.join(
+            updates.select(*keys).distinct(), list(keys), "left_anti"
+        )
+        return keep.unionByName(updates)
+
     try:
-        if os.path.exists(target_path):
-            target = spark.read.parquet(target_path)
-            keep = target.join(
-                updates.select(*keys).distinct(), list(keys), "left_anti"
-            )
-            merged = keep.unionByName(updates)
-        else:
-            merged = updates
-        tmp = f"{target_path}.__tmp_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        _swap_dir(tmp, target_path)
+        _merge_into(spark, target_path, None, fold)
     finally:
         if pin:
             updates.unpersist()
@@ -222,11 +220,11 @@ def merge_upsert_delta(
 #: underscore-prefixed so Spark's parquet reader ignores it. Living inside
 #: the swapped directory makes (data + marker) one atomic commit: a replay
 #: after any crash either sees both or neither.
-_CDC_BATCH_MARKER = "_applied_batch_id"
+_BATCH_MARKER = "_applied_batch_id"
 
 
 def _read_batch_marker(target_path: str) -> int | None:
-    p = os.path.join(target_path, _CDC_BATCH_MARKER)
+    p = os.path.join(target_path, _BATCH_MARKER)
     if not os.path.exists(p):
         return None
     with open(p) as f:
@@ -239,8 +237,7 @@ def _commit_with_marker(
     batch_id: int | None,
     prior_marker: int | None,
 ) -> None:
-    """Shared commit for the marker-protocol merge sinks (CDC, additive):
-    write-to-temp, stamp the last-applied batch id INSIDE the directory
+    """Write-to-temp, stamp the last-applied batch id INSIDE the directory
     (one atomic unit with the data), crash-ordered swap. A batch_id-less
     call (ad-hoc backfill) must CARRY the existing marker forward —
     dropping it would silently re-arm replay double-counting for the
@@ -249,9 +246,40 @@ def _commit_with_marker(
     df.write.mode("overwrite").parquet(tmp)
     marker = batch_id if batch_id is not None else prior_marker
     if marker is not None:
-        with open(os.path.join(tmp, _CDC_BATCH_MARKER), "w") as f:
+        with open(os.path.join(tmp, _BATCH_MARKER), "w") as f:
             f.write(str(marker))
     _swap_dir(tmp, target_path)
+
+
+def _merge_into(
+    spark: SparkSession,
+    target_path: str,
+    batch_id: int | None,
+    fold: Callable[[DataFrame | None], DataFrame],
+) -> None:
+    """The one commit path of every parquet MERGE sink. Restore an aside
+    copy a crashed swap left behind, skip a batch id at or below the
+    recorded marker (an at-least-once replay of a committed batch: a fold
+    is not replay-safe on its own), then commit ``fold(existing table, or
+    None before the first commit)`` with the marker. The marker protocol
+    assumes batch ids are applied in monotonic order — exactly Structured
+    Streaming's foreachBatch contract (replays re-deliver the same id,
+    never skip ahead). A ``fold`` that raises leaves table and marker
+    untouched."""
+    _recover_dir(target_path)
+    prior_marker = _read_batch_marker(target_path)
+    if (
+        batch_id is not None
+        and prior_marker is not None
+        and batch_id <= prior_marker
+    ):
+        return
+    existing = (
+        spark.read.parquet(target_path)
+        if os.path.exists(target_path)
+        else None
+    )
+    _commit_with_marker(fold(existing), target_path, batch_id, prior_marker)
 
 
 def merge_cdc_parquet(
@@ -277,86 +305,41 @@ def merge_cdc_parquet(
     older late-arriving upsert resurrect a deleted key; readers filter.
 
     ``batch_id`` (pass foreachBatch's id) makes the merge IDEMPOTENT under
-    at-least-once redelivery: the version guard alone makes latest-state
-    replay-safe, but the additive accumulator is NOT — a replayed batch
-    would silently double-count. The last applied id is committed inside
-    the swapped directory (one atomic unit with the data), and a batch
-    with id <= the recorded one is a no-op. NOTE the two guards protect
-    different axes: order_cols covers out-of-order DATA within/across
-    applied batches, while the batch_id protocol assumes batch ids are
-    applied in monotonic order — exactly Structured Streaming's
-    foreachBatch contract (replays re-deliver the same id, never skip
-    ahead). Calls without batch_id (ad-hoc backfills) carry the existing
-    marker forward unchanged.
+    at-least-once redelivery (``_merge_into``): the version guard alone
+    makes latest-state replay-safe, but the additive accumulator is NOT —
+    a replayed batch would silently double-count. NOTE the two guards
+    protect different axes: order_cols covers out-of-order DATA
+    within/across applied batches, the batch id covers redelivery.
 
-    Full-outer join on the key, one shuffle, crash-ordered rename-aside
-    swap (``_swap_dir`` — the table is never missing mid-rewrite) — same
-    scale caveat as ``merge_upsert_parquet`` (Delta MERGE rewrites only
-    touched files; this rewrites the table)."""
+    Full-outer join on the key, one shuffle — same scale caveat as
+    ``merge_upsert_parquet`` (Delta MERGE rewrites only touched files;
+    this rewrites the table)."""
     non_keys = [c for c in updates.columns if c not in keys]
-    _recover_dir(target_path)
-    prior_marker = _read_batch_marker(target_path)
 
-    def _commit(df: DataFrame) -> None:
-        _commit_with_marker(df, target_path, batch_id, prior_marker)
+    def fold(target: DataFrame | None) -> DataFrame:
+        if target is None:
+            return updates
+        u = updates.select(
+            *keys, *[F.col(c).alias(f"__u_{c}") for c in non_keys]
+        )
+        j = target.join(u, list(keys), "full_outer")
+        u_ord = F.struct(*[F.col(f"__u_{c}") for c in order_cols])
+        t_ord = F.struct(*[F.col(c) for c in order_cols])
+        newer = F.col(f"__u_{order_cols[0]}").isNotNull() & (
+            F.col(order_cols[0]).isNull() | (u_ord >= t_ord)
+        )
+        out_cols = [F.col(k) for k in keys]
+        for c in non_keys:
+            if c in add_cols:
+                merged = F.coalesce(F.col(c), F.lit(0)) + F.coalesce(
+                    F.col(f"__u_{c}"), F.lit(0)
+                )
+            else:
+                merged = F.when(newer, F.col(f"__u_{c}")).otherwise(F.col(c))
+            out_cols.append(merged.alias(c))
+        return j.select(*out_cols)
 
-    if not os.path.exists(target_path):
-        _commit(updates)
-        return
-    if batch_id is not None:
-        if prior_marker is not None and batch_id <= prior_marker:
-            return  # at-least-once replay of an already-committed batch
-    target = spark.read.parquet(target_path)
-    u = updates.select(
-        *keys, *[F.col(c).alias(f"__u_{c}") for c in non_keys]
-    )
-    j = target.join(u, list(keys), "full_outer")
-    u_ord = F.struct(*[F.col(f"__u_{c}") for c in order_cols])
-    t_ord = F.struct(*[F.col(c) for c in order_cols])
-    newer = F.col(f"__u_{order_cols[0]}").isNotNull() & (
-        F.col(order_cols[0]).isNull() | (u_ord >= t_ord)
-    )
-    out_cols = [F.col(k) for k in keys]
-    for c in non_keys:
-        if c in add_cols:
-            merged = F.coalesce(F.col(c), F.lit(0)) + F.coalesce(
-                F.col(f"__u_{c}"), F.lit(0)
-            )
-        else:
-            merged = F.when(newer, F.col(f"__u_{c}")).otherwise(F.col(c))
-        out_cols.append(merged.alias(c))
-    _commit(j.select(*out_cols))
-
-
-def merge_additive_parquet(
-    spark: SparkSession,
-    updates: DataFrame,
-    target_path: str,
-    keys: tuple[str, ...],
-    sum_cols: tuple[str, ...],
-    batch_id: int | None = None,
-) -> None:
-    """Additive MERGE on plain parquet: per key, SUM the accumulator
-    columns instead of replacing them — the merge rule for MERGEABLE
-    SKETCHES (count-min cells, HLL registers as max, counters) and any
-    commutative-monoid state. Identical crash/idempotence machinery as
-    ``merge_cdc_parquet``: the last applied ``batch_id`` is committed
-    atomically with the data (an additive accumulator is NOT replay-safe
-    on its own — an at-least-once redelivery would silently double-count),
-    and the rewrite is a crash-ordered rename-aside swap. One union +
-    map-side-combining aggregate per merge; same Delta-rewrites-only-
-    touched-files caveat at scale as the siblings.
-
-    Sum-only special case of ``merge_distributive_parquet`` — delegates so
-    the recover/marker/bootstrap/commit machinery exists exactly once."""
-    merge_distributive_parquet(
-        spark,
-        updates,
-        target_path,
-        keys,
-        {c: "sum" for c in sum_cols},
-        batch_id=batch_id,
-    )
+    _merge_into(spark, target_path, batch_id, fold)
 
 
 #: merge rules for merge_distributive_parquet — every distributive
@@ -379,11 +362,10 @@ def merge_distributive_parquet(
     key, each state column merges by its own monoid — ``sum`` (counters,
     moments, sketch cells), ``min``/``max`` (extrema; argmin/argmax via a
     lexicographic ordering-key struct, which is how streaming OHLC carries
-    open/close). Generalizes ``merge_additive_parquet`` (the sum-only
-    special case) with the identical idempotence machinery: batch_id
-    committed atomically with the data (replayed batches are skipped — a
-    fold is not replay-safe on its own) and a crash-ordered rename-aside
-    swap. One union + map-side-combining aggregate per merge.
+    open/close). An all-``sum`` spec is the additive merge of mergeable
+    sketches (count-min cells, moments, signed IVM deltas). Replayed batch
+    ids are skipped (``_merge_into``): a fold is not replay-safe on its
+    own. One union + map-side-combining aggregate per merge.
 
     ``num_partitions`` caps the committed state's file count for THIS
     writer via ``coalesce`` on the aggregated result — applied AFTER the
@@ -396,32 +378,25 @@ def merge_distributive_parquet(
     unknown = {v for v in agg_spec.values()} - set(_DISTRIBUTIVE_FNS)
     if unknown:
         raise ValueError(f"non-distributive merge fns: {sorted(unknown)}")
-    _recover_dir(target_path)
-    prior_marker = _read_batch_marker(target_path)
-    if (
-        batch_id is not None
-        and prior_marker is not None
-        and batch_id <= prior_marker
-    ):
-        return  # at-least-once replay of an already-committed batch
     cols = list(agg_spec)
     aggs = [_DISTRIBUTIVE_FNS[fn](c).alias(c) for c, fn in agg_spec.items()]
-    # Bootstrap aggregates too: first-batch duplicate keys must fold the
-    # same way later merges do, and the projection pins one schema.
-    base = updates.groupBy(*keys).agg(*aggs)
-    if os.path.exists(target_path):
-        merged = (
-            spark.read.parquet(target_path)
-            .select(*keys, *cols)
-            .unionByName(base)
-            .groupBy(*keys)
-            .agg(*aggs)
-        )
-    else:
-        merged = base
-    if num_partitions is not None:
-        merged = merged.coalesce(num_partitions)
-    _commit_with_marker(merged, target_path, batch_id, prior_marker)
+
+    def fold(target: DataFrame | None) -> DataFrame:
+        # Bootstrap aggregates too: first-batch duplicate keys must fold
+        # the same way later merges do, and the projection pins one schema.
+        merged = updates.groupBy(*keys).agg(*aggs)
+        if target is not None:
+            merged = (
+                target.select(*keys, *cols)
+                .unionByName(merged)
+                .groupBy(*keys)
+                .agg(*aggs)
+            )
+        if num_partitions is not None:
+            merged = merged.coalesce(num_partitions)
+        return merged
+
+    _merge_into(spark, target_path, batch_id, fold)
 
 
 def merge_topk_parquet(
@@ -443,78 +418,67 @@ def merge_topk_parquet(
     can never evict a value that belongs in the final k), so any merge
     order converges to the batch answer bit-for-bit — the same
     mergeability argument the KMV estimator itself rests on
-    (operators/kmv.py). Idempotence machinery is shared with the other
-    merge sinks: batch_id committed atomically with the data (replayed
-    batches skipped — re-unioning is harmless for a set but the skip
-    keeps the sink contract uniform) and a crash-ordered rename-aside
-    swap. Shape: union + one rank window per key group over state
-    bounded at |keys|·k rows — the state, not the stream, is what gets
-    re-ranked."""
+    (operators/kmv.py). Replayed batch ids are skipped like every other
+    merge sink's (``_merge_into``) — re-unioning is harmless for a set,
+    but the skip keeps the sink contract uniform. Shape: union + one rank
+    window per key group over state bounded at |keys|·k rows — the
+    state, not the stream, is what gets re-ranked."""
     from pyspark.sql import Window as W
 
-    _recover_dir(target_path)
-    prior_marker = _read_batch_marker(target_path)
-    if (
-        batch_id is not None
-        and prior_marker is not None
-        and batch_id <= prior_marker
-    ):
-        return  # at-least-once replay of an already-committed batch
     cols = [*keys, order_col]
-    base = updates.select(*cols)
-    if os.path.exists(target_path):
-        base = spark.read.parquet(target_path).select(*cols).unionByName(base)
     order = (
         F.col(order_col).desc() if descending else F.col(order_col).asc()
     )
     w = W.partitionBy(*keys).orderBy(order) if keys else W.orderBy(order)
-    merged = (
-        base.distinct()
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-    _commit_with_marker(merged, target_path, batch_id, prior_marker)
+
+    def fold(target: DataFrame | None) -> DataFrame:
+        base = updates.select(*cols)
+        if target is not None:
+            base = target.select(*cols).unionByName(base)
+        return (
+            base.distinct()
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= k)
+            .drop("__rn")
+        )
+
+    _merge_into(spark, target_path, batch_id, fold)
 
 
 def foreach_batch_merge(
     df: DataFrame,
-    target_path: str,
     checkpoint: str,
-    keys: tuple[str, ...],
-    trigger_seconds: int | None = None,
-    output_mode: str = "update",
+    merge: Callable[[DataFrame, int], None],
 ) -> DataStreamWriter:
-    """The Gold sink (03_gold:121-128): foreachBatch dispatching to MERGE.
+    """The one adapter from a stream to a MERGE sink (03_gold:121-128
+    shape): ``foreachBatch`` calling ``merge(batch_df, batch_id)`` on every
+    non-empty micro-batch. Returns the un-started writer.
 
-    Differs from the reference deliberately (SURVEY §4.3.1): default
-    ``update`` output mode + upstream watermark ⇒ bounded state; each batch
-    carries only changed windows and MERGE folds them in. ``complete``
-    reproduces the reference literally when asked.
+    Differs from the reference deliberately (SURVEY §4.3.1): ``update``
+    output mode + upstream watermark ⇒ bounded state; each batch carries
+    only changed rows and the merge folds them in. A stateless stream in
+    ``update`` mode emits exactly what ``append`` would.
     """
-    merge_impl = merge_upsert_delta if HAVE_DELTA else merge_upsert_parquet
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # Pin the batch result across its three references (the isEmpty
-        # probe + the merge's two legs): the frame handed to foreachBatch
-        # re-executes its micro-batch plan — stateful Pandas fold, state
-        # store restore/commit and all — on EVERY action otherwise.
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        # Pin the batch result across its references (the isEmpty probe +
+        # the merge's legs): the frame handed to foreachBatch re-executes
+        # its micro-batch plan — stateful Pandas fold, state store
+        # restore/commit and all — on EVERY action otherwise. The empty
+        # check also skips the no-data batch a watermarked stream emits.
         batch_df.persist()
         try:
             if batch_df.isEmpty():
                 return
-            merge_impl(batch_df.sparkSession, batch_df, target_path, keys)
+            merge(batch_df, batch_id)
         finally:
             batch_df.unpersist()
 
-    w = (
-        df.writeStream.foreachBatch(upsert)
-        .outputMode(output_mode)
+    return (
+        df.writeStream.foreachBatch(run)
+        .outputMode("update")
         .option("checkpointLocation", checkpoint)
     )
-    if trigger_seconds is not None:
-        w = w.trigger(processingTime=f"{trigger_seconds} seconds")
-    return w
 
 
 def compact_parquet_dir(

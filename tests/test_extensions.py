@@ -793,13 +793,16 @@ def test_bm25_integer_pipeline_ranks_like_real_arithmetic(spark):
 
 def test_additive_merge_reconstructs_batch_sketch_and_is_idempotent(spark):
     """Sketch mergeability, the q_stream_cms_merge claim: folding per-split
-    partial sketches through merge_additive_parquet must reconstruct the
-    single-pass sketch EXACTLY; replaying an already-committed batch_id
-    must be a no-op (an additive accumulator double-counts otherwise)."""
+    partial sketches through an all-sum merge_distributive_parquet must
+    reconstruct the single-pass sketch EXACTLY; replaying an
+    already-committed batch_id must be a no-op (an additive accumulator
+    double-counts otherwise)."""
     import tempfile
 
     from real_time_rides_data_pipeline_spark.operators.cms import build_cms
-    from real_time_rides_data_pipeline_spark.sinks import merge_additive_parquet
+    from real_time_rides_data_pipeline_spark.sinks import (
+        merge_distributive_parquet,
+    )
 
     vals = spark.range(500).selectExpr("concat('w', id % 37) AS v")
     whole = {
@@ -810,9 +813,9 @@ def test_additive_merge_reconstructs_batch_sketch_and_is_idempotent(spark):
     for i, part in enumerate(
         (vals.filter("id % 2 = 0"), vals.filter("id % 2 = 1"))
     ):
-        merge_additive_parquet(
+        merge_distributive_parquet(
             spark, build_cms(part, "v", 4, 64), state,
-            keys=("row", "bucket"), sum_cols=("cnt",), batch_id=i,
+            keys=("row", "bucket"), agg_spec={"cnt": "sum"}, batch_id=i,
         )
     merged = {
         (r["row"], r["bucket"]): r["cnt"]
@@ -820,9 +823,9 @@ def test_additive_merge_reconstructs_batch_sketch_and_is_idempotent(spark):
     }
     assert merged == whole
     # at-least-once replay of batch 1 must not double-count
-    merge_additive_parquet(
+    merge_distributive_parquet(
         spark, build_cms(vals.filter("id % 2 = 1"), "v", 4, 64), state,
-        keys=("row", "bucket"), sum_cols=("cnt",), batch_id=1,
+        keys=("row", "bucket"), agg_spec={"cnt": "sum"}, batch_id=1,
     )
     replayed = {
         (r["row"], r["bucket"]): r["cnt"]

@@ -17,6 +17,7 @@ from real_time_rides_data_pipeline_spark.ddl import (
     create_gold_table,
     insert_overwrite,
 )
+from real_time_rides_data_pipeline_spark import sinks
 from real_time_rides_data_pipeline_spark.sinks import stream_append_parquet
 from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
@@ -94,7 +95,6 @@ def test_stream_append_merge_schema(spark, tmp_path):
         out,
         ckpt,
         trigger_seconds=None,
-        merge_schema=True,
     ).start()
     q.processAllAvailable()
     q.stop()
@@ -114,7 +114,6 @@ def test_stream_append_merge_schema(spark, tmp_path):
         out,
         ckpt,
         trigger_seconds=None,
-        merge_schema=True,
     ).start()
     q.processAllAvailable()
     q.stop()
@@ -324,7 +323,7 @@ def test_swap_dir_recovery_and_marker_preservation(spark, tmp_path):
         spark, spark.createDataFrame([(3, "upsert", 7, 1)], cols),
         target, **kw,
     )
-    assert _read_batch_marker(target) == 1
+    assert sinks._read_batch_marker(target) == 1
     # replay of batch 1 after the backfill is still a no-op
     merge_cdc_parquet(
         spark, spark.createDataFrame([(2, "upsert", 5, 1)], cols),
@@ -332,3 +331,134 @@ def test_swap_dir_recovery_and_marker_preservation(spark, tmp_path):
     )
     rows = {r["user_id"]: r for r in spark.read.parquet(target).collect()}
     assert rows[2]["n_ops"] == 1 and set(rows) == {1, 2, 3}
+
+
+# --------------------------------------------------------------------------
+# The shared commit path of the parquet MERGE sinks (sinks._merge_into):
+# crash-window recovery, replay, marker carry-forward and a failing fold,
+# once per public merge.
+# --------------------------------------------------------------------------
+
+
+#: name → merge(spark, updates, target, batch_id) over a (k, v) table
+_MERGES = {
+    "upsert": lambda spark, df, target, batch_id: sinks.merge_upsert_parquet(
+        spark, df, target, ("k",)
+    ),
+    "cdc": lambda spark, df, target, batch_id: sinks.merge_cdc_parquet(
+        spark, df, target, keys=("k",), order_cols=("v",), batch_id=batch_id
+    ),
+    "distributive": lambda spark, df, target, batch_id: (
+        sinks.merge_distributive_parquet(
+            spark, df, target, keys=("k",), agg_spec={"v": "sum"},
+            batch_id=batch_id,
+        )
+    ),
+    "topk": lambda spark, df, target, batch_id: sinks.merge_topk_parquet(
+        spark, df, target, keys=("k",), order_col="v", k=2, batch_id=batch_id
+    ),
+}
+
+
+def _tree_bytes(path):
+    out = {}
+    for root, _, files in os.walk(path):
+        for f in files:
+            p = os.path.join(root, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, path)] = fh.read()
+    return out
+
+
+def _rows(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).select("k", "v").collect())
+
+
+@pytest.mark.parametrize("name", sorted(_MERGES))
+def test_merge_commit_path_survives_crash_replay_and_failure(spark, tmp_path, name):
+    """Every parquet MERGE sink commits through one path, so each must:
+    restore the ``.__old_*`` aside copy a crash in the one-rename window
+    left behind; treat a replay of the last applied batch id as a no-op;
+    carry the marker forward through a merge without a batch id; and
+    leave table and marker untouched when the fold fails."""
+    merge = _MERGES[name]
+    target = str(tmp_path / "state")
+    cols = "k long, v long"
+    merge(spark, spark.createDataFrame([(1, 10), (2, 20)], cols), target, 0)
+
+    # crash between the two renames of the swap: only the aside copy exists
+    os.rename(target, f"{target}.__old_deadbeef")
+    b1 = spark.createDataFrame([(2, 25), (3, 30)], cols)
+    merge(spark, b1, target, 1)
+    assert 1 in {k for k, _ in _rows(spark, target)}, "aside copy not restored"
+    assert not os.path.exists(f"{target}.__old_deadbeef")
+
+    # replay of the last applied batch id
+    rows, files = _rows(spark, target), _tree_bytes(target)
+    merge(spark, b1, target, 1)
+    assert _rows(spark, target) == rows
+    if name != "upsert":  # latest-wins rewrites the same rows
+        assert _tree_bytes(target) == files
+
+    # a merge without a batch id keeps the marker
+    if name == "upsert":  # it never stamps one; plant one to carry
+        with open(os.path.join(target, sinks._BATCH_MARKER), "w") as f:
+            f.write("1")
+    merge(spark, spark.createDataFrame([(4, 40)], cols), target, None)
+    assert sinks._read_batch_marker(target) == 1
+    assert 4 in {k for k, _ in _rows(spark, target)}
+
+    # a fold whose result fails to compute commits nothing
+    rows, files = _rows(spark, target), _tree_bytes(target)
+    poisoned = spark.createDataFrame([(5, 50)], cols).withColumn(
+        "v", F.raise_error(F.lit("fold failed")).cast("long")
+    )
+    with pytest.raises(Exception, match="fold failed"):
+        merge(spark, poisoned, target, 2)
+    assert _tree_bytes(target) == files
+    assert _rows(spark, target) == rows
+    assert sinks._read_batch_marker(target) == 1
+
+
+def test_merge_commit_and_stream_adapter_exist_once():
+    """The MERGE commit protocol lives in one function of ``sinks.py``, and
+    ``foreach_batch_merge`` is the only code that connects a stream to a
+    merge: no function in the package both calls ``foreachBatch`` and a
+    ``merge_*`` sink, and no query module probes a batch for emptiness."""
+    import ast
+    import collections
+    import glob
+
+    import real_time_rides_data_pipeline_spark as pkg
+
+    def call_names(node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Call):
+                f = n.func
+                yield f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+
+    with open(sinks.__file__) as f:
+        calls = collections.Counter(call_names(ast.parse(f.read())))
+    for name in ("_recover_dir", "_read_batch_marker", "_commit_with_marker"):
+        assert calls[name] == 1, (name, calls[name])
+
+    pkg_dir = os.path.dirname(pkg.__file__)
+    adapters, hits = [], {}
+    for path in sorted(glob.glob(f"{pkg_dir}/**/*.py", recursive=True)):
+        with open(path) as f:
+            src = f.read()
+        rel = os.path.relpath(path, pkg_dir)
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef) and node.col_offset == 0:
+                names = set(call_names(node))
+                if "foreachBatch" in names:
+                    adapters.append((rel, node.name))
+                    assert not any(n.startswith("merge_") for n in names), (
+                        rel, node.name
+                    )
+        if os.path.basename(path).startswith("queries"):
+            for needle in ("isEmpty()", "merge_additive_parquet"):
+                if needle in src:
+                    hits[(rel, needle)] = src.count(needle)
+    assert ("sinks.py", "foreach_batch_merge") in adapters
+    assert hits == {}
