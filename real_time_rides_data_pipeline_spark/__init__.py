@@ -12,9 +12,9 @@ surveyed in ``SURVEY.md``), re-expressed Spark-first:
   similarity search, multimodal columns, text analysis) live in
   ``operators/`` and ``functions/``.
 
-Design target: 1000-executor clusters over ~100 TB — declarative plans that
-Catalyst/AQE can optimize (pushdown, broadcast, partial agg), no driver-side
-loops, no row-at-a-time Python in the hot path.
+Design rule: declarative plans that Catalyst/AQE can optimize (pushdown,
+broadcast, partial agg), no driver-side loops, no row-at-a-time Python in
+the hot path.
 """
 
 from real_time_rides_data_pipeline_spark.session import get_spark

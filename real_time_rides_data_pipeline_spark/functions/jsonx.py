@@ -18,13 +18,3 @@ def json_get(col: Column, path: str) -> Column:
 
 def json_get_int(col: Column, path: str) -> Column:
     return json_get(col, path).cast("int")
-
-
-def json_get_double(col: Column, path: str) -> Column:
-    return json_get(col, path).cast("double")
-
-
-def json_to_map(col: Column) -> Column:
-    """Whole payload → map<string,string> (NULL on malformed — unlike
-    struct-schema from_json, the map variant has no all-null ambiguity)."""
-    return F.from_json(col, "map<string,string>")

@@ -27,12 +27,6 @@ def floor_round(col: Column, dp: int) -> Column:
     return F.floor(col * scale) / float(scale)
 
 
-def floor_round_sql(expr: str, dp: int) -> str:
-    """The DuckDB twin of ``floor_round``."""
-    scale = 10**dp
-    return f"floor(({expr}) * {scale}) / {scale}.0"
-
-
 def cents(col: Column) -> Column:
     """Exact integer cents from a ≤2-dp double column."""
     return F.round(col * 100).cast("long")

@@ -5,8 +5,8 @@ path): tokenization, shingling, language-ID heuristic, quality scoring,
 token counting, fingerprinting. Designed for the ``documents`` table
 (doc_id, text, lang, source, n_chars) but column-name agnostic.
 
-At 100 TB these run embarrassingly parallel over the scan; the only shuffles
-are whatever aggregation the caller adds downstream.
+These run embarrassingly parallel over the scan; the only shuffles are
+whatever aggregation the caller adds downstream.
 """
 
 from __future__ import annotations
@@ -84,9 +84,9 @@ def _marker_hits(toks: Column, markers: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
 
-def lang_id(text: Column, default: str = "und") -> Column:
+def lang_id(text: Column) -> Column:
     """Heuristic language ID: most marker-word hits wins; ties broken by a
-    fixed language order; no hits → ``default``. O(tokens × langs) JVM work,
+    fixed language order; no hits → ``und``. O(tokens × langs) JVM work,
     zero shuffle."""
     toks = tokens(F.lower(text))
     scores = [(lang, _marker_hits(toks, m)) for lang, m in LANG_MARKERS.items()]
@@ -99,7 +99,7 @@ def lang_id(text: Column, default: str = "und") -> Column:
             cond = score > best_score
             best = F.when(cond, F.lit(lang)).otherwise(best)
             best_score = F.when(cond, score).otherwise(best_score)
-    return F.when(best_score > 0, best).otherwise(F.lit(default))
+    return F.when(best_score > 0, best).otherwise(F.lit("und"))
 
 
 # --- quality scoring --------------------------------------------------------
@@ -163,14 +163,5 @@ def md5_int60(col: Column) -> Column:
     ENGINE-PORTABLE integer hash of this codebase (xxhash64/hash are
     Spark-specific; DuckDB twin: ``('0x' || substr(md5(x), 1, 15))::BIGINT``,
     the q_feature_hash convention). Shared by the hashing-trick featurizer
-    and the value-checked MinHash/SimHash siblings (round 14)."""
+    and the value-checked MinHash/SimHash siblings."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def rolling_fingerprint(text: Column, window: int = 8, keep: int = 4) -> Column:
-    """Winnowing-style document fingerprint: xxhash64 each ``window``-word
-    shingle, keep the ``keep`` smallest hashes, sorted → array<bigint>.
-    Robust to local edits (a changed word touches only nearby shingles)."""
-    sh = word_shingles(text, window)
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-    return F.slice(F.array_sort(hashes), 1, keep)

@@ -29,7 +29,7 @@ def vec_lit(vec: list[float]) -> Column:
     trip per element and puts ``dim`` Literal nodes in the tree — at
     dim=64 repeated across 8 centroids this dominated q_ann_recall's
     wall clock (5.3 s of the 8 s total was DataFrame CONSTRUCTION; the
-    same pathology as the round-10 Bloom 8192-Literal fold,
+    same pathology as the Bloom 8192-Literal fold,
     operators/bloom.py). Here the vector is serialized to one comma-
     joined string literal and split/cast in-plan: the split of a
     literal is foldable, so Catalyst constant-folds it to the same

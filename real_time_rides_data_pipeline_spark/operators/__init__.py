@@ -20,7 +20,6 @@ from real_time_rides_data_pipeline_spark.operators.enrich import with_suspicious
 from real_time_rides_data_pipeline_spark.operators.dedup import (
     stream_dedup,
     stream_dedup_within_watermark,
-    exact_dedup,
     keep_first_per_key,
 )
 from real_time_rides_data_pipeline_spark.operators.agg import (
@@ -40,7 +39,6 @@ __all__ = [
     "with_suspicious_flag",
     "stream_dedup",
     "stream_dedup_within_watermark",
-    "exact_dedup",
     "keep_first_per_key",
     "hourly_driver_agg",
     "reaggregate_gold",

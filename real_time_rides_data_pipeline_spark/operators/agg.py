@@ -6,9 +6,9 @@ avg / conditional sum; verification re-agg at verify_gold_layer_data.py:37-41.
 
 Physical shape: partial HashAggregate → Exchange(hash by window,key) → final
 HashAggregate. Map-side combine means the shuffle carries one row per
-(window × key) per input partition — at 100 TB with bounded key cardinality
-this is the cheapest possible shuffle; no salting needed unless a single
-key×hour dominates (AQE skew handling covers that).
+(window × key) per input partition — with bounded key cardinality this is
+the cheapest possible shuffle; no salting needed unless a single key×hour
+dominates (AQE skew handling covers that).
 """
 
 from __future__ import annotations
@@ -165,7 +165,7 @@ def sweep_max_concurrency(
 ) -> DataFrame:
     """Distributed SWEEP LINE: per calendar ``unit`` partition, the maximum
     number of concurrently-open half-open intervals [start, end) and the
-    first instant the peak is attained (round-10; the library form behind
+    first instant the peak is attained (the library form behind
     ``q_max_concurrency``).
 
     Scale design: intervals are SPLIT at unit boundaries so every
@@ -250,7 +250,7 @@ def weighted_median(
     weight_col: str,
 ) -> DataFrame:
     """EXACT lower weighted median per group with zero float arithmetic
-    (round-10; the library form behind ``q_weighted_median``): the
+    (the library form behind ``q_weighted_median``): the
     smallest value whose cumulative weight reaches half the group total.
     Values and weights must be integer-typed (callers convert money to
     cents first). Shape: (group, distinct value) compression with summed

@@ -89,8 +89,8 @@ def might_contain(
     # The word array enters the plan as ONE string literal split+cast to
     # array<bigint> — a foldable expression Catalyst constant-folds once.
     # (``F.lit(words)`` built one Literal node PER WORD: 8192 children at
-    # the default sizing, ~7-8 s of analysis/codegen per invocation,
-    # measured round 10 — flat in data size, pure plan-build overhead.
+    # the default sizing, ~7-8 s of analysis/codegen per invocation —
+    # flat in data size, pure plan-build overhead.
     # The cast to bigint also keeps getbit on a 64-bit container; lit()
     # used to infer array<int> for sparse bitmaps and raise
     # BIT_POSITION_RANGE for any bit >= 32.)

@@ -11,8 +11,8 @@ fit-small/broadcast-big shape (same contract as
 ``similarity.fit_centroids_kmeans`` and ``pca.fit_top2_gramian``): each
 round is one distributed aggregation plus a BOUNDED driver fetch (one
 argmax row), and the chosen merge folds back into the plan as literals
-— the corpus is never collected, so the fit runs unchanged at 100 TB
-(distinct-WORD table size, not corpus size, drives each round).
+— the corpus is never collected (distinct-WORD table size, not corpus
+size, drives each round).
 
 All arithmetic is integer (pair frequency = Σ word_count × occurrences)
 → bit-identical across engines and partitionings; determinism pinned
@@ -84,10 +84,7 @@ def train_bpe(
     single argmax row; the merge is folded back as literals for the next
     round's plan.
     """
-    from real_time_rides_data_pipeline_spark.session import (
-        NARROW_LOOP_ROWS,
-        narrow_loop_session,
-    )
+    from real_time_rides_data_pipeline_spark.session import narrow_loop_session
 
     # Checkpoint the weighted word table: without it every round's argmax
     # re-scans and re-tokenizes the corpus AND re-applies all prior merge
@@ -112,9 +109,7 @@ def train_bpe(
     # count included in the clone leg):
     # q_bpe_train 2.08 → 1.79 s, clone faster on every rep.
     n_words = words.count()
-    w = words
-    if 0 < n_words <= NARROW_LOOP_ROWS:
-        w, _parent, _rebind = narrow_loop_session(words, n_words)
+    w, _parent, _rebind = narrow_loop_session(words, n_words)
     try:
         seg = w.select(F.col("n"), chars_of("word").alias("seg"))
         merges: list[tuple[int, str, str, str, int]] = []

@@ -9,8 +9,7 @@ seeded ``xxhash64``):
   (``pmod(xxhash64(v, row), width)``); one map-side-combining hash
   aggregate counts each (row, bucket) cell. The sketch is ≤ depth×width
   rows REGARDLESS of data size, and MERGEABLE across shards/streams by
-  cell-wise addition — the property that makes it the standard
-  heavy-hitter structure at 100 TB.
+  cell-wise addition.
 - **Probe** (distributed): probe keys re-hash to their depth cells, join
   the (broadcast-sized) sketch, take min(count) per key.
 

@@ -5,7 +5,7 @@ Reference: /root/reference/src/02_silver_realtime_rides.py:84-92 —
 "event_timestamp"])`` targeting the producer's 2% duplicate re-emissions
 (kafka_rides_producer.py:77-78).
 
-Scale notes (100 TB): streaming dedup state is keyed per-partition in the
+Scale notes: streaming dedup state is keyed per-partition in the
 RocksDB state store and bounded by the watermark — the engine REQUIRES a
 watermark on stateful streams (unlike the reference's Gold stage, SURVEY.md
 §4.3.1). The batch twin ``keep_first_per_key`` is a single hash-shuffle on the
@@ -55,14 +55,6 @@ def stream_dedup_within_watermark(
         return df.withWatermark(event_time_col, watermark).dropDuplicatesWithinWatermark(
             list(keys)
         )
-    return df.dropDuplicates(list(keys))
-
-
-def exact_dedup(df: DataFrame, keys: tuple[str, ...] = ("text",)) -> DataFrame:
-    """Exact batch dedup on arbitrary columns (hash-shuffle on the keys,
-    arbitrary survivor). For 100 TB text dedup prefer hashing the payload
-    first (dedup on xxhash64(text) — 8-byte shuffle keys instead of documents).
-    """
     return df.dropDuplicates(list(keys))
 
 

@@ -7,7 +7,7 @@ generator's 10% anomaly injection, kafka_rides_producer.py:64-68).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -22,7 +22,3 @@ def with_suspicious_flag(
     return df.withColumn(
         out_col, (F.col(duration_col) < max_duration_s) & (F.col(fare_col) > min_fare)
     )
-
-
-def suspicious_expr(duration: Column, fare: Column) -> Column:
-    return (duration < 120) & (fare > 300)

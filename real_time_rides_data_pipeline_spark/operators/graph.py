@@ -11,7 +11,7 @@ Two algorithms behind one API, selected by ``algorithm=``:
 - ``"star"`` (default) — alternating large-star/small-star (Kiveris et
   al., "Connected Components in MapReduce and Beyond", SoCC'14). Each
   iteration is two grouped edge rewrites (one hash shuffle each) and
-  converges in O(log diameter) iterations, so a 100 TB pair graph with an
+  converges in O(log diameter) iterations, so a pair graph with an
   adversarially deep component still finishes in a handful of rounds.
   Driver sync per iteration is ONE constant-size aggregate (edge count +
   XOR hash signature) used purely for iteration control; a definitive
@@ -129,16 +129,6 @@ def _signature(e: DataFrame) -> tuple[int, int]:
     return (row["n"], row["h"] if row["h"] is not None else 0)
 
 
-#: Edge count below which the star loop runs in a narrow session clone.
-#: Rationale: the loop is an RDD-barriered iteration (localCheckpoint per
-#: round), so AQE cannot coalesce ACROSS rounds, and its per-query-stage
-#: materialization latency (each shuffle = one scheduled sub-job) dominates
-#: when the graph is tiny — measured ~0.6 s/round on a 920-edge graph at
-#: width 32 vs ~0.45 s at width 1 with AQE off, and the whole graph fits
-#: one task many times over below this bound. Above it, the parent session
-#: (default width, AQE on — the 100 TB configuration) is used unchanged.
-_NARROW_LOOP_EDGES = 500_000
-
 def _cc_star(
     e: DataFrame, max_iter: int, assume_distinct: bool = False
 ) -> DataFrame:
@@ -152,9 +142,11 @@ def _cc_star(
     sig = _signature(edges)
     if sig[0] == 0:
         return edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    parent = rebind = None
-    if sig[0] <= _NARROW_LOOP_EDGES:
-        edges, parent, rebind = narrow_loop_session(edges, sig[0])
+    # Small graphs iterate in a narrow session clone: each star round's
+    # per-query-stage latency dominates when the graph is tiny — measured
+    # ~0.6 s/round on a 920-edge graph at width 32 vs ~0.45 s at width 1
+    # with AQE off.
+    edges, parent, rebind = narrow_loop_session(edges, sig[0])
     orig = edges  # checkpointed — reused by the final consistency gate
     converged = False
     for _ in range(max_iter):
@@ -202,7 +194,7 @@ def _cc_star(
             f"large-star/small-star did not converge in {max_iter} iterations "
             f"({bad} original edges still cross labels): raise max_iter"
         )
-    if parent is not None:
+    if orig.sparkSession is not parent:
         # Hand the result back to the caller's session so the final vertex
         # join plans under the caller's (scale-appropriate) configuration.
         labels = rebind(labels.localCheckpoint(eager=False), parent)

@@ -7,8 +7,8 @@ over star-schema data.
 Scale strategy: dimensions (region/nation, and customer at most SFs) go
 broadcast — no shuffle of the fact side; fact⋈fact (lineitem⋈orders) is a
 sort-merge/shuffled-hash join on the key, which AQE converts or skew-splits at
-runtime. At 100 TB, pre-bucketing both facts on the join key removes the
-shuffle entirely (see sinks.py bucketed writer).
+runtime. Pre-bucketing both facts on the join key removes the shuffle
+entirely (q_bucketed_join).
 """
 
 from __future__ import annotations

@@ -108,9 +108,8 @@ def kmv_intersect_estimate(
     theta is effectively +inf — it must not bound the retained sample.
     The effective theta is therefore the min over FILLED sides only (the
     standard theta framework); substituting the unfilled side's max
-    retained hash (the pre-round-10 behavior) was still a valid
-    sample/scale pair but shrank the retained sample and inflated
-    variance for no correctness gain. With exactly one side filled the
+    retained hash would still give a valid sample/scale pair but shrink
+    the retained sample and inflate variance for no correctness gain. With exactly one side filled the
     estimate scales by the filled theta alone — still an estimate, since
     the unfilled side's completeness does not survive intersection with
     a sampled set."""

@@ -1,12 +1,11 @@
 """Multimodal columns: opaque binary payloads + typed metadata, processed
 with Arrow-batched ``mapInPandas`` (SURVEY.md §2.9).
 
-The container has no image/audio libraries, so the actual decoders are
-STUBS — ``decode_image``/``decode_audio`` raise ``NotImplementedError``
-unless PIL/soundfile import, and the pipeline ships a deterministic fake
-("header parse": derive width/height/duration from the byte payload) so the
-Spark-side plumbing — binary schema, Arrow batch shape, partition-parallel
-UDF execution — is real and tested end-to-end.
+No image or audio decoder is a dependency, so the pipeline ships a
+deterministic fake ("header parse": derive width/height/duration from the
+byte payload) in place of a PIL/soundfile decode. The Spark-side plumbing —
+binary schema, Arrow batch shape, partition-parallel UDF execution — is
+real and tested end-to-end.
 
 Scale notes: binary payloads ride the scan as parquet BYTE_ARRAY; metadata
 extraction is a narrow map (no shuffle); frame-sampling/resize fan-out uses
@@ -22,31 +21,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-try:  # pragma: no cover - not in this container
-    from PIL import Image  # noqa: F401
-
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
-
-
-def decode_image(payload: bytes) -> "object":
-    """Real decoder — unavailable in this container (no PIL)."""
-    if not HAVE_PIL:
-        raise NotImplementedError(
-            "image decode requires PIL; use fake_image_meta for plumbing tests"
-        )
-    import io
-
-    from PIL import Image
-
-    return Image.open(io.BytesIO(payload))  # pragma: no cover
-
-
 def fake_image_meta(payload: bytes) -> tuple[int, int, str]:
     """Deterministic stand-in for a header parse: (width, height, format)
-    derived from payload length/first byte. Replace with decode_image(...)
-    .size when PIL exists — the Spark plumbing is identical."""
+    derived from payload length/first byte. A PIL decode's ``.size`` drops in
+    here — the Spark plumbing is identical."""
     n = len(payload)
     width = n % 64 + 16
     height = (n // 64) % 64 + 16
@@ -84,20 +62,6 @@ def extract_image_metadata(
     return df.select(id_col, payload_col).mapInPandas(extract, schema)
 
 
-def decode_audio(payload: bytes) -> "object":
-    """Real audio decoder — unavailable in this container (no soundfile)."""
-    try:  # pragma: no cover - not in this container
-        import io
-
-        import soundfile
-
-        return soundfile.read(io.BytesIO(payload))
-    except ImportError as exc:
-        raise NotImplementedError(
-            "audio decode requires soundfile; use fake_audio_meta"
-        ) from exc
-
-
 def fake_audio_meta(payload: bytes) -> tuple[int, int]:
     """Deterministic stand-in for an audio header parse:
     (sample_rate, duration_ms) derived from payload bytes."""
@@ -110,7 +74,7 @@ def extract_audio_metadata(
     df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
 ) -> DataFrame:
     """mapInPandas audio-metadata extraction (the audio twin of
-    extract_image_metadata): one Arrow batch in, one out; ``decode_audio``
+    extract_image_metadata): one Arrow batch in, one out; ``fake_audio_meta``
     is the real-decoder drop-in point. Output: id, byte_len, sample_rate,
     duration_ms."""
     schema = f"{id_col} long, byte_len long, sample_rate int, duration_ms long"
@@ -140,7 +104,7 @@ def resize_images(
 ) -> DataFrame:
     """Image-resize plumbing: mapInPandas 1→1 transform whose output payload
     is a fixed-budget byte grid (a real implementation calls
-    ``decode_image(p).resize((w, h))`` and re-encodes — byte-sampling here
+    a PIL ``Image.resize((w, h))`` and re-encodes — byte-sampling here
     keeps the batch shape, output size, and determinism identical). The
     narrow map keeps payloads scan-local: no shuffle at any scale."""
     schema = f"{id_col} long, resized binary, resized_len long"

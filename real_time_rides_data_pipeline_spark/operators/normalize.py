@@ -4,8 +4,8 @@ Two engines behind one API, selected by ``engine=``:
 
 - ``"window"`` (default) — pure-JVM window aggregates + exact integer
   ``DIV`` arithmetic. Two window passes over one hash shuffle on the group
-  key, whole-stage-codegen throughout. This is the 100 TB path: state per
-  key is two longs, group size is irrelevant.
+  key, whole-stage-codegen throughout. State per key is two longs, group
+  size is irrelevant.
 - ``"grouped_map"`` — ``groupBy(...).applyInPandas`` computing the same
   integers in numpy. This exists to exercise the grouped-map Pandas
   surface (SURVEY.md §2.9); it is NOT the scale default because grouped-map

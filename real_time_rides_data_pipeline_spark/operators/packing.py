@@ -4,9 +4,9 @@ token-budget packs.
 The LLM-pipeline step that turns a tokenized corpus into dense model
 contexts. A single global running sum would serialize the corpus through
 one partition, so packing is SHARDED: deterministic shard = id % n_shards,
-then an in-partition cumulative sum per shard after ONE hash shuffle. At
-100 TB: thousands of shards, each an independent sequential scan of its
-own partition — the same shape as any keyed window.
+then an in-partition cumulative sum per shard after ONE hash shuffle. Each
+shard is an independent sequential scan of its own partition — the same
+shape as any keyed window.
 
 Greedy-packing contract (property-tested in tests/test_properties.py):
 - every document lands in exactly one pack (token totals are preserved);

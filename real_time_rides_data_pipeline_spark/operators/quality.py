@@ -9,8 +9,7 @@ artifact every managed pipeline publishes alongside its tables.
 Scale: both outputs are single-pass. The stats frame is ONE aggregate over
 the scan (sums of CASE WHEN, partial+final, no per-expectation rescan) and
 the retained frame is a plain conjunctive filter that pushes down like any
-other predicate. At 100 TB the stats cost is the same one pass the write
-was already making.
+other predicate.
 """
 
 from __future__ import annotations
@@ -73,8 +72,8 @@ def tcloseness_audit(
     band_col: str,
     t_ppm: int = 250000,
 ):
-    """t-CLOSENESS audit over an ORDERED sensitive-value domain (round-10;
-    the library form behind ``q_tcloseness``): per QI group, the Earth
+    """t-CLOSENESS audit over an ORDERED sensitive-value domain (the
+    library form behind ``q_tcloseness``): per QI group, the Earth
     Mover's Distance to the global distribution via the ordered-domain
     identity EMD = Σ|cumulative diffs| / (m−1) (Li, Li,
     Venkatasubramanian 2007), kept exact over the common denominator

@@ -3,7 +3,7 @@
 
 Scale design: brute force is one scan + TakeOrderedAndProject (per-partition
 heap, no global sort) — right answer for one-off queries. For repeated
-queries at 100 TB, IVF partition-prunes: vectors are assigned to their
+queries, IVF partition-prunes: vectors are assigned to their
 nearest centroid at write time (cluster_id becomes a partition column), and
 a probe only scans the ``n_probe`` closest clusters — the classic
 inverted-file trade of recall for scan fraction.
@@ -53,8 +53,7 @@ def fit_centroids_kmeans(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[list[float]]:
-    """Sampled spherical k-means fit — the real centroid source for IVF
-    (previously documented as the 100 TB path, now implemented).
+    """Sampled spherical k-means fit — the real centroid source for IVF.
 
     Deterministic by construction: the sample is the first ``sample_n``
     vectors by id (orderBy + limit — no RNG in the scan), init is a seeded
@@ -122,8 +121,7 @@ def assign_ivf_cluster(
     lowest centroid id (array_position returns the first match). The K
     per-centroid similarities are ONE transform over the constant-folded
     centroid matrix (mat_lit) — K duplicated 64-Literal cosine subtrees
-    made plan construction the dominant cost (the q_ann_recall r10
-    profile)."""
+    made plan construction the dominant cost (profiled on q_ann_recall)."""
     v = as_double(F.col(vec_col))
     sims = F.transform(
         mat_lit(centroids), lambda c: cosine_rounded(v, c, 9)
@@ -213,8 +211,8 @@ def cluster_pruned_pairs_above(
 
     Soundness: step (3) is a proven upper bound, so the output is IDENTICAL
     to the all-pairs join at any threshold — pruning only removes blocks that
-    cannot contain a qualifying pair. On clustered corpora (the 100 TB case:
-    near-dup embeddings huddle) most of the K² blocks are pruned; on
+    cannot contain a qualifying pair. On clustered corpora (near-dup
+    embeddings huddle) most of the K² blocks are pruned; on
     adversarially uniform vectors it degrades to the same candidate set as
     all-pairs but still swaps the nested loop for a salted hash join.
 

@@ -1,7 +1,7 @@
 """Near-duplicate text detection at scale: MinHash+LSH, SimHash, n-gram
 Jaccard. The LLM-training-data dedup suite (SURVEY.md §2.9).
 
-Scale design (100 TB story):
+Scale design:
 - Signatures are computed scan-side with JVM array lambdas (no explode of
   shingles → no |doc|×|shingles| blow-up through a shuffle).
 - LSH banding turns all-pairs O(N²) into a groupBy on band buckets: only
@@ -52,7 +52,7 @@ def with_minhash_signature(
     shingle sets (LSH + exact verify) otherwise re-evaluates the
     tokenize→n-gram→array_distinct chain in the same projection — the
     staged column is referenced twice, so CollapseProject keeps it
-    materialized (round-16 A/B: 0.76× on the 64-hash signature pass).
+    materialized (0.76× on the 64-hash signature pass, OPTIMIZATION_r16.md).
 
     Raises ``ValueError`` when ``df`` already has the staged ``__mh_sh``
     column (checked only when ``shingles_col`` is None)."""
@@ -108,14 +108,14 @@ def with_minhash_signature_portable(
     (md5 is ~20x a xxhash64; the affine reuse keeps the portable
     signature within ~2x of the xxhash64 one). DuckDB recomputes it
     exactly, which is what converts LSH candidate generation from
-    rows-only to value-checked (q_minhash_bands, round 14).
+    rows-only to value-checked (q_minhash_bands).
 
     The base-hash array is materialized as its own projected column so
     CollapseProject does NOT inline the md5 chain into each of the 16
     array_min lambdas (the q_simhash_est_hamming staging trick — one md5
     pass, not 16). ``shingles_col`` keeps the shingle array as an output
-    column computed ONCE (see ``with_minhash_signature``; round-16 A/B:
-    0.63× on the signature projection when the caller needs both).
+    column computed ONCE (see ``with_minhash_signature``; 0.63× on the
+    signature projection when the caller needs both, OPTIMIZATION_r16.md).
 
     Raises ``ValueError`` when ``df`` already has the staged ``_mh_base``
     column, or ``_mh_sh`` when ``shingles_col`` is None."""
@@ -233,8 +233,8 @@ def minhash_near_duplicates(
     The checkpoint carries ``(id, sh, minhash)`` — NOT the raw text: the
     shingle array is computed once in the signature projection and reused
     by the exact verify, so the corpus is scanned and tokenized exactly
-    once per invocation (round-16: was a second full scan + shingle pass;
-    A/B 0.84× end-to-end)."""
+    once per invocation (0.84× end-to-end against a second scan + shingle
+    pass, OPTIMIZATION_r16.md)."""
     signed = with_minhash_signature(
         docs, text_col, n_hashes, shingle_words, shingles_col="__sh"
     ).select(id_col, "__sh", "minhash")
@@ -399,9 +399,9 @@ def dup_span_profile(
     materialization of span text until the per-row projection; then three
     compact-aggregate shuffles — (span, id) partial count, a per-span
     window OVER THAT AGGREGATE (never the raw positions), per-doc rollup
-    — plus the doc-level equi-join. At 100 TB the span strings would be
-    xxhash64-compressed to 8-byte shuffle keys (identical plan shape);
-    raw strings keep the DuckDB oracle exact. Property-tested against the
+    — plus the doc-level equi-join. Raw span strings keep the DuckDB
+    oracle exact; xxhash64 keys would shrink the shuffle to 8 bytes per
+    span with the same plan shape. Property-tested against the
     brute-force positional definition."""
     from pyspark.sql import Window
 

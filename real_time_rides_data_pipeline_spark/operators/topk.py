@@ -2,12 +2,12 @@
 
 Reference: verify_gold_layer_data.py:10-12 (ORDER BY … LIMIT 100 — Spark plans
 ``TakeOrderedAndProject``: per-partition heap + driver merge, never a global
-sort; this is the scalable top-k at 100 TB).
+sort).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -38,23 +38,34 @@ def latest_per_key(
     )
 
 
-def top_k_per_group(
-    df: DataFrame, keys: tuple[str, ...], order_by: list, k: int
+def _ranged_runs(
+    df: DataFrame, order_cols: list[str], run_total: Column, materialize: bool
 ) -> DataFrame:
-    """Top-k within each group (rank ≤ k). Window shuffle on group keys only."""
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    """The shared TeraSort shape of the global rank/prefix operators: range
+    shuffle to ``spark.sql.shuffle.partitions`` sorted runs, tagged with
+    ``__pid`` and joined to ``__off``, the sum of ``run_total`` over all
+    earlier runs (a broadcast table of |partitions| rows)."""
+    p = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    part = (
+        df.repartitionByRange(p, *[F.col(c) for c in order_cols])
+        .sortWithinPartitions(*order_cols)
+        .withColumn("__pid", F.spark_partition_id())
     )
+    if materialize:
+        part = part.localCheckpoint(eager=True)
+    totals = part.groupBy("__pid").agg(run_total.alias("__t"))
+    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    offsets = totals.select(
+        "__pid",
+        F.coalesce(F.sum("__t").over(w_off), F.lit(0)).alias("__off"),
+    )
+    return part.join(F.broadcast(offsets), "__pid")
 
 
 def global_row_number(
     df: DataFrame,
     order_cols: list[str],
     out_col: str = "rn",
-    num_parts: int | None = None,
     materialize: bool = True,
 ) -> DataFrame:
     """Scale-safe GLOBAL row_number over a total order — no single-partition
@@ -74,24 +85,9 @@ def global_row_number(
     ranks within equal keys are partition-dependent. ``materialize=False``
     skips the run materialization (three re-sorts instead — only for plan
     inspection in tests; range sampling is deterministic so results agree)."""
-    spark = df.sparkSession
-    p = num_parts or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    part = (
-        df.repartitionByRange(p, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    if materialize:
-        part = part.localCheckpoint(eager=True)
-    counts = part.groupBy("__pid").count()
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "__pid",
-        F.coalesce(F.sum("count").over(w_off), F.lit(0)).alias("__off"),
-    )
     w_in = Window.partitionBy("__pid").orderBy(*order_cols)
     return (
-        part.join(F.broadcast(offsets), "__pid")
+        _ranged_runs(df, order_cols, F.count(F.lit(1)), materialize)
         .withColumn(out_col, F.row_number().over(w_in) + F.col("__off"))
         .drop("__pid", "__off")
     )
@@ -165,8 +161,6 @@ def global_prefix_sum(
     order_cols: list[str],
     val_col: str,
     out_col: str = "cum",
-    num_parts: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Scale-safe GLOBAL inclusive prefix sum over a total order — the
     cumulative-weight primitive behind systematic sampling, CDF
@@ -176,28 +170,13 @@ def global_prefix_sum(
     P partition totals, never N rows. ``order_cols`` must be a total
     order (include a unique tiebreaker) or in-partition cumulative order
     is nondeterministic within equal keys."""
-    spark = df.sparkSession
-    p = num_parts or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    part = (
-        df.repartitionByRange(p, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    if materialize:
-        part = part.localCheckpoint(eager=True)
-    totals = part.groupBy("__pid").agg(F.sum(val_col).alias("__t"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__pid",
-        F.coalesce(F.sum("__t").over(w_off), F.lit(0)).alias("__off"),
-    )
     w_in = (
         Window.partitionBy("__pid")
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return (
-        part.join(F.broadcast(offsets), "__pid")
+        _ranged_runs(df, order_cols, F.sum(val_col), True)
         .withColumn(out_col, F.sum(F.col(val_col)).over(w_in) + F.col("__off"))
         .drop("__pid", "__off")
     )

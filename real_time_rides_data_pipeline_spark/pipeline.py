@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from real_time_rides_data_pipeline_spark.operators import (
-    cast_project,
     drop_malformed,
     expand_struct,
     hourly_driver_agg,
@@ -37,11 +36,6 @@ from real_time_rides_data_pipeline_spark.sinks import (
 
 #: MERGE key for the Gold table (03_gold:108).
 GOLD_KEYS = ("window_start", "window_end", "driver_id")
-
-
-def bronze_transform(kafka_df: DataFrame) -> DataFrame:
-    """Kafka frame → (raw_json_data, timestamp) landing rows (01:73-76)."""
-    return cast_project(kafka_df)
 
 
 def silver_transform(bronze_df: DataFrame, watermark: str = "10 minutes") -> DataFrame:

@@ -5,9 +5,9 @@ partition (``spark.sql.files.maxPartitionBytes``), so a CPU-heavy per-row
 stage (JSON parsing, hashing, shingling) downstream of the scan runs as a
 single task on one core — measured on local[32] this is not just ~Nx slower
 but erratically slow (occasional 30-80 s JIT-related stalls of a 0.5 s job on
-one thread). At 100 TB inputs arrive in thousands of splits and this is a
-no-op; the guard only kicks in when the scan produced fewer partitions than
-the cluster has slots.
+one thread). The guard only kicks in when the scan produced fewer
+partitions than the cluster has slots; a scan of many splits passes
+through unchanged.
 """
 
 from __future__ import annotations
@@ -15,15 +15,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition (round-robin) iff the plan's current partitioning is below
     the cluster's parallelism. Batch-only (streaming plans manage their own
     partitioning); the partition probe materializes the physical plan, which
     is cheap for batch reads."""
     if df.isStreaming:
         return df
-    spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         current = df.rdd.getNumPartitions()
     except Exception:
@@ -50,9 +49,9 @@ def pin_group_partitioning(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(n, *keys)
 
 
-def explain_str(df: DataFrame, mode: str = "formatted") -> str:
+def explain_str(df: DataFrame) -> str:
     """The .explain() text as a string (for tests that assert plan shape —
     e.g. PushedFilters reaching the scan, broadcast joins chosen)."""
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), mode
+        df._jdf.queryExecution(), "formatted"
     )

@@ -342,7 +342,7 @@ def q_row_number(spark, sf_dir):
     """SELECT l_orderkey, l_linenumber, o_custkey, o_orderstatus, l_extendedprice
        FROM lineitem JOIN orders ON l_orderkey = o_orderkey""",
     "Equi inner join fact→dim; orders side broadcast (fits executor memory "
-    "well past sf0.1; at 100 TB switch to bucketed SMJ).",
+    "well past sf0.1; a fact-sized dim needs a bucketed SMJ).",
 )
 def q_join_inner(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
@@ -482,13 +482,13 @@ def q_agg_stats(spark, sf_dir):
               TRUE AS sketch_within_15pct
        FROM events GROUP BY event_type""",
     "approx_count_distinct(user_id) per event_type — HLL sketch, "
-    "constant-memory at 100 TB where countDistinct would shuffle all keys. "
+    "constant-memory where countDistinct would shuffle all keys. "
     "Sketch estimates are engine-specific, so the COMPARED columns are the "
     "exact distinct count (cross-checked against DuckDB's) and a Spark-"
     "side attestation that the sketch landed within 15% (= 3 sigma at the "
     "default rsd 0.05) of that exact answer — upgrading the old rows-only "
     "check to a value check that pins the sketch's error bound. The exact "
-    "side exists for verification; the sketch remains the 100 TB path. "
+    "side exists for verification only. "
     "approx_count_distinct is hash-based and deterministic per dataset, "
     "so the boolean is stable.",
 )

@@ -1,13 +1,12 @@
-"""Round-7 continuation: relational-integrity / graph / time-series /
-subword-text operators.
+"""Relational-integrity / graph / time-series / subword-text operators and
+warehouse/product-analytics staples.
 
 Same registry contract as queries.py / queries_ops.py (SURVEY.md §2.9
 scope). Determinism rules (SURVEY §7.4) throughout: exact integer cents /
 counts / scaled ranks, floor (`div`) division only, every ORDER BY tied off
 by a total order, no compared float/decimal columns.
 
-What this module adds (each a genuinely distinct surface, none previously
-registered):
+What this module adds:
 
 - ``q_fk_orphans`` — the referential-integrity audit: orphan counts + ppm
   for three FK edges checked against a deliberately pruned parent snapshot
@@ -31,9 +30,6 @@ registered):
 - ``q_null_impute`` — per-group mean imputation of a derived-missing
   measure (error events carry no trusted value) with a global-mean
   fallback, all in exact integer cents.
-
-Round 9 adds the warehouse/product-analytics staples:
-
 - ``q_scd2_intervals`` — SCD type-2 validity intervals from an event log
   (gaps-and-islands: change-marker + cumulative-sum window, per-run agg,
   lead() stitching over the runs table).
@@ -1045,7 +1041,7 @@ def q_degree_dist(spark, sf_dir):
 
 
 # =========================================================================
-# OHLC time bars (round 8)
+# OHLC time bars
 # =========================================================================
 
 
@@ -1098,7 +1094,7 @@ _OHLC_ORACLE = """SELECT event_type,
     "(series, hour) the first/last value in event-time order (total-"
     "ordered by (ts, event_id)) plus high/low/volume, all exact cents. "
     "Shape: ONE hash aggregate with min_by/max_by ordering — no window, no "
-    "per-bar sort; at 100 TB each 3600x compaction step is a single "
+    "per-bar sort; each 3600x compaction step is a single "
     "map-side-combining agg keyed by (series, bar), the standard telemetry "
     "rollup ladder (hour → day → month reuses the same shape because "
     "first/last compose through it). The ordering key is (ts, event_id) "
@@ -1143,7 +1139,7 @@ def q_ohlc_bars(spark, sf_dir):
     "sinks.merge_distributive_parquet (batch_id-idempotent, crash-ordered "
     "swap). Extrema and argmin/argmax merge exactly, so the folded bars "
     "are BIT-IDENTICAL to the batch bars and answer to q_ohlc_bars' "
-    "oracle. At 100 TB this is the incremental bar-builder: per-window "
+    "oracle. This is the incremental bar-builder: per-window "
     "partials stream in, closed bars never rescan.",
 )
 def q_stream_ohlc(spark, sf_dir):
@@ -1316,7 +1312,7 @@ def q_kafka_frame_parse(spark, sf_dir):
 
 
 # =========================================================================
-# Funnel time-to-convert (round 8)
+# Funnel time-to-convert
 # =========================================================================
 
 
@@ -1367,7 +1363,7 @@ def q_time_to_convert(spark, sf_dir):
 
 
 # =========================================================================
-# Round 9: warehouse/product-analytics completion — SCD2 intervals,
+# Warehouse/product-analytics completion — SCD2 intervals,
 # user path mining, cohort retention
 # =========================================================================
 
@@ -1403,7 +1399,7 @@ def q_time_to_convert(spark, sf_dir):
     "user, maximal runs of consecutive equal attribute values (event_type "
     "as the tracked attribute, total-ordered by (ts, event_id)) become "
     "validity intervals [valid_from, valid_to) with the open current row "
-    "flagged — the standard way a 100 TB warehouse materializes "
+    "flagged — the standard way a warehouse materializes "
     "point-in-time join dimensions from CDC/event feeds. Shape: one "
     "change-marker + cumulative-sum window pass over user partitions "
     "(single shuffle on user_id), then the per-run aggregate and the "
@@ -1643,7 +1639,7 @@ def q_acf_hourly(spark, sf_dir):
 
 
 # =========================================================================
-# Round 10: interval analytics — distributed sweep line
+# Interval analytics — distributed sweep line
 # =========================================================================
 
 
@@ -1696,8 +1692,8 @@ def q_acf_hourly(spark, sf_dir):
     "with no duplicates — verified — so the engines' µs/ns orderings "
     "agree). Shape: one scan → explode to ≤ 2 pieces / 4 boundary rows "
     "per event, ONE shuffle on day, windows + peak agg all inside the "
-    "day partition; at 100 TB the day key fans the sweep across the "
-    "cluster and no partition ever sees another day's rows.",
+    "day partition; the day key fans the sweep across the cluster and "
+    "no partition ever sees another day's rows.",
 )
 def q_max_concurrency(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.operators.agg import (
@@ -1873,7 +1869,7 @@ def q_seasonal_profile(spark, sf_dir):
 
 
 # =========================================================================
-# Round 10: geohash spatial indexing (encode + cell rollup)
+# Geohash spatial indexing (encode + cell rollup)
 # =========================================================================
 
 #: Geohash base32 alphabet (public spec — no i, l, o; 'a' excluded).
@@ -1940,7 +1936,7 @@ _GEO_DUCK = f"""WITH pts AS (
     "arithmetic, generated ONCE for both engines by the same Python — "
     "no float trig anywhere), base32-encode to the 6-char cell id, then "
     "per-cell event/user counts with a top-50 TakeOrderedAndProject "
-    "cut. Why it matters at 100 TB: geohash prefixes are the PARTITION "
+    "cut. Geohash prefixes are the PARTITION "
     "KEY for spatial data — a prefix filter prunes directories exactly "
     "like a date partition, and cell-level rollups are one hash agg. "
     "Shape: narrow map (the 30-term interleave is whole-stage-codegen "
@@ -1980,7 +1976,7 @@ def q_geohash_cells(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 3): week-over-week growth — the canonical periodic
+# Week-over-week growth — the canonical periodic
 # growth readout over a bounded calendar spine
 # =========================================================================
 
@@ -2017,7 +2013,7 @@ def q_geohash_cells(spark, sf_dir):
     "both engines floor the identical double; no integer `div` on a "
     "possibly-negative numerator). Shape: one events scan -> "
     "(type, week) hash agg -> a lag window over the BOUNDED calendar "
-    "domain (|types| x |weeks| rows — at 100 TB still just thousands); "
+    "domain (|types| x |weeks| rows, whatever the event count); "
     "the classic pre-aggregate-then-window shape.",
 )
 def q_wow_growth(spark, sf_dir):
@@ -2053,7 +2049,7 @@ def q_wow_growth(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 3): EWMA fast/slow crossover — trend-shift detection
+# EWMA fast/slow crossover — trend-shift detection
 # with EXACT dyadic decay weights
 # =========================================================================
 
@@ -2168,7 +2164,7 @@ def q_ewma_crossover(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 3): Herfindahl-Hirschman concentration index — market /
+# Herfindahl-Hirschman concentration index — market /
 # load concentration per segment
 # =========================================================================
 
@@ -2202,9 +2198,8 @@ def q_ewma_crossover(spark, sf_dir):
     "the effective number of participants 1/HHI (the 'how many equal "
     "users would look like this' readout). Exactness: per-user cents "
     "and the sum-of-squares are EXACT integers (the squares widened to "
-    "DECIMAL(38,0)/HUGEINT — a heavy user's cents^2 overflows int64 "
-    "exactly at the 100 TB scale this targets, the q_gini octave-probe "
-    "lesson), and HHI is ONE double division of two exact moments, "
+    "DECIMAL(38,0)/HUGEINT — a heavy user's cents^2 can overflow int64, "
+    "the q_gini octave-probe lesson), and HHI is ONE double division of two exact moments, "
     "floored to e8. Shape: one events scan -> (type, user) hash agg -> "
     "|types|-row moment agg; every post-scan frame is key-domain-sized.",
 )
@@ -2233,7 +2228,7 @@ def q_hhi_concentration(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 4): single mean-shift changepoint — binary-segmentation
+# Single mean-shift changepoint — binary-segmentation
 # step via exact prefix-sum cross-multiplication
 # =========================================================================
 
@@ -2276,7 +2271,7 @@ def q_hhi_concentration(spark, sf_dir):
     "reduction gain(t) = (mean_L - mean_R)^2 * n_L n_R / n, computed "
     "WITHOUT any per-split rescan via prefix sums: the cross-multiplied "
     "numerator d = SL*(n-nl) - (S-SL)*nl is an EXACT BIGINT (prefix "
-    "cents x hour counts stay under 2^63 far past 100 TB since the "
+    "cents x hour counts stay far under 2^63 since the "
     "hour domain is bounded), and gain = d^2/(n*nl*(n-nl)) is one "
     "identical double tree per engine, so the argmax picks the same "
     "split everywhere (ties broken by hour). Shape: one events scan -> "
@@ -2340,7 +2335,7 @@ def q_changepoint_mean(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 4): Goh-Barabasi burstiness index — per-user
+# Goh-Barabasi burstiness index — per-user
 # inter-arrival dispersion from exact integer microsecond moments
 # =========================================================================
 
@@ -2383,8 +2378,8 @@ def q_changepoint_mean(spark, sf_dir):
     "registration); sigma/mu/B derive through one identical double tree "
     "with a greatest(.,0) guard so variance~0 users cannot produce a "
     "cross-engine sqrt(-eps) divergence. Shape: one events scan -> "
-    "per-user lag window -> per-user moment agg -> map; at 100 TB the "
-    "window keys on user_id (millions of small partitions, no skew).",
+    "per-user lag window -> per-user moment agg -> map; the window keys "
+    "on user_id (many small partitions, no skew).",
 )
 def q_burstiness_index(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
@@ -2422,7 +2417,7 @@ def q_burstiness_index(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 4): weekly acquisition curve — new vs returning users
+# Weekly acquisition curve — new vs returning users
 # and the cumulative user base
 # =========================================================================
 
@@ -2495,7 +2490,7 @@ def q_new_users_weekly(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 5): windowFunnel — max funnel depth over ANY anchor
+# WindowFunnel — max funnel depth over ANY anchor
 # within a time window (the ClickHouse-semantics sequence matcher)
 # =========================================================================
 
@@ -2629,7 +2624,7 @@ def q_window_funnel(spark, sf_dir):
 
 
 # =========================================================================
-# Round 12: multi-source BFS distances — the traversal member of the
+# Multi-source BFS distances — the traversal member of the
 # graph family (q_pagerank scores, q_triangle_count/q_degree_dist
 # measure structure, q_dup_clusters finds components, this measures
 # reachability depth)
@@ -2710,7 +2705,7 @@ def q_bfs_distance(spark, sf_dir):
 
 
 # =========================================================================
-# Round 13: dyadic inter-event gap histogram
+# Dyadic inter-event gap histogram
 # =========================================================================
 
 

@@ -1,11 +1,11 @@
-"""Corpus-curation + modern-SQL-surface extensions (round 5 additions).
+"""Corpus-curation + modern-SQL-surface extensions.
 
 Same registry contract as queries.py / queries_ext.py (SURVEY.md §2.9 scope:
 LLM-data-pipeline operators mandated by BASELINE.json). Determinism rules
 (SURVEY §7.4) throughout: exact integer cents / counts, floor-truncated
 ratios, every tie broken by a total order, no engine-local rounding.
 
-Scale notes (100 TB):
+Scale notes:
 - Every key here is a narrow map over the scan (variant/url/bytes/
   expectations), one-or-two hash shuffles on explicit keys (pack/zorder/
   dominant-token/SCD2/paragraph-dedup), a broadcast-stats two-level agg
@@ -141,8 +141,8 @@ def q_url_extract(spark, sf_dir):
     "packs (2048 tokens) by running offset — the step that turns a shuffled "
     "corpus into dense model contexts. A single GLOBAL cumulative sum would "
     "serialize the whole corpus through one partition, so packing is "
-    "sharded: shard = doc_id % 8, cumsum per shard (at 100 TB: thousands of "
-    "shards, each an independent in-partition running sum after ONE hash "
+    "sharded: shard = doc_id % 8, cumsum per shard (each shard an "
+    "independent in-partition running sum after ONE hash "
     "shuffle). A doc whose offset crosses a 2048 boundary starts its pack "
     "(packs can overflow the budget by less than one doc — the standard "
     "greedy-packing contract; exact bin packing is NP-hard and "
@@ -180,7 +180,7 @@ def q_sequence_pack(spark, sf_dir):
     "signal, complementary to the shingle-level q_repetition_score). "
     "explode → two-level hash agg on (doc_id, token) → per-doc argmax via "
     "row_number with a (count DESC, token ASC) total order. Both shuffles "
-    "key on doc_id(+token) — at 100 TB this is the canonical scalable "
+    "key on doc_id(+token) — the canonical scalable "
     "wordcount shape, no skew beyond the largest single document.",
 )
 def q_dominant_token(spark, sf_dir):
@@ -238,8 +238,7 @@ def q_dominant_token(spark, sf_dir):
     "sqrt ulp), but z^2 > 4 is algebraically (n*v - s)^2 > 4*(n*q - s^2) "
     "over integer cents — every term exact, no mean, no sqrt, no division. "
     "Intermediates are decimal(38,0) (Spark) / HUGEINT (DuckDB): at 1e12 "
-    "rows per group with 7-digit cents the largest term is ~1e38 — full "
-    "100 TB headroom. Plan: one partial+final hash agg for the 4-row stats "
+    "rows per group with 7-digit cents the largest term is ~1e38. Plan: one partial+final hash agg for the 4-row stats "
     "frame, broadcast back onto the scan, one final agg — the same "
     "two-pass shape any distributed stddev takes.",
 )
@@ -291,9 +290,9 @@ def q_zscore_outlier(spark, sf_dir):
     "kernels (binary_length = UTF-8 bytes, utf8_length = codepoints) — no "
     "pandas materialization, no per-row Python, vectorized C++ on both "
     "sides of the Arrow boundary. This is the fastest Python extension "
-    "surface Spark has (the decode stubs in operators/multimodal.py use "
+    "surface Spark has (the header parses in operators/multimodal.py use "
     "mapInPandas; this key pins the leaner Arrow-level twin). Narrow map, "
-    "batch-size-bounded memory, embarrassingly parallel at 100 TB.",
+    "batch-size-bounded memory, embarrassingly parallel.",
 )
 def q_arrow_bytes(spark, sf_dir):
     import pyarrow as pa
@@ -601,8 +600,8 @@ def q_paragraph_dedup(spark, sf_dir):
     "docs under fresh ids — is admitted only where its content fingerprint "
     "is absent from the EXISTING corpus (doc_id < 400). The re-crawl half "
     "makes the anti-join non-vacuous (exactly those 50 are rejected); "
-    "distinct from within-corpus q_exact_dedup. Keyed on md5(text): at "
-    "100 TB the corpus side is a pre-materialized fingerprint table "
+    "distinct from within-corpus q_exact_dedup. Keyed on md5(text): the "
+    "corpus side can be a pre-materialized fingerprint table "
     "(32 bytes/doc, not the text), the anti-join is a plain hash shuffle "
     "on the digest, and left_anti never materializes the match.",
 )
@@ -649,7 +648,7 @@ def q_incremental_dedup(spark, sf_dir):
     """SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct,
               TRUE AS merged_within_5pct
        FROM events""",
-    "The 100 TB distinct-count architecture made explicit: per-shard "
+    "The sharded distinct-count architecture made explicit: per-shard "
     "Apache DataSketches HLL sketches (hll_sketch_agg over 8 hash shards "
     "of events.user_id) UNION-merged into one global estimate "
     "(hll_union_agg + hll_sketch_estimate) — how every warehouse computes "
@@ -734,7 +733,7 @@ def q_cume_dist_nth(spark, sf_dir):
     "normalized with lower() AFTER grouping (deterministic either way). "
     "DuckDB oracle: group by lower() — provably the same partition for "
     "ASCII. One hash agg; collation support means the comparison happens "
-    "in the hash function, not via a derived column at 100 TB.",
+    "in the hash function, not via a derived column.",
 )
 def q_collated_group(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
@@ -760,7 +759,7 @@ def q_collated_group(spark, sf_dir):
               END AS safe_ratio
        FROM events""",
     "ANSI-mode error-safe arithmetic: try_divide yields NULL on /0 instead "
-    "of failing the 100 TB job at hour nine on one poison row. The divisor "
+    "of failing a long job on one poison row. The divisor "
     "(k - 50) crosses zero across the fixture, so the NULL arm is "
     "exercised; non-NULL results are one IEEE division of identical "
     "operands in both engines, floor-truncated. Narrow map, no shuffle.",
@@ -816,8 +815,6 @@ def q_decimal_money(spark, sf_dir):
 
 # =========================================================================
 # Corpus curation, continued: vocab coverage, quality-percentile filter
-# (registered after the round-5 driver window filled — first in line for
-# round 6's check window; pytest-oracle-green meanwhile)
 # =========================================================================
 
 
@@ -841,7 +838,7 @@ def q_decimal_money(spark, sf_dir):
     "types cover (Zipf mass). Word counts are one explode + hash agg on "
     "the token; the top-K is a TakeOrderedAndProject ((count DESC, token "
     "ASC) total order), and the coverage division folds two one-row "
-    "aggregates — the 100 TB cost is the one wordcount shuffle, "
+    "aggregates — the dominant cost is the one wordcount shuffle, "
     "everything after is scalar.",
 )
 def q_vocab_coverage(spark, sf_dir):
@@ -939,7 +936,7 @@ def q_quality_topfrac(spark, sf_dir):
 
 
 # =========================================================================
-# Gopher-style quality rules + reciprocal-rank fusion (round 7 additions)
+# Gopher-style quality rules + reciprocal-rank fusion
 # =========================================================================
 
 
@@ -1083,7 +1080,7 @@ def q_rrf_fusion(spark, sf_dir):
 
 
 # =========================================================================
-# Span-level exact dedup + corpus-fit char-bigram coverage (round 7)
+# Span-level exact dedup + corpus-fit char-bigram coverage
 # =========================================================================
 
 
@@ -1131,9 +1128,9 @@ def q_rrf_fusion(spark, sf_dir):
     "positions matter); then 3 compact-aggregate shuffles: (span, doc) "
     "partial-count, a per-span window over that aggregate (never the raw "
     "positions), per-doc rollup joined back to the doc-level span counts "
-    "on doc_id. At 100 TB the span strings would be xxhash64-compressed "
-    "to 8-byte shuffle keys (identical plan, collision odds ~n^2/2^64); "
-    "the raw-string grouping here keeps the oracle exact.",
+    "on doc_id. The raw-string grouping keeps the oracle exact; "
+    "xxhash64 keys would shrink the shuffle to 8 bytes per span "
+    "(identical plan, collision odds ~n^2/2^64).",
 )
 def q_dup_spans(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.operators.textdedup import (
@@ -1162,9 +1159,8 @@ def _fitted_bigram_vocab(d, sf_dir: str, top: int = 64) -> list[str]:
     a deterministic total order, so the fit is replayable. The collect is
     BOUNDED (``top`` two-char strings, ~128 bytes) — the fit-small/
     broadcast-big shape shared with bloom words and k-means centroids.
-    Refit on EVERY call (round-15 optimization-phase rule: no module-level
-    memo of data-derived results — each bench/oracle invocation must
-    compute from the parquet inputs)."""
+    Refit on EVERY call: no module-level memo of data-derived results —
+    each bench/oracle invocation computes from the parquet inputs."""
     rows = (
         d.select(F.explode(_char_bigrams(F.col("text"))).alias("g"))
         .groupBy("g")
@@ -1398,7 +1394,7 @@ def q_span_novelty(spark, sf_dir):
 
 
 # =========================================================================
-# Round 10: inverted index build (retrieval-side corpus structure)
+# Inverted index build (retrieval-side corpus structure)
 # =========================================================================
 
 
@@ -1436,7 +1432,7 @@ def q_span_novelty(spark, sf_dir):
     "indexes ship (Elastic/Lucene impact lists). Postings are emitted "
     "as a flat string, NOT ArrayType: the driver comparator "
     "canonicalizes via pandas sort_values, which cannot order "
-    "list-typed cells (the r10 FAIL; same class as q_array_agg r3) — "
+    "list-typed cells (the q_array_agg failure class) — "
     "array_join is lossless here because entries are 'doc:tf' tokens "
     "with no embedded commas and the order is already deterministic. "
     "Deterministic assembly via sort_array(collect_list(struct(rn, "
@@ -1493,7 +1489,7 @@ def q_inverted_index(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11: dataset card — the one-row corpus summary every released
+# Dataset card — the one-row corpus summary every released
 # training set ships (composition, size, duplication; Datasheets for
 # Datasets / model-card practice)
 # =========================================================================
@@ -1577,7 +1573,7 @@ def q_dataset_card(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11: deterministic mixing SCHEDULE — q_dataset_mix decides HOW MANY
+# Deterministic mixing SCHEDULE — q_dataset_mix decides HOW MANY
 # copies of each source enter the mix; this key decides WHERE in the
 # training order they land (exact-rational pacing, no RNG)
 # =========================================================================
@@ -1617,9 +1613,7 @@ def q_dataset_card(spark, sf_dir):
     "by parity — never a global unpartitioned window over the corpus), "
     "then TopK-200 by pace (TakeOrderedAndProject per-partition heaps) "
     "BEFORE the position stamp, so the only single-partition window "
-    "runs over 200 rows by construction — at 100 TB the per-source rank "
-    "comes from the corpus shard manifest (q_corpus_shard) and pacing "
-    "stays the same integer arithmetic.",
+    "runs over 200 rows by construction.",
 )
 def q_mix_schedule(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").select("doc_id")
@@ -1651,7 +1645,7 @@ def q_mix_schedule(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11: rare-category collapse (vocabulary truncation / UNK bucket) —
+# Rare-category collapse (vocabulary truncation / UNK bucket) —
 # the long-tail featurizer next to q_feature_hash (hashing trick) and
 # q_target_encode (smoothed encoding)
 # =========================================================================
@@ -1710,7 +1704,7 @@ def q_rare_collapse(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 3): readability scoring — Flesch reading ease /
+# Readability scoring — Flesch reading ease /
 # Flesch-Kincaid grade with a portable vowel-cluster syllable proxy
 # =========================================================================
 
@@ -1749,7 +1743,7 @@ def q_rare_collapse(spark, sf_dir):
     "integers, the two scores are one identical literal-coefficient "
     "double tree per engine, floored to e4. Shape: pure scan-side map "
     "(three regexp passes per row, no shuffle at all) -> row-level "
-    "output; the cheapest possible 100 TB shape.",
+    "output; the cheapest possible shape.",
 )
 def q_readability(spark, sf_dir):
     d = _t(spark, sf_dir, "documents", parallel=True)
@@ -1782,7 +1776,7 @@ def q_readability(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 6): dedup survivorship — keep the best copy by source
+# Dedup survivorship — keep the best copy by source
 # priority, not the first by id (the MDM/curation survivorship policy)
 # =========================================================================
 
@@ -1817,7 +1811,7 @@ def q_readability(spark, sf_dir):
     "fingerprint-shuffle discipline as q_exact_dedup; the rank window "
     "and the group-size count share one partitioning. Shape: one "
     "documents scan -> fingerprint-keyed window (single shuffle) -> "
-    "filter rn=1; at 100 TB the state per group is one row.",
+    "filter rn=1; the state per group is one row.",
 )
 def q_dedup_survivorship(spark, sf_dir):
     d = _t(spark, sf_dir, "documents", parallel=True)
@@ -1847,7 +1841,7 @@ def q_dedup_survivorship(spark, sf_dir):
 
 
 # =========================================================================
-# Round 12 (wave 1): tokenizer fertility, mergeable-histogram quantiles,
+# Tokenizer fertility, mergeable-histogram quantiles,
 # deterministic contrastive negative sampling
 # =========================================================================
 
@@ -1883,7 +1877,7 @@ def q_dedup_survivorship(spark, sf_dir):
     "language. Shape: narrow scan-side array lambdas (no Python, no "
     "explode — the per-doc counts fold inside whole-stage codegen) -> "
     "one hash agg on the BOUNDED lang domain -> one row per language. "
-    "At 100 TB this is a single map-side-combined pass.",
+    "It is a single map-side-combined pass.",
 )
 def q_tokenizer_fertility(spark, sf_dir):
     d = _t(spark, sf_dir, "documents", parallel=True)
@@ -1932,7 +1926,7 @@ def q_tokenizer_fertility(spark, sf_dir):
                    AS BIGINT) AS p99_est_cents
        FROM c""",
     "MERGEABLE-HISTOGRAM QUANTILES — the distributed-sketch pattern for "
-    "percentiles at 100 TB: each shard builds a small fixed-bin "
+    "percentiles: each shard builds a small fixed-bin "
     "histogram (bin = cents div 500, a BOUNDED domain: ~99 bins for "
     "this fixture's 1-49002 cent range), histograms MERGE by summing "
     "per-bin counts (the q_hll_shard_merge property, for quantiles), "
@@ -2015,8 +2009,8 @@ def q_histogram_quantile_merge(spark, sf_dir):
     "(in-batch negatives from the query's own source are the classic "
     "false-negative hazard). The scale design is the point: negatives "
     "come from a BOUNDED BROADCAST pool (md5 first-hex-digit = '0', a "
-    "deterministic ~1/16 corpus sample — at 100 TB you cap the pool "
-    "with more digits), never a corpus x corpus cross join; per-query "
+    "deterministic ~1/16 corpus sample — more digits cap a larger "
+    "pool), never a corpus x corpus cross join; per-query "
     "ranking is md5(query-cand) — the seeded-rand discipline of "
     "SURVEY §4.3.2, bit-identical across engines, tie-broken by "
     "candidate id. Shape: one documents scan splits into pool (tiny, "
@@ -2080,7 +2074,7 @@ def q_negative_sample(spark, sf_dir):
     "(per-bin SUM — associative, commutative, batch_id-idempotent, "
     "crash-ordered swap), so the folded state is BIT-IDENTICAL to the "
     "batch-built histogram and answers to the SAME oracle with the "
-    "same exact cross-multiplied quantile reads. At 100 TB this is the "
+    "same exact cross-multiplied quantile reads. This is the "
     "continuously-maintained latency/price-percentile dashboard: "
     "per-shard histograms stream in, |bins| state rows total, "
     "quantiles on demand with NO rescan of history — the operational "
@@ -2156,7 +2150,7 @@ def q_stream_quantile_merge(spark, sf_dir):
 
 
 # =========================================================================
-# Round 13: lexical richness, BPE encode (apply the trained tokenizer),
+# Lexical richness, BPE encode (apply the trained tokenizer),
 # streaming sliding distinct
 # =========================================================================
 
@@ -2188,8 +2182,8 @@ def q_stream_quantile_merge(spark, sf_dir):
     "table; q_vocab_coverage owns the complementary top-K Zipf mass). "
     "Shape: one explode + (lang, word) hash agg — wordcount — then a "
     "|vocab|-sized re-agg per language; both partial-first, integer "
-    "end-to-end, per-group denominators ≥ 1 by construction. At 100 TB "
-    "the second agg reads the vocab table, never the corpus.",
+    "end-to-end, per-group denominators ≥ 1 by construction. The "
+    "second agg reads the vocab table, never the corpus.",
 )
 def q_hapax_rate(spark, sf_dir):
     d = _t(spark, sf_dir, "documents", parallel=True)

@@ -111,8 +111,8 @@ def _neardup_docs(spark, sf_dir) -> DataFrame:
     f"""SELECT doc_id, text FROM ({_DUPED_DOCS_SQL})
         QUALIFY row_number() OVER (PARTITION BY text ORDER BY doc_id) = 1""",
     "Exact dedup, deterministic survivor (min doc_id per text) — "
-    "row_number()=1, one hash shuffle. At 100 TB dedup on xxhash64(text) "
-    "first so the shuffle carries 8-byte keys.",
+    "row_number()=1, one hash shuffle. Deduping on xxhash64(text) "
+    "first would shrink the shuffle to 8-byte keys.",
 )
 def q_exact_dedup(spark, sf_dir):
     return keep_first_per_key(
@@ -193,7 +193,7 @@ def q_simhash_neardup(spark, sf_dir):
 def q_minhash_est_jaccard(spark, sf_dir):
     d = _t(spark, sf_dir, "documents", parallel=True).select("doc_id", "text")
     # shingles_col: one word_shingles evaluation feeds both the 64-hash
-    # signature and the exact-jaccard `sh` sets (round-16 A/B: 0.76×).
+    # signature and the exact-jaccard `sh` sets (0.76×, OPTIMIZATION_r16.md).
     s = TD.with_minhash_signature(
         d, "text", n_hashes=64, shingle_words=3, shingles_col="sh"
     ).select("doc_id", "sh", F.col("minhash"))
@@ -310,9 +310,9 @@ def q_simhash_est_hamming(spark, sf_dir):
     )
 
 
-# --- round 14: VALUE-CHECKED candidate generation for the near-dup pair
-# --- (converts the q_minhash_neardup / q_simhash_neardup pipelines'
-# --- deterministic halves from rows-only to hash-matched)
+# --- VALUE-CHECKED candidate generation for the near-dup pair (the
+# --- q_minhash_neardup / q_simhash_neardup pipelines' deterministic
+# --- halves, hash-matched instead of rows-only)
 
 #: Near-dup corpus (documents ∪ last-2-words-truncated copies of every
 #: 5th doc) as a DuckDB CTE — the SQL twin of ``_neardup_docs`` (same
@@ -396,9 +396,9 @@ def _minhash_bands_oracle() -> str:
 @register(
     "q_minhash_bands",
     _minhash_bands_oracle(),
-    "VALUE-CHECKED MinHash+LSH candidate generation — the round-14 "
-    "conversion of q_minhash_neardup's deterministic half from rows-only "
-    "to hash-matched (r13 VERDICT item 2): the identical pipeline shape "
+    "VALUE-CHECKED MinHash+LSH candidate generation — "
+    "q_minhash_neardup's deterministic half, hash-matched instead of "
+    "rows-only: the identical pipeline shape "
     "(16-hash signature, 4-row bands, band-bucket self-join, exact "
     "shingle-set verify on candidates only) with the ENGINE-PORTABLE "
     "hash family — one md5-60-bit base hash per shingle mod 2^31-1, 16 "
@@ -407,8 +407,7 @@ def _minhash_bands_oracle() -> str:
     "both engines) — so DuckDB recomputes the EXACT candidate set: "
     "which pairs collide, in how many bands, and their exact "
     "intersection/union sizes with the integer-only 2*inter >= union "
-    "threshold test, all hash-checked. Shape (the 100 TB design the "
-    "rows-only key claims, now attested value-level): signatures are "
+    "threshold test, all hash-checked. Shape: signatures are "
     "scan-side array lambdas staged so md5 runs ONCE per shingle "
     "(affine reuse, not 16 digests); banding explodes a constant 4 rows "
     "per doc; the self-join is an equi-join on (band_idx, band_key) "
@@ -426,9 +425,9 @@ def _minhash_verified_pairs(spark, sf_dir) -> DataFrame:
     the shared Spark leg of q_minhash_bands (pair output) and
     q_minhash_cc_clusters (CC over the verified edges)."""
     # shingles_col: the shingle array is computed ONCE in the signature
-    # projection and shared with the exact verify (round-16 A/B: 0.63× on
-    # the signature pass — the un-staged shape evaluated word_shingles
-    # twice per row in the same projection).
+    # projection and shared with the exact verify (0.63× on the signature
+    # pass against evaluating word_shingles twice per row in the same
+    # projection, OPTIMIZATION_r16.md).
     s = TD.with_minhash_signature_portable(
         _neardup_docs(spark, sf_dir), shingles_col="sh"
     ).select("doc_id", "sh", "minhash")
@@ -521,9 +520,8 @@ def _simhash_bands_oracle() -> str:
 @register(
     "q_simhash_bands",
     _simhash_bands_oracle(),
-    "VALUE-CHECKED SimHash near-dup pipeline — the round-14 conversion "
-    "of q_simhash_neardup from rows-only to hash-matched (r13 VERDICT "
-    "item 2), same shape (vote-sign signature, 4 bands — pigeonhole: "
+    "VALUE-CHECKED SimHash near-dup pipeline — q_simhash_neardup, "
+    "hash-matched instead of rows-only, same shape (vote-sign signature, 4 bands — pigeonhole: "
     "Hamming <= 3 < 4 bands guarantees at least one equal band, recall "
     "1 — candidate self-join, exact Hamming <= 3 verify via "
     "bit_count(xor)) with the ENGINE-PORTABLE md5-60-bit token hash so "
@@ -615,7 +613,7 @@ def q_simhash_bands(spark, sf_dir):
     "operators/graph.py — O(log diameter) rounds) labeling every corpus "
     "doc with its cluster representative (min doc_id) and the SemDeDup-"
     "style keep flag. Oracle = the same pipeline in DuckDB SQL + "
-    "recursive-CTE reachability. Scale: the exact 100 TB dedup recipe — "
+    "recursive-CTE reachability. Scale: the exact dedup recipe — "
     "scan-side signatures, constant-factor band explode, equi-joins on "
     "8-byte keys, CC without label-prop's linear tail; survivors feed "
     "keep_first_per_key (q_dedup_survivorship) downstream.",
@@ -729,7 +727,7 @@ def q_dup_clusters(spark, sf_dir):
     # Checkpoint the shingled corpus: the candidate self-join consumes it
     # on BOTH sides and the CC vertex set reads its ids — the static plan
     # otherwise re-derives the 3-branch union + shingle pipeline three
-    # times (6 parquet scans measured at round 15).
+    # times (6 parquet scans, OPTIMIZATION_r15.md).
     s = corpus.select(
         "doc_id", X.word_shingles(F.col("text"), 3).alias("sh")
     ).localCheckpoint(eager=False)
@@ -817,10 +815,9 @@ def _query_vec(spark, sf_dir) -> list[float]:
     at every SF). Collected driver-side (one row) and folded into the plan
     as a literal — at scale this is 'the query', not data movement.
 
-    Recomputed on EVERY call (round-15 optimization-phase rule: no
-    module-level memo of data-derived values — each bench/oracle
-    invocation must compute from the parquet inputs; the fetch is one
-    bounded single-row job, ~0.1 s)."""
+    Recomputed on EVERY call: no module-level memo of data-derived values
+    — each bench/oracle invocation computes from the parquet inputs; the
+    fetch is one bounded single-row job, ~0.1 s."""
     row = (
         _t(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") == 0)
@@ -850,10 +847,10 @@ def _fitted_centroids(emb, sf_dir: str, k: int = 8, sample_n: int = 512,
                       seed: int = 7) -> list[list[float]]:
     """Seeded sampled k-means fit — DETERMINISTIC pure function of its
     arguments (ordered sample, seeded init, driver Lloyd), so every caller
-    gets the identical model. Refit on EVERY call (round-15
-    optimization-phase rule: no module-level memo of data-derived results
-    — each bench/oracle invocation must compute from the parquet inputs;
-    the fit is one bounded sample collect + driver numpy, ~0.2 s)."""
+    gets the identical model. Refit on EVERY call: no module-level memo of
+    data-derived results — each bench/oracle invocation computes from the
+    parquet inputs; the fit is one bounded sample collect + driver numpy,
+    ~0.2 s."""
     return SIM.fit_centroids_kmeans(emb, k=k, sample_n=sample_n, seed=seed)
 
 
@@ -870,21 +867,21 @@ def _fitted_centroids(emb, sf_dir: str, k: int = 8, sample_n: int = 512,
     "whose spherical-triangle bound can't reach the threshold → salted "
     "equi-join within admissible blocks → exact cosine verify. Provably "
     "identical output to the all-pairs join (the oracle), but no nested "
-    "loop: on clustered 100 TB corpora most K² blocks never join.",
+    "loop: on clustered corpora most K² blocks never join.",
 )
 def q_embed_neardup(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings", parallel=True)
     # Centroids from the seeded sampled k-means fit (same as q_ann_ivf).
     # Output is provably centroid-INDEPENDENT (the pruning bound is sound
     # for any centroids; tests pin equality with brute force). K stays
-    # FIXED at 8: the round-7 scale probe measured the adaptive
+    # FIXED at 8: a scale probe measured the adaptive
     # K ~ sqrt(N) alternative and it LOST on the near-uniform fixture
     # (more centroids shrink inter-centroid angles faster than uniform
     # radii shrink -> LESS pruning, sf0.1 4.8 s -> 18.6 s) while the
     # heavy-dup replicated corpus stayed pair-output-bound either way —
     # the scaling answer there is exact-dedup-first pipeline ordering
     # (q_curation_e2e), not K tuning. Full analysis: BASELINE.md
-    # round-7 dedup-family probe.
+    # dedup-family probe.
     cents = _fitted_centroids(emb, sf_dir)
     return SIM.cluster_pruned_pairs_above(emb, cents, 0.4)
 
@@ -1203,8 +1200,8 @@ def q_multimodal_meta(spark, sf_dir):
               octet_length(encode(text)) * 1000 // 32 AS duration_ms
        FROM documents""",
     "Audio-metadata twin of q_multimodal_meta: Arrow-batched mapInPandas "
-    "header parse over opaque binary payloads (decode_audio is the "
-    "soundfile drop-in point; fake_audio_meta derives sample_rate/duration "
+    "header parse over opaque binary payloads (fake_audio_meta is the "
+    "soundfile drop-in point; it derives sample_rate/duration "
     "deterministically from payload bytes). Oracle reproduces that byte "
     "arithmetic, proving the Pandas batch path end-to-end.",
 )
@@ -1481,10 +1478,9 @@ def q_merge_upsert(spark, sf_dir):
 #: Writing the replay files is input PREP, not the operator under test —
 #: repeat invocations in one process (e.g. min-of-N benching) reuse them.
 #: Checkpoints/output dirs are NEVER shared: each invocation streams afresh.
-#: Deliberately an UNBOUNDED plain dict, not scratch.FitCache (r13 verdict
-#: nit adjudication): entries are path strings (~100 B each, |stream tags|
-#: × |sf_dirs| of them — a FitCache-sized cap would thrash WITHIN one bench
-#: pass and re-stage inputs), and the directories they point at are freed
+#: Deliberately an UNBOUNDED plain dict: entries are path strings (~100 B
+#: each, |stream tags| × |sf_dirs| of them — a size cap would thrash WITHIN
+#: one bench pass and re-stage inputs), and the directories they point at are freed
 #: by scratch.py's atexit sweep, so the only unbounded growth is bytes of
 #: path text.
 _REPLAY_INPUTS: dict[tuple[str, str, int], str] = {}
@@ -1601,8 +1597,8 @@ def q_stream_dedup(spark, sf_dir):
     "key's event time — the contract that makes infinite-stream dedup "
     "state bounded by (rate × TTL) instead of |all keys ever| — and the "
     "eviction-then-re-emission behavior past the TTL is pinned by "
-    "tests/test_streaming.py's expiry case. Width 2 per the round-11 "
-    "state-width A/B (the q_watermark twin's sizing).",
+    "tests/test_streaming.py's expiry case. Width 2 per a state-width "
+    "A/B (the q_watermark twin's sizing).",
 )
 def q_stream_dedup_ttl(spark, sf_dir):
 
@@ -1756,7 +1752,7 @@ def q_watermark(spark, sf_dir):
     inp, schema = _wm_staged_input(spark, sf_dir)
     run_dir = _scratch_dir(prefix="wm_run_")
     out, ckpt = f"{run_dir}/out", f"{run_dir}/ckpt"
-    # Width 2 per the round-11 state-width A/B (4 -> 2 = 2.71 -> 2.29 s
+    # Width 2 per a state-width A/B (4 -> 2 = 2.71 -> 2.29 s
     # min-of-2 at sf0.1): two micro-batches over a 5%-sampled stream —
     # dedup state is a few thousand keys; per-batch store commits scale
     # with width.
@@ -1877,7 +1873,7 @@ def q_stream_stream_join(spark, sf_dir):
     inp = _replay_input(ev, "ssjoin", sf_dir)
     # Symmetric-hash join state is per-partition PER SIDE — width pinned on
     # a per-writer session clone (sweep rationale below), not the shared
-    # session conf. Width 4 per the round-11 state-width A/B (8 -> 4 =
+    # session conf. Width 4 per a state-width A/B (8 -> 4 =
     # 2.66 -> 2.38 s min-of-2 at sf0.1): a stream-stream join keeps TWO
     # keyed state stores per partition, so per-batch store open/commit
     # scales with width x sides; size to the buffered state (tens of
@@ -1939,15 +1935,13 @@ def q_stream_stream_join(spark, sf_dir):
     "far-future sentinel batches (user_id -1/-2) advance the watermark "
     "past every real click so ALL unmatched rows flush: batch N's "
     "eviction uses the watermark computed at the END of batch N-1, hence "
-    "two sentinel micro-batches. Since round 12 the sentinels are "
+    "two sentinel micro-batches. The sentinels are "
     "PRE-PLACED in the monitored dirs with mtimes staggered 4 s apart "
     "(data, +1h sentinel, +2h sentinel): FileStreamSource orders files "
-    "by modification time, so one processAllAvailable replays the same "
-    "three-batch schedule the old stop-append-resume loop produced "
-    "(output equality verified row-for-row at sf0.1, 19863 rows), the "
-    "input becomes IMMUTABLE and therefore memoizable per sf_dir (no "
-    "per-invocation file copies or max-ts driver job), and the key "
-    "dropped 5.9 -> 4.6 s min-of-3 at sf0.1. The mtime stagger is "
+    "by modification time, so one drain replays a three-batch "
+    "schedule, and the input is IMMUTABLE and therefore memoizable per "
+    "sf_dir (no per-invocation file copies or max-ts driver job). The "
+    "mtime stagger is "
     "LOAD-BEARING: files sharing an mtime could surface a sentinel "
     "beside (or before) the data batch, advancing the watermark past "
     "the real rows and silently dropping them as late — the oracle "
@@ -2018,8 +2012,8 @@ def q_stream_stream_join_outer(spark, sf_dir):
         stage = work
         _REPLAY_INPUTS[("ssjout_pre", sf_dir, 0)] = stage
     cdir, vdir = f"{stage}/clicks", f"{stage}/views"
-    # Width 2 per the round-11 state-width A/B (8 -> 2 = 8.2 -> 5.1 s
-    # min-of-2 at sf0.1; re-confirmed round 12: 1 -> 7.1, 4 -> 5.9):
+    # Width 2 per a state-width A/B (8 -> 2 = 8.2 -> 5.1 s, 1 -> 7.1,
+    # 4 -> 5.9 min-of-2 at sf0.1):
     # ~15k buffered rows per side fit comfortably in 2 partitions; at
     # real scale this parameter sizes to buffered-state volume (the
     # scoped_writer_session contract), not to CPU count.
@@ -2079,7 +2073,7 @@ def q_stream_stream_join_outer(spark, sf_dir):
     "This key deliberately exercises the grouped-map surface; the "
     "operator's DEFAULT engine is the pure-JVM window twin, because "
     "grouped-map loads one whole group per Arrow batch (giant-key OOM "
-    "hazard at 100 TB — see the operator docstring). Equality of the two "
+    "hazard — see the operator docstring). Equality of the two "
     "engines is pinned in tests/test_extensions.py.",
 )
 def q_grouped_normalize(spark, sf_dir):
@@ -2198,7 +2192,7 @@ def q_tws_top_values(spark, sf_dir):
 
 
 # =========================================================================
-# Corpus curation round 5: relevance scoring, content addressing, PII,
+# Corpus curation: relevance scoring, content addressing, PII,
 # edit-distance near-dup, stratified downsampling (q_tfidf_topk,
 # q_crypto_fingerprint, q_pii_redact, q_levenshtein_neardup,
 # q_stratified_sample)
@@ -2231,8 +2225,8 @@ def q_tws_top_values(spark, sf_dir):
     "per-doc top-3 ranking equals the TF-IDF ranking while staying "
     "bit-exact — no float log). Ties broken (tf DESC, term ASC) for a "
     "total order. Scale: two key shuffles (doc_id,term) then (term); the "
-    "df side is |vocab| rows and joined SHUFFLE-side (vocab at 100 TB far "
-    "exceeds broadcast budget); the top-k window repartitions by doc_id "
+    "df side is |vocab| rows and joined SHUFFLE-side (a corpus vocabulary "
+    "can exceed the broadcast budget); the top-k window repartitions by doc_id "
     "only after tf/df — three exchanges total, each on the natural key, "
     "all aggregates map-side partial first.",
 )
@@ -2271,7 +2265,7 @@ def q_tfidf_topk(spark, sf_dir):
     "Content-addressable fingerprinting: md5 + sha-256 hex digests of the "
     "raw text (the identity used by exact-dedup manifests and "
     "content-addressed blob stores), plus the first 4 hex chars as a "
-    "65536-way shard prefix — the standard way a 100 TB corpus is laid "
+    "65536-way shard prefix — the standard way a large corpus is laid "
     "out for object-store fan-out. Pure narrow map, zero shuffle, "
     "whole-stage codegen; unlike xxhash64/hash these digests are "
     "engine-portable (bit-identical in DuckDB, Spark, Trino), so the "
@@ -2354,8 +2348,8 @@ def q_pii_redact(spark, sf_dir):
     "falls in the collision band is itself in the guarded %7 branch and "
     "raises; a 1e6 band would be unsound here since 1e6 % 7 = 1). Scale: the O(len^2) DP runs ONLY on blocked "
     "candidate pairs — one hash shuffle on the 40-char prefix, never "
-    "all-pairs; at 100 TB the block key would be hashed "
-    "(md5(prefix)) to keep exchange rows narrow. Levenshtein itself is "
+    "all-pairs; hashing the block key (md5(prefix)) would keep "
+    "exchange rows narrower. Levenshtein itself is "
     "a JVM built-in, identical semantics in DuckDB.",
 )
 def q_levenshtein_neardup(spark, sf_dir):
@@ -2411,7 +2405,7 @@ def q_levenshtein_neardup(spark, sf_dir):
     "membership is a pure deterministic function of doc_id — replayable "
     "across engines, backfills, and reruns, with NO RNG state. Narrow "
     "map-side filter: the rate lookup is a CASE on the stratum column, "
-    "the hash never shuffles; at 100 TB the rates table would be a "
+    "the hash never shuffles; a large rates table would be a "
     "broadcast join instead of a literal CASE.",
 )
 def q_stratified_sample(spark, sf_dir):
@@ -2491,8 +2485,8 @@ def q_lsh_hyperplane(spark, sf_dir):
     "JSONL and read back with an EXPLICIT schema, and the oracle checks "
     "the round-trip is lossless against the parquet original. The read "
     "deliberately passes schema= rather than relying on inference: "
-    "schema inference is a FULL EXTRA SCAN of the data (at 100 TB, a "
-    "100 TB pre-pass) and can mistype sparse fields; a declared schema "
+    "schema inference is a FULL EXTRA SCAN of the data and can "
+    "mistype sparse fields; a declared schema "
     "makes the JSONL scan single-pass, splittable by line, and "
     "column-pruned at the parser. Writer fan-out follows the input "
     "partitioning — no shuffle either direction.",
@@ -2577,7 +2571,7 @@ def q_decontaminate(spark, sf_dir):
     "sharding can interleave deterministically. Map-side fan-out via "
     "explode over a per-row sequence; no shuffle, no RNG — the mix is a "
     "pure function of (doc_id, lang, weight table), so a backfill "
-    "reproduces the identical corpus. At 100 TB the weight table is a "
+    "reproduces the identical corpus. A large weight table would be a "
     "broadcast join instead of a CASE literal, and fractional epoch "
     "factors compose with q_hash_sample's modular-hash keep-rule.",
 )
@@ -2617,7 +2611,7 @@ def q_orc_roundtrip(spark, sf_dir):
     "CSV source/sink round-trip with an EXPLICIT schema and header: the "
     "interchange format every external vendor drop arrives in. Quoting "
     "handles embedded delimiters; schema= (not inferSchema) keeps the "
-    "read single-pass — inference costs a full extra scan at 100 TB and "
+    "read single-pass — inference costs a full extra scan and "
     "mistypes sparse columns. Lossless round-trip checked against the "
     "parquet original.",
 )
@@ -2635,7 +2629,7 @@ def q_csv_roundtrip(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 5): ViT patch-grid schedule — the tiling plan every
+# ViT patch-grid schedule — the tiling plan every
 # vision-transformer preprocessing pipeline materializes per image
 # =========================================================================
 
@@ -2674,7 +2668,7 @@ def q_csv_roundtrip(spark, sf_dir):
     "posexplode of a sequence — rows per image = (w div 16)*(h div 16), "
     "bounded by the header, no Python in the hot path. Shape: one "
     "documents scan -> mapInPandas header parse -> sequence explode -> "
-    "row-per-patch output; at 100 TB the explode factor is the patch "
+    "row-per-patch output; the explode factor is the patch "
     "count, exactly the fan-out the downstream trainer consumes.",
 )
 def q_patchify_meta(spark, sf_dir):
@@ -2703,7 +2697,7 @@ def q_patchify_meta(spark, sf_dir):
 
 
 # =========================================================================
-# Round 12: streaming schema evolution — the stream twin of
+# Streaming schema evolution — the stream twin of
 # q_union_evolve / q_schema_union, closing the Silver mergeSchema
 # nuance (02_silver_realtime_rides.py:114) under a mid-stream change
 # =========================================================================
@@ -2798,7 +2792,7 @@ def q_schema_evolve_stream(spark, sf_dir):
     "exactly-once contract. Scale: recovery cost is reading the "
     "offset/commit log (O(batches), compacted), independent of data "
     "volume — the design reason Structured Streaming restarts are "
-    "cheap at 100 TB.",
+    "cheap whatever the data size.",
 )
 def q_stream_restart_recovery(spark, sf_dir):
 
@@ -2845,7 +2839,8 @@ def q_stream_restart_recovery(spark, sf_dir):
               concat('s', CAST(user_id % 10 AS VARCHAR))
        FROM events WHERE event_type = 'purchase' AND event_id % 8 = 4""",
     "CHECKPOINT RESTART x SCHEMA EVOLUTION COMBINED — the reference's "
-    "real deploy failure mode, which the two round-12 lifecycle keys "
+    "real deploy failure mode, which the two lifecycle keys contrasted "
+    "below "
     "each cover only one dimension of: a restart WITH an evolved schema "
     "on the SAME checkpoint (mergeSchema at 02_silver_realtime_rides."
     "py:114 + checkpointLocation at 02:117 are on the same writer for "
@@ -2861,7 +2856,7 @@ def q_stream_restart_recovery(spark, sf_dir):
     "evolves across two INDEPENDENT checkpoints; q_stream_restart_"
     "recovery restarts on one checkpoint with a FIXED schema; this key "
     "is their composition — offset-log recovery and footer-merge "
-    "widening proven to compose in one lifecycle (r13 VERDICT item 6). "
+    "widening proven to compose in one lifecycle. "
     "Scale: recovery cost is the compacted offset log (O(batches), "
     "data-volume independent); the merged read costs one footer per "
     "file — on Delta the transaction log replaces both (sinks.py twin "

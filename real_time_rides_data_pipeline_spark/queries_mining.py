@@ -1,5 +1,5 @@
-"""Round-7 continuation (second wave): sketch / ranking / privacy /
-cogroup / streaming-session operators.
+"""Sketch / ranking / privacy / cogroup / streaming-session operators, and
+the KMV/theta family with the top-k state fold.
 
 Same registry contract as queries.py (SURVEY.md §2.9 scope). Determinism
 rules (SURVEY §7.4) throughout: exact integer ppm/cents/counts, floor
@@ -7,8 +7,7 @@ rules (SURVEY §7.4) throughout: exact integer ppm/cents/counts, floor
 all-positive operands used here — and every ORDER BY tied off by a total
 order.
 
-What this module adds (each a genuinely distinct surface, none previously
-registered):
+What this module adds:
 
 - ``q_gini_impurity`` — class-balance (Gini) impurity of the language
   distribution per source: the dataset-mix health metric a curation
@@ -84,9 +83,6 @@ Third wave (same module):
   which has no window closed form: a grouped-map numpy fold per key,
   pinned against a recursive-CTE oracle — the deliberate counterpart
   proving where ``q_clamped_running_balance``'s identity stops.
-
-Round 9 — the KMV/theta family and the top-k state fold:
-
 - ``q_kmv_theta_sketch`` — mergeable set-expression cardinality
   estimation (operators/kmv.py): k-minimum-values sketches, exact
   DECIMAL estimator arithmetic, union via sketch merge, intersection
@@ -140,8 +136,8 @@ from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completi
     "exact path needs 1e6*sumsq ≤ 2^63, i.e. n ≤ 3.0e6 docs per source "
     "(sumsq ≤ n²); past that, pre-scale (sumsq DIV n first) at a "
     "documented ≤1e6/n-ppm precision cost — the bound is per GROUP, not "
-    "per corpus, and a 100 TB corpus tracks impurity per shard/source "
-    "well under it.",
+    "per corpus, and a corpus tracked per shard/source stays well under "
+    "it.",
 )
 def q_gini_impurity(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
@@ -185,7 +181,7 @@ _KANON_K = 10
     "members gets both QI columns nulled, so no released row is "
     "re-identifiable to better than k candidates. One window shuffle on "
     "the QI key (count over an unordered partition needs no sort); the "
-    "direct-identifier sibling is q_pii_redact. At 100 TB the QI "
+    "direct-identifier sibling is q_pii_redact. The QI "
     "cardinality (125 groups here) is tiny relative to data, so the "
     "window degenerates to a broadcast-joined group-size dimension.",
 )
@@ -272,7 +268,7 @@ def q_bm25_topk(spark, sf_dir):
     # Materialize tf ONCE: the static plan otherwise re-derives the
     # scan+explode+tf aggregate for every consumer (df, dl via sum(tf),
     # corpus scalar, scored join — 8 parquet scans / 8 explodes measured
-    # at round 15 before this checkpoint). dl = sum(tf) per doc is
+    # without this checkpoint, OPTIMIZATION_r15.md). dl = sum(tf) per doc is
     # exactly the token count per doc, so the exploded token table is
     # aggregated exactly once and never re-read.
     tf = (
@@ -397,7 +393,7 @@ def q_cms_heavy_hitters(spark, sf_dir):
     "q_stream_cms_merge",
     _CMS_ORACLE,
     "STREAMING count-min sketch — the live demonstration of sketch "
-    "MERGEABILITY, the property that makes sketches the 100 TB answer: "
+    "MERGEABILITY, the property that lets sketches combine across shards: "
     "documents replay as a REAL 2-micro-batch stream; each batch builds "
     "its partial sketch (one map-side-combining aggregate over the "
     "batch) and foreachBatch folds it into a parquet sketch table by "
@@ -598,8 +594,8 @@ def q_cogroup_asof(spark, sf_dir):
     "= pre-Jan-15, batch 2 = rest) must surface as ONE merged row. "
     "Watermark 10 min bounds state; append mode emits a session only "
     "once the watermark proves it closed, so two far-future sentinel "
-    "batches (user_id -1/-2, +72/+73 h) flush the tail. Since round 12 "
-    "the late batch and both sentinels are PRE-PLACED with mtimes "
+    "batches (user_id -1/-2, +72/+73 h) flush the tail. "
+    "The late batch and both sentinels are PRE-PLACED with mtimes "
     "staggered 4 s apart (the q_stream_stream_join_outer mechanic — "
     "FileStreamSource's mtime ordering replays the identical four-batch "
     "schedule, the input memoizes immutable, and one "
@@ -625,12 +621,11 @@ def q_stream_session(spark, sf_dir):
         .select("user_id", "ts", "event_id")
     )
     cutoff = F.lit("2024-01-15 00:00:00").cast("timestamp")
-    # Input prep is a pure function of sf_dir. Since round 12 the late
-    # batch and the two sentinel files are PRE-PLACED with mtimes
-    # staggered 4 s apart (the q_stream_stream_join_outer mechanic:
-    # FileStreamSource orders files by modification time, so one
-    # processAllAvailable replays the identical early/late/sent/sent
-    # four-batch schedule the old append-mid-stream loop produced) —
+    # Input prep is a pure function of sf_dir. The late batch and the two
+    # sentinel files are PRE-PLACED with mtimes staggered 4 s apart (the
+    # q_stream_stream_join_outer mechanic: FileStreamSource orders files
+    # by modification time, so one drain replays the early/late/sent/sent
+    # four-batch schedule) —
     # the monitored dir is IMMUTABLE, so the whole thing memoizes and
     # each invocation is a single stream run with a fresh checkpoint.
     stage = _REPLAY_INPUTS.get(("sesstream_pre", sf_dir, 0))
@@ -640,7 +635,7 @@ def q_stream_session(spark, sf_dir):
         ev.filter(F.col("ts") < cutoff).coalesce(1).write.parquet(inp0)
         # Positively identify the early file by listing BETWEEN the two
         # writes — an mtime sort can tie on coarse-granularity
-        # filesystems and swap the early/late re-stamp (advice r12).
+        # filesystems and swap the early/late re-stamp.
         early_files = {
             f for f in os.listdir(inp0) if f.endswith(".parquet")
         }
@@ -753,7 +748,7 @@ def q_domain_cap(spark, sf_dir):
     "BEFORE a big key join: per-key row counts on both sides, multiplied "
     "= exactly how many rows the equi-join on that key will produce, "
     "without executing it. The two per-key aggregates shuffle once each "
-    "(map-side combined) and join at |keys| rows — at 100 TB this costs "
+    "(map-side combined) and join at |keys| rows — this costs "
     "two count-aggregates instead of the join's full output, which is "
     "how you discover the 10^12-row key BEFORE it takes the cluster "
     "down (companion to q_skew_report's single-side view).",
@@ -802,7 +797,7 @@ def q_join_cardinality_estimate(spark, sf_dir):
     "count/lo/hi — the discretization stage of feature pipelines and the "
     "exact twin of what approx_percentile boundaries approximate. The "
     "UNPARTITIONED ntile forces a single-partition sort — correct but "
-    "the documented anti-pattern at 100 TB (see q_approx_quantile for "
+    "the documented anti-pattern on large inputs (see q_approx_quantile for "
     "the scale path: approx boundaries + a narrow bucket-assign map); "
     "this key exists to pin the exact semantics the approximation is "
     "judged against. Ten output rows.",
@@ -929,7 +924,7 @@ def q_chi2_cells(spark, sf_dir):
     "boundary arrives via a broadcast scalar join, which partition "
     "pruning does not see; in production the boundary is a LITERAL "
     "(the previous page's last row, known to the client), and then the "
-    "date >= bd conjunct prunes a date-partitioned 100 TB table at "
+    "date >= bd conjunct prunes a date-partitioned table at "
     "plan time. The in-plan seek only makes the key self-contained.",
 )
 def q_keyset_pagination(spark, sf_dir):
@@ -1082,7 +1077,7 @@ def q_stream_late_metrics(spark, sf_dir):
     inp, schema = _wm_staged_input(spark, sf_dir)
     run_dir = _scratch_dir(prefix="latemetrics_run_")
     out, ckpt = f"{run_dir}/out", f"{run_dir}/ckpt"
-    # Width 2 per the round-11 state-width A/B (4 -> 2 = 3.05 -> 2.53 s
+    # Width 2 per a state-width A/B (4 -> 2 = 3.05 -> 2.53 s
     # min-of-2 at sf0.1) — same sizing rationale as q_watermark's twin.
     writer = scoped_writer_session(spark, shuffle_partitions=2)
     stream = parquet_stream(writer, inp, schema, max_files_per_trigger=1)
@@ -1199,7 +1194,7 @@ def q_capped_balance_fold(spark, sf_dir):
 
 
 # =========================================================================
-# Round 9: KMV / theta sketch — set-expression cardinality estimation
+# KMV / theta sketch — set-expression cardinality estimation
 # =========================================================================
 
 
@@ -1338,7 +1333,7 @@ def q_kmv_theta_sketch(spark, sf_dir):
     "commutative, idempotent, so the folded sketch is BIT-IDENTICAL to "
     "the batch build; batch_id-idempotent, crash-ordered swap). The "
     "folded sketches answer to the SAME oracle and ±25% attestations as "
-    "q_kmv_theta_sketch. At 100 TB this is the continuously-maintained "
+    "q_kmv_theta_sketch. This is the continuously-maintained "
     "distinct-cardinality dashboard: per-shard sketches stream in, "
     "|keys|·k state, set-expression estimates on demand, no rescan.",
 )
@@ -1399,7 +1394,7 @@ def q_stream_kmv(spark, sf_dir):
     # The folded sketch feeds EIGHT downstream references (est_a, est_b,
     # the union's two sides, and the intersection's ta/tb/common joins) —
     # without materialization the final plan re-scans the state parquet 8×
-    # (round-15 audit). One eager localCheckpoint of the ≤ 2k-row sketch
+    # (OPTIMIZATION_r15.md). One eager localCheckpoint of the ≤ 2k-row sketch
     # turns that into one scan + in-memory reuse (guide §5); the folded
     # state is computed fresh by the replay above on every invocation.
     folded = spark.read.parquet(state).localCheckpoint(eager=True)
@@ -1471,7 +1466,7 @@ def q_stream_kmv(spark, sf_dir):
     "bit-identical to the batch top-10, so the key answers to the plain "
     "batch window oracle. Shape: per-batch rank-window partials (≤ "
     "|types|·10 rows enter the merge), state bounded at |types|·10; the "
-    "read-back rank window runs over that tiny table. At 100 TB this is "
+    "read-back rank window runs over that tiny table. This is "
     "the continuously-maintained leaderboard every ops dashboard wants — "
     "no rescans, crash-safe, replay-idempotent.",
 )
@@ -1554,7 +1549,7 @@ def q_stream_leaderboard(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11: Cramér's V — the normalized effect size over the chi-square
+# Cramér's V — the normalized effect size over the chi-square
 # contingency core (q_chi2_cells emits the exact integer deviations; this
 # key reduces them to the [0,1] association strength analysts compare
 # across tables of different size/shape)
@@ -1677,7 +1672,7 @@ def q_cramers_v(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11: IQR (Tukey) fence outlier audit — the third member of the
+# IQR (Tukey) fence outlier audit — the third member of the
 # outlier trio next to q_zscore_outlier (parametric) and q_mad_outlier
 # (robust-scale): quartile fences are THE boxplot rule and, unlike the
 # z-score, need no normality assumption
@@ -1723,7 +1718,7 @@ def q_cramers_v(spark, sf_dir):
     "(the boxplot rule — distribution-free). Shape: ONE events scan "
     "compresses to |type × distinct cents| rows; the quartile windows, "
     "the fence join (broadcast: |types| rows), and both tail counts all "
-    "run over that compressed frame — at 100 TB the sort under the "
+    "run over that compressed frame — the sort under the "
     "cumulative window is over the VALUE DOMAIN, not the fact table.",
 )
 def q_iqr_fence(spark, sf_dir):
@@ -1788,7 +1783,7 @@ def q_iqr_fence(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 2): Gini coefficient — the inequality statistic over
+# Gini coefficient — the inequality statistic over
 # per-user spend (distinct from q_gini_impurity, which is class-mix
 # impurity; this is the Lorenz-curve concentration measure)
 # =========================================================================
@@ -1833,8 +1828,8 @@ def q_iqr_fence(spark, sf_dir):
     "per-partition row_number + broadcast offsets; the only ordered "
     "single-partition window runs over P partition counts, not "
     "|users| rows) → 1-row broadcast scalar join for (n, tot) → 1 "
-    "row; at 100 TB |users| is itself huge, so the rank must scale "
-    "with the user domain, and here it does.",
+    "row; the rank scales with the user domain, never a single "
+    "partition.",
 )
 def q_gini_coefficient(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.functions.precision import cents
@@ -1865,7 +1860,7 @@ def q_gini_coefficient(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 2): Theil–Sen robust trend — median of pairwise slopes
+# Theil–Sen robust trend — median of pairwise slopes
 # over the compressed hour domain
 # =========================================================================
 
@@ -1966,7 +1961,7 @@ def q_theil_sen(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 2): Kaplan–Meier survival estimator — time-to-churn with
+# Kaplan–Meier survival estimator — time-to-churn with
 # right-censoring, the retention curve q_retention_cohorts approximates
 # without censoring awareness
 # =========================================================================
@@ -2085,7 +2080,7 @@ def q_survival_km(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 4): market-basket lift — pairwise co-occurrence
+# Market-basket lift — pairwise co-occurrence
 # association between event types across users
 # =========================================================================
 
@@ -2177,7 +2172,7 @@ def q_basket_lift(spark, sf_dir):
 
 
 # =========================================================================
-# Round 12: differentially-private-style histogram release — the
+# Differentially-private-style histogram release — the
 # deterministic-noise attestation twin of the privacy family
 # (q_kanon_suppress generalizes, q_ldiversity/q_tcloseness audit,
 # this releases counts under bounded noise)
@@ -2233,7 +2228,7 @@ def q_dp_histogram(spark, sf_dir):
 
 
 # =========================================================================
-# Round 12: Holt linear-trend smoothing — the recursive member of the
+# Holt linear-trend smoothing — the recursive member of the
 # time-series family (q_ewma_crossover is the weighted-FIR twin whose
 # taps truncate; Holt's level+trend state is genuinely recursive, so
 # this key pins the exact integer fold)
@@ -2329,7 +2324,7 @@ def q_holt_linear(spark, sf_dir):
 
 
 # =========================================================================
-# Round 12: two-stage retrieval — BM25 recall then embedding rerank,
+# Two-stage retrieval — BM25 recall then embedding rerank,
 # the RAG retrieval pipeline end-to-end (stage 1 = q_bm25_topk's exact
 # integer scoring turned query-side, stage 2 = q_cosine_topk's exact
 # rerank over the shortlist)
@@ -2404,7 +2399,7 @@ def q_holt_linear(spark, sf_dir):
     "20 rows, not N. Shuffles: the tf/df/dl aggs and vocab join from "
     "the BM25 plan (query terms prune tf BEFORE the df join), then "
     "broadcast-only joins; the embeddings scan is pruned to the "
-    "shortlist via the broadcast hash join at 100 TB.",
+    "shortlist via the broadcast hash join.",
 )
 def q_two_stage_retrieval(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.functions.vectors import (
@@ -2476,7 +2471,7 @@ def q_two_stage_retrieval(spark, sf_dir):
 
 
 # =========================================================================
-# Round 12: per-user OLS trend — grouped model fitting (thousands of
+# Per-user OLS trend — grouped model fitting (thousands of
 # regressions in one aggregate pass; q_linreg_fit is the single global
 # model, q_cv_ols the LOFO variant — this is the per-entity fleet)
 # =========================================================================
@@ -2507,7 +2502,7 @@ def q_two_stage_retrieval(spark, sf_dir):
                         ELSE 0 END AS BIGINT) AS trend_dir
        FROM m""",
     "PER-USER OLS TREND — one regression per user (spend-cents vs hour "
-    "index), the grouped-model-fleet pattern: at 100 TB you fit "
+    "index), the grouped-model-fleet pattern: fit "
     "millions of per-entity models in ONE map-side-combined aggregate "
     "pass, never a per-entity loop. The slope is emitted as the EXACT "
     "RATIONAL pair (slope_num, slope_den) = (n*Sxy - Sx*Sy, "

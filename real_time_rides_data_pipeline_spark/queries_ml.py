@@ -1,4 +1,4 @@
-"""Round 8: model-evaluation / feature-engineering surface.
+"""Model-evaluation / feature-engineering surface.
 
 Same registry contract as queries.py / queries_analytics.py (SURVEY.md
 §2.9 scope — the operations a large-scale training-data pipeline needs
@@ -9,12 +9,10 @@ tied off by a total order, the only compared float-derived columns are
 floor-truncated cosine scores whose pre-truncation doubles are
 bit-identical across engines (the q_cosine_topk precedent).
 
-What this module adds (each a genuinely distinct surface, none
-previously registered):
+What this module adds:
 
 - ``q_linreg_fit`` — closed-form OLS per group via one-pass exact
-  integer moments: the distributed "fit a trend line over 100 TB"
-  primitive (normal equations, map-side combine; no iteration, no
+  integer moments: the distributed "fit a trend line" primitive (normal equations, map-side combine; no iteration, no
   float drift — slope/intercept emitted as exact BIGINT rationals).
 - ``q_auc_roc`` — exact ROC-AUC via the rank-sum (Mann-Whitney U)
   identity over distinct-score groups with tie handling; the offline
@@ -65,12 +63,9 @@ previously registered):
   gramian (mapInArrow partial X'X per Arrow batch → element-wise sum →
   64×64 eigh on the driver → components folded back as literals) and
   the projection of every vector onto them. The classic
-  fit-small/broadcast-big shape for embedding dim-reduction at 100 TB.
+  fit-small/broadcast-big shape for embedding dim-reduction.
   Eigendecomposition is not SQL-expressible → rows-only driver check;
   exactness vs numpy PCA is pinned in tests/test_ml.py.
-
-Round 9 completes the eval family:
-
 - ``q_ndcg_at10`` — graded-ranking retrieval eval (NDCG@10) over the
   shared kNN holdout, discount weights as a literal scaled-integer
   table (log2 is irrational; the floor table is the portable contract).
@@ -136,9 +131,9 @@ _LINREG_ORACLE = """WITH m AS (
     "slope_den and intercept = icept_num/slope_den as exact BIGINT "
     "rationals — no float ever appears, so two engines agree bit-for-bit. "
     "Shape: map-side partial agg into 5 groups; no window, no second pass. "
-    "At 100 TB the moments widen to DECIMAL(38,0) (or x is mean-centered "
-    "per group in a cheap 2-pass) — int64 is exact at every tested SF and "
-    "overflow would fail loudly, never silently.",
+    "int64 is exact at every tested SF and overflow would fail loudly, "
+    "never silently; past that the moments widen to DECIMAL(38,0) (or x "
+    "is mean-centered per group in a cheap 2-pass).",
 )
 def q_linreg_fit(spark, sf_dir):
     return _linreg_solve(_linreg_moments(_t(spark, sf_dir, "events")))
@@ -186,7 +181,7 @@ def _linreg_solve(m):
     "(sinks.merge_distributive_parquet — batch_id-marked idempotent under "
     "at-least-once redelivery, crash-ordered swap). Integer moments add "
     "exactly, so the merged fit is BIT-IDENTICAL to the batch fit and "
-    "answers to the SAME oracle. At 100 TB this is per-shard/per-day "
+    "answers to the SAME oracle: per-shard/per-day "
     "moment tables merged into a continuously-updated model — no refit "
     "scan.",
 )
@@ -338,7 +333,7 @@ _CM_PRED_SQL = (
     "for a scored eval table): TP/FP/FN plus precision/recall/F1 in exact "
     "integer ppm. Shape: ONE contingency aggregation of N rows to ≤ C² "
     "cells, then all re-aggs and the class full-join run on the tiny cell "
-    "table — N is touched exactly once, the 100 TB eval-table shape.",
+    "table — N is touched exactly once.",
 )
 def q_confusion_matrix(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
@@ -539,8 +534,8 @@ _GRID_PTS_SQL = f"""SELECT o_orderkey AS pid,
     "exact integer squared distance (pairs canonical via id_a < id_b; "
     "cell width = r guarantees every qualifying pair lands in exactly one "
     "expanded/native cell combination). O(N·local density) work vs the "
-    "oracle's O(N²) cross join — the geo/embedding blocking shape that "
-    "survives 100 TB; skewed cells are handled by the same salting "
+    "oracle's O(N²) cross join — the geo/embedding blocking shape; "
+    "skewed cells are handled by the same salting "
     "machinery as any hot join key.",
 )
 def q_grid_join_radius(spark, sf_dir):
@@ -615,7 +610,7 @@ def q_grid_join_radius(spark, sf_dir):
     "(collision count), the dominant term and its count. Shape: tokenize "
     "(pure map) → (term) hash agg → (bucket) re-agg over the small term "
     "table; the fixed-width feature space is what makes downstream linear "
-    "models shuffle-free at 100 TB.",
+    "models shuffle-free.",
 )
 def q_feature_hash(spark, sf_dir):
     d = _t(spark, sf_dir, "documents", parallel=True)
@@ -742,8 +737,8 @@ def q_knn_classify(spark, sf_dir):
 
 
 def _bpe_oracle_sql(n_merges: int = 4, mode: str = "train") -> str:
-    """DuckDB twin of the FULL 4-round BPE training loop (round 13 —
-    converts q_bpe_train from rows-only to value-checked).
+    """DuckDB twin of the FULL 4-round BPE training loop — what makes
+    q_bpe_train value-checked instead of rows-only.
 
     The iterative fit unrolls into one static SQL expression because the
     round count is a fixed literal: each round is (pairs → argmax with the
@@ -766,9 +761,8 @@ def _bpe_oracle_sql(n_merges: int = 4, mode: str = "train") -> str:
     1-row ``b{k}`` and no-ops when it is empty, so ``seg{k}`` degrades to
     ``seg{k-1}`` instead of collapsing every later seg to zero rows —
     train mode emits the same (shorter) merge table either way, and
-    encode mode now carries every word through to the per-doc sums
-    (round-14 ADVICE fix; pinned on an all-single-char corpus in
-    tests/test_properties.py).
+    encode mode carries every word through to the per-doc sums (pinned
+    on an all-single-char corpus in tests/test_properties.py).
     """
     sep = "chr(31)"
     parts = [
@@ -800,7 +794,7 @@ def _bpe_oracle_sql(n_merges: int = 4, mode: str = "train") -> str:
          -- adjacent pairs (b{k} empty — degenerate all-single-char
          -- corpora), the merge step degrades to a no-op so seg{k} =
          -- seg{k - 1} instead of collapsing to zero rows, matching the
-         -- Spark leg's train_bpe early break (round-14 ADVICE fix).
+         -- Spark leg's train_bpe early break.
          SELECT word, n, CASE WHEN b.l IS NULL THEN s
            ELSE list_reduce(string_split(s, {sep}),
            (acc, x) -> CASE WHEN ends_with(acc, {sep} || b.l) AND x = b.r
@@ -836,9 +830,8 @@ def _bpe_oracle_sql(n_merges: int = 4, mode: str = "train") -> str:
 
 def _fit_bpe_merges(words, sf_dir: str, n_merges: int = 4):
     """BPE merge-table fit — deterministic pure function of the corpus.
-    Refit on EVERY call (round-15 optimization-phase rule: no module-level
-    memo of data-derived results — each bench/oracle invocation must
-    compute from the parquet inputs)."""
+    Refit on EVERY call: no module-level memo of data-derived results —
+    each bench/oracle invocation computes from the parquet inputs."""
     from real_time_rides_data_pipeline_spark.operators.bpe import train_bpe
 
     return train_bpe(words, n_merges=n_merges)
@@ -846,7 +839,7 @@ def _fit_bpe_merges(words, sf_dir: str, n_merges: int = 4):
 
 @register(
     "q_bpe_train",
-    _bpe_oracle_sql(),  # VALUE-CHECKED since round 13: the fixed round
+    _bpe_oracle_sql(),  # VALUE-CHECKED: the fixed round
     # count unrolls the training loop into static SQL (see
     # _bpe_oracle_sql); exact equality with a pure-python BPE reference
     # is additionally pinned in tests/test_ml.py.
@@ -858,7 +851,7 @@ def _fit_bpe_merges(words, sf_dir: str, n_merges: int = 4):
     "(operators/bpe.py — no Python in the rewrite path, all-integer "
     "frequencies). Complements q_bpe_pairs (one counting round). Scale: "
     "each round's cost is driven by the DISTINCT-WORD table, not corpus "
-    "size; at 100 TB the word table is checkpointed once and each round "
+    "size; the word table is checkpointed once and each round "
     "is a bounded agg — the fit-small/broadcast-big loop, same contract "
     "as the k-means and PCA fits.",
 )
@@ -896,7 +889,7 @@ def q_bpe_train(spark, sf_dir):
     "application runs on the distinct-WORD table (vocab-sized, the "
     "train_bpe scale contract), and the corpus-side work is one "
     "wordcount-shaped explode + join against the vocab map — "
-    "shuffle-side join at 100 TB vocab, broadcastable below that.",
+    "shuffle-side for a large vocabulary, broadcastable below that.",
 )
 def q_bpe_encode(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.operators.bpe import (
@@ -1126,8 +1119,8 @@ def q_ldiversity(spark, sf_dir):
     "Curation observability: per-source dedup-rate report over the exact-"
     "dup corpus (q_exact_dedup's fixture with source retained) — document "
     "counts, distinct texts, duplicate fraction in exact ppm, and bytes "
-    "reclaimed by keep-one dedup. Shape: one (source, text) hash agg (at "
-    "100 TB: on xxhash64(text), 8-byte shuffle keys) + a tiny per-source "
+    "reclaimed by keep-one dedup. Shape: one (source, text) hash agg (on "
+    "xxhash64(text) it would shuffle 8-byte keys) + a tiny per-source "
     "re-agg — the report every dedup pipeline emits before/after gating.",
 )
 def q_dedup_report(spark, sf_dir):
@@ -1274,9 +1267,9 @@ def q_calibration_bins(spark, sf_dir):
 
 def _fit_pca_components(emb, sf_dir: str) -> tuple[list[float], list[float]]:
     """Top-2 PCA fit via the distributed gramian — deterministic pure
-    function of the data. Refit on EVERY call (round-15 optimization-phase
-    rule: no module-level memo of data-derived results — each bench/oracle
-    invocation must compute from the parquet inputs)."""
+    function of the data. Refit on EVERY call: no module-level memo of
+    data-derived results — each bench/oracle invocation computes from the
+    parquet inputs."""
     from real_time_rides_data_pipeline_spark.operators.pca import fit_top2_gramian
 
     return fit_top2_gramian(emb, vec_col="embedding")
@@ -1286,7 +1279,7 @@ def _fit_pca_components(emb, sf_dir: str) -> tuple[list[float], list[float]]:
     "q_pca_project",
     None,  # d=64 eigendecomposition is not SQL-expressible → rows-only
     # check; exactness vs numpy PCA is pinned in tests/test_ml.py, and
-    # since round 13 the fit→project composition has a VALUE-CHECKED
+    # the fit→project composition has a VALUE-CHECKED
     # driver sibling (q_pca_project_2d — closed-form 2x2 eigen, exact
     # int gramian, bit-identical doubles on both legs).
     "Top-2 principal directions of the (uncentered) embedding matrix via a "
@@ -1296,7 +1289,7 @@ def _fit_pca_components(emb, sf_dir: str) -> tuple[list[float], list[float]]:
     "the sign-fixed components fold back into the plan as array literals "
     "for the projection scan. Data crosses the wire as d²·n_partitions "
     "doubles, never as rows — the fit-small/broadcast-big shape that makes "
-    "embedding dim-reduction tractable at 100 TB.",
+    "embedding dim-reduction tractable.",
 )
 def q_pca_project(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
@@ -1319,8 +1312,8 @@ def q_pca_project(spark, sf_dir):
 
 #: Closed-form top eigenvector of the 2x2 symmetric gramian [[a,b],[b,c]]
 #: as a fixed sequence of IEEE-754 ops shared verbatim by both engine
-#: legs (round 13 — the value-checked sibling of q_pca_project's
-#: rows-only d=64 eigh). Portability argument, step by step: a/b/c are
+#: legs (the value-checked sibling of q_pca_project's rows-only d=64
+#: eigh). Portability argument, step by step: a/b/c are
 #: EXACT int64 sums of e6-scaled products (bit-identical under any
 #: partitioning/order — integer addition is associative); int64→double
 #: conversion is round-to-nearest (deterministic, identical in JVM and
@@ -1387,8 +1380,7 @@ def _pca2_oracle_sql() -> str:
 @register(
     "q_pca_project_2d",
     _pca2_oracle_sql(),
-    "The VALUE-CHECKED sibling of q_pca_project (round 13, closing the "
-    "r12 verdict's rows-only conversion ask via the q_pq_recall "
+    "The VALUE-CHECKED sibling of q_pca_project (the q_pq_recall "
     "pattern): the same fit→fold-back→project composition — distributed "
     "exact gramian, driver-free eigen-solve, directions folded into the "
     "projection scan — restricted to the first TWO embedding "
@@ -1404,7 +1396,7 @@ def _pca2_oracle_sql() -> str:
     "driver check. Shape: ONE partial/final hash agg produces the three "
     "gramian scalars (the map-side-combine contract of pca.gramian), "
     "the 1-row component frame broadcasts into the projection scan — "
-    "at 100 TB the fit moves 3 int64s, the scan is embarrassingly "
+    "the fit moves 3 int64s, the scan is embarrassingly "
     "parallel, and the plan is scan + agg + broadcast-join, no wide "
     "shuffle.",
 )
@@ -1434,7 +1426,7 @@ def q_pca_project_2d(spark, sf_dir):
 
 
 # =========================================================================
-# Round 9: eval-family completion — NDCG@10, PR-AUC, Brier, Cohen's kappa,
+# Eval-family completion — NDCG@10, PR-AUC, Brier, Cohen's kappa,
 # group-k-fold assignment, time-series CV splits
 # =========================================================================
 
@@ -1743,7 +1735,7 @@ def q_cohens_kappa(spark, sf_dir):
     "by audit. The report shows what the modeler checks before trusting "
     "a split: user/event/mass balance per fold. Shape: pure map fold "
     "assignment + one 5-group aggregate (count-distinct re-shuffles "
-    "user_id once); at 100 TB the md5 cost is scan-side and the group "
+    "user_id once); the md5 cost is scan-side and the group "
     "count is a constant 5.",
 )
 def q_group_kfold(spark, sf_dir):
@@ -1966,7 +1958,7 @@ def q_mcc(spark, sf_dir):
                    - (t.tsx - m.sx) * (t.tsxy - m.sxy) AS BIGINT) AS icept_num
        FROM m JOIN t USING (event_type)""",
     "CROSS-VALIDATED OLS — the leave-one-fold-out model-stability report "
-    "that ties the round-9 eval family together: folds come from the "
+    "that ties the eval family together: folds come from the "
     "leakage-free group assignment (q_group_kfold's portable md5 rule), "
     "moments from q_linreg_fit's exact integer sufficient statistics, "
     "and the per-fold TRAINING fit needs NO second data pass because "
@@ -2024,7 +2016,7 @@ def q_cv_ols(spark, sf_dir):
 
 
 # =========================================================================
-# Round 10: ANN (IVF) recall attestation — the value-checked sibling
+# ANN (IVF) recall attestation — the value-checked sibling
 # q_ann_ivf was missing (MinHash and SimHash both have one)
 # =========================================================================
 
@@ -2160,7 +2152,7 @@ def q_ann_recall(spark, sf_dir):
 
 
 # =========================================================================
-# Round 10: t-closeness — the third member of the privacy-gate trio
+# T-closeness — the third member of the privacy-gate trio
 # =========================================================================
 
 
@@ -2243,7 +2235,7 @@ def q_tcloseness(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11: expected calibration error — the scalar reduction of
+# Expected calibration error — the scalar reduction of
 # q_calibration_bins' reliability table (ECE/MCE are what model cards
 # report; the per-bin table is what you debug with)
 # =========================================================================
@@ -2315,7 +2307,7 @@ def q_ece(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11: Johnson–Lindenstrauss random projection — the NO-FIT
+# Johnson–Lindenstrauss random projection — the NO-FIT
 # dimensionality reduction next to q_pca_project's fitted one (JL needs
 # no training pass, no model distribution, and its distance-preservation
 # guarantee is distribution-free)
@@ -2371,7 +2363,7 @@ def _jl_oracle_sql() -> str:
     "output). The NO-FIT complement to q_pca_project: no training "
     "pass, no model to broadcast beyond the folded constant matrix, "
     "and the JL lemma's distance preservation is distribution-free — "
-    "the standard first move for shrinking 100 TB of embeddings "
+    "the standard first move for shrinking a large embedding table "
     "before a fitted method sees them. Projections in floor-e6 "
     "integers; each dot folds left-to-right (Spark aggregate == "
     "DuckDB list_reduce) over ±1·double products, so pre-floor "
@@ -2405,7 +2397,7 @@ def q_jl_project(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11: inverse-frequency class weights — the loss-reweighting table
+# Inverse-frequency class weights — the loss-reweighting table
 # every imbalanced-label training run ships next to its dataset
 # =========================================================================
 
@@ -2459,7 +2451,7 @@ def q_label_weights(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 2): Welch's t-test — the unequal-variance two-sample
+# Welch's t-test — the unequal-variance two-sample
 # test every A/B experiment readout runs
 # =========================================================================
 
@@ -2571,7 +2563,7 @@ def q_welch_ttest(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 2): Mann–Whitney U — the nonparametric companion to
+# Mann–Whitney U — the nonparametric companion to
 # q_welch_ttest (rank-sum needs no normality; the pair is the standard
 # A/B readout battery)
 # =========================================================================
@@ -2623,7 +2615,7 @@ def q_welch_ttest(spark, sf_dir):
     "derives from five exact integers through one identical "
     "+,-,*,/,sqrt tree per engine — no aggregate-order hazard. Shape: "
     "one events scan → distinct-cents agg → ONE cumulative window over "
-    "the value domain → 1 row; at 100 TB every post-scan frame is "
+    "the value domain → 1 row; every post-scan frame is "
     "domain-sized.",
 )
 def q_mann_whitney(spark, sf_dir):
@@ -2694,7 +2686,7 @@ def q_mann_whitney(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 3): Spearman rank correlation — the monotone-association
+# Spearman rank correlation — the monotone-association
 # companion to q_corr_exact's Pearson (outlier-robust, scale-free)
 # =========================================================================
 
@@ -2795,7 +2787,7 @@ def q_spearman_corr(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 3): Cohen's d / Hedges' g — the effect-size readout that
+# Cohen's d / Hedges' g — the effect-size readout that
 # accompanies q_welch_ttest's significance readout
 # =========================================================================
 
@@ -2840,7 +2832,7 @@ def q_spearman_corr(spark, sf_dir):
     "sample-corrected HEDGES' g on purchase-vs-click spend — the effect-"
     "SIZE readout that belongs next to q_welch_ttest's significance "
     "readout (a tiny p-value with a negligible d is the classic big-data "
-    "trap: at 100 TB everything is 'significant', only d says whether it "
+    "trap: at big-data n everything is 'significant', only d says whether it "
     "matters). Same exact-integer-moment discipline as the t-test: "
     "(n, sum-cents, sum-cents-squared) per group are EXACT BIGINTs, "
     "pooled variance / d / g derive through one identical "
@@ -2902,7 +2894,7 @@ def q_cohens_d(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 3): half-sample replication CI — a deterministic,
+# Half-sample replication CI — a deterministic,
 # one-scan bootstrap-style interval for the mean
 # =========================================================================
 
@@ -2933,7 +2925,7 @@ def _hsr_oracle() -> str:
     "an array_sort over 60 doubles in a 1-row frame, and every mean is "
     "an exact-BIGINT / exact-BIGINT division -> bit-identical doubles "
     "cross-engine. Shape: one events scan -> 1 row x (2*60+2) exact "
-    "integer aggregates -> scalar arithmetic; at 100 TB this is a single "
+    "integer aggregates -> scalar arithmetic; this is a single "
     "map-side-combined pass, the same cost as one count(*).",
 )
 def q_bootstrap_ci(spark, sf_dir):
@@ -2976,7 +2968,7 @@ def q_bootstrap_ci(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 3): isotonic calibration — PAV via the max-min identity
+# Isotonic calibration — PAV via the max-min identity
 # over a bounded bin domain (completes the calibration family:
 # q_calibration_bins / q_ece / q_brier_score)
 # =========================================================================
@@ -3110,7 +3102,7 @@ def q_isotonic_calibrate(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 3): quantile normalization — force each group's value
+# Quantile normalization — force each group's value
 # distribution onto the cross-group average quantile profile
 # =========================================================================
 
@@ -3202,7 +3194,7 @@ def q_quantile_normalize(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 4): F1-optimal decision threshold — the sweep that turns
+# F1-optimal decision threshold — the sweep that turns
 # a scored classifier into a deployed one
 # =========================================================================
 
@@ -3283,7 +3275,7 @@ def q_f1_threshold(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 4): two-sample Poisson rate test — the COUNT-based A/B
+# Two-sample Poisson rate test — the COUNT-based A/B
 # readout completing the battery (means: Welch; distributions:
 # Mann-Whitney; effect size: Cohen's d; rates: this)
 # =========================================================================
@@ -3340,7 +3332,7 @@ def q_poisson_rate_test(spark, sf_dir):
 
 
 # =========================================================================
-# Round 12: product-quantization code assignment — the PQ member of the
+# Product-quantization code assignment — the PQ member of the
 # ANN family (q_cosine_topk brute-force, q_ann_ivf partition pruning,
 # q_lsh_hyperplane bucketing, this compresses vectors to subspace codes)
 # =========================================================================
@@ -3401,7 +3393,7 @@ def q_poisson_rate_test(spark, sf_dir):
     "half-away-from-zero rounding to match round() on both engine "
     "legs; exact halves cannot occur (x*1e6 = (2k+1)/2 requires a "
     "factor 5^6 denominator no binary float has), so floor(v+0.5) is "
-    "bit-identical to either tie rule. At 100 TB the codebook "
+    "bit-identical to either tie rule. The codebook "
     "broadcast is bytes and the scan stays embarrassingly parallel.",
 )
 def q_pq_assign(spark, sf_dir):
@@ -3471,7 +3463,7 @@ def q_pq_assign(spark, sf_dir):
     "oracle's full recomputation, with ties broken by vec_id. Shape: "
     "codes via the shared mapInArrow kernel (operators/pq.py), then a "
     "scan-side JVM projection + TakeOrderedAndProject — no join, no "
-    "shuffle beyond the top-k merge; at 100 TB the LUT build is O(k*D) "
+    "shuffle beyond the top-k merge; the LUT build is O(k*D) "
     "on the driver and the scan reads 4 codes/row instead of 64 "
     "floats (the 16-64x bandwidth win that makes PQ worth it).",
 )
@@ -3692,7 +3684,7 @@ def q_pq_recall(spark, sf_dir):
 
 
 # =========================================================================
-# Round 13: Matryoshka (prefix-dimension) truncation recall
+# Matryoshka (prefix-dimension) truncation recall
 # =========================================================================
 
 
@@ -3770,7 +3762,7 @@ def q_mrl_truncate_recall(spark, sf_dir):
     # grows linearly with the corpus, so the collect below would too —
     # the cap keeps the driver-side query set a fixed-size constant at
     # any corpus scale, mirroring q_knn_classify's broadcast-|Q| contract
-    # (round-14 VERDICT fix; oracle carries the same ORDER BY/LIMIT).
+    # (the oracle carries the same ORDER BY/LIMIT).
     q_rows = (
         emb.filter(F.col("vec_id") % 50 == 0)
         .select("vec_id", "embedding")
@@ -3846,7 +3838,7 @@ def q_mrl_truncate_recall(spark, sf_dir):
 
 
 # =========================================================================
-# Round 13: CUPED variance reduction (experimentation platform op)
+# CUPED variance reduction (experimentation platform op)
 # =========================================================================
 
 
@@ -3870,7 +3862,7 @@ def q_mrl_truncate_recall(spark, sf_dir):
          -- widen BEFORE the n*moment products: n * sxy etc. overflow
          -- int64 at scale, where DuckDB would raise but non-ANSI Spark
          -- silently wraps — HUGEINT here keeps both legs exact and
-         -- failure-mode-aligned (round-14 ADVICE fix)
+         -- failure-mode-aligned
          SELECT n, sx, sy,
                 CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS num,
                 CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx AS varx,
@@ -3899,7 +3891,7 @@ def q_mrl_truncate_recall(spark, sf_dir):
     "magnitude so both engines' truncating division agree on negative "
     "covariance; zero-variance degenerates to NULL via integer nullif "
     "guards. Shape: ONE user-keyed conditional-count agg (partial-"
-    "first) then a 1-row moment fold — at 100 TB the cost is the "
+    "first) then a 1-row moment fold — the cost is the "
     "per-user agg; the regression itself never sees row data, the "
     "whole point of running CUPED from sufficient statistics.",
 )
@@ -3918,7 +3910,7 @@ def q_cuped_adjust(spark, sf_dir):
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
     )
-    # Widen BEFORE the n*moment products (round-14 ADVICE fix): raw
+    # Widen BEFORE the n*moment products: raw
     # BIGINT n*sxy etc. overflow int64 at large scale, where the non-ANSI
     # Spark leg would silently wrap while DuckDB errors. DECIMAL(38,0)
     # arithmetic here mirrors the oracle's HUGEINT — overflow degrades to
@@ -3954,7 +3946,7 @@ def q_cuped_adjust(spark, sf_dir):
 
 
 # =========================================================================
-# Round 14: experimentation-platform audits (SRM, IPW), feature scaling,
+# Experimentation-platform audits (SRM, IPW), feature scaling,
 # and generation-eval n-gram metrics
 # =========================================================================
 
@@ -4027,11 +4019,11 @@ def _srm_from_counts(g) -> "DataFrame":
     "per-event_type exposure counts are tested against the designed "
     "50/50 split with the exact 1-dof chi-square (n0-n1)^2/(n0+n1) in "
     "integer e6 (widened to HUGEINT/DECIMAL(38,0) BEFORE the square — "
-    "the q_cuped_adjust round-14 overflow discipline from day one), "
+    "the q_cuped_adjust overflow discipline), "
     "flagged at the 3.841459 critical value (p<0.05). Everything is "
     "integer so the flag itself hash-checks. Shape: ONE conditional-"
     "count hash agg (partial-first) over the fact table, then scalar "
-    "math on |event_types| rows — at 100 TB the cost is the scan; "
+    "math on |event_types| rows — the cost is the scan; "
     "the test never materializes per-user rows. Companion to "
     "q_cuped_adjust (variance reduction) as the experimentation family.",
 )
@@ -4054,7 +4046,7 @@ def q_srm_check(spark, sf_dir):
     "at-least-once redelivery, crash-ordered swap). The merged counts "
     "are BIT-IDENTICAL to the batch counts, so the final chi-square "
     "answers to the SAME oracle as q_srm_check — the stream≡batch "
-    "criterion of SURVEY §5.2.2. At 100 TB this is the q_stream_linreg "
+    "criterion of SURVEY §5.2.2. This is the q_stream_linreg "
     "contract: per-batch sufficient statistics merged into a "
     "continuously-updated monitor, no re-scan, state = |event_types| "
     "rows.",
@@ -4128,7 +4120,7 @@ def q_stream_srm(spark, sf_dir):
     "guards degenerating an empty arm to NULL rather than an error. "
     "Shape: ONE conditional-sum hash agg (partial-first) over the fact "
     "table; the estimator never sees row data — the same sufficient-"
-    "statistics contract as q_cuped_adjust at 100 TB.",
+    "statistics contract as q_cuped_adjust.",
 )
 def q_ipw_ate(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
@@ -4188,7 +4180,7 @@ _MINMAX_DIMS = (0, 7, 31, 63)
     "exact; min/max involve no accumulation; identical op sequence => "
     "bit-identical doubles => identical floors — the q_cosine_topk "
     "determinism argument), nullif-guarded against a constant "
-    "dimension. Shape: at 100 TB one partial-first min/max agg and one "
+    "dimension. Shape: one partial-first min/max agg and one "
     "narrow map — no shuffle of the vector table, the broadcast stats "
     "row is 64 doubles.",
 )
@@ -4271,7 +4263,7 @@ def q_minmax_scale(spark, sf_dir):
     "via truncating div. Shape: the RELATIONAL formulation, not "
     "per-row list scans — explode to (doc, gram, count) tables (one "
     "hash agg each), equi-join on (adjacent doc, gram), per-pair sum; "
-    "at 100 TB every step is a keyed shuffle on gram-sized rows, no "
+    "every step is a keyed shuffle on gram-sized rows, no "
     "O(|doc|^2) per-document work anywhere. LEFT joins + coalesce keep "
     "zero-overlap pairs in the output (a clip of 0 is a score, not a "
     "dropped row).",
@@ -4281,7 +4273,7 @@ def q_bleu_rouge(spark, sf_dir):
     # table is consumed TWICE (the clip self-join reads it as candidate
     # AND as the doc_id-shifted reference) and lens twice more — the
     # static plan otherwise re-derives scan+split+explode+agg per
-    # consumer (12 parquet scans / 8 explodes measured at round 15).
+    # consumer (12 parquet scans / 8 explodes, OPTIMIZATION_r15.md).
     # Materialized: one scan+split, one agg per gram order.
     d = _t(spark, sf_dir, "documents", parallel=True).select(
         "doc_id",
@@ -4509,7 +4501,7 @@ def _mde_tail(inner: str) -> str:
     "comes from exact integer moments (n, sum, sum-of-squares) widened "
     "to HUGEINT/DECIMAL(38,0) BEFORE the n*s2 product (sum-of-squares "
     "times n overflows int64 past ~1e20 cents-squared-rows — hit at the "
-    "512x probe scale, the round-14 q_cuped_adjust discipline); the "
+    "512x probe scale, the q_cuped_adjust discipline); the "
     "float tail is a SHARED textual IEEE op sequence (_MDE_STEPS — the "
     "q_pca_project_2d correctly-rounded contract), so the floored e6 "
     "result hash-checks. Shape: ONE partial-first moment agg over the "

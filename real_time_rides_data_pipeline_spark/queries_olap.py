@@ -419,8 +419,8 @@ def q_array_agg(spark, sf_dir):
     "Skew-resistant salted join: fact keys get a random-free deterministic "
     "salt (event_id % 8), the dim side is exploded ×8, and the join runs on "
     "(key, salt) — no single reducer owns a hot key. Result ≡ the plain "
-    "join (the oracle); at 100 TB this (or AQE skew-split) is how a "
-    "power-law key distribution avoids a straggler task.",
+    "join (the oracle); this (or AQE skew-split) is how a power-law key "
+    "distribution avoids a straggler task.",
 )
 def q_salted_join(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.operators.joins import salted_join
@@ -519,7 +519,8 @@ def q_sessionize(spark, sf_dir):
     "Exact discrete percentiles (nearest-rank) per group via row_number — "
     "no interpolation, so the result is an actual data value and "
     "engine-portable (interpolated quantiles differ at 1-ulp between "
-    "engines). At 100 TB swap in percentile_approx (q_approx_quantile).",
+    "engines). percentile_approx (q_approx_quantile) is the one-pass "
+    "sketch alternative.",
 )
 def q_percentile_disc(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
@@ -655,8 +656,7 @@ _PARTITIONED: dict[tuple[str, str], str] = {}
 def _partitioned_events(spark, sf_dir) -> str:
     """Write events hive-partitioned by event_date once per (session, sf) —
     the lakehouse layout step that buys every date-sliced query its
-    partition pruning. At 100 TB this is the difference between scanning
-    one day and scanning three years."""
+    partition pruning: a one-day query scans one day's files."""
 
     key = (spark.sparkContext.applicationId, sf_dir)
     path = _PARTITIONED.get(key)
@@ -740,9 +740,9 @@ def _bucketed_tables(spark, sf_dir) -> tuple[str, str]:
        GROUP BY o_orderpriority""",
     "Co-located join on bucketed tables: both sides bucketed+sorted by the "
     "order key (8 buckets) at write time, so the sort-merge join runs with "
-    "ZERO exchanges below it (asserted in tests via .explain) — at 100 TB "
-    "this converts the biggest shuffle in the pipeline into a map-side "
-    "merge. Result ≡ the plain join (the oracle).",
+    "ZERO exchanges below it (asserted in tests via .explain) — the "
+    "biggest shuffle in the pipeline becomes a map-side merge. Result ≡ "
+    "the plain join (the oracle).",
 )
 def q_bucketed_join(spark, sf_dir):
     li_name, o_name = _bucketed_tables(spark, sf_dir)
@@ -764,7 +764,7 @@ def q_bucketed_join(spark, sf_dir):
               TRUE AS sketch_in_band
        FROM events GROUP BY event_type""",
     "percentile_approx(value, [.5,.95,.99]) per event_type — the sketch "
-    "that replaces exact percentiles at 100 TB (mergeable, single pass, "
+    "that replaces exact percentiles (mergeable, single pass, "
     "bounded memory). GK-sketch outputs are engine-specific, so the "
     "COMPARED columns are the exact discrete median in floor cents "
     "(cross-checked against DuckDB's quantile_disc — both engines pick "
@@ -885,9 +885,8 @@ def q_tpch_q14(spark, sf_dir):
     "multiplier modular hash assigns 90/10 train/eval AND drops a fixed 10% "
     "holdout — replayable on any engine, no RNG, no shuffle (pure map). Key "
     "reduced mod m before the multiply ((a*K) mod m = ((a mod m)(K mod m)) "
-    "mod m) so intermediates never wrap int64 at any doc_id magnitude. At "
-    "100 TB this is how train/eval membership stays stable across reruns "
-    "and backfills.",
+    "mod m) so intermediates never wrap int64 at any doc_id magnitude, "
+    "and train/eval membership stays stable across reruns and backfills.",
 )
 def q_hash_sample(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.operators.clean import KNUTH_MULT
@@ -1009,8 +1008,8 @@ def q_array_funcs(spark, sf_dir):
     "Image-resize plumbing (mapInPandas 1→1, fixed 32×32 byte budget): the "
     "oracle reproduces the deterministic byte-sampling arithmetic — on "
     "UTF-8 byte length (octet_length(encode(...)), corpus-independent) — "
-    "proving the Arrow batch path end-to-end; a real decoder swaps in via "
-    "decode_image without touching the Spark plan.",
+    "proving the Arrow batch path end-to-end; a real decoder swaps in "
+    "without touching the Spark plan.",
 )
 def q_resize_meta(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.operators import multimodal as MM
@@ -1106,7 +1105,7 @@ def q_range_join(spark, sf_dir):
 
 
 # =========================================================================
-# Round-5 aggregation surface: interpolated percentiles, two-phase salted
+# Aggregation surface: interpolated percentiles, two-phase salted
 # skew aggregation, incremental rollup re-aggregation (q_percentile_cont,
 # q_skew_salted_agg, q_rollup_reagg)
 # =========================================================================
@@ -1160,7 +1159,7 @@ def q_percentile_cont(spark, sf_dir):
     "truncate for non-negative operands so Spark DIV matches DuckDB //). "
     "The oracle is the PLAIN one-phase GROUP BY — the salt is "
     "semantically invisible, which is exactly the claim being checked. "
-    "With event_type cardinality 5, an unsalted agg at 100 TB puts 20% "
+    "With event_type cardinality 5, an unsalted agg puts 20% "
     "of ALL rows on one reducer; salting bounds every task at 1/80th. "
     "(Spark's partial/final HashAggregate already combines map-side — "
     "the explicit salt matters when partial aggregation is defeated, "
@@ -1198,7 +1197,7 @@ def q_skew_salted_agg(spark, sf_dir):
     "it equals aggregating the raw events directly — the mergeability "
     "contract that makes rollup pyramids (minute -> hour -> day) valid. "
     "Only sum/count/min/max re-aggregate losslessly; avg must be carried "
-    "as (sum, count) — this key carries exactly those. At 100 TB the "
+    "as (sum, count) — this key carries exactly those. The "
     "minute table is ~1/raw-fanout the size of raw, so every downstream "
     "hour/day query scans the rollup, not the events: the second "
     "aggregation here shuffles ONLY pre-agg rows, and Catalyst collapses "
@@ -1367,7 +1366,7 @@ def q_sql_entry(spark, sf_dir):
     "price, maximize size) — the classic multi-objective shortlist "
     "(cheapest-per-capability sweep). The ORACLE is the O(N^2) "
     "NOT-EXISTS dominance SQL; the Spark plan is the O(N log N) sweep "
-    "that survives 100 TB: group to one (price, max_size) row per "
+    "that scales with the data: group to one (price, max_size) row per "
     "distinct price (hash shuffle, domain-bounded output — cents prices, "
     "not N rows), running max of size over the price-ordered staircase, "
     "keep prices whose max_size strictly improves on every cheaper "
@@ -1535,7 +1534,7 @@ def q_gapfill_interp(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11: semi-additive snapshot measure — balances sum across ACCOUNTS
+# Semi-additive snapshot measure — balances sum across ACCOUNTS
 # but not across TIME; the classic OLAP "last value per period" rollup
 # =========================================================================
 
@@ -1566,7 +1565,7 @@ def q_gapfill_interp(spark, sf_dir):
     "ONE events scan, one rank window partitioned by (user_id, day), "
     "then a |users × days| → |days| hash agg — two keyed exchanges, the "
     "second over the COMPACT per-(user, day) frame, never raw events; "
-    "at 100 TB the window state is one row per partition key.",
+    "the window state is one row per partition key.",
 )
 def q_semi_additive_snapshot(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
@@ -1588,7 +1587,7 @@ def q_semi_additive_snapshot(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 3): Pareto 80/20 concentration — "how many users drive
+# Pareto 80/20 concentration — "how many users drive
 # 80% of revenue", bucket-resolution, bounded-domain windows
 # =========================================================================
 

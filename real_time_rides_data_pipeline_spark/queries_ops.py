@@ -1,4 +1,4 @@
-"""Round-7 operational-surface operators.
+"""Operational-surface operators.
 
 Same registry contract as queries.py / queries_ext.py / queries_curate.py /
 queries_scale.py (SURVEY.md §2.9 scope). Determinism rules (SURVEY §7.4)
@@ -21,7 +21,7 @@ registered):
   repartitionByRange before any large write.
 - ``q_observed_metrics`` — ``DataFrame.observe``: metrics collected ON the
   data pass (no second scan), the production pattern for row-count /
-  checksum accounting on 100 TB writes.
+  checksum accounting on writes.
 - ``q_python_udtf`` — the Python UDTF surface (Spark 3.5+): a lateral
   table function over rows, registered and invoked through SQL.
 - ``q_sql_params`` — parameterized ``spark.sql``: named ``:param`` binding
@@ -40,9 +40,9 @@ registered):
   dedup → quality cut → deterministic sharding → training manifest).
 - ``q_asof_tolerance`` — as-of join with a staleness tolerance (pandas
   merge_asof(tolerance) semantics), same single-shuffle union-window plan.
-- ``q_delta_varint_audit`` (round 10) — per-series delta + LEB128 byte
+- ``q_delta_varint_audit`` — per-series delta + LEB128 byte
   accounting for the event-time column, exact integers, no log floats.
-- ``q_content_checksum`` (round 10) — order-insensitive per-table content
+- ``q_content_checksum`` — order-insensitive per-table content
   fingerprint (sum of canonicalized row hashes mod 2^63-1 in DECIMAL),
   the replication-verification primitive.
 """
@@ -343,7 +343,7 @@ _TARGET_FILE_BYTES = 1 << 20  # 1 MiB at test SF; 128 MiB in production
     "ppm share of total bytes (the skew signal: one partition holding "
     "most bytes means repartitionByRange, not coalesce). This arithmetic "
     "is what decides the .repartition(n) before any large write — "
-    "undersized files are the #1 operational failure of naive 100 TB "
+    "undersized files are the #1 operational failure of naive "
     "pipelines (metadata pressure + per-file open cost on every future "
     "scan). One hash agg over the scan + a 1-row broadcast join.",
 )
@@ -387,7 +387,7 @@ def q_compaction_plan(spark, sf_dir):
     "DataFrame.observe: named accumulator-backed aggregates collected ON "
     "the data pass — row count, exact-cents checksum, and an invalid-row "
     "counter materialize as a side effect of the single scan, with NO "
-    "second job. This is the production accounting pattern for 100 TB "
+    "second job. This is the production accounting pattern for "
     "writes (count + checksum every batch without re-reading it); the "
     "streaming twin is QueryProgressEvent.observedMetrics. The returned "
     "1-row DataFrame carries the observed values; the oracle recomputes "
@@ -478,7 +478,7 @@ def q_python_udtf(spark, sf_dir):
        GROUP BY event_type""",
     "Parameterized spark.sql — BOTH binding surfaces in one statement: "
     "named :param markers bound from the args dict (injection-safe "
-    "literals, plan-cache-friendly at 100 TB where the same template runs "
+    "literals, plan-cache-friendly where the same template runs "
     "per partition/day) and a {df} template reference that splices a "
     "DataFrame into the query without a temp view. The oracle inlines the "
     "bound literals.",
@@ -1021,7 +1021,7 @@ def q_ks_drift(spark, sf_dir):
 
 
 # =========================================================================
-# CSV corrupt-record audit (round 8)
+# CSV corrupt-record audit
 # =========================================================================
 
 
@@ -1113,7 +1113,7 @@ def q_csv_corrupt_records(spark, sf_dir):
 
 
 # =========================================================================
-# Round 9: Benford first-digit audit
+# Benford first-digit audit
 # =========================================================================
 
 #: floor(1e6 * log10(1 + 1/d)) for d = 1..9 — Benford's law as exact ppm
@@ -1187,7 +1187,7 @@ def q_benford_audit(spark, sf_dir):
 
 
 # =========================================================================
-# Round 10: storage-encoding audit + replication content checksum
+# Storage-encoding audit + replication content checksum
 # =========================================================================
 
 
@@ -1303,7 +1303,7 @@ def q_delta_varint_audit(spark, sf_dir):
     "row count + checksum; a mismatched pair localizes divergence to a "
     "table before any row-level diff (q_snapshot_diff) runs. Shape: "
     "one narrow map + 1-row aggregate per table, rows never move — the "
-    "cheapest possible full-table verification at 100 TB.",
+    "cheapest possible full-table verification.",
 )
 def q_content_checksum(spark, sf_dir):
     M = 9223372036854775807  # 2^63 - 1
@@ -1410,7 +1410,7 @@ def q_join_nullsafe(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11: directed CONTAINMENT join — the asymmetric sibling of
+# Directed CONTAINMENT join — the asymmetric sibling of
 # q_jaccard_join_exact (an excerpt of a long doc has low Jaccard but
 # containment ≈ 1; CC-style pipelines dedup quotes/excerpts with
 # containment, not symmetric similarity)
@@ -1549,7 +1549,7 @@ def q_containment_join(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 4): total-variation drift — the L1 companion to
+# Total-variation drift — the L1 companion to
 # q_ks_drift's sup-norm test, exact by integer cross-multiplication
 # =========================================================================
 
@@ -1594,7 +1594,7 @@ def q_containment_join(spark, sf_dir):
     "half-split point and the bin width come from a broadcast 1-row "
     "min/max frame. Shape: two events scans (bounds + binning — the "
     "bounds row must exist before the bin map can run) -> 20-cell agg "
-    "-> 1 row; at 100 TB both passes are map-side-combined scans.",
+    "-> 1 row; both passes are map-side-combined scans.",
 )
 def q_tv_drift(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
@@ -1645,7 +1645,7 @@ def q_tv_drift(spark, sf_dir):
 
 
 # =========================================================================
-# Round 11 (wave 6): weekly composition drift — the categorical-mix
+# Weekly composition drift — the categorical-mix
 # monitor next to q_tv_drift's value-distribution monitor
 # =========================================================================
 
@@ -1737,7 +1737,7 @@ def q_mix_drift(spark, sf_dir):
 
 
 # =========================================================================
-# Round 13: rendezvous (HRW) hashing reshard audit
+# Rendezvous (HRW) hashing reshard audit
 # =========================================================================
 
 
@@ -1781,9 +1781,8 @@ def q_mix_drift(spark, sf_dir):
     "max(weight*32 + s) — ties impossible in practice but broken "
     "toward the higher shard id identically on both engines. Shape: "
     "one 17-way scan-side explode + a keyed max agg — "
-    "embarrassingly parallel, |keys|x17 tiny rows, partial-first max; "
-    "at 100 TB this is the audit you run BEFORE committing a "
-    "placement epoch bump.",
+    "embarrassingly parallel, |keys|x17 tiny rows, partial-first max — "
+    "the audit to run BEFORE committing a placement epoch bump.",
 )
 def q_rendezvous_reshard(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")

@@ -1,4 +1,4 @@
-"""Round-6 scale/curation operators.
+"""Scale/curation operators.
 
 Same registry contract as queries.py / queries_ext.py / queries_curate.py
 (SURVEY.md §2.9 scope). Determinism rules (SURVEY §7.4) throughout: exact
@@ -6,7 +6,7 @@ integer cents / counts, floor-truncated ratios (``floor`` is portable on
 identical doubles, ``round`` is not — functions/precision.py), every tie
 broken by a total order.
 
-Scale notes (100 TB):
+Scale notes:
 - Bloom decontamination broadcasts a COMPACT filter (MBs for millions of
   eval grams) instead of shuffling the corpus gram table against the eval
   set — the corpus-side join input shrinks to pre-filtered survivors.
@@ -17,7 +17,7 @@ Scale notes (100 TB):
   (w1,w2) counts; unigram/total counts re-aggregate from the (far smaller)
   bigram-count table, which is locally checkpointed for its three
   consumers — the corpus is tokenized once, and the unigram join stays
-  shuffle-side (vocab at 100 TB exceeds broadcast budget).
+  shuffle-side (a corpus vocabulary can exceed the broadcast budget).
 """
 
 from __future__ import annotations
@@ -74,7 +74,7 @@ from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completi
     "hit count per contaminated doc (deterministic despite the "
     "probabilistic filter: no false negatives by bloom construction, no "
     "false positives after the verify join — property-tested in "
-    "tests/test_properties.py). At 100 TB the corpus side never shuffles "
+    "tests/test_properties.py). The corpus side never shuffles "
     "its full gram table: the bloom rejects ~all of it at the scan. Eval "
     "set = every 89th doc minus its first token (a benchmark quoting a "
     "span of a crawled page).",
@@ -142,7 +142,7 @@ def q_bloom_decontaminate(spark, sf_dir):
     "compaction rule). One window pass: row_number + count over the same "
     "(user_id, ts DESC, event_id DESC) partitioning = ONE shuffle; "
     "(ts, event_id) is the total order that makes last-writer "
-    "deterministic under timestamp ties. At 100 TB this is the "
+    "deterministic under timestamp ties. This is the "
     "materialize-step of a streaming MERGE (q_merge_upsert applies the "
     "same log incrementally via foreachBatch).",
 )
@@ -195,7 +195,7 @@ _N_SHARDS = 8
     "— no RNG state, so a backfill reproduces byte-identical shards and "
     "two engines agree exactly (the same hash family as q_hash_sample / "
     "q_stratified_sample). Shape: one hash shuffle on the shard key, then "
-    "a per-shard sort for the intra-shard order — at 100 TB this is "
+    "a per-shard sort for the intra-shard order — the shape of "
     "repartition(N, shard) + sortWithinPartitions(h, doc_id) feeding the "
     "sharded writer, each shard an independent sorted run (no global "
     "sort, no driver).",
@@ -318,8 +318,8 @@ def q_int8_quantize(spark, sf_dir):
     "count table (sum(n_xy) by w1 == count(w1) — mergeability, the "
     "q_rollup_reagg contract), so the corpus is tokenized exactly once "
     "and later shuffles move count rows, not tokens. The unigram tables "
-    "join SHUFFLE-side keyed on the word (vocab at 100 TB exceeds "
-    "broadcast budget), the 1-row total broadcasts.",
+    "join SHUFFLE-side keyed on the word (a corpus vocabulary can exceed "
+    "the broadcast budget), the 1-row total broadcasts.",
 )
 def q_pmi_bigrams(spark, sf_dir):
     d = _t(spark, sf_dir, "documents", parallel=True)
@@ -364,8 +364,8 @@ def q_pmi_bigrams(spark, sf_dir):
             "w2",
             "n_xy",
             # Fixed-order DOUBLE arithmetic, not int64: n_xy*n*1e6 and
-            # n_x*n_y both overflow BIGINT at the 100 TB corpus sizes this
-            # module targets (n ~ 2e13). Doubles are exact below 2^53
+            # n_x*n_y both overflow BIGINT once the corpus passes
+            # n ~ 2e13 grams. Doubles are exact below 2^53
             # (every fixture SF) and deterministic-identical across
             # engines above it (same IEEE op order); floor is portable.
             F.expr(
@@ -610,7 +610,7 @@ def _sf_view(spark, sf_dir: str, table: str, tag: str) -> str:
     "inline at analysis time — the optimized plan is identical to writing "
     "the CASE expression by hand (whole-stage codegen, predicate "
     "pushdown through the function body), so the abstraction costs "
-    "nothing at 100 TB: the engine never calls out of the JVM. "
+    "nothing: the engine never calls out of the JVM. "
     "Session-scoped TEMPORARY function with OR REPLACE so reruns and "
     "concurrent benches never collide.",
 )
@@ -667,7 +667,7 @@ def q_sql_udf(spark, sf_dir):
     "Catalyst's multi-distinct rewrite), then stack()-unpivots the 1-row "
     "result; the oracle's UNION-ALL-per-column shape is the semantic spec "
     "only. Exact NDV here because the oracle needs determinism; the "
-    "100 TB default is approx_count_distinct's mergeable HLL "
+    "one-pass alternative is approx_count_distinct's mergeable HLL "
     "(q_approx_distinct / q_hll_shard_merge), one pass, no expand "
     "blow-up.",
 )
@@ -962,7 +962,7 @@ def q_bitmap_distinct(spark, sf_dir):
     "fits its tracking budget (5 event types << maxItemsTracked) — the "
     "result is exploded to (item, count) rows and re-sorted by (count "
     "DESC, item) so the output order never depends on sketch internals. "
-    "At 100 TB the sketch is the point: mergeable fixed-size state per "
+    "The sketch is the point: mergeable fixed-size state per "
     "partition where an exact GROUP BY would shuffle the full key set.",
 )
 def q_approx_topk(spark, sf_dir):
@@ -1039,7 +1039,7 @@ def q_corr_exact(spark, sf_dir):
 
 
 # =========================================================================
-# Round 10: Bloom filter accuracy attestation
+# Bloom filter accuracy attestation
 # =========================================================================
 
 
@@ -1120,7 +1120,7 @@ def q_bloom_fpp(spark, sf_dir):
 
 
 # =========================================================================
-# Round 13: systematic sampling / sliding distinct / rolling correlation /
+# Systematic sampling / sliding distinct / rolling correlation /
 # incremental view maintenance
 # =========================================================================
 
@@ -1165,7 +1165,7 @@ def q_bloom_fpp(spark, sf_dir):
     "noff - 1 >= 0), so the engines' shared TRUNCATING division equals "
     "floor division everywhere (the unshifted form undercounted the "
     "unit straddling the FIRST point, where trunc(-x/stride) = 0 but "
-    "floor = -1 — round-14 ADVICE fix, pinned against a brute-force "
+    "floor = -1 — pinned against a brute-force "
     "point-enumeration reference in tests/test_properties.py), and the "
     "least(_, 50) caps enforce j <= 49 so sum(n_hits) == min(50, W) "
     "EXACTLY (for W >= 50 the largest point noff + 49*stride < "
@@ -1175,7 +1175,7 @@ def q_bloom_fpp(spark, sf_dir):
     "table (the ONLY ordered window is over partition totals), so the "
     "global prefix sum that makes systematic sampling look inherently "
     "sequential distributes; the scalar (total, stride) frame broadcasts "
-    "back. At 100 TB: one agg + one range shuffle of the |users| table, "
+    "back: one agg + one range shuffle of the |users| table, "
     "never the fact table.",
 )
 def q_systematic_sample(spark, sf_dir):
@@ -1231,7 +1231,7 @@ def q_systematic_sample(spark, sf_dir):
     "1h), user) — each event lands in exactly 3 windows map-side — then "
     "a second hash agg counts the deduped membership rows; both "
     "shuffles key on (window, user) / window. The oracle builds the "
-    "same 3-offset grid with a range() cross join. At 100 TB the "
+    "same 3-offset grid with a range() cross join. The "
     "membership table is |windows|x|active users| — bounded by "
     "engagement, not event volume — and both aggs are partial-first; "
     "the approximate escape for wider windows is q_hll_shard_merge's "
@@ -1403,7 +1403,7 @@ def q_rolling_corr(spark, sf_dir):
     "post-CDC state from scratch — value equality IS the IVM "
     "correctness theorem for this view. Shape: the delta agg touches "
     "only changed rows, the view-delta join keys on |groups|, and every "
-    "agg is partial-first; at 100 TB the refresh cost is O(|delta| + "
+    "agg is partial-first; the refresh cost is O(|delta| + "
     "|groups|), the exact reason warehouses maintain aggregates "
     "incrementally instead of recomputing (q_merge_upsert owns the "
     "storage MERGE of the same idea; this key pins the algebra).",
@@ -1477,7 +1477,7 @@ def q_ivm_agg_delta(spark, sf_dir):
     "state ≡ the batch recompute oracle — the same IVM correctness "
     "theorem as q_ivm_agg_delta, proven through the streaming path. "
     "Shape: scan-side op-log explode, per-batch |groups| partial agg, "
-    "|groups|-keyed additive MERGE; at 100 TB/day of CDC this is the "
+    "|groups|-keyed additive MERGE — the "
     "O(|delta|) continuously-fresh aggregate a warehouse otherwise "
     "recomputes nightly.",
 )

@@ -6,7 +6,7 @@ rest of the classic join/agg shapes, adapted to the fixture schema:
 
 - There is NO ``partsupp`` table ⇒ Q2/Q11 run over a DERIVED partsupp
   (deterministic mod-8 bucket join of part×supplier with LCG-derived
-  integer qty/cost — see the round-5 section below); Q9 uses
+  integer qty/cost — see the derived-partsupp section below); Q9 uses
   ``p_retailprice`` as the unit-cost proxy; Q16/Q20 derive part↔supplier
   pairs from ``lineitem``.
 - ``lineitem`` has no commit/receipt dates or ship modes ⇒ Q12 keeps the
@@ -23,7 +23,7 @@ cents so sums are summation-order independent; every LIMIT carries a
 unique total order; ratio outputs divide identical exact integers on both
 engines before one final double cast.
 
-Scale notes (the 100 TB story): every dim→fact join broadcasts the dim
+Scale notes: every dim→fact join broadcasts the dim
 side explicitly (supplier/nation/region always; part/customer at fixture
 scale — at real scale AQE's size estimate makes that call); aggregates are
 partial+final hash aggs; the only full-width shuffles are on fact keys
@@ -660,7 +660,7 @@ def q_tpch_q22(spark, sf_dir):
 
 
 # =========================================================================
-# Q2 / Q11 over a DERIVED partsupp (round 5)
+# Q2 / Q11 over a DERIVED partsupp
 #
 # The fixture set has no partsupp table; rather than leave the two classic
 # partsupp kernels unimplemented, both engines derive the SAME deterministic

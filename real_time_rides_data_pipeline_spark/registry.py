@@ -66,8 +66,7 @@ def _last_checked_rounds(root=None) -> dict[str, int]:
     was-rewritten}) extends the failed-check rule to REWRITES: a green
     check attests the code it ran against, so a key rewritten in a LATER
     round than its newest green check reads as never-checked and re-
-    enters the window head (round-16 VERDICT item 7 — the optimizer
-    records its rewrites; a driver check from the same or a later round
+    enters the window head (a driver check from the same or a later round
     clears the debt automatically)."""
     import json
     from pathlib import Path
@@ -122,7 +121,7 @@ def check_priority(root=None) -> tuple[str, ...]:
     """Driver-verification priority: the round driver oracle-checks only
     the FIRST 50 keys of ``__spark_entry__.queries()``.
 
-    ROTATION SLA (round 10, replaces the hand-maintained cohort tuple):
+    ROTATION SLA:
     the ordering is COMPUTED from the committed ``CORRECTNESS_r*.json``
     history —
 

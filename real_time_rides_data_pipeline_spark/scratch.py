@@ -1,5 +1,4 @@
-"""Process-scoped scratch directories (round 13 — closes the r12 verdict's
-temp-dir-accretion nit).
+"""Process-scoped scratch directories.
 
 Every registered query that stages replay inputs, sink state, or format
 round-trip files allocates its directory here instead of calling
@@ -30,16 +29,3 @@ def scratch_dir(prefix: str) -> str:
 def _cleanup() -> None:  # pragma: no cover - exercised at interpreter exit
     for d in _DIRS:
         shutil.rmtree(d, ignore_errors=True)
-
-
-# NOTE (round 15, optimization phase): the FitCache memo class that lived
-# here (bounded process-global memo for fit artifacts — BPE merges, PCA
-# components, k-means centroids, query vectors, staged pair graphs) was
-# REMOVED along with every use site. Memoizing data-derived results across
-# invocations means a min-of-N bench measures the cached path, not the
-# computation — the optimization-phase contract requires every bench/
-# oracle invocation to compute from the parquet inputs. Input STAGING
-# (_REPLAY_INPUTS stream event files, _CSV_ENCODE_DIRS text re-encodes,
-# the OLAP partitioned/bucketed layouts) remains: those memos hold the
-# operator's INPUT in the layout the operator under test ingests, and the
-# operator's own computation still runs fully on every invocation.

@@ -76,7 +76,7 @@ def get_spark(
         # Oracle determinism: DuckDB timestamps are UTC-naive.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Files: pack small fixture files; at 100 TB this yields ~128MB splits.
+        # Files: pack small fixture files into splits of up to 128 MB.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Fixture events.parquet carries TIMESTAMP(NANOS) which the vectorized
         # reader rejects; read as long and convert at the source (sources/).
@@ -107,13 +107,9 @@ def get_spark(
         # once a workload has more than ~100 distinct codegen stages (this
         # engine's suite has 150+ queries x multiple stages), forcing a
         # Janino recompile (~50-200 ms) per evicted stage per run. A cache
-        # entry is a compiled class (small); 5000 entries is a few hundred
-        # MB ceiling that a 128 GiB driver never notices.
-        # Raised 100 (default) → 5000 in round 6 (158 keys thrashed the
-        # default), → 20000 in round 13: the two-pass compile probe read
-        # 3583 distinct stages for the 337-key suite (pass 2: 59 — the
-        # 5000 cache still held), leaving <1.4k headroom before the
-        # thrash cliff silently returns around ~470 keys.
+        # entry is a compiled class (small). A two-pass compile probe read
+        # 3583 distinct stages for a 337-key suite (pass 2: 59), so 5000
+        # entries would leave under 1.4k headroom; 20000 leave plenty.
         .config("spark.sql.codegen.cache.maxEntries", "20000")
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
@@ -163,16 +159,16 @@ _WRITER_CONF_KEYS = (
 )
 
 
-#: Row count below which an iterative driver loop (CC star rounds, BPE
+#: Row count up to which an iterative driver loop (CC star rounds, BPE
 #: argmax rounds) runs in a NARROW session clone — AQE off, shuffle width
 #: ~rows/250k. Rationale: such loops are RDD-barriered (localCheckpoint
 #: per round), so AQE cannot optimize ACROSS rounds and only adds
 #: per-query-stage planning latency, and a tiny working set on a wide
 #: shuffle pays scheduling for empty partitions. Above the bound the
-#: parent session (default width, AQE on — the 100 TB configuration) is
-#: used unchanged. Measured round 15/16 (OPTIMIZATION_r16.md): CC keys
+#: parent session (default width, AQE on) is used unchanged. CC keys
 #: (q_semdedup 6.85 vs 8.39 s, q_dup_clusters 2.91 vs 5.01 s) and the BPE
-#: fit (1.79 vs 2.08 s) all favor the clone at fixture scale.
+#: fit (1.79 vs 2.08 s) all favor the clone at fixture scale
+#: (OPTIMIZATION_r16.md).
 NARROW_LOOP_ROWS = 500_000
 _NARROW_VIEW_SEQ = 0
 
@@ -182,9 +178,12 @@ def narrow_loop_session(df, n_rows: int):
     iterative loop, plus the parent and a ``rebind(frame, to)`` to hand
     results back. The handoff is a global temp view (shared across
     sessions on one SparkContext), so the checkpointed plan moves
-    JVM-side — no Python round-trip, no recompute."""
-    global _NARROW_VIEW_SEQ
+    JVM-side — no Python round-trip, no recompute. At 0 rows or above
+    ``NARROW_LOOP_ROWS`` the loop stays in the parent: ``df`` comes back
+    unchanged and ``rebind`` is the identity."""
     parent = df.sparkSession
+    if not 0 < n_rows <= NARROW_LOOP_ROWS:
+        return df, parent, lambda frame, to: frame
     width = max(1, n_rows // 250_000)
     clone = scoped_writer_session(parent, width)
     clone.conf.set("spark.sql.adaptive.enabled", "false")

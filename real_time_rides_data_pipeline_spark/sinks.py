@@ -32,23 +32,18 @@ except ImportError:
     HAVE_DELTA = False
 
 
-#: Sentinel distinguishing "caller said nothing" from an explicit
-#: ``trigger_seconds=None`` — so ``available_now=True`` with the DEFAULT
-#: trigger works (the default resolves to 10 only on the processing-time
-#: path) while an EXPLICIT processing-time trigger still conflicts.
-_TRIGGER_UNSET = object()
-
-
 def stream_append_parquet(
     df: DataFrame,
     path: str,
     checkpoint: str,
-    trigger_seconds: int | None | object = _TRIGGER_UNSET,
-    available_now: bool = False,
+    trigger_seconds: int | None = 10,
 ) -> DataStreamWriter:
     """Append sink with checkpoint + fixed micro-batch trigger — the Bronze/
     Silver sink shape (01_bronze:82-90, 02_silver:112-118). Returns the
-    un-started writer so callers control lifecycle.
+    un-started writer so callers control lifecycle and trigger:
+    ``trigger_seconds=None`` sets no trigger, and
+    ``.trigger(availableNow=True)`` on the result drains the current
+    backlog, then terminates.
 
     The Silver sink's schema-evolution opt-in (``.option("mergeSchema",
     "true")``, 02_silver:114) has no twin here: mergeSchema is a parquet
@@ -63,21 +58,6 @@ def stream_append_parquet(
         .option("checkpointLocation", checkpoint)
         .option("path", path)
     )
-    if available_now:
-        # Trigger.AvailableNow: drain the current backlog in rate-limited
-        # micro-batches, then terminate — the production mode for
-        # incremental batch jobs (process-what-arrived-since-last-run on a
-        # schedule, exactly-once via the same checkpoint). Mutually
-        # exclusive with an EXPLICIT processing-time trigger; the unset
-        # default is simply ignored (it only means anything on the
-        # processing-time path).
-        if trigger_seconds is not _TRIGGER_UNSET and trigger_seconds is not None:
-            raise ValueError(
-                "available_now and trigger_seconds are mutually exclusive"
-            )
-        return w.trigger(availableNow=True)
-    if trigger_seconds is _TRIGGER_UNSET:
-        trigger_seconds = 10
     if trigger_seconds is not None:
         w = w.trigger(processingTime=f"{trigger_seconds} seconds")
     return w
@@ -96,8 +76,8 @@ def merge_upsert_parquet(
     merge-without-MERGE, committed through ``_merge_into``. Takes no
     ``batch_id``: latest-wins replay is already idempotent, and a marker
     would make a stream restarted on a fresh checkpoint skip every batch
-    id at or below the old one. At 100 TB this full-table rewrite is why
-    Delta exists (MERGE rewrites only touched files); semantics here are
+    id at or below the old one. Every merge rewrites the full table, where
+    a Delta MERGE rewrites only the files it touches; semantics are
     identical.
     """
     # ``updates`` feeds TWO plan legs (the anti-join's key side and the

@@ -1,4 +1,4 @@
-"""File sources — the batch/stream-unified twins used by tests and replay.
+"""File source: a parquet directory replayed as a micro-batch stream.
 
 Every operator in this engine is a pure ``DataFrame -> DataFrame`` function, so
 a parquet directory can drive the same plan either as a batch read or as a
@@ -9,13 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-
-def parquet_batch(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
 
 
 def parquet_stream(
@@ -34,13 +27,4 @@ def parquet_stream(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(path)
-    )
-
-
-def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Synthetic throughput source (columns ``timestamp, value``)."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
     )

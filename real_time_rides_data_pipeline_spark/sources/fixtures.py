@@ -8,7 +8,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from real_time_rides_data_pipeline_spark.schemas import FIXTURE_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -29,7 +28,7 @@ def load_fixture(spark: SparkSession, name: str, sf_dir: str | None = None) -> D
     orders lineitem events documents embeddings``) as a DataFrame.
 
     Plain ``spark.read.parquet`` so Catalyst gets full pushdown/pruning into
-    the scan; at 100 TB the same call reads a partitioned parquet/Delta lake.
+    the scan.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark's vectorized reader
     rejects; with ``spark.sql.legacy.parquet.nanosAsLong`` it arrives as a
@@ -48,24 +47,11 @@ def load_fixture(spark: SparkSession, name: str, sf_dir: str | None = None) -> D
     # rejects) and inferTimestampNTZ=false (naive parquet timestamps must read
     # as UTC TIMESTAMP — epoch casts on NTZ are rejected by Spark >= 4.1).
     # Check-before-set: an unconditional spark.conf.set per read invalidates
-    # session-level plan/scan caches and measurably ~2x-es every query
-    # (bisected in round 4); a get() is a cheap, side-effect-free RPC.
+    # session-level plan/scan caches and measurably ~2x-es every query;
+    # a get() is a cheap, side-effect-free RPC.
     _ensure_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     _ensure_conf(spark, "spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def load_fixtures(
-    spark: SparkSession, sf_dir: str | None = None, register_views: bool = False
-) -> dict[str, DataFrame]:
-    """Load all fixture tables; optionally register temp views for SQL."""
-    out: dict[str, DataFrame] = {}
-    for name in FIXTURE_TABLES:
-        df = load_fixture(spark, name, sf_dir)
-        if register_views:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

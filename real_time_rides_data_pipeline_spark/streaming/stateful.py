@@ -10,9 +10,9 @@ timeouts available for state expiry.
 
 Scale notes: state lives in the state store (RocksDB per session.py —
 off-heap, incremental checkpoints), partitioned by the grouping key; the
-Python worker sees one key's rows per call, Arrow-transferred. At 100 TB
-of *throughput* this is fine (state size is bounded by |keys|); the thing
-to never do is put unbounded per-key history in the state value.
+Python worker sees one key's rows per call, Arrow-transferred. State size
+is bounded by |keys|, not by throughput; the thing to never do is put
+unbounded per-key history in the state value.
 """
 
 from __future__ import annotations

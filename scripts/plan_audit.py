@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Round-15 optimization plan audit.
+"""Plan audit of the query registry.
 
 Builds every registered query's DataFrame (lazy for batch keys; streaming
 keys execute their replay as usual), captures ``explain("formatted")``
@@ -9,6 +9,8 @@ Python-boundary nodes, Generate (explode) count, and df build seconds.
 
 Usage:
     python scripts/plan_audit.py [out_dir] [key_prefix_filter ...]
+
+``out_dir`` defaults to the git-ignored ``.plan_audit/`` at the repo root.
 """
 
 from __future__ import annotations
@@ -42,13 +44,6 @@ PY_NODES = (
 )
 
 
-def formatted_plan(df) -> str:
-    qe = df._jdf.queryExecution()
-    jvm = df.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return qe.explainString(mode)
-
-
 def summarize(plan: str) -> dict:
     s: dict = {}
     s["n_exchange"] = len(re.findall(r"\bExchange\b", plan))
@@ -72,13 +67,14 @@ def summarize(plan: str) -> dict:
 
 def main() -> None:
     out_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
-        REPO_DIR, "plans", "r15", "audit"
+        REPO_DIR, ".plan_audit"
     )
     prefixes = sys.argv[2:]
     os.makedirs(out_dir, exist_ok=True)
 
-    from real_time_rides_data_pipeline_spark.session import get_spark
+    from real_time_rides_data_pipeline_spark.plans import explain_str
     from real_time_rides_data_pipeline_spark.queries import registry
+    from real_time_rides_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="plan_audit", cpus=CPUS)
     specs = registry()
@@ -92,7 +88,7 @@ def main() -> None:
         try:
             df = specs[key].fn(spark, SF_DIR)
             build_s = time.perf_counter() - t0
-            plan = formatted_plan(df)
+            plan = explain_str(df)
         except Exception as e:  # noqa: BLE001
             summary[key] = {"error": f"{type(e).__name__}: {e}"[:300]}
             continue

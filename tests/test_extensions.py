@@ -257,7 +257,6 @@ def test_loop_threshold_keeps_cc_labels_and_bpe_merges(spark, monkeypatch):
     narrow = run()
     assert narrow[0] == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 6, 7: 7, 8: 7}
     assert len(narrow[1]) == 4
-    monkeypatch.setattr(graph, "_NARROW_LOOP_EDGES", 0)
     monkeypatch.setattr(session, "NARROW_LOOP_ROWS", 0)
     assert run() == narrow
 

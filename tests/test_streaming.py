@@ -606,53 +606,23 @@ def test_available_now_drains_and_terminates(spark, workdir, bronze_input):
     silver = silver_transform(
         parquet_stream(spark, input_path, BRONZE_SCHEMA), watermark="2 hours"
     )
-    q = stream_append_parquet(
-        silver, out, ckpt, trigger_seconds=None, available_now=True
-    ).start()
+    q = (
+        stream_append_parquet(silver, out, ckpt, trigger_seconds=None)
+        .trigger(availableNow=True)
+        .start()
+    )
     assert q.awaitTermination(120), "availableNow query did not self-terminate"
     n1 = spark.read.parquet(out).count()
     batch = silver_transform(spark.read.parquet(input_path))
     assert n1 == batch.count()
     # rerun with nothing new: terminates immediately, appends nothing
-    q2 = stream_append_parquet(
-        silver, out, ckpt, trigger_seconds=None, available_now=True
-    ).start()
+    q2 = (
+        stream_append_parquet(silver, out, ckpt, trigger_seconds=None)
+        .trigger(availableNow=True)
+        .start()
+    )
     assert q2.awaitTermination(120)
     assert spark.read.parquet(out).count() == n1
-
-
-def test_available_now_rejects_processing_time_combo(spark, workdir, bronze_input):
-    import pytest as _pytest
-
-    from real_time_rides_data_pipeline_spark.sinks import stream_append_parquet
-
-    input_path, _ = bronze_input
-    silver = silver_transform(
-        parquet_stream(spark, input_path, BRONZE_SCHEMA), watermark="2 hours"
-    )
-    with _pytest.raises(ValueError, match="mutually exclusive"):
-        stream_append_parquet(
-            silver, f"{workdir}/x", f"{workdir}/xc",
-            trigger_seconds=10, available_now=True,
-        )
-
-
-def test_available_now_with_default_trigger(spark, workdir, bronze_input):
-    """ADVICE r5 footgun closed: available_now=True with the DEFAULT
-    trigger_seconds (caller passes nothing) must build an AvailableNow
-    writer, not raise — only an EXPLICIT processing-time trigger conflicts."""
-    from real_time_rides_data_pipeline_spark.sinks import stream_append_parquet
-
-    input_path, _ = bronze_input
-    silver = silver_transform(
-        parquet_stream(spark, input_path, BRONZE_SCHEMA), watermark="2 hours"
-    )
-    out = f"{workdir}/avail_default"
-    q = stream_append_parquet(
-        silver, out, f"{workdir}/avail_default_ckpt", available_now=True
-    ).start()
-    assert q.awaitTermination(120)
-    assert spark.read.parquet(out).count() > 0
 
 
 def test_cdc_stream_checkpoint_restart_converges(spark, workdir):
