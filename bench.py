@@ -43,12 +43,11 @@ def release_persisted(spark) -> None:
     CONSTRAINT: this drops EVERY persistent RDD in the process, so no
     cross-invocation cache may ever memoize a localCheckpoint'd /
     persisted DataFrame (truncated lineage + evicted blocks =
-    unrecoverable on reuse). Today's input-staging dicts
-    (_REPLAY_INPUTS, _CSV_ENCODE_DIRS, the ssjout/_PARTITIONED/
-    _BUCKETED layout paths) hold only paths / plain Python values —
-    keep it that way, or snapshot RDD ids before the run and unpersist
-    only the new ones. (Result memos of any kind are banned outright —
-    see tests/test_ml.py::test_fit_helpers_have_no_memo.)
+    unrecoverable on reuse). The only input memo is ``scratch.staged``,
+    and it holds only directory paths — keep it that way, or snapshot
+    RDD ids before the run and unpersist only the new ones. (Result
+    memos of any kind are banned outright — see
+    tests/test_ml.py::test_fit_helpers_have_no_memo.)
     """
     jm = spark.sparkContext._jsc.getPersistentRDDs()
     if jm.size():

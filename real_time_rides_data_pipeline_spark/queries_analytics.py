@@ -54,7 +54,10 @@ from real_time_rides_data_pipeline_spark.operators.joins import (
 from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
 from real_time_rides_data_pipeline_spark.session import scoped_writer_session
-from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
+from real_time_rides_data_pipeline_spark.streaming.replay import (
+    run_to_completion,
+    stage_batches,
+)
 from real_time_rides_data_pipeline_spark.streaming.stateful import _DECAY_TAPS
 
 # =========================================================================
@@ -487,7 +490,6 @@ def q_null_impute(spark, sf_dir):
 )
 def q_stream_decayed(spark, sf_dir):
 
-    from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
     from real_time_rides_data_pipeline_spark.sinks import (
         foreach_batch_merge,
         merge_upsert_parquet,
@@ -502,7 +504,7 @@ def q_stream_decayed(spark, sf_dir):
         .filter(F.col("event_type") == "purchase")
         .select("user_id", "ts", "event_id", "value")
     )
-    inp = _replay_input(ev, "decayed", sf_dir)  # 2 files -> 2 micro-batches
+    inp = stage_batches("decayed", sf_dir, lambda: [ev.repartition(2)])
     run_dir = _scratch_dir(prefix="decayed_run_")
     out, ckpt = f"{run_dir}/out", f"{run_dir}/ckpt"
     # same state-store shuffle-width knee as q_stateful_running (16 @ 32c),
@@ -1144,7 +1146,6 @@ def q_ohlc_bars(spark, sf_dir):
 )
 def q_stream_ohlc(spark, sf_dir):
 
-    from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
     from real_time_rides_data_pipeline_spark.sinks import (
         foreach_batch_merge,
         merge_distributive_parquet,
@@ -1154,7 +1155,7 @@ def q_stream_ohlc(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "event_type", "ts", "event_id", "value"
     )
-    inp = _replay_input(ev, "ohlcstream", sf_dir)  # 2 files → 2 batches
+    inp = stage_batches("ohlcstream", sf_dir, lambda: [ev.repartition(2)])
     run_dir = _scratch_dir(prefix="ohlcstream_run_")
     state, ckpt = f"{run_dir}/bars", f"{run_dir}/ckpt"
     stream = parquet_stream(spark, inp, ev.schema, max_files_per_trigger=1)

@@ -26,7 +26,11 @@ from real_time_rides_data_pipeline_spark.functions import text as X
 from real_time_rides_data_pipeline_spark.functions.precision import cents
 from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
-from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
+from real_time_rides_data_pipeline_spark.session import scoped_writer_session
+from real_time_rides_data_pipeline_spark.streaming.replay import (
+    run_to_completion,
+    stage_batches,
+)
 
 # =========================================================================
 # Modern SQL surface: VARIANT JSON, LATERAL subquery
@@ -2083,10 +2087,6 @@ def q_negative_sample(spark, sf_dir):
 def q_stream_quantile_merge(spark, sf_dir):
 
     from real_time_rides_data_pipeline_spark.functions.precision import cents
-    from real_time_rides_data_pipeline_spark.queries_ext import (
-        _replay_input,
-        scoped_writer_session,
-    )
     from real_time_rides_data_pipeline_spark.sinks import (
         foreach_batch_merge,
         merge_distributive_parquet,
@@ -2096,7 +2096,7 @@ def q_stream_quantile_merge(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events").select("event_id", "value")
-    inp = _replay_input(ev, "qsketchstream", sf_dir)  # 2 files → 2 batches
+    inp = stage_batches("qsketchstream", sf_dir, lambda: [ev.repartition(2)])
     run_dir = _scratch_dir(prefix="qsketch_run_")
     state, ckpt = f"{run_dir}/hist", f"{run_dir}/ckpt"
     writer = scoped_writer_session(spark, shuffle_partitions=4)
@@ -2240,10 +2240,6 @@ def q_hapax_rate(spark, sf_dir):
 )
 def q_stream_sliding_distinct(spark, sf_dir):
 
-    from real_time_rides_data_pipeline_spark.queries_ext import (
-        _replay_input,
-        scoped_writer_session,
-    )
     from real_time_rides_data_pipeline_spark.sinks import (
         foreach_batch_merge,
         merge_distributive_parquet,
@@ -2257,7 +2253,7 @@ def q_stream_sliding_distinct(spark, sf_dir):
         .filter(F.col("event_id") % 3 == 0)
         .select("user_id", "ts")
     )
-    inp = _replay_input(ev, "slidedistinct", sf_dir)  # 2 files → 2 batches
+    inp = stage_batches("slidedistinct", sf_dir, lambda: [ev.repartition(2)])
     run_dir = _scratch_dir(prefix="slidedistinct_run_")
     state, ckpt = f"{run_dir}/counts", f"{run_dir}/ckpt"
     writer = scoped_writer_session(spark, shuffle_partitions=4)

@@ -27,7 +27,11 @@ from real_time_rides_data_pipeline_spark.operators import textdedup as TD
 from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
 from real_time_rides_data_pipeline_spark.session import scoped_writer_session
-from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
+from real_time_rides_data_pipeline_spark.streaming.replay import (
+    run_to_completion,
+    sentinel_frame,
+    stage_batches,
+)
 
 # =========================================================================
 # JSON extraction / as-of (SURVEY §2.9 q_json_extract, q_asof_latest)
@@ -1474,34 +1478,6 @@ def q_merge_upsert(spark, sf_dir):
     return spark.read.parquet(target)
 
 
-#: Memoized micro-batch replay inputs, keyed by (tag, sf_dir, n_files).
-#: Writing the replay files is input PREP, not the operator under test —
-#: repeat invocations in one process (e.g. min-of-N benching) reuse them.
-#: Checkpoints/output dirs are NEVER shared: each invocation streams afresh.
-#: Deliberately an UNBOUNDED plain dict: entries are path strings (~100 B
-#: each, |stream tags| × |sf_dirs| of them — a size cap would thrash WITHIN
-#: one bench pass and re-stage inputs), and the directories they point at are freed
-#: by scratch.py's atexit sweep, so the only unbounded growth is bytes of
-#: path text.
-_REPLAY_INPUTS: dict[tuple[str, str, int], str] = {}
-
-
-def _replay_input(df, tag: str, sf_dir: str, n_files: int = 2) -> str:
-    """Write ``df`` once per process as ``n_files`` parquet files (→
-    ``n_files`` micro-batches under ``maxFilesPerTrigger=1``); return the
-    input directory. Only for inputs that are pure functions of (tag,
-    sf_dir) — callers that mutate the input mid-stream (q_watermark's
-    straggler append) must not memoize."""
-
-    key = (tag, sf_dir, n_files)
-    inp = _REPLAY_INPUTS.get(key)
-    if inp is None:
-        inp = _scratch_dir(prefix=f"{tag}_") + "/in"
-        df.repartition(n_files).write.parquet(inp)
-        _REPLAY_INPUTS[key] = inp
-    return inp
-
-
 @register(
     "q_stateful_running",
     """SELECT g.user_id, g.n_events, g.total_spend, g.max_value, l.last_event_id
@@ -1532,7 +1508,7 @@ def q_stateful_running(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
-    inp = _replay_input(ev, "stateful", sf_dir)  # 2 files → 2 micro-batches
+    inp = stage_batches("stateful", sf_dir, lambda: [ev.repartition(2)])
     run_dir = _scratch_dir(prefix="stateful_run_")
     out, ckpt = f"{run_dir}/out", f"{run_dir}/ckpt"
     # Stateful shuffle width is frozen into the checkpoint at first batch;
@@ -1612,42 +1588,23 @@ def q_stream_dedup_ttl(spark, sf_dir):
         .filter(F.col("event_id") % 20 == 0)
         .select("event_id", "ts", "user_id", "value")
     )
-    cutoff = F.lit("2024-01-15 00:00:00").cast("timestamp")
-    # Pre-placed two-batch replay (mtime-staggered, immutable, memoized
-    # — the q_stream_stream_join_outer mechanic): batch 1 seeds the
-    # dedup state, batch 2's redeliveries hit it live. No spacer batch
-    # is needed here (unlike _wm_staged_input): dedup STATE commits at
-    # the end of the batch that created it — only the FILTER watermark
-    # lags a batch, and the 45-day delay keeps it below all data.
-    stage = _REPLAY_INPUTS.get(("ttl_pre", sf_dir, 0))
-    if stage is None:
-        import os
-        import time as _time
-
-        work = _scratch_dir(prefix="ttldedup_pre_")
-        inp0 = f"{work}/in"
+    # Two-batch replay: batch 1 seeds the dedup state, batch 2's
+    # redeliveries hit it live. No spacer batch is needed here (unlike
+    # _wm_staged_input): dedup STATE commits at the end of the batch that
+    # created it — only the FILTER watermark lags a batch, and the 45-day
+    # delay keeps it below all data.
+    def frames():
+        cutoff = F.lit("2024-01-15 00:00:00").cast("timestamp")
         early = ev.filter(F.col("ts") < cutoff)
-        early.coalesce(1).write.parquet(inp0)
         redelivered = early.filter(F.col("event_id") % 100 == 0)
-        batch2 = ev.filter(F.col("ts") >= cutoff).unionAll(redelivered)
-        now = _time.time()
-        for fn in os.listdir(inp0):
-            if fn.endswith(".parquet"):
-                os.utime(f"{inp0}/{fn}", (now - 8, now - 8))
-        batch2.coalesce(1).write.mode("append").parquet(inp0)
-        newest = max(
-            (f for f in os.listdir(inp0) if f.endswith(".parquet")),
-            key=lambda f: os.path.getmtime(f"{inp0}/{f}"),
-        )
-        os.utime(f"{inp0}/{newest}", (now - 4, now - 4))
-        stage = work
-        _REPLAY_INPUTS[("ttl_pre", sf_dir, 0)] = stage
+        late = ev.filter(F.col("ts") >= cutoff).unionAll(redelivered)
+        return [early.coalesce(1), late.coalesce(1)]
+
+    inp = stage_batches("ttl_pre", sf_dir, frames)
     run_dir = _scratch_dir(prefix="ttldedup_run_")
     out, ckpt = f"{run_dir}/out", f"{run_dir}/ckpt"
     writer = scoped_writer_session(spark, shuffle_partitions=2)
-    stream = parquet_stream(
-        writer, f"{stage}/in", ev.schema, max_files_per_trigger=1
-    )
+    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
     deduped = stream_dedup_within_watermark(
         stream, keys=("event_id", "ts"), event_time_col="ts",
         watermark="45 days",
@@ -1661,75 +1618,39 @@ def q_stream_dedup_ttl(spark, sf_dir):
 
 
 def _wm_staged_input(spark, sf_dir):
-    """Shared pre-placed replay input for the watermark-drop twins
-    (q_watermark, q_stream_late_metrics): the 5% events subset split
-    into an early batch, a ZERO-ROW SPACER, and a late batch carrying
-    stragglers re-keyed 72 h back — far below batch 1's watermark, so
-    ONLY the watermark can drop them, never the dedup. Returns
-    (input_dir, schema).
+    """Shared replay input for the watermark-drop twins (q_watermark,
+    q_stream_late_metrics): the 5% events subset split into an early
+    batch, a ZERO-ROW SPACER, and a late batch carrying stragglers
+    re-keyed 72 h back — far below batch 1's watermark, so ONLY the
+    watermark can drop them, never the dedup. Returns (input_dir,
+    schema).
 
-    The batches are PRE-PLACED with staggered mtimes (the
-    q_stream_stream_join_outer mechanic), so the input is immutable,
-    memoizes per sf_dir, and one processAllAvailable replays the
-    schedule — no per-invocation Spark writes or mid-stream appends.
     The spacer is LOAD-BEARING: the watermark a batch FILTERS with
     lags one batch behind the data that produced it (batch N's filter
-    watermark is committed at the end of batch N-1), and the old
-    stop-append-resume flow implicitly inserted an idle batch that
-    committed the advance — without the spacer the stragglers land in
-    the very batch after the early data and sail past the still-1970
-    filter watermark (verified live: 734 rows instead of 500)."""
-    import os
-    import time as _time
-
+    watermark is committed at the end of batch N-1), so the spacer
+    batch commits batch 1's advance before the late file is read —
+    without it the stragglers land in the very batch after the early
+    data and sail past the still-1970 filter watermark (verified live:
+    734 rows instead of 500)."""
     ev = (
         _t(spark, sf_dir, "events")
         .filter(F.col("event_id") % 20 == 0)
         .select("event_id", "ts", "user_id", "value")
     )
-    cutoff = F.lit("2024-01-15 00:00:00").cast("timestamp")
-    stage = _REPLAY_INPUTS.get(("wm_pre", sf_dir, 0))
-    if stage is None:
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
 
-        work = _scratch_dir(prefix="wm_pre_")
-        inp0 = f"{work}/in"
+    def frames():
+        cutoff = F.lit("2024-01-15 00:00:00").cast("timestamp")
         early = ev.filter(F.col("ts") < cutoff)
-        early.coalesce(1).write.parquet(inp0)
         stragglers = early.select(
             (-F.col("event_id") - 1).alias("event_id"),
             (F.col("ts") - F.expr("INTERVAL 72 HOURS")).alias("ts"),
             "user_id",
             "value",
         )
-        late_batch = ev.filter(F.col("ts") >= cutoff).unionAll(stragglers)
-        now = _time.time()
-        for fn in os.listdir(inp0):
-            if fn.endswith(".parquet"):
-                os.utime(f"{inp0}/{fn}", (now - 12, now - 12))
-        # empty spacer batch: commits batch 1's watermark before the
-        # late file is read (written outside, renamed in — atomic)
-        empty = _pa.table(
-            {
-                "event_id": _pa.array([], _pa.int64()),
-                "ts": _pa.array([], _pa.timestamp("us", tz="UTC")),
-                "user_id": _pa.array([], _pa.int64()),
-                "value": _pa.array([], _pa.float64()),
-            }
-        )
-        _pq.write_table(empty, f"{work}/spacer.parquet")
-        os.rename(f"{work}/spacer.parquet", f"{inp0}/spacer.parquet")
-        os.utime(f"{inp0}/spacer.parquet", (now - 8, now - 8))
-        late_batch.coalesce(1).write.mode("append").parquet(inp0)
-        newest = max(
-            (f for f in os.listdir(inp0) if f.endswith(".parquet")),
-            key=lambda f: os.path.getmtime(f"{inp0}/{f}"),
-        )
-        os.utime(f"{inp0}/{newest}", (now - 4, now - 4))
-        stage = work
-        _REPLAY_INPUTS[("wm_pre", sf_dir, 0)] = stage
-    return f"{stage}/in", ev.schema
+        late = ev.filter(F.col("ts") >= cutoff).unionAll(stragglers)
+        return [early.coalesce(1), ev.limit(0), late.coalesce(1)]
+
+    return stage_batches("wm_pre", sf_dir, frames), ev.schema
 
 
 @register(
@@ -1793,7 +1714,7 @@ def q_output_complete(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    inp = _replay_input(ev, "complete", sf_dir)  # 2 files → 2 micro-batches
+    inp = stage_batches("complete", sf_dir, lambda: [ev.repartition(2)])
     writer = scoped_writer_session(spark, shuffle_partitions=4)
     stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
     agg = hourly_driver_agg(
@@ -1836,7 +1757,7 @@ def q_stream_dim_join(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
-    inp = _replay_input(ev, "sdjoin", sf_dir)  # 2 files → 2 micro-batches
+    inp = stage_batches("sdjoin", sf_dir, lambda: [ev.repartition(2)])
     stream = parquet_stream(spark, inp, ev.schema, max_files_per_trigger=1)
     joined = join_fact_dim(
         stream, cust, on=stream.user_id == cust.c_custkey, how="left"
@@ -1870,7 +1791,7 @@ def q_stream_stream_join(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
-    inp = _replay_input(ev, "ssjoin", sf_dir)
+    inp = stage_batches("ssjoin", sf_dir, lambda: [ev.repartition(2)])
     # Symmetric-hash join state is per-partition PER SIDE — width pinned on
     # a per-writer session clone (sweep rationale below), not the shared
     # session conf. Width 4 per a state-width A/B (8 -> 4 =
@@ -1935,16 +1856,12 @@ def q_stream_stream_join(spark, sf_dir):
     "far-future sentinel batches (user_id -1/-2) advance the watermark "
     "past every real click so ALL unmatched rows flush: batch N's "
     "eviction uses the watermark computed at the END of batch N-1, hence "
-    "two sentinel micro-batches. The sentinels are "
-    "PRE-PLACED in the monitored dirs with mtimes staggered 4 s apart "
-    "(data, +1h sentinel, +2h sentinel): FileStreamSource orders files "
-    "by modification time, so one drain replays a three-batch "
-    "schedule, and the input is IMMUTABLE and therefore memoizable per "
-    "sf_dir (no per-invocation file copies or max-ts driver job). The "
-    "mtime stagger is "
-    "LOAD-BEARING: files sharing an mtime could surface a sentinel "
-    "beside (or before) the data batch, advancing the watermark past "
-    "the real rows and silently dropping them as late — the oracle "
+    "two sentinel micro-batches. Each side's dir is staged once per "
+    "sf_dir by stage_batches as the frames (data, +1h sentinel, +2h "
+    "sentinel) in mtime order, so one drain replays the three-batch "
+    "schedule. The ORDER is LOAD-BEARING: a sentinel surfacing beside "
+    "(or before) the data batch would advance the watermark past the "
+    "real rows and silently drop them as late — the oracle "
     "hash-checks this on every run. The sentinel rows are filtered "
     "from the SINK table, not inside the stream — an in-stream filter "
     "on user_id would be pushed down through join and watermark into "
@@ -1953,65 +1870,25 @@ def q_stream_stream_join(spark, sf_dir):
     "the plain batch LEFT JOIN.",
 )
 def q_stream_stream_join_outer(spark, sf_dir):
-    import os
-    import time as _time
     import uuid
 
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
-    from real_time_rides_data_pipeline_spark.streaming.replay import (
-        append_sentinel_file,
-    )
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
-    clicks_b = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    schema = clicks_b.schema
-    # Input prep is a pure function of sf_dir and the input dirs are
-    # never mutated after staging (sentinels pre-placed, see docstring),
-    # so the WHOLE prepared directory pair memoizes per process
-    # (_REPLAY_INPUTS policy); each invocation streams straight from the
-    # stage with a fresh checkpoint.
-    stage = _REPLAY_INPUTS.get(("ssjout_pre", sf_dir, 0))
-    if stage is None:
-        views_b = ev.filter(F.col("event_type") == "view").select(
-            "event_id", "user_id", "ts"
-        )
-        work = _scratch_dir(prefix="ssjout_pre_")
-        cdir, vdir = f"{work}/clicks", f"{work}/views"
-        clicks_b.coalesce(1).write.parquet(cdir)
-        views_b.coalesce(1).write.parquet(vdir)
-        # One driver scalar (max event time) places the sentinels —
-        # epoch MICROS end-to-end (see append_sentinel_file docstring).
-        max_us = ev.agg(
-            F.unix_micros(F.max("ts").cast("timestamp")).alias("us")
-        ).first()[0]
-        now = _time.time()
-        for d in (cdir, vdir):
-            for fn in os.listdir(d):
-                if fn.endswith(".parquet"):
-                    os.utime(f"{d}/{fn}", (now - 8, now - 8))
-        for hours, uid in ((1, -1), (2, -2)):
-            for d in (cdir, vdir):
-                append_sentinel_file(
-                    d,
-                    schema,
-                    "ts",
-                    max_us + hours * 3_600_000_000,
-                    {"event_id": -1, "user_id": uid},
-                    tag=str(hours),
-                )
-                newest = max(
-                    (f for f in os.listdir(d) if f.endswith(".parquet")),
-                    key=lambda f: os.path.getmtime(f"{d}/{f}"),
-                )
-                t = now - 8 + hours * 4
-                os.utime(f"{d}/{newest}", (t, t))
-        stage = work
-        _REPLAY_INPUTS[("ssjout_pre", sf_dir, 0)] = stage
-    cdir, vdir = f"{stage}/clicks", f"{stage}/views"
+    base = ev.select("event_id", "user_id", "ts")
+
+    def frames(typ: str):
+        # Both sides' sentinels sit past the max event time of ALL events.
+        side = ev.filter(F.col("event_type") == typ).select(*base.columns)
+        return [side.coalesce(1)] + [
+            sentinel_frame(base, "ts", hours, {"event_id": -1, "user_id": uid})
+            for hours, uid in ((1, -1), (2, -2))
+        ]
+
+    cdir = stage_batches("ssjout_clicks", sf_dir, lambda: frames("click"))
+    vdir = stage_batches("ssjout_views", sf_dir, lambda: frames("view"))
     # Width 2 per a state-width A/B (8 -> 2 = 8.2 -> 5.1 s, 1 -> 7.1,
     # 4 -> 5.9 min-of-2 at sf0.1):
     # ~15k buffered rows per side fit comfortably in 2 partitions; at
@@ -2020,7 +1897,7 @@ def q_stream_stream_join_outer(spark, sf_dir):
     writer = scoped_writer_session(spark, shuffle_partitions=2)
 
     def side(tag: str, path: str):
-        s = parquet_stream(writer, path, schema, max_files_per_trigger=1)
+        s = parquet_stream(writer, path, base.schema, max_files_per_trigger=1)
         return s.withWatermark("ts", "10 minutes").select(
             F.col("event_id").alias(f"{tag}_id"),
             F.col("user_id").alias(f"{tag}_user"),
@@ -2174,9 +2051,9 @@ def q_tws_top_values(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "value")
-    work = _scratch_dir(prefix="tws_")
-    inp, out, ckpt = f"{work}/in", f"{work}/out", f"{work}/ckpt"
-    ev.repartition(2).write.parquet(inp)  # 2 files → 2 micro-batches
+    inp = stage_batches("tws", sf_dir, lambda: [ev.repartition(2)])
+    work = _scratch_dir(prefix="tws_run_")
+    out, ckpt = f"{work}/out", f"{work}/ckpt"
     writer = scoped_writer_session(spark, shuffle_partitions=8)
     stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
     run_to_completion(
@@ -2755,10 +2632,10 @@ def q_schema_evolve_stream(spark, sf_dir):
         F.unix_micros("ts").alias("us"),
         F.concat(F.lit("s"), (F.col("user_id") % 10)).alias("session_tag"),
     )
+    in1 = stage_batches("sev_v1", sf_dir, lambda: [v1.coalesce(1)])
+    in2 = stage_batches("sev_v2", sf_dir, lambda: [v2.coalesce(1)])
     work = _scratch_dir(prefix="sev_")
-    in1, in2, out = f"{work}/in1", f"{work}/in2", f"{work}/out"
-    v1.coalesce(1).write.parquet(in1)
-    v2.coalesce(1).write.parquet(in2)
+    out = f"{work}/out"
     # Stateless append streams: width irrelevant, keep the tiny default.
     writer = scoped_writer_session(spark, shuffle_partitions=2)
     for i, (src, schema) in enumerate(((in1, v1.schema), (in2, v2.schema))):

@@ -105,7 +105,11 @@ from real_time_rides_data_pipeline_spark.functions import text as X
 from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
 from real_time_rides_data_pipeline_spark.session import scoped_writer_session
-from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
+from real_time_rides_data_pipeline_spark.streaming.replay import (
+    run_to_completion,
+    sentinel_frame,
+    stage_batches,
+)
 
 # =========================================================================
 # Dataset-mix health: exact rational Gini impurity
@@ -409,7 +413,6 @@ def q_cms_heavy_hitters(spark, sf_dir):
 def q_stream_cms_merge(spark, sf_dir):
 
     from real_time_rides_data_pipeline_spark.operators.cms import build_cms
-    from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
     from real_time_rides_data_pipeline_spark.sinks import (
         foreach_batch_merge,
         merge_distributive_parquet,
@@ -418,7 +421,7 @@ def q_stream_cms_merge(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents", parallel=True)
     docs = d.select("doc_id", "text")
-    inp = _replay_input(docs, "cmsstream", sf_dir)  # 2 files → 2 batches
+    inp = stage_batches("cmsstream", sf_dir, lambda: [docs.repartition(2)])
     run_dir = _scratch_dir(prefix="cmsstream_run_")
     state, ckpt = f"{run_dir}/sketch", f"{run_dir}/ckpt"
     writer = scoped_writer_session(spark, shuffle_partitions=8)
@@ -595,82 +598,37 @@ def q_cogroup_asof(spark, sf_dir):
     "Watermark 10 min bounds state; append mode emits a session only "
     "once the watermark proves it closed, so two far-future sentinel "
     "batches (user_id -1/-2, +72/+73 h) flush the tail. "
-    "The late batch and both sentinels are PRE-PLACED with mtimes "
-    "staggered 4 s apart (the q_stream_stream_join_outer mechanic — "
-    "FileStreamSource's mtime ordering replays the identical four-batch "
-    "schedule, the input memoizes immutable, and one "
-    "processAllAvailable replaces four). Sentinel rows are filtered "
+    "The four batches (early, late, two sentinels) are staged once per "
+    "sf_dir by stage_batches in mtime order, so one drain replays the "
+    "four-batch schedule. Sentinel rows are filtered "
     "from the SINK table, never in-stream (a pushed-down filter would "
     "starve the watermark). Oracle = batch gaps-and-islands on the "
     "same subset.",
 )
 def q_stream_session(spark, sf_dir):
-    import os
-    import time as _time
     import uuid
 
-    from real_time_rides_data_pipeline_spark.queries_ext import _REPLAY_INPUTS
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
-    from real_time_rides_data_pipeline_spark.streaming.replay import (
-        append_sentinel_file,
-    )
 
     ev = (
         _t(spark, sf_dir, "events")
         .filter(F.col("event_id") % 5 == 0)
         .select("user_id", "ts", "event_id")
     )
-    cutoff = F.lit("2024-01-15 00:00:00").cast("timestamp")
-    # Input prep is a pure function of sf_dir. The late batch and the two
-    # sentinel files are PRE-PLACED with mtimes staggered 4 s apart (the
-    # q_stream_stream_join_outer mechanic: FileStreamSource orders files
-    # by modification time, so one drain replays the early/late/sent/sent
-    # four-batch schedule) —
-    # the monitored dir is IMMUTABLE, so the whole thing memoizes and
-    # each invocation is a single stream run with a fresh checkpoint.
-    stage = _REPLAY_INPUTS.get(("sesstream_pre", sf_dir, 0))
-    if stage is None:
-        work0 = _scratch_dir(prefix="sesstream_pre_")
-        inp0 = f"{work0}/in"
-        ev.filter(F.col("ts") < cutoff).coalesce(1).write.parquet(inp0)
-        # Positively identify the early file by listing BETWEEN the two
-        # writes — an mtime sort can tie on coarse-granularity
-        # filesystems and swap the early/late re-stamp.
-        early_files = {
-            f for f in os.listdir(inp0) if f.endswith(".parquet")
-        }
-        ev.filter(F.col("ts") >= cutoff).coalesce(1).write.mode(
-            "append"
-        ).parquet(inp0)
-        max_us = ev.agg(
-            F.unix_micros(F.max("ts").cast("timestamp"))
-        ).first()[0]
-        now = _time.time()
-        for f in (f for f in os.listdir(inp0) if f.endswith(".parquet")):
-            t = now - 16 if f in early_files else now - 12
-            os.utime(f"{inp0}/{f}", (t, t))
-        for i, (hours, uid) in enumerate(((72, -1), (73, -2))):
-            append_sentinel_file(
-                inp0,
-                ev.schema,
-                "ts",
-                max_us + hours * 3_600_000_000,
-                {"user_id": uid, "event_id": -1},
-                tag=str(hours),
-            )
-            newest = max(
-                (f for f in os.listdir(inp0) if f.endswith(".parquet")),
-                key=lambda f: os.path.getmtime(f"{inp0}/{f}"),
-            )
-            t = now - 8 + i * 4
-            os.utime(f"{inp0}/{newest}", (t, t))
-        stage = work0
-        _REPLAY_INPUTS[("sesstream_pre", sf_dir, 0)] = stage
-    inp = f"{stage}/in"
 
-    schema = ev.schema
+    def frames():
+        cutoff = F.lit("2024-01-15 00:00:00").cast("timestamp")
+        return [
+            ev.filter(F.col("ts") < cutoff).coalesce(1),
+            ev.filter(F.col("ts") >= cutoff).coalesce(1),
+        ] + [
+            sentinel_frame(ev, "ts", hours, {"user_id": uid, "event_id": -1})
+            for hours, uid in ((72, -1), (73, -2))
+        ]
+
+    inp = stage_batches("sesstream_pre", sf_dir, frames)
     writer = scoped_writer_session(spark, shuffle_partitions=8)
-    stream = parquet_stream(writer, inp, schema, max_files_per_trigger=1)
+    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
     sessions = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
@@ -1341,7 +1299,6 @@ def q_stream_kmv(spark, sf_dir):
 
     from real_time_rides_data_pipeline_spark.functions.precision import cents
     from real_time_rides_data_pipeline_spark.operators import kmv
-    from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
     from real_time_rides_data_pipeline_spark.sinks import (
         foreach_batch_merge,
         merge_topk_parquet,
@@ -1351,7 +1308,7 @@ def q_stream_kmv(spark, sf_dir):
 
     K = 256
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    inp = _replay_input(ev, "kmvstream", sf_dir)  # 2 files → 2 batches
+    inp = stage_batches("kmvstream", sf_dir, lambda: [ev.repartition(2)])
     run_dir = _scratch_dir(prefix="kmvstream_run_")
     state, ckpt = f"{run_dir}/sketch", f"{run_dir}/ckpt"
     writer = scoped_writer_session(spark, shuffle_partitions=4)
@@ -1473,7 +1430,6 @@ def q_stream_kmv(spark, sf_dir):
 def q_stream_leaderboard(spark, sf_dir):
 
     from real_time_rides_data_pipeline_spark.functions.precision import cents
-    from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
     from real_time_rides_data_pipeline_spark.sinks import (
         foreach_batch_merge,
         merge_topk_parquet,
@@ -1483,7 +1439,7 @@ def q_stream_leaderboard(spark, sf_dir):
 
     K = 10
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    inp = _replay_input(ev, "lbstream", sf_dir)  # 2 files → 2 batches
+    inp = stage_batches("lbstream", sf_dir, lambda: [ev.repartition(2)])
     run_dir = _scratch_dir(prefix="lbstream_run_")
     state, ckpt = f"{run_dir}/board", f"{run_dir}/ckpt"
     writer = scoped_writer_session(spark, shuffle_partitions=4)

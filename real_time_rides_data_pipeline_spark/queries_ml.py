@@ -97,7 +97,10 @@ from real_time_rides_data_pipeline_spark.functions.vectors import as_double
 from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
 from real_time_rides_data_pipeline_spark.session import scoped_writer_session
-from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
+from real_time_rides_data_pipeline_spark.streaming.replay import (
+    run_to_completion,
+    stage_batches,
+)
 
 _KNUTH = 2654435761
 
@@ -187,7 +190,6 @@ def _linreg_solve(m):
 )
 def q_stream_linreg(spark, sf_dir):
 
-    from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
     from real_time_rides_data_pipeline_spark.sinks import (
         foreach_batch_merge,
         merge_distributive_parquet,
@@ -195,7 +197,7 @@ def q_stream_linreg(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     ev = _t(spark, sf_dir, "events").select("event_type", "ts", "value")
-    inp = _replay_input(ev, "linregstream", sf_dir)  # 2 files → 2 batches
+    inp = stage_batches("linregstream", sf_dir, lambda: [ev.repartition(2)])
     run_dir = _scratch_dir(prefix="linregstream_run_")
     state, ckpt = f"{run_dir}/moments", f"{run_dir}/ckpt"
     writer = scoped_writer_session(spark, shuffle_partitions=8)
@@ -4053,7 +4055,6 @@ def q_srm_check(spark, sf_dir):
 )
 def q_stream_srm(spark, sf_dir):
 
-    from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
     from real_time_rides_data_pipeline_spark.sinks import (
         foreach_batch_merge,
         merge_distributive_parquet,
@@ -4061,7 +4062,7 @@ def q_stream_srm(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     ev = _t(spark, sf_dir, "events").select("event_type", "user_id")
-    inp = _replay_input(ev, "srmstream", sf_dir)  # 2 files → 2 batches
+    inp = stage_batches("srmstream", sf_dir, lambda: [ev.repartition(2)])
     run_dir = _scratch_dir(prefix="srmstream_run_")
     state, ckpt = f"{run_dir}/counts", f"{run_dir}/ckpt"
     writer = scoped_writer_session(spark, shuffle_partitions=8)

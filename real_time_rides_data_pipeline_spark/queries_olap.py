@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from real_time_rides_data_pipeline_spark.functions.precision import cents
 from real_time_rides_data_pipeline_spark.registry import _t, register
-from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
+from real_time_rides_data_pipeline_spark.scratch import staged
 
 # =========================================================================
 # OVER-clause window functions (q_rank, q_lag_lead, q_running_sum)
@@ -645,23 +645,12 @@ def q_conditional_funcs(spark, sf_dir):
     )
 
 
-#: (applicationId, sf_dir) pairs whose bucketed tables are already written.
-_BUCKETED: set[tuple[str, str]] = set()
-
-
-#: Date-partitioned events layouts, one per (application, sf_dir).
-_PARTITIONED: dict[tuple[str, str], str] = {}
-
-
 def _partitioned_events(spark, sf_dir) -> str:
     """Write events hive-partitioned by event_date once per (session, sf) —
     the lakehouse layout step that buys every date-sliced query its
     partition pruning: a one-day query scans one day's files."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _PARTITIONED.get(key)
-    if path is None:
-        path = _scratch_dir(prefix="part_events_") + "/events_by_date"
+    def write(path: str) -> None:
         (
             _t(spark, sf_dir, "events")
             .withColumn("event_date", F.to_date("ts"))
@@ -669,8 +658,8 @@ def _partitioned_events(spark, sf_dir) -> str:
             .mode("overwrite")
             .parquet(path)
         )
-        _PARTITIONED[key] = path
-    return path
+
+    return staged(("part_events", spark.sparkContext.applicationId, sf_dir), write)
 
 
 @register(
@@ -707,27 +696,23 @@ def _bucketed_tables(spark, sf_dir) -> tuple[str, str]:
 
     tag = re.sub(r"[^0-9a-z]", "_", sf_dir.lower()).strip("_")
     li_name, o_name = f"li_bucketed_{tag}", f"o_bucketed_{tag}"
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BUCKETED:
-        return li_name, o_name
-    base = _scratch_dir(prefix="bucketed_")
-    (
-        _t(spark, sf_dir, "lineitem")
-        .write.bucketBy(8, "l_orderkey")
-        .sortBy("l_orderkey")
-        .option("path", f"{base}/{li_name}")
-        .mode("overwrite")
-        .saveAsTable(li_name)
-    )
-    (
-        _t(spark, sf_dir, "orders")
-        .write.bucketBy(8, "o_orderkey")
-        .sortBy("o_orderkey")
-        .option("path", f"{base}/{o_name}")
-        .mode("overwrite")
-        .saveAsTable(o_name)
-    )
-    _BUCKETED.add(key)
+
+    def write(base: str) -> None:
+        for table, name, key in (
+            ("lineitem", li_name, "l_orderkey"),
+            ("orders", o_name, "o_orderkey"),
+        ):
+            (
+                _t(spark, sf_dir, table)
+                .write.bucketBy(8, key)
+                .sortBy(key)
+                .option("path", f"{base}/{name}")
+                .mode("overwrite")
+                .saveAsTable(name)
+            )
+
+    # Catalog tables die with the app, hence the applicationId in the key.
+    staged(("bucketed", spark.sparkContext.applicationId, sf_dir), write)
     return li_name, o_name
 
 

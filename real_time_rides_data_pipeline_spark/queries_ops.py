@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 from real_time_rides_data_pipeline_spark.functions import text as X
 from real_time_rides_data_pipeline_spark.functions.precision import cents
 from real_time_rides_data_pipeline_spark.registry import _t, register
-from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
+from real_time_rides_data_pipeline_spark.scratch import staged
 
 # =========================================================================
 # FULL OUTER join
@@ -1025,11 +1025,6 @@ def q_ks_drift(spark, sf_dir):
 # =========================================================================
 
 
-#: Memoized CSV-encode dirs for q_csv_corrupt_records, keyed by sf_dir —
-#: holds only paths (never DataFrames; bench.py's RDD unpersist contract).
-_CSV_ENCODE_DIRS: dict[str, str] = {}
-
-
 @register(
     "q_csv_corrupt_records",
     """WITH lines AS (
@@ -1073,15 +1068,12 @@ def q_csv_corrupt_records(spark, sf_dir):
         )
     )
     # The CSV text encode is input PREP, not the operator under test, and
-    # is a pure function of sf_dir — memoize per process like the
-    # streaming keys' _replay_input (min-of-N bench reps at three probe
-    # factors would otherwise rewrite the whole events table as text and
-    # leak a fresh /tmp dir per invocation).
-    path = _CSV_ENCODE_DIRS.get(sf_dir)
-    if path is None:
-        path = _scratch_dir(prefix="csv_corrupt_") + "/events_csv"
-        ev.select(line.alias("value")).write.mode("overwrite").text(path)
-        _CSV_ENCODE_DIRS[sf_dir] = path
+    # is a pure function of sf_dir — staged once per process (min-of-N
+    # bench reps would otherwise rewrite the whole events table as text).
+    path = staged(
+        ("csv_corrupt", sf_dir),
+        lambda d: ev.select(line.alias("value")).write.mode("overwrite").text(d),
+    )
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),

@@ -30,7 +30,11 @@ from real_time_rides_data_pipeline_spark.functions.precision import cents
 from real_time_rides_data_pipeline_spark.operators.clean import KNUTH_MULT
 from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
-from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
+from real_time_rides_data_pipeline_spark.session import scoped_writer_session
+from real_time_rides_data_pipeline_spark.streaming.replay import (
+    run_to_completion,
+    stage_batches,
+)
 
 # =========================================================================
 # Bloom-prefiltered decontamination
@@ -720,7 +724,6 @@ def q_profile_stats(spark, sf_dir):
 )
 def q_cdc_stream(spark, sf_dir):
 
-    from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
     from real_time_rides_data_pipeline_spark.sinks import (
         foreach_batch_merge,
         merge_cdc_parquet,
@@ -730,7 +733,7 @@ def q_cdc_stream(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id", cents(F.col("value")).alias("cents")
     )
-    inp = _replay_input(ev, "cdcstream", sf_dir)  # 2 files -> 2 micro-batches
+    inp = stage_batches("cdcstream", sf_dir, lambda: [ev.repartition(2)])
     run_dir = _scratch_dir(prefix="cdc_stream_")
     target, ckpt = f"{run_dir}/state", f"{run_dir}/ckpt"
 
@@ -1483,13 +1486,6 @@ def q_ivm_agg_delta(spark, sf_dir):
 )
 def q_stream_ivm_retract(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.functions.precision import cents
-    from real_time_rides_data_pipeline_spark.queries_ext import (
-        _replay_input,
-        scoped_writer_session,
-    )
-    from real_time_rides_data_pipeline_spark.scratch import (
-        scratch_dir as _scratch_dir,
-    )
     from real_time_rides_data_pipeline_spark.sinks import (
         foreach_batch_merge,
         merge_distributive_parquet,
@@ -1499,7 +1495,7 @@ def q_stream_ivm_retract(spark, sf_dir):
     )
 
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    inp = _replay_input(ev, "ivmretract", sf_dir)  # 2 files → 2 batches
+    inp = stage_batches("ivmretract", sf_dir, lambda: [ev.repartition(2)])
     run_dir = _scratch_dir(prefix="ivmretract_run_")
     state, ckpt = f"{run_dir}/view", f"{run_dir}/ckpt"
     writer = scoped_writer_session(spark, shuffle_partitions=4)

@@ -1,12 +1,83 @@
 """Bounded stream runs over a file replay (tests, benchmarks, backfills):
-start a query, drain every available micro-batch, stop it — plus the
-sentinel file that flushes a watermark.
+stage the replay input once per process, start a query, drain every
+available micro-batch, stop it — plus the sentinel row that flushes a
+watermark.
+
+A file source lists new files in modification-time order, so a
+directory whose files are stamped in order replays the same micro-batch
+schedule on every run: under ``maxFilesPerTrigger=1`` each file is one
+micro-batch, and a zero-row file is a zero-row batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
+import os
+import time
+from typing import Callable
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from real_time_rides_data_pipeline_spark.scratch import staged
+
+#: Seconds between the mtimes of consecutive frames. Filesystem mtime
+#: granularity can be as coarse as 1-2 s, so files written back to back
+#: may share a timestamp and list in either order; 4 s apart they cannot.
+FRAME_SPACING_S = 4
+
+
+def stage_batches(
+    tag: str, sf_dir: str, frames: Callable[[], list[DataFrame]]
+) -> str:
+    """Write the DataFrames ``frames()`` returns into one directory, once
+    per process per ``(tag, sf_dir)``, and return that directory.
+
+    Each frame is written as it is (its partitions set its file count),
+    and every file of frame *i* gets an mtime older than every file of
+    frame *i+1*, so a file stream replays the frames in list order.
+    ``frames`` runs only on the first call: later calls return the
+    staged path without analysing or writing anything."""
+
+    def write(d: str) -> None:
+        batches = []
+        for df in frames():
+            before = set(os.listdir(d))
+            df.write.mode("append").parquet(d)
+            batches.append(
+                [
+                    f
+                    for f in set(os.listdir(d)) - before
+                    if not f.startswith(("_", "."))
+                ]
+            )
+        t0 = time.time() - FRAME_SPACING_S * len(batches)
+        for i, files in enumerate(batches):
+            t = t0 + i * FRAME_SPACING_S
+            for f in files:
+                os.utime(os.path.join(d, f), (t, t))
+
+    return staged((tag, sf_dir), write)
+
+
+def sentinel_frame(
+    df: DataFrame, ts_col: str, hours: int, consts: dict[str, int]
+) -> DataFrame:
+    """A 1-row frame in ``df``'s column order whose ``ts_col`` is
+    ``max(ts_col) + hours`` and whose other columns are the long
+    literals in ``consts`` — the far-future row that advances a
+    watermark past every real event so append-mode state flushes.
+
+    The timestamp is computed in Spark and never collected: a Python
+    datetime would round-trip through the driver's OS timezone and, on
+    a non-UTC host, could land the sentinel before the real events."""
+    ts = (F.max(ts_col) + F.expr(f"INTERVAL {hours} HOURS")).alias(ts_col)
+    return df.agg(ts).select(
+        *[
+            F.col(c) if c == ts_col else F.lit(consts[c]).cast("long").alias(c)
+            for c in df.columns
+        ]
+    )
 
 
 def run_to_completion(writer: DataStreamWriter) -> StreamingQuery:
@@ -20,63 +91,3 @@ def run_to_completion(writer: DataStreamWriter) -> StreamingQuery:
     finally:
         query.stop()
     return query
-
-
-def append_sentinel_file(
-    dst_dir: str,
-    schema: T.StructType,
-    ts_col: str,
-    ts_us: int,
-    consts: dict[str, int],
-    tag: str,
-) -> None:
-    """Atomically add a 1-row far-future sentinel parquet to a MONITORED
-    stream directory — the watermark-advancing flush used by the
-    stream-stream outer join and the streaming session window.
-
-    Two hazards are designed around (first hit in
-    queries_ext.q_stream_stream_join_outer, see its docstring):
-
-    - The timestamp is carried as EPOCH MICROS end-to-end: collecting a
-      Python datetime would round-trip through the DRIVER's OS timezone
-      (``TimestampType.fromInternal`` uses ``fromtimestamp``), so
-      re-stamping it UTC on a non-UTC host would shift the sentinel hours
-      BEFORE the real max event time and the flush would silently never
-      happen.
-    - The file is written OUTSIDE the monitored directory and
-      ``os.rename``'d in (atomic on the same FS), so the polling file
-      source can never list a half-written footer.
-
-    A pyarrow write, not a Spark write: a 1-row createDataFrame→write
-    while the streaming query holds the scheduler costs seconds
-    (measured ~4.5 s); ``pq.write_table`` is microseconds and the file
-    source only cares that a new file appears. Column order follows
-    ``schema``; every non-``ts_col`` field takes its int64 value from
-    ``consts``.
-    """
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    ntz = isinstance(schema[ts_col].dataType, T.TimestampNTZType)
-    pa_ts = pa.timestamp("us") if ntz else pa.timestamp("us", tz="UTC")
-    names = [f.name for f in schema.fields]
-    pa_schema = pa.schema(
-        [(n, pa_ts if n == ts_col else pa.int64()) for n in names]
-    )
-    tbl = pa.table(
-        {
-            n: (
-                pa.array([ts_us], pa.int64()).cast(pa_ts)
-                if n == ts_col
-                else pa.array([consts[n]], pa.int64())
-            )
-            for n in names
-        },
-        schema=pa_schema,
-    )
-    parent = os.path.dirname(dst_dir.rstrip("/"))
-    staged = os.path.join(parent, f"stage-{tag}-{os.path.basename(dst_dir)}.parquet")
-    pq.write_table(tbl, staged)
-    os.rename(staged, os.path.join(dst_dir, f"sentinel-{tag}.parquet"))

@@ -137,3 +137,49 @@ def test_every_package_function_has_a_caller():
                     candidates.append((rel, node.name, own))
     uncalled = [f"{rel}:{name}" for rel, name, own in candidates if refs[name] <= own]
     assert uncalled == [], uncalled
+
+
+def test_query_modules_leave_input_staging_to_the_helpers():
+    """Query modules stage replay inputs and layouts only through
+    ``streaming.replay.stage_batches`` and ``scratch.staged``: no
+    hand-set mtimes, no pyarrow side-writes, no private replay memo, and
+    no module-level memo container."""
+    import ast
+
+    hits = []
+    for rel, src in _package_sources().items():
+        if not os.path.basename(rel).startswith("queries"):
+            continue
+        tree = ast.parse(src)
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "utime"
+            ):
+                hits.append(f"{rel}:{n.lineno}: os.utime")
+            elif isinstance(n, (ast.Import, ast.ImportFrom)):
+                mods = [a.name for a in n.names]
+                if isinstance(n, ast.ImportFrom):
+                    mods = [n.module or ""] + [f"{n.module}.{m}" for m in mods]
+                if "pyarrow.parquet" in mods:
+                    hits.append(f"{rel}:{n.lineno}: imports pyarrow.parquet")
+            names = {getattr(n, "id", None), getattr(n, "attr", None)}
+            if isinstance(n, ast.alias):
+                names |= {n.name, n.asname}
+            if names & {"_replay_input", "_REPLAY_INPUTS"}:
+                hits.append(f"{rel}:{getattr(n, 'lineno', 0)}: private replay memo")
+        for node in tree.body:
+            value = getattr(node, "value", None)
+            if isinstance(node, (ast.Assign, ast.AnnAssign)) and (
+                (isinstance(value, ast.Dict) and not value.keys)
+                or (isinstance(value, (ast.List, ast.Set)) and not value.elts)
+                or (
+                    isinstance(value, ast.Call)
+                    and isinstance(value.func, ast.Name)
+                    and value.func.id in ("dict", "list", "set")
+                    and not value.args
+                )
+            ):
+                hits.append(f"{rel}:{node.lineno}: module-level memo container")
+    assert hits == [], "\n".join(hits)

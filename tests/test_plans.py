@@ -2086,13 +2086,15 @@ def test_stream_sliding_distinct_replay_has_cross_batch_dupes(spark):
     # two micro-batches): only a cross-file shared membership exercises
     # cross-batch state — a broken state would overcount exactly these
     # and fail the oracle compare. Stage through the key's own
-    # _replay_input so the pin tests the real input, not a simulation.
+    # stage_batches tag so the pin tests the real input, not a simulation.
     import glob
 
-    from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
+    from real_time_rides_data_pipeline_spark.streaming.replay import (
+        stage_batches,
+    )
 
-    inp = _replay_input(
-        ev.select("user_id", "ts"), "slidedistinct", SMOKE_SF
+    inp = stage_batches(
+        "slidedistinct", SMOKE_SF, lambda: [ev.select("user_id", "ts").repartition(2)]
     )
     files = sorted(glob.glob(inp + "/*.parquet"))
     assert len(files) == 2, files
@@ -2193,13 +2195,15 @@ def test_stream_ivm_retract_state_goes_negative_per_batch(spark):
     former)."""
     import glob
 
-    from real_time_rides_data_pipeline_spark.queries_ext import _replay_input
     from real_time_rides_data_pipeline_spark.registry import _t
+    from real_time_rides_data_pipeline_spark.streaming.replay import (
+        stage_batches,
+    )
 
     ev = _t(spark, SMOKE_SF, "events").select(
         "event_id", "event_type", "value"
     )
-    inp = _replay_input(ev, "ivmretract", SMOKE_SF)
+    inp = stage_batches("ivmretract", SMOKE_SF, lambda: [ev.repartition(2)])
     files = sorted(glob.glob(inp + "/*.parquet"))
     assert len(files) == 2, files
     for f in files:

@@ -25,7 +25,11 @@ from real_time_rides_data_pipeline_spark.pipeline import (
 from real_time_rides_data_pipeline_spark.schemas import BRONZE_SCHEMA
 from real_time_rides_data_pipeline_spark.sinks import merge_upsert_parquet
 from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
-from real_time_rides_data_pipeline_spark.streaming.replay import run_to_completion
+from real_time_rides_data_pipeline_spark.streaming.replay import (
+    run_to_completion,
+    sentinel_frame,
+    stage_batches,
+)
 
 N_EVENTS = 600
 
@@ -1186,3 +1190,72 @@ def test_query_modules_leave_stream_lifecycle_to_the_helper():
         if n:
             hits[os.path.basename(path)] = n
     assert hits == {}
+
+
+def test_stage_batches_replays_one_batch_per_frame_in_order(spark, workdir):
+    """Frames of 25, 0 and 7 rows, one file each, replay under
+    maxFilesPerTrigger=1 as three micro-batches in frame order — the
+    zero-row frame included."""
+    inp = stage_batches(
+        "stage_order",
+        workdir,
+        lambda: [
+            spark.range(0, 25).coalesce(1),
+            spark.range(0).limit(0),
+            spark.range(25, 32).coalesce(1),
+        ],
+    )
+    q = run_to_completion(
+        parquet_stream(spark, inp, spark.range(0).schema, max_files_per_trigger=1)
+        .writeStream.format("noop")
+        .option("checkpointLocation", f"{workdir}/stage_order_ckpt")
+    )
+    assert [p.numInputRows for p in q.recentProgress] == [25, 0, 7]
+
+
+def test_stage_batches_second_call_is_a_pure_lookup(spark, workdir):
+    """The same (tag, sf_dir) returns the staged path without calling
+    ``frames`` and without starting a Spark job."""
+    calls = []
+
+    def frames():
+        calls.append(1)
+        return [spark.range(3).coalesce(1)]
+
+    first = stage_batches("stage_memo", workdir, frames)
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup())
+    again = stage_batches("stage_memo", workdir, frames)
+    assert again == first
+    assert calls == [1]
+    assert set(tracker.getJobIdsForGroup()) - jobs_before == set()
+
+
+def test_sentinel_frame_is_max_plus_hours_under_a_non_utc_driver(spark):
+    """The sentinel timestamp is exactly max(ts) + hours even when the
+    driver's OS timezone is not UTC: nothing passes through a Python
+    datetime."""
+    import time
+
+    df = spark.sql(
+        "SELECT * FROM VALUES (1L, 7L, TIMESTAMP '2024-01-30 23:15:00'),"
+        " (2L, 8L, TIMESTAMP '2024-01-31 22:45:30') AS t(event_id, user_id, ts)"
+    )
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    try:
+        sentinel = sentinel_frame(df, "ts", 3, {"event_id": -1, "user_id": -2})
+        rows = sentinel.select(
+            "event_id", "user_id", F.unix_micros("ts").alias("us")
+        ).collect()
+        max_us = df.agg(F.unix_micros(F.max("ts"))).first()[0]
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert sentinel.columns == df.columns
+    assert sentinel.dtypes == df.dtypes
+    assert [tuple(r) for r in rows] == [(-1, -2, max_us + 3 * 3_600_000_000)]
