@@ -21,17 +21,21 @@ from dataclasses import dataclass
 from datetime import datetime, timedelta
 
 
+#: Injection rates of the anomalies listed above.
+SUSPICIOUS_RATE = 0.10
+LATE_RATE = 0.05
+DUPLICATE_RATE = 0.02
+
+#: Broker time of the first event; events follow 0.1-0.5 s apart, the
+#: reference's emission sleep.
+START = datetime(2024, 1, 1, 0, 0, 0)
+
+
 @dataclass
 class GenConfig:
     seed: int = 42
     n_events: int = 1000
     n_drivers: int = 100
-    suspicious_rate: float = 0.10
-    late_rate: float = 0.05
-    duplicate_rate: float = 0.02
-    start: datetime = datetime(2024, 1, 1, 0, 0, 0)
-    #: emission spacing stand-in for the reference's 0.1-0.5 s sleep
-    mean_gap_seconds: float = 0.3
 
 
 def _iso(dt: datetime) -> str:
@@ -48,10 +52,10 @@ def generate_events(cfg: GenConfig = GenConfig()) -> list[dict]:
     rng = random.Random(cfg.seed)
     out: list[dict] = []
     recent: list[dict] = []
-    wall = cfg.start
+    wall = START
     for i in range(cfg.n_events):
         wall = wall + timedelta(seconds=rng.uniform(0.1, 0.5))
-        if recent and rng.random() < cfg.duplicate_rate:
+        if recent and rng.random() < DUPLICATE_RATE:
             src = rng.choice(recent[-10:])
             dup = dict(src)
             dup["_duplicate_of"] = src["_ride_id"]
@@ -69,11 +73,11 @@ def generate_events(cfg: GenConfig = GenConfig()) -> list[dict]:
         )
         fare = round(rng.uniform(50.0, 1000.0), 2)
         status = rng.choice(["completed", "cancelled", "started"])
-        suspicious = rng.random() < cfg.suspicious_rate
+        suspicious = rng.random() < SUSPICIOUS_RATE
         if suspicious:
             end_time = start_time + timedelta(seconds=rng.randint(30, 119))
             fare = round(rng.uniform(301.0, 1500.0), 2)
-        late = rng.random() < cfg.late_rate
+        late = rng.random() < LATE_RATE
         if late:
             event_timestamp = end_time - timedelta(
                 minutes=rng.randint(6, 10)

@@ -38,25 +38,23 @@ def hourly_driver_agg(
     key_col: str = "driver_id",
     id_col: str = "ride_id",
     fare_col: str = "fare",
-    suspicious_col: str = "is_suspicious",
-    window_duration: str = "1 hour",
-    with_processing_time: bool = False,
 ) -> DataFrame:
-    """Flagship: tumbling-window grouped aggregate (03:46-67).
+    """Flagship: 1-hour tumbling-window grouped aggregate (03:46-67).
 
     Output columns follow the Gold DDL (03:77-87): window_start, window_end,
     <key>, total_rides_hourly, avg_fare_hourly (2-dp round, 03:53),
-    total_suspicious_rides_hourly (count-if idiom, 03:54-55).
-    ``processing_time`` (03:57) is opt-in because it is non-deterministic and
-    excluded from oracle comparison (SURVEY.md §7.4).
+    total_suspicious_rides_hourly (count-if over ``is_suspicious``,
+    03:54-55). The reference's ``processing_time`` column (03:57) is left
+    out: it is non-deterministic and excluded from oracle comparison
+    (SURVEY.md §7.4).
     """
-    out = (
-        df.groupBy(F.window(F.col(ts_col), window_duration), F.col(key_col))
+    return (
+        df.groupBy(F.window(F.col(ts_col), "1 hour"), F.col(key_col))
         .agg(
             F.count(id_col).alias("total_rides_hourly"),
             money_avg_2dp(fare_col).alias("avg_fare_hourly"),
             F.sum(
-                F.when(F.col(suspicious_col), 1).otherwise(0)
+                F.when(F.col("is_suspicious"), 1).otherwise(0)
             ).alias("total_suspicious_rides_hourly"),
         )
         .select(
@@ -68,9 +66,6 @@ def hourly_driver_agg(
             "total_suspicious_rides_hourly",
         )
     )
-    if with_processing_time:
-        out = out.withColumn("processing_time", F.current_timestamp())
-    return out
 
 
 def reaggregate_gold(df: DataFrame, key_col: str = "driver_id") -> DataFrame:
@@ -157,45 +152,36 @@ def ks_two_sample(
     )
 
 
-def sweep_max_concurrency(
-    df: DataFrame,
-    start_col: str = "s",
-    end_col: str = "e",
-    unit: str = "day",
-) -> DataFrame:
-    """Distributed SWEEP LINE: per calendar ``unit`` partition, the maximum
-    number of concurrently-open half-open intervals [start, end) and the
-    first instant the peak is attained (the library form behind
-    ``q_max_concurrency``).
+def sweep_max_concurrency(df: DataFrame) -> DataFrame:
+    """Distributed SWEEP LINE: per calendar day, the maximum number of
+    concurrently-open half-open intervals [s, e) and the first instant the
+    peak is attained (the library form behind ``q_max_concurrency``).
 
-    Scale design: intervals are SPLIT at unit boundaries so every
+    Scale design: intervals are SPLIT at day boundaries so every
     partition's sweep is self-contained — the trick that turns an
     inherently sequential global prefix sum into independent per-partition
     windows. Precondition (enforced IN the plan, loud failure): an
-    interval may cross at most ONE unit boundary; longer intervals need a
+    interval may cross at most ONE day boundary; longer intervals need a
     generator-based multi-split, which callers with bounded durations
     never pay for. Tie semantics: the cumulative sum orders by
     (t, delta) with ends before starts — the half-open touching rule —
     and the default RANGE frame gives tie groups their settled value, so
     no arbitrary row tiebreak exists (deterministic on any engine).
     """
-    u = unit.upper()
-    sd = F.date_trunc(unit, F.col(start_col))
-    ed = F.date_trunc(unit, F.col(end_col))
-    next_sd = F.expr(
-        f"timestampadd({u}, 1, date_trunc('{unit}', {start_col}))"
-    )
+    sd = F.date_trunc("day", F.col("s"))
+    ed = F.date_trunc("day", F.col("e"))
+    next_sd = F.expr("timestampadd(DAY, 1, date_trunc('day', s))")
     checked_ed = F.when(ed <= next_sd, ed).otherwise(
         F.raise_error(
             F.lit(
-                f"sweep_max_concurrency: interval crosses more than one "
-                f"{unit} boundary; split it upstream or use a finer unit"
+                "sweep_max_concurrency: interval crosses more than one "
+                "day boundary; split it upstream"
             )
         ).cast("timestamp")
     )
     iv = df.select(
-        F.col(start_col).alias("s"),
-        F.col(end_col).alias("e"),
+        "s",
+        "e",
         sd.alias("sd"),
         checked_ed.alias("ed"),
     )

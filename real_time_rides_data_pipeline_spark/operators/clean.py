@@ -27,29 +27,33 @@ def with_trip_duration(
     )
 
 
-def pseudo_distance(key: Column, max_km: float = 20.0) -> Column:
+#: Pseudo-distances are whole hundredths of a km in [0, 20).
+DISTANCE_BUCKETS = 2000
+
+
+def pseudo_distance(key: Column) -> Column:
     """Deterministic stand-in for the reference's ``round(rand()*20, 2)``:
-    a hash of the row key folded into [0, max_km), 2-dp rounded. Replayable,
+    a hash of the row key folded into [0, 20) km, 2-dp rounded. Replayable,
     partition-order independent, and identical across engines that share the
     integer arithmetic (for the oracle we use the plain modular form below).
     """
-    buckets = int(max_km * 100)
-    return F.round(F.pmod(F.xxhash64(key), F.lit(buckets)) / 100.0, 2)
+    return F.round(F.pmod(F.xxhash64(key), F.lit(DISTANCE_BUCKETS)) / 100.0, 2)
 
 
 #: Knuth's multiplicative-hash constant (2^32 / phi).
 KNUTH_MULT = 2654435761
 
 
-def pseudo_distance_modular(key: Column, max_km: float = 20.0) -> Column:
+def pseudo_distance_modular(key: Column) -> Column:
     """Oracle-portable variant: plain modular arithmetic on an integer key
     (DuckDB computes the identical value), spread with a Knuth multiplier.
 
-    Reduces the key mod ``buckets`` BEFORE multiplying — the modular identity
-    ``(a*K) mod m = ((a mod m) * (K mod m)) mod m`` keeps every intermediate
-    under ``m^2`` so the expression never wraps int64, for any key magnitude.
+    Reduces the key mod ``DISTANCE_BUCKETS`` BEFORE multiplying — the
+    modular identity ``(a*K) mod m = ((a mod m) * (K mod m)) mod m`` keeps
+    every intermediate under ``m^2`` so the expression never wraps int64,
+    for any key magnitude.
     """
-    buckets = int(max_km * 100)
+    buckets = DISTANCE_BUCKETS
     return F.round(
         F.pmod(F.pmod(key, F.lit(buckets)) * F.lit(KNUTH_MULT % buckets), F.lit(buckets))
         / 100.0,
@@ -57,10 +61,8 @@ def pseudo_distance_modular(key: Column, max_km: float = 20.0) -> Column:
     )
 
 
-def with_trip_distance(
-    df: DataFrame, key_col: str = "ride_id", out_col: str = "trip_distance_km"
-) -> DataFrame:
-    return df.withColumn(out_col, pseudo_distance(F.col(key_col)))
+def with_trip_distance(df: DataFrame) -> DataFrame:
+    return df.withColumn("trip_distance_km", pseudo_distance(F.col("ride_id")))
 
 
 def validity_filter(

@@ -11,14 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_suspicious_flag(
-    df: DataFrame,
-    duration_col: str = "trip_duration_seconds",
-    fare_col: str = "fare",
-    out_col: str = "is_suspicious",
-    max_duration_s: int = 120,
-    min_fare: float = 300.0,
-) -> DataFrame:
+def with_suspicious_flag(df: DataFrame) -> DataFrame:
     return df.withColumn(
-        out_col, (F.col(duration_col) < max_duration_s) & (F.col(fare_col) > min_fare)
+        "is_suspicious", (F.col("trip_duration_seconds") < 120) & (F.col("fare") > 300.0)
     )

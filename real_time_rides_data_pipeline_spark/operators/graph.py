@@ -40,14 +40,13 @@ def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_iter: int = 25,
     algorithm: str = "star",
     assume_distinct_edges: bool = False,
 ) -> DataFrame:
     """Label every vertex with the MINIMUM vertex id reachable from it
-    (undirected): output columns ``(id, component)``. Deterministic —
+    over the ``(src, dst)`` edges (undirected): output columns ``(id,
+    component)``. Deterministic —
     the representative of each cluster is its smallest id.
 
     ``assume_distinct_edges=True`` skips the defensive ``distinct()`` on
@@ -58,7 +57,7 @@ def connected_components(
     every original edge, so a violated promise surfaces as a loud gate
     failure, never a wrong answer.
     """
-    e = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
+    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     if algorithm == "star":
         labels = _cc_star(e, max_iter, assume_distinct=assume_distinct_edges)
     elif algorithm == "labelprop":
@@ -254,13 +253,8 @@ def _cc_labelprop(e: DataFrame, max_iter: int) -> DataFrame:
     return labels
 
 
-def pagerank_int(
-    edges: DataFrame,
-    iterations: int = 3,
-    scale: int = 10**12,
-    damping_pct: int = 85,
-) -> DataFrame:
-    """Fixed-iteration PageRank with EXACT integer arithmetic.
+def pagerank_int(edges: DataFrame, scale: int = 10**12) -> DataFrame:
+    """3-iteration PageRank, damping 85 %, with EXACT integer arithmetic.
 
     ``edges`` is a directed edge list with columns (src, dst); every node
     is assumed to have out-degree >= 1 (symmetrize first if not — a
@@ -268,7 +262,7 @@ def pagerank_int(
     (initial rank = ``scale``), per-edge contribution is ``rank div
     out_degree`` and the update is
 
-        r' = scale*(100-damping_pct) div 100  +  damping_pct * sum(contrib) div 100
+        r' = scale*(100-85) div 100  +  85 * sum(contrib) div 100
 
     — floor division on non-negative int64 at every step, so the result is
     bit-identical on ANY engine and ANY partitioning/summation order
@@ -280,7 +274,7 @@ def pagerank_int(
     sum per dst. The edge+degree table is localCheckpoint'd lazily so its
     scan/distinct lineage runs once, not once per iteration. int64
     headroom: sum(contrib) over a node's in-edges is bounded by total rank
-    mass ≈ |V|·scale, so damping_pct·|V|·scale must stay < 2^63 — at
+    mass ≈ |V|·scale, so 85·|V|·scale must stay < 2^63 — at
     scale=1e12 that is |V| < ~10^5; lower ``scale`` for larger graphs.
     """
     e = edges.select("src", "dst").distinct()
@@ -297,9 +291,10 @@ def pagerank_int(
     nodes = ed.select(F.col("src").alias("node")).distinct().localCheckpoint(
         eager=False
     )
+    damping_pct = 85
     base = scale * (100 - damping_pct) // 100
     ranks = nodes.withColumn("r", F.lit(scale).cast("long"))
-    for _ in range(iterations):
+    for _ in range(3):
         contrib = (
             ed.join(ranks, ed["src"] == ranks["node"])
             .select(F.col("dst").alias("node"), F.expr("r div __d").alias("__c"))

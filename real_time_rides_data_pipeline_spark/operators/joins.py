@@ -27,15 +27,13 @@ def join_fact_dim(
     dim: DataFrame,
     on,
     how: str = "inner",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
-    """Fact⋈dimension equi-join, broadcasting the dim side by default.
+    """Fact⋈dimension equi-join, broadcasting the dim side.
 
     Broadcast replicates the dim to every executor — zero shuffle of the
     (huge) fact side; correct call whenever the dim fits in executor memory.
     """
-    dim_side = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(dim_side, on, how)
+    return fact.join(F.broadcast(dim), on, how)
 
 
 def semi_join(fact: DataFrame, other: DataFrame, on) -> DataFrame:

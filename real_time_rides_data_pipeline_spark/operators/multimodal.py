@@ -32,26 +32,26 @@ def fake_image_meta(payload: bytes) -> tuple[int, int, str]:
     return width, height, fmt
 
 
-def with_binary_payload(df: DataFrame, text_col: str = "text", out_col: str = "payload") -> DataFrame:
-    """Make an opaque binary column (fixtures have no real media; encoding
-    text gives a deterministic, realistic-size payload)."""
-    return df.withColumn(out_col, F.encode(F.col(text_col), "UTF-8"))
+def with_binary_payload(df: DataFrame) -> DataFrame:
+    """Make the opaque binary column ``payload`` from ``text`` (fixtures
+    have no real media; encoding text gives a deterministic, realistic-size
+    payload)."""
+    return df.withColumn("payload", F.encode(F.col("text"), "UTF-8"))
 
 
-def extract_image_metadata(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
-    """mapInPandas metadata extraction: one Arrow batch in, one out —
-    the real decode drop-in point. Output: id, byte_len, width, height, format."""
-    schema = f"{id_col} long, byte_len long, width int, height int, format string"
+def extract_image_metadata(df: DataFrame) -> DataFrame:
+    """mapInPandas metadata extraction over ``(doc_id, payload)``: one Arrow
+    batch in, one out — the real decode drop-in point. Output: doc_id,
+    byte_len, width, height, format."""
+    schema = "doc_id long, byte_len long, width int, height int, format string"
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = pdf[payload_col]
+            payloads = pdf["payload"]
             meta = [fake_image_meta(p if p is not None else b"") for p in payloads]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
+                    "doc_id": pdf["doc_id"].values,
                     "byte_len": [len(p) if p is not None else 0 for p in payloads],
                     "width": [m[0] for m in meta],
                     "height": [m[1] for m in meta],
@@ -59,7 +59,7 @@ def extract_image_metadata(
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(extract, schema)
+    return df.select("doc_id", "payload").mapInPandas(extract, schema)
 
 
 def fake_audio_meta(payload: bytes) -> tuple[int, int]:
@@ -70,45 +70,38 @@ def fake_audio_meta(payload: bytes) -> tuple[int, int]:
     return rate, n * 1000 // 32
 
 
-def extract_audio_metadata(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
-    """mapInPandas audio-metadata extraction (the audio twin of
-    extract_image_metadata): one Arrow batch in, one out; ``fake_audio_meta``
-    is the real-decoder drop-in point. Output: id, byte_len, sample_rate,
-    duration_ms."""
-    schema = f"{id_col} long, byte_len long, sample_rate int, duration_ms long"
+def extract_audio_metadata(df: DataFrame) -> DataFrame:
+    """mapInPandas audio-metadata extraction over ``(doc_id, payload)`` (the
+    audio twin of extract_image_metadata): one Arrow batch in, one out;
+    ``fake_audio_meta`` is the real-decoder drop-in point. Output: doc_id,
+    byte_len, sample_rate, duration_ms."""
+    schema = "doc_id long, byte_len long, sample_rate int, duration_ms long"
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = [p if p is not None else b"" for p in pdf[payload_col]]
+            payloads = [p if p is not None else b"" for p in pdf["payload"]]
             meta = [fake_audio_meta(p) for p in payloads]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
+                    "doc_id": pdf["doc_id"].values,
                     "byte_len": [len(p) for p in payloads],
                     "sample_rate": [m[0] for m in meta],
                     "duration_ms": [m[1] for m in meta],
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(extract, schema)
+    return df.select("doc_id", "payload").mapInPandas(extract, schema)
 
 
-def resize_images(
-    df: DataFrame,
-    target_w: int = 32,
-    target_h: int = 32,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Image-resize plumbing: mapInPandas 1→1 transform whose output payload
-    is a fixed-budget byte grid (a real implementation calls
-    a PIL ``Image.resize((w, h))`` and re-encodes — byte-sampling here
-    keeps the batch shape, output size, and determinism identical). The
-    narrow map keeps payloads scan-local: no shuffle at any scale."""
-    schema = f"{id_col} long, resized binary, resized_len long"
-    budget = target_w * target_h
+def resize_images(df: DataFrame) -> DataFrame:
+    """Image-resize plumbing over ``(doc_id, payload)``: mapInPandas 1→1
+    transform whose output payload is a fixed-budget 32×32 byte grid (a
+    real implementation calls a PIL ``Image.resize((32, 32))`` and
+    re-encodes — byte-sampling here keeps the batch shape, output size, and
+    determinism identical). The narrow map keeps payloads scan-local: no
+    shuffle at any scale."""
+    schema = "doc_id long, resized binary, resized_len long"
+    budget = 32 * 32
 
     def one(p: bytes | None) -> bytes:
         p = p or b""
@@ -119,39 +112,36 @@ def resize_images(
         for pdf in batches:
             # zip over raw columns, not .iterrows() (which builds a Series
             # per row and dominates the batch cost ~10x)
-            payloads = [one(p) for p in pdf[payload_col]]
+            payloads = [one(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].values,
+                    "doc_id": pdf["doc_id"].values,
                     "resized": payloads,
                     "resized_len": [len(p) for p in payloads],
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(resize, schema)
+    return df.select("doc_id", "payload").mapInPandas(resize, schema)
 
 
-def sample_frames(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    n_frames: int = 3,
-) -> DataFrame:
-    """Frame-sampling fan-out: each payload yields ``n_frames`` chunk rows
-    (a video decoder would emit real frames). Demonstrates the 1→N
-    mapInPandas shape: output rows ≠ input rows, no join/explode."""
-    schema = f"{id_col} long, frame_idx int, frame_bytes binary"
+def sample_frames(df: DataFrame) -> DataFrame:
+    """Frame-sampling fan-out over ``(doc_id, payload)``: each payload
+    yields 3 chunk rows (a video decoder would emit real frames).
+    Demonstrates the 1→N mapInPandas shape: output rows ≠ input rows, no
+    join/explode."""
+    schema = "doc_id long, frame_idx int, frame_bytes binary"
+    n_frames = 3
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, frames = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 payload = payload or b""
                 step = max(len(payload) // n_frames, 1)
                 for i in range(n_frames):
                     ids.append(doc_id)
                     idxs.append(i)
                     frames.append(bytes(payload[i * step : i * step + step]))
-            yield pd.DataFrame({id_col: ids, "frame_idx": idxs, "frame_bytes": frames})
+            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame_bytes": frames})
 
-    return df.select(id_col, payload_col).mapInPandas(sample, schema)
+    return df.select("doc_id", "payload").mapInPandas(sample, schema)

@@ -34,50 +34,39 @@ from pyspark.sql import functions as F
 from real_time_rides_data_pipeline_spark.functions.precision import cents
 
 
-def grouped_minmax_normalize(
-    df: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-    id_cols: tuple[str, ...] = ("event_id",),
-    out_col: str = "norm_bp",
-    scale: int = 10000,
-    engine: str = "window",
-) -> DataFrame:
-    """Normalize ``value_col`` to ``[0, scale]`` within each ``key_col``
-    group: ``(c - min) * scale DIV (max - min)``, 0 for constant groups.
-    Output columns: ``(*id_cols, key_col, out_col)``; exact integer
-    arithmetic end-to-end, bit-identical across engines."""
-    base = df.select(
-        *id_cols, key_col, cents(F.col(value_col)).alias("__c")
-    )
+def grouped_minmax_normalize(df: DataFrame, engine: str = "window") -> DataFrame:
+    """Normalize ``value`` to basis points ``[0, 10000]`` within each
+    ``user_id`` group: ``(c - min) * 10000 DIV (max - min)``, 0 for
+    constant groups. Output columns: ``(event_id, user_id, norm_bp)``;
+    exact integer arithmetic end-to-end, bit-identical across engines."""
+    scale = 10000
+    base = df.select("event_id", "user_id", cents(F.col("value")).alias("__c"))
     if engine == "window":
-        w = Window.partitionBy(key_col)
+        w = Window.partitionBy("user_id")
         spanned = base.select(
-            *id_cols,
-            key_col,
+            "event_id",
+            "user_id",
             "__c",
             F.min("__c").over(w).alias("__mn"),
             F.max("__c").over(w).alias("__mx"),
         )
         return spanned.select(
-            *id_cols,
-            key_col,
+            "event_id",
+            "user_id",
             # NULL cents stay NULL even in a constant group (the bare
             # mx=mn→0 arm would mint a 0 for them), keeping both engines
             # NULL-identical.
             F.expr(
                 f"CASE WHEN __c IS NULL THEN CAST(NULL AS BIGINT) "
                 f"WHEN __mx = __mn THEN 0L "
-                f"ELSE (__c - __mn) * {int(scale)} DIV (__mx - __mn) END"
-            ).alias(out_col),
+                f"ELSE (__c - __mn) * {scale} DIV (__mx - __mn) END"
+            ).alias("norm_bp"),
         )
     if engine == "grouped_map":
-        fields = [base.schema[c].simpleString().replace(":", " ") for c in id_cols]
         out_schema = ", ".join(
-            fields
-            + [base.schema[key_col].simpleString().replace(":", " ")]
-            + [f"{out_col} long"]
-        )
+            base.schema[c].simpleString().replace(":", " ")
+            for c in ("event_id", "user_id")
+        ) + ", norm_bp long"
 
         def norm(pdf):
             import pandas as pd
@@ -93,10 +82,13 @@ def grouped_minmax_normalize(
             lo, hi = c.min(), c.max()
             span = (hi - lo) if pd.notna(hi) else None
             nb = (c - lo) * scale // span if span else c * 0
-            out = {col: pdf[col] for col in id_cols}
-            out[key_col] = pdf[key_col]
-            out[out_col] = nb.astype("Int64")
-            return pd.DataFrame(out)
+            return pd.DataFrame(
+                {
+                    "event_id": pdf["event_id"],
+                    "user_id": pdf["user_id"],
+                    "norm_bp": nb.astype("Int64"),
+                }
+            )
 
         # AQE would coalesce this tiny shuffle to ONE partition and
         # serialize every per-key pandas call — pin the key-hash width
@@ -106,8 +98,8 @@ def grouped_minmax_normalize(
         )
 
         return (
-            pin_group_partitioning(base, key_col)
-            .groupBy(key_col)
+            pin_group_partitioning(base, "user_id")
+            .groupBy("user_id")
             .applyInPandas(norm, out_schema)
         )
     raise ValueError(f"unknown engine {engine!r}: window | grouped_map")

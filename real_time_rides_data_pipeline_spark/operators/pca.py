@@ -28,8 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def gramian(df: DataFrame, vec_col: str = "embedding") -> "list[list[float]]":
-    """Exact (up to float-add order) d×d gramian X'X of the vector column.
+def gramian(df: DataFrame) -> "list[list[float]]":
+    """Exact (up to float-add order) d×d gramian X'X of ``embedding``.
 
     One mapInArrow pass emits a flattened partial per PARTITION (batches
     accumulate locally first); the partials are exploded to (pos, val) and
@@ -44,7 +44,7 @@ def gramian(df: DataFrame, vec_col: str = "embedding") -> "list[list[float]]":
         # not d²·n_batches (which grows linearly with data).
         acc = None
         for batch in batches:
-            col = batch.column(vec_col)
+            col = batch.column("embedding")
             if len(col) == 0:
                 continue
             # Contract: non-null, equal-width vectors — then flatten+reshape
@@ -56,18 +56,18 @@ def gramian(df: DataFrame, vec_col: str = "embedding") -> "list[list[float]]":
             if col.null_count:
                 raise ValueError(
                     f"gramian: {col.null_count} null vector(s) in "
-                    f"'{vec_col}' — drop or impute nulls before the fit"
+                    f"'embedding' — drop or impute nulls before the fit"
                 )
             flat = col.flatten().to_numpy(zero_copy_only=False)
             if len(flat) % len(col):
                 raise ValueError(
-                    f"gramian: ragged '{vec_col}' widths (batch of "
+                    f"gramian: ragged 'embedding' widths (batch of "
                     f"{len(col)} rows holds {len(flat)} values)"
                 )
             x = flat.astype(np.float64, copy=False).reshape(len(col), -1)
             if acc is not None and x.shape[1] != acc.shape[0]:
                 raise ValueError(
-                    f"gramian: '{vec_col}' width changed {acc.shape[0]} → "
+                    f"gramian: 'embedding' width changed {acc.shape[0]} → "
                     f"{x.shape[1]} across batches"
                 )
             g = x.T @ x
@@ -77,7 +77,7 @@ def gramian(df: DataFrame, vec_col: str = "embedding") -> "list[list[float]]":
                 {"gram": pa.array([acc.ravel().tolist()], pa.list_(pa.float64()))}
             )
 
-    parts = df.select(vec_col).mapInArrow(_partials, "gram array<double>")
+    parts = df.select("embedding").mapInArrow(_partials, "gram array<double>")
     summed = (
         parts.select(F.posexplode("gram").alias("pos", "v"))
         .groupBy("pos")
@@ -87,7 +87,7 @@ def gramian(df: DataFrame, vec_col: str = "embedding") -> "list[list[float]]":
     vals = {r["pos"]: r["s"] for r in summed}
     if not vals:
         # Would otherwise surface downstream as an eigh on a 0×0 matrix.
-        raise ValueError(f"gramian: no vectors in '{vec_col}' (empty input)")
+        raise ValueError("gramian: no vectors in 'embedding' (empty input)")
     d = int(len(vals) ** 0.5)
     assert d * d == len(vals), f"gramian size {len(vals)} is not a square"
     return [[vals[i * d + j] for j in range(d)] for i in range(d)]
@@ -102,13 +102,12 @@ def _sign_fix(v):
     return -v if v[idx] < 0 else v
 
 
-def fit_top2_gramian(
-    df: DataFrame, vec_col: str = "embedding"
-) -> tuple[list[float], list[float]]:
-    """Top-2 principal directions (descending eigenvalue, sign-fixed)."""
+def fit_top2_gramian(df: DataFrame) -> tuple[list[float], list[float]]:
+    """Top-2 principal directions of ``embedding`` (descending
+    eigenvalue, sign-fixed)."""
     import numpy as np
 
-    g = np.asarray(gramian(df, vec_col))
+    g = np.asarray(gramian(df))
     evals, evecs = np.linalg.eigh(g)  # ascending; symmetric → real
     v1 = _sign_fix(evecs[:, -1])
     v2 = _sign_fix(evecs[:, -2])

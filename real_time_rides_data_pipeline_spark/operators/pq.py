@@ -44,25 +44,20 @@ def half_away_e6(x) -> "np.ndarray":
     )
 
 
-def subspace_codebook(rows, n_sub: int = 4, sub_dim: int = 16):
-    """(k, n_sub, sub_dim) int64 codebook from collected Row objects
-    (sorted by id for determinism)."""
+def subspace_codebook(rows):
+    """(k, 4, 16) int64 codebook — 4 subspaces of 16 dims — from
+    collected Row objects (sorted by id for determinism)."""
     mat = half_away_e6(
         [list(r.embedding) for r in sorted(rows, key=lambda r: r.vec_id)]
     )
-    return mat.reshape(len(rows), n_sub, sub_dim)
+    return mat.reshape(len(rows), 4, 16)
 
 
-def pq_codes(
-    df: DataFrame,
-    csub,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign PQ codes: one narrow mapInArrow pass emitting
-    (id, c0..c{S-1}, err) with exact int64 squared-L2 subspace distances
-    and the encoded-key argmin ``min(dist * k + cid)`` (deterministic
-    tie-break toward the lower centroid id)."""
+def pq_codes(df: DataFrame, csub) -> DataFrame:
+    """Assign PQ codes: one narrow mapInArrow pass over ``(vec_id,
+    embedding)`` emitting (vec_id, c0..c{S-1}, err) with exact int64
+    squared-L2 subspace distances and the encoded-key argmin ``min(dist *
+    k + cid)`` (deterministic tie-break toward the lower centroid id)."""
     k, n_sub, sub_dim = csub.shape
 
     def assign(batches):
@@ -74,7 +69,7 @@ def pq_codes(
             vs = half_away_e6(
                 np.asarray(b.column(1).flatten(), dtype=np.float64)
             ).reshape(n, n_sub, sub_dim)
-            out = {id_col: ids}
+            out = {"vec_id": ids}
             err = np.zeros(n, dtype=np.int64)
             for s in range(n_sub):
                 d = ((vs[:, None, s, :] - csub[None, :, s, :]) ** 2).sum(
@@ -88,8 +83,8 @@ def pq_codes(
             yield pa.RecordBatch.from_pydict(out)
 
     cols = ", ".join(f"c{s} long" for s in range(n_sub))
-    return df.select(id_col, vec_col).mapInArrow(
-        assign, f"{id_col} long, {cols}, err long"
+    return df.select("vec_id", "embedding").mapInArrow(
+        assign, f"vec_id long, {cols}, err long"
     )
 
 

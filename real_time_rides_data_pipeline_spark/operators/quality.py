@@ -70,7 +70,6 @@ def tcloseness_audit(
     df,
     qi_cols: list[str],
     band_col: str,
-    t_ppm: int = 250000,
 ):
     """t-CLOSENESS audit over an ORDERED sensitive-value domain (the
     library form behind ``q_tcloseness``): per QI group, the Earth
@@ -79,7 +78,8 @@ def tcloseness_audit(
     Venkatasubramanian 2007), kept exact over the common denominator
     n_group·N — integer arithmetic end to end, DECIMAL-widened where the
     N² products pass 2^63. Returns one row per QI group:
-    (qi..., group_n, emd_ppm, violates_t).
+    (qi..., group_n, emd_ppm, violates_t), where ``violates_t`` flags an
+    EMD above t = 0.25 (250000 ppm).
 
     Shape: one input scan compresses to per-(QI, band) counts; absent
     cells still shift the cumulative diffs, so a |QI|×|bands| spine
@@ -132,5 +132,5 @@ def tcloseness_audit(
     return c.groupBy(*qi_cols).agg(
         F.min("__n_group").cast("long").alias("group_n"),
         emd.alias("emd_ppm"),
-        (emd > t_ppm).alias("violates_t"),
+        (emd > 250000).alias("violates_t"),
     )

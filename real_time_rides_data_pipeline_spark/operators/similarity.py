@@ -23,23 +23,26 @@ from real_time_rides_data_pipeline_spark.functions.vectors import (
     vec_lit,
 )
 
+#: The id and vector columns of an embeddings frame.
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+
+#: Width of the embeddings the hyperplane LSH family spans.
+LSH_DIM = 64
+
 
 def brute_force_topk(
-    vectors: DataFrame,
-    query_vec: list[float],
-    k: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    vectors: DataFrame, query_vec: list[float], k: int = 100
 ) -> DataFrame:
     """Exact top-k by cosine vs a literal query vector. The query vector is
     folded into the plan as ONE constant-folded array literal (vec_lit —
     broadcast-free, py4j-cheap); ORDER BY+LIMIT plans
     TakeOrderedAndProject. Ties broken by id for determinism."""
     q = vec_lit(query_vec)
-    sim = cosine_rounded(as_double(F.col(vec_col)), q).alias("cosine_sim")
+    sim = cosine_rounded(as_double(F.col(VEC_COL)), q).alias("cosine_sim")
     return (
-        vectors.select(F.col(id_col), sim)
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
+        vectors.select(F.col(ID_COL), sim)
+        .orderBy(F.col("cosine_sim").desc(), F.col(ID_COL))
         .limit(k)
     )
 
@@ -48,16 +51,13 @@ def fit_centroids_kmeans(
     vectors: DataFrame,
     k: int = 8,
     sample_n: int = 1024,
-    iters: int = 5,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Sampled spherical k-means fit — the real centroid source for IVF.
 
     Deterministic by construction: the sample is the first ``sample_n``
     vectors by id (orderBy + limit — no RNG in the scan), init is a seeded
-    choice from that sample, and Lloyd iterations run in numpy on the
+    choice from that sample, and 5 Lloyd iterations run in numpy on the
     driver. The collect is bounded (sample_n × dim doubles, ~1 MB at
     defaults) — fitting on a sample driver-side then broadcasting the
     centroids into the assignment plan is the standard shape at any scale;
@@ -72,7 +72,7 @@ def fit_centroids_kmeans(
 
     import numpy as np
 
-    rows = vectors.orderBy(id_col).limit(sample_n).select(vec_col).collect()
+    rows = vectors.orderBy(ID_COL).limit(sample_n).select(VEC_COL).collect()
     if not rows:
         raise ValueError(
             "fit_centroids_kmeans: the vectors frame is empty — cannot fit "
@@ -88,7 +88,7 @@ def fit_centroids_kmeans(
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     rng = np.random.default_rng(seed)
     cents = X[rng.choice(len(X), size=min(k, len(X)), replace=False)]
-    for _ in range(iters):
+    for _ in range(5):
         assign = (X @ cents.T).argmax(axis=1)
         updated = []
         for j in range(len(cents)):
@@ -103,15 +103,11 @@ def fit_centroids_kmeans(
     return [[float(x) for x in c] for c in cents]
 
 
-def assign_ivf_cluster(
-    vectors: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str = "cluster_id",
-) -> DataFrame:
-    """Assign each vector to its max-cosine centroid. Centroids are plan
-    literals: at real scale they come from a sampled k-means fit, then this
-    column becomes the partition key of the written table.
+def assign_ivf_cluster(vectors: DataFrame, centroids: list[list[float]]) -> DataFrame:
+    """Assign each vector to its max-cosine centroid, as ``cluster_id``.
+    Centroids are plan literals: at real scale they come from a sampled
+    k-means fit, then this column becomes the partition key of the written
+    table.
 
     The argmax is ``array_position(sims, array_max(sims))`` over an array of
     the K similarities — each similarity is evaluated exactly once. (A
@@ -122,12 +118,12 @@ def assign_ivf_cluster(
     per-centroid similarities are ONE transform over the constant-folded
     centroid matrix (mat_lit) — K duplicated 64-Literal cosine subtrees
     made plan construction the dominant cost (profiled on q_ann_recall)."""
-    v = as_double(F.col(vec_col))
+    v = as_double(F.col(VEC_COL))
     sims = F.transform(
         mat_lit(centroids), lambda c: cosine_rounded(v, c, 9)
     )
     return vectors.withColumn("__sims", sims).withColumn(
-        out_col,
+        "cluster_id",
         (F.array_position(F.col("__sims"), F.array_max(F.col("__sims"))) - 1).cast(
             "int"
         ),
@@ -138,13 +134,10 @@ def ivf_topk(
     vectors: DataFrame,
     centroids: list[list[float]],
     query_vec: list[float],
-    k: int = 10,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN: score centroids against the query driver-side (tiny, pure
-    Python arithmetic), scan only the ``n_probe`` best clusters, exact top-k
+    Python arithmetic), scan only the ``n_probe`` best clusters, exact top-10
     within them. Recall < 1 by construction; scan fraction ≈ n_probe/K."""
     import math
 
@@ -156,27 +149,22 @@ def ivf_topk(
 
     ranked = sorted(range(len(centroids)), key=lambda i: -cos(centroids[i], query_vec))
     probe = ranked[:n_probe]
-    assigned = assign_ivf_cluster(vectors, centroids, vec_col)
+    assigned = assign_ivf_cluster(vectors, centroids)
     pruned = assigned.filter(F.col("cluster_id").isin(probe))
-    return brute_force_topk(pruned, query_vec, k, id_col, vec_col)
+    return brute_force_topk(pruned, query_vec, 10)
 
 
-def cosine_pairs_above(
-    vectors: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_pairs_above(vectors: DataFrame, threshold: float) -> DataFrame:
     """All-pairs cosine ≥ threshold — brute-force reference implementation.
 
     Kept as the test oracle for ``cluster_pruned_pairs_above`` (the scale
     path); do NOT use this on large inputs — the join is a nested loop over
     N²/2 pairs."""
     lhs = vectors.select(
-        F.col(id_col).alias("id_a"), as_double(F.col(vec_col)).alias("va")
+        F.col(ID_COL).alias("id_a"), as_double(F.col(VEC_COL)).alias("va")
     )
     rhs = vectors.select(
-        F.col(id_col).alias("id_b"), as_double(F.col(vec_col)).alias("vb")
+        F.col(ID_COL).alias("id_b"), as_double(F.col(VEC_COL)).alias("vb")
     )
     return (
         lhs.join(rhs, F.col("id_a") < F.col("id_b"))
@@ -190,9 +178,6 @@ def cluster_pruned_pairs_above(
     vectors: DataFrame,
     centroids: list[list[float]],
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_salt: int = 8,
 ) -> DataFrame:
     """EXACT cosine-threshold self-join with angular cluster pruning — the
     scale path for embedding near-dup (replaces the all-pairs nested loop).
@@ -205,8 +190,8 @@ def cluster_pruned_pairs_above(
     cos(a, b) <= cos(max(0, theta_ij - r_i - r_j)) — if that bound is below
     the threshold, NO pair across (i, j) can qualify and the block is pruned
     without reading a single vector pair; (4) equi-join the surviving cluster
-    blocks (broadcast the tiny admissible-pairs table, salt the block key so
-    K small clusters still spread across the cluster), (5) exact-verify
+    blocks (broadcast the tiny admissible-pairs table, salt the block key 8
+    ways so K small clusters still spread across the cluster), (5) exact-verify
     cosine on the candidates only.
 
     Soundness: step (3) is a proven upper bound, so the output is IDENTICAL
@@ -231,7 +216,7 @@ def cluster_pruned_pairs_above(
         return max(-1.0, min(1.0, x))
 
     base = vectors.select(
-        F.col(id_col).alias("__id"), as_double(F.col(vec_col)).alias("__v")
+        F.col(ID_COL).alias("__id"), as_double(F.col(VEC_COL)).alias("__v")
     )
     sims = F.transform(
         mat_lit(centroids), lambda c: cosine(F.col("__v"), c)
@@ -281,6 +266,7 @@ def cluster_pruned_pairs_above(
     # would hash-partition onto at most K reducers. The probe side derives
     # its salt from a row-unique column; the build side fans out over all
     # salts (standard skew-salting, cf. operators/joins.salted_join).
+    n_salt = 8
     a_x = (
         a.join(F.broadcast(pairs), "ca")
         .withColumn(
@@ -298,35 +284,28 @@ def cluster_pruned_pairs_above(
     )
 
 
-def hyperplane_planes(n_planes: int = 16, dim: int = 64) -> list[list[float]]:
+def hyperplane_planes(n_planes: int = 16) -> list[list[float]]:
     """Deterministic ±1 random-hyperplane family for cosine LSH — NO RNG:
     sign(j, d) is the top bit of a Knuth multiplicative hash of the flat
-    (plane, dim) index. The top bit of w·2654435761 mod 2³² is well-mixed
-    (naive parities of linear forms produce colliding/degenerate planes —
-    pinned by a distinctness test). The same function generates the
-    oracle's literal, so signatures are reproducible across engines,
-    reruns, and backfills — the property that makes LSH bucket assignment
-    a JOIN KEY rather than a session artifact."""
+    (plane, d) index over ``LSH_DIM`` dimensions. The top bit of
+    w·2654435761 mod 2³² is well-mixed (naive parities of linear forms
+    produce colliding/degenerate planes — pinned by a distinctness test).
+    The same function generates the oracle's literal, so signatures are
+    reproducible across engines, reruns, and backfills — the property
+    that makes LSH bucket assignment a JOIN KEY rather than a session
+    artifact."""
     return [
         [
             1.0
-            if (((j * dim + d + 1) * 2654435761) % 2**32) >> 31
+            if (((j * LSH_DIM + d + 1) * 2654435761) % 2**32) >> 31
             else -1.0
-            for d in range(dim)
+            for d in range(LSH_DIM)
         ]
         for j in range(n_planes)
     ]
 
 
-def hyperplane_lsh_pairs_above(
-    vectors: DataFrame,
-    threshold: float,
-    n_planes: int = 16,
-    n_bands: int = 2,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def hyperplane_lsh_pairs_above(vectors: DataFrame, threshold: float) -> DataFrame:
     """Cosine LSH near-dup: random-hyperplane signatures (SimHash for
     embeddings, Charikar 2002), banded like MinHash — candidates collide on
     at least one band of sign bits, then EXACT cosine ≥ threshold verifies.
@@ -334,29 +313,28 @@ def hyperplane_lsh_pairs_above(
     Approximate by design (recall < 1: a near pair whose signs differ in
     every band is missed); the verified candidates are a deterministic
     subset of ``cosine_pairs_above``. Scale shape: signature is a narrow
-    map (n_planes dots per row); candidate generation is a self-equi-join
-    on (band_idx, band_bucket) — never all-pairs; the O(dim) exact cosine
-    runs only on collided pairs. Complements IVF (``ivf_topk``): LSH needs
-    no fitted model, IVF needs no bit budget.
+    map (16 plane dots per row, in 2 bands of 8 bits); candidate
+    generation is a self-equi-join on (band_idx, band_bucket) — never
+    all-pairs; the O(dim) exact cosine runs only on collided pairs.
+    Complements IVF (``ivf_topk``): LSH needs no fitted model, IVF needs
+    no bit budget.
 
-    ``dim`` must match the embedding width: zip_with pads the short side
+    Embeddings must be ``LSH_DIM`` wide: zip_with pads the short side
     with NULLs, which would silently null the dot product — so the plan
-    raises on any row whose vector length ≠ dim."""
-    planes = hyperplane_planes(n_planes, dim)
+    raises on any row whose vector length ≠ ``LSH_DIM``."""
+    n_planes, n_bands = 16, 2
+    planes = hyperplane_planes(n_planes)
     per_band = n_planes // n_bands
-    v = as_double(F.col(vec_col))
-    checked = F.when(F.size(v) == dim, v).otherwise(
+    v = as_double(F.col(VEC_COL))
+    checked = F.when(F.size(v) == LSH_DIM, v).otherwise(
         F.raise_error(
-            F.lit(
-                f"hyperplane_lsh_pairs_above: embedding length != {dim}; "
-                "pass the actual dim= so planes span the vector"
-            )
+            F.lit(f"hyperplane_lsh_pairs_above: embedding length != {LSH_DIM}")
         ).cast("array<double>")
     )
-    base = vectors.select(F.col(id_col).alias("id"), checked.alias("v"))
+    base = vectors.select(F.col(ID_COL).alias("id"), checked.alias("v"))
     # One sign bit per plane as ONE transform over the constant-folded
     # plane matrix (mat_lit): the previous n_planes duplicated 64-Literal
-    # dot subtrees paid n_planes×dim py4j calls at plan-build time.
+    # dot subtrees paid n_planes×LSH_DIM py4j calls at plan-build time.
     bits_arr = F.transform(
         mat_lit(planes), lambda p: (dot(F.col("v"), p) >= 0).cast("int")
     )

@@ -23,6 +23,13 @@ from real_time_rides_data_pipeline_spark.functions.vectors import (
     simhash_bits,
 )
 
+#: The id and text columns of a documents frame.
+ID_COL = "doc_id"
+TEXT_COL = "text"
+
+#: Words per MinHash shingle.
+SHINGLE_WORDS = 3
+
 
 def _require_free(df: DataFrame, *names: str) -> None:
     """Raise if ``df`` already has a column the caller would lose when a
@@ -37,14 +44,10 @@ def _require_free(df: DataFrame, *names: str) -> None:
 
 
 def with_minhash_signature(
-    df: DataFrame,
-    text_col: str = "text",
-    n_hashes: int = 16,
-    shingle_words: int = 3,
-    out_col: str = "minhash",
-    shingles_col: str | None = None,
+    df: DataFrame, n_hashes: int = 16, shingles_col: str | None = None
 ) -> DataFrame:
-    """MinHash signature as array<bigint>: for seed i, min over shingles of
+    """MinHash signature of the 3-word shingles of ``text`` as the
+    array<bigint> column ``minhash``: for seed i, min over shingles of
     xxhash64(shingle, i). One pass, all JVM-side.
 
     ``shingles_col`` additionally keeps the shingle array as an output
@@ -59,7 +62,7 @@ def with_minhash_signature(
     if shingles_col is None:
         _require_free(df, "__mh_sh")
     keep = shingles_col or "__mh_sh"
-    staged = df.withColumn(keep, word_shingles(F.col(text_col), shingle_words))
+    staged = df.withColumn(keep, word_shingles(F.col(TEXT_COL), SHINGLE_WORDS))
     sig = F.array(
         *[
             F.array_min(
@@ -68,7 +71,7 @@ def with_minhash_signature(
             for i in range(n_hashes)
         ]
     )
-    out = staged.withColumn(out_col, sig)
+    out = staged.withColumn("minhash", sig)
     return out if shingles_col else out.drop(keep)
 
 
@@ -94,13 +97,10 @@ MINHASH_AB: tuple[tuple[int, int], ...] = (
 
 
 def with_minhash_signature_portable(
-    df: DataFrame,
-    text_col: str = "text",
-    shingle_words: int = 3,
-    out_col: str = "minhash",
-    shingles_col: str | None = None,
+    df: DataFrame, shingles_col: str | None = None
 ) -> DataFrame:
-    """ENGINE-PORTABLE MinHash signature (array<bigint>, 16 hashes): one
+    """ENGINE-PORTABLE MinHash signature of the 3-word shingles of
+    ``text`` (column ``minhash``, array<bigint>, 16 hashes): one
     md5-60-bit base hash per shingle reduced mod 2^31-1, then the 16
     per-seed hashes are fixed AFFINE transforms (a_i*h + b_i) mod 2^31-1
     of the shared base — the classic universal family, so the signature
@@ -126,7 +126,7 @@ def with_minhash_signature_portable(
         _require_free(df, "_mh_sh")
     keep = shingles_col or "_mh_sh"
     staged = df.withColumn(
-        keep, word_shingles(F.col(text_col), shingle_words)
+        keep, word_shingles(F.col(TEXT_COL), SHINGLE_WORDS)
     ).withColumn(
         "_mh_base", F.transform(F.col(keep), lambda s: md5_int60(s) % MINHASH_P)
     )
@@ -143,28 +143,25 @@ def with_minhash_signature_portable(
             for a, b in MINHASH_AB
         ]
     )
-    out = staged.withColumn(out_col, sig).drop("_mh_base")
+    out = staged.withColumn("minhash", sig).drop("_mh_base")
     return out if shingles_col else out.drop(keep)
 
 
-def minhash_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    sig_col: str = "minhash",
-    bands: int = 4,
-) -> DataFrame:
-    """LSH banding: split the signature into ``bands`` equal slices; docs
-    sharing any band slice become a candidate pair. Explode is over bands
-    (constant factor), the join is a self-equi-join on (band_idx, band_hash)
-    — a hash shuffle on small keys. Emits (id_a < id_b) distinct pairs."""
-    rows_per_band = F.floor(F.size(sig_col) / bands).cast("int")
+def minhash_candidate_pairs(df: DataFrame) -> DataFrame:
+    """LSH banding: split the ``minhash`` signature into 4 equal slices;
+    docs sharing any band slice become a candidate pair. Explode is over
+    bands (constant factor), the join is a self-equi-join on (band_idx,
+    band_hash) — a hash shuffle on small keys. Emits (id_a < id_b)
+    distinct pairs."""
+    bands = 4
+    rows_per_band = F.floor(F.size("minhash") / bands).cast("int")
     banded = df.select(
-        F.col(id_col),
+        F.col(ID_COL),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
                 lambda b: F.xxhash64(
-                    F.slice(F.col(sig_col), (b * rows_per_band + 1).cast("int"), rows_per_band)
+                    F.slice(F.col("minhash"), (b * rows_per_band + 1).cast("int"), rows_per_band)
                 ),
             )
         ).alias("band_idx", "band_hash"),
@@ -176,31 +173,28 @@ def minhash_candidate_pairs(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col(f"a.{ID_COL}") < F.col(f"b.{ID_COL}")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+            F.col(f"a.{ID_COL}").alias("id_a"), F.col(f"b.{ID_COL}").alias("id_b")
         )
         .distinct()
     )
 
 
 def exact_jaccard_pairs(
-    pairs: DataFrame,
-    shingles: DataFrame,
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
+    pairs: DataFrame, shingles: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
     """Exact-verify candidate pairs: join shingle sets back, compute
     |∩|/|∪|, keep pairs ≥ threshold. Output (id_a, id_b, jaccard).
 
-    ``shingles`` is an ``(id_col, sh)`` frame that must already be
+    ``shingles`` is a ``(doc_id, sh)`` frame that must already be
     materialized (the signature pass's checkpoint): both candidate-side
     joins consume it, and an unmaterialized frame re-derives the full
     docs scan + shingle chain on each side."""
     j = (
-        pairs.join(shingles.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(shingles.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
+        pairs.join(shingles.withColumnRenamed(ID_COL, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
+        .join(shingles.withColumnRenamed(ID_COL, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
         .withColumn(
             "jaccard",
             F.round(
@@ -213,16 +207,9 @@ def exact_jaccard_pairs(
     return j.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
 
 
-def minhash_near_duplicates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 16,
-    bands: int = 4,
-    shingle_words: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """End-to-end MinHash+LSH near-dup: signature → band join → exact verify.
+def minhash_near_duplicates(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """End-to-end MinHash+LSH near-dup over ``(doc_id, text)``: 16-hash
+    signature → 4-band join → exact verify.
 
     The signature table is materialized (``localCheckpoint``) before the band
     self-join: both join branches would otherwise re-evaluate the full
@@ -235,38 +222,33 @@ def minhash_near_duplicates(
     by the exact verify, so the corpus is scanned and tokenized exactly
     once per invocation (0.84× end-to-end against a second scan + shingle
     pass, OPTIMIZATION_r16.md)."""
-    signed = with_minhash_signature(
-        docs, text_col, n_hashes, shingle_words, shingles_col="__sh"
-    ).select(id_col, "__sh", "minhash")
+    signed = with_minhash_signature(docs, shingles_col="__sh").select(
+        ID_COL, "__sh", "minhash"
+    )
     signed = signed.localCheckpoint(eager=True)
-    cands = minhash_candidate_pairs(signed, id_col, "minhash", bands)
-    shingles = signed.select(id_col, F.col("__sh").alias("sh"))
-    return exact_jaccard_pairs(cands, shingles, id_col, threshold)
+    cands = minhash_candidate_pairs(signed)
+    shingles = signed.select(ID_COL, F.col("__sh").alias("sh"))
+    return exact_jaccard_pairs(cands, shingles, threshold)
 
 
-def simhash_near_duplicates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup: 32-bit signature from token hashes; candidates
-    share at least one of 4 byte-bands (guarantees recall for distance ≤ 3
-    within any single band difference... pigeonhole: d ≤ 3 < 4 bands ⇒ at
-    least one band equal); exact Hamming verify ≤ max_hamming."""
-    n_bands = 4
+def simhash_near_duplicates(docs: DataFrame) -> DataFrame:
+    """SimHash near-dup over ``(doc_id, text)``: 32-bit signature from
+    token hashes; candidates share at least one of 4 byte-bands
+    (guarantees recall for distance ≤ 3 within any single band
+    difference... pigeonhole: d ≤ 3 < 4 bands ⇒ at least one band equal);
+    exact Hamming verify ≤ 3."""
+    bits, n_bands = 32, 4
     band_bits = bits // n_bands
     signed = docs.select(
-        F.col(id_col),
+        F.col(ID_COL),
         simhash_bits(
-            F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t)), bits
+            F.transform(tokens(F.col(TEXT_COL)), lambda t: F.xxhash64(t)), bits
         ).alias("simhash"),
     )
     # Materialize before the self-join (same rationale as MinHash above).
     signed = signed.localCheckpoint(eager=True)
     banded = signed.select(
-        id_col,
+        ID_COL,
         "simhash",
         F.posexplode(
             F.transform(
@@ -286,11 +268,11 @@ def simhash_near_duplicates(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col(f"a.{ID_COL}") < F.col(f"b.{ID_COL}")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col(f"a.{ID_COL}").alias("id_a"),
+            F.col(f"b.{ID_COL}").alias("id_b"),
             F.col("a.simhash").alias("sh_a"),
             F.col("b.simhash").alias("sh_b"),
         )
@@ -298,12 +280,12 @@ def simhash_near_duplicates(
     )
     return (
         cands.withColumn("hamming", hamming64(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .select("id_a", "id_b", "hamming")
     )
 
 
-def _span_positions(df, n, id_col, text_col):
+def _span_positions(df, n):
     """Shared positional n-token span generator: returns (tokenized frame,
     exploded (id, __span) positions). Explodes POSITIONS with the token
     array as a pass-through column — see ``dup_span_profile`` for why the
@@ -312,28 +294,26 @@ def _span_positions(df, n, id_col, text_col):
     # tk feeds BOTH the span explode and the caller's per-doc span-count
     # projection — checkpoint so the scan + tokenize runs once, not twice.
     tk = df.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("__w")
+        F.col(ID_COL), tokens(F.col(TEXT_COL)).alias("__w")
     ).localCheckpoint(eager=False)
     positions = F.when(
         F.size("__w") >= n, F.sequence(F.lit(1), F.size("__w") - n + 1)
     ).otherwise(F.array().cast("array<int>"))
     ex = tk.select(
-        id_col, "__w", F.explode(positions).alias("__i")
+        ID_COL, "__w", F.explode(positions).alias("__i")
     ).select(
-        id_col,
+        ID_COL,
         F.array_join(F.slice("__w", F.col("__i"), n), " ").alias("__span"),
     )
     return tk, ex
 
 
-def span_novelty_profile(
-    df, n: int = 8, id_col: str = "doc_id", text_col: str = "text"
-):
+def span_novelty_profile(df, n: int = 8):
     """Span-level NOVELTY profile — the first-occurrence complement of
     ``dup_span_profile`` for ingestion-ordered corpora (growing-corpus
     curation: how much of an incoming doc is new text vs already-ingested
     spans): a span position in doc d is NOVEL iff no doc with a smaller
-    ``id_col`` contains the same n-token sequence (the minimum-id owner of
+    ``doc_id`` contains the same n-token sequence (the minimum-id owner of
     each span keeps ALL its positions of it, including within-doc
     repeats). Emits (id, n_spans, n_novel_spans, novelty_ppm) with the
     ppm an exact integer floor division.
@@ -342,27 +322,27 @@ def span_novelty_profile(
     per-span window computes min(id) instead of a distinct-doc count."""
     from pyspark.sql import Window
 
-    tk, ex = _span_positions(df, n, id_col, text_col)
-    g = ex.groupBy("__span", id_col).agg(F.count("*").alias("__pos"))
+    tk, ex = _span_positions(df, n)
+    g = ex.groupBy("__span", ID_COL).agg(F.count("*").alias("__pos"))
     g2 = g.withColumn(
-        "__first", F.min(id_col).over(Window.partitionBy("__span"))
+        "__first", F.min(ID_COL).over(Window.partitionBy("__span"))
     )
-    nov = g2.groupBy(id_col).agg(
+    nov = g2.groupBy(ID_COL).agg(
         F.sum(
-            F.when(F.col(id_col) == F.col("__first"), F.col("__pos"))
+            F.when(F.col(ID_COL) == F.col("__first"), F.col("__pos"))
             .otherwise(0)
         )
         .cast("long")
         .alias("__nov")
     )
     per_doc = tk.select(
-        id_col,
+        ID_COL,
         F.greatest(F.size("__w") - n + 1, F.lit(0))
         .cast("long")
         .alias("n_spans"),
     )
-    return per_doc.join(nov, id_col, "left").select(
-        id_col,
+    return per_doc.join(nov, ID_COL, "left").select(
+        ID_COL,
         "n_spans",
         F.coalesce("__nov", F.lit(0)).cast("long").alias("n_novel_spans"),
         F.when(
@@ -374,9 +354,7 @@ def span_novelty_profile(
     )
 
 
-def dup_span_profile(
-    df: DataFrame, n: int = 8, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def dup_span_profile(df: DataFrame, n: int = 8) -> DataFrame:
     """Span-level exact duplication profile (Lee et al. 2021 ExactSubstr at
     fixed shingle grain): for every POSITIONAL n-token span (duplicates
     within a doc kept — positions matter), a span is duplicated iff the
@@ -405,24 +383,24 @@ def dup_span_profile(
     brute-force positional definition."""
     from pyspark.sql import Window
 
-    tk, ex = _span_positions(df, n, id_col, text_col)
-    g = ex.groupBy("__span", id_col).agg(F.count("*").alias("__pos"))
+    tk, ex = _span_positions(df, n)
+    g = ex.groupBy("__span", ID_COL).agg(F.count("*").alias("__pos"))
     g2 = g.withColumn(
         "__ndocs", F.count("*").over(Window.partitionBy("__span"))
     )
-    dup = g2.groupBy(id_col).agg(
+    dup = g2.groupBy(ID_COL).agg(
         F.sum(F.when(F.col("__ndocs") >= 2, F.col("__pos")).otherwise(0))
         .cast("long")
         .alias("__ndup")
     )
     per_doc = tk.select(
-        id_col,
+        ID_COL,
         F.greatest(F.size("__w") - n + 1, F.lit(0))
         .cast("long")
         .alias("n_spans"),
     )
-    return per_doc.join(dup, id_col, "left").select(
-        id_col,
+    return per_doc.join(dup, ID_COL, "left").select(
+        ID_COL,
         "n_spans",
         F.coalesce("__ndup", F.lit(0)).cast("long").alias("n_dup_spans"),
         (

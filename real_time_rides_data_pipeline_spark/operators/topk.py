@@ -11,26 +11,20 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def top_n(df: DataFrame, order_by: list, n: int = 100) -> DataFrame:
-    """Multi-key sort + limit → ``TakeOrderedAndProject`` (no full shuffle).
-    ``order_by`` is a list of Columns (already .desc()/.asc())."""
-    return df.orderBy(*order_by).limit(n)
+def top_n(df: DataFrame, order_by: list) -> DataFrame:
+    """Multi-key sort + limit 100 → ``TakeOrderedAndProject`` (no full
+    shuffle). ``order_by`` is a list of Columns (already .desc()/.asc())."""
+    return df.orderBy(*order_by).limit(100)
 
 
-def latest_per_key(
-    df: DataFrame,
-    keys: tuple[str, ...] = ("user_id",),
-    ts_col: str = "ts",
-    tiebreak: str | None = "event_id",
-) -> DataFrame:
-    """Latest record per key: ``row_number() OVER (PARTITION BY keys ORDER BY
-    ts DESC[, tiebreak DESC]) = 1``. The deterministic batch twin of the
-    streaming keep-latest-state operator (SURVEY.md §2.5 q_row_number /
-    §2.9 q_asof_latest). One hash shuffle on the keys."""
-    ordering = [F.col(ts_col).desc()]
-    if tiebreak:
-        ordering.append(F.col(tiebreak).desc())
-    w = Window.partitionBy(*keys).orderBy(*ordering)
+def latest_per_key(df: DataFrame) -> DataFrame:
+    """Latest event per user: ``row_number() OVER (PARTITION BY user_id
+    ORDER BY ts DESC, event_id DESC) = 1``. The deterministic batch twin of
+    the streaming keep-latest-state operator (SURVEY.md §2.5 q_row_number /
+    §2.9 q_asof_latest). One hash shuffle on the key."""
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -160,9 +154,8 @@ def global_prefix_sum(
     df: DataFrame,
     order_cols: list[str],
     val_col: str,
-    out_col: str = "cum",
 ) -> DataFrame:
-    """Scale-safe GLOBAL inclusive prefix sum over a total order — the
+    """Scale-safe GLOBAL inclusive prefix sum ``cum`` over a total order — the
     cumulative-weight primitive behind systematic sampling, CDF
     construction, and pro-rata allocation. Same TeraSort shape as
     ``global_row_number``: range shuffle + in-partition cumulative window
@@ -177,6 +170,6 @@ def global_prefix_sum(
     )
     return (
         _ranged_runs(df, order_cols, F.sum(val_col), True)
-        .withColumn(out_col, F.sum(F.col(val_col)).over(w_in) + F.col("__off"))
+        .withColumn("cum", F.sum(F.col(val_col)).over(w_in) + F.col("__off"))
         .drop("__pid", "__off")
     )

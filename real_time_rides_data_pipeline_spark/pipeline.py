@@ -12,7 +12,6 @@ the Silver sink boundary and runs Gold with unbounded complete-mode state).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from real_time_rides_data_pipeline_spark.operators import (
     drop_malformed,
@@ -25,7 +24,6 @@ from real_time_rides_data_pipeline_spark.operators import (
     with_trip_distance,
     with_trip_duration,
 )
-from real_time_rides_data_pipeline_spark.schemas import RIDE_SCHEMA
 from real_time_rides_data_pipeline_spark.sinks import (
     HAVE_DELTA,
     foreach_batch_merge,
@@ -44,9 +42,8 @@ def silver_transform(bronze_df: DataFrame, watermark: str = "10 minutes") -> Dat
     Order matters for scale: malformed filter and validity predicate run
     BEFORE the stateful dedup so state stores only ever hold valid rows.
     """
-    valid_json = drop_malformed(bronze_df, json_col="raw_json_data")
-    parsed = parse_json_events(valid_json, json_col="raw_json_data", schema=RIDE_SCHEMA)
-    rides = expand_struct(parsed, "data", "timestamp")
+    parsed = parse_json_events(drop_malformed(bronze_df))
+    rides = expand_struct(parsed, "timestamp")
     if not rides.isStreaming:
         # Parse-once barrier: CollapseProject would otherwise inline from_json
         # into every downstream field reference (the validity filter alone
@@ -67,9 +64,7 @@ def silver_transform(bronze_df: DataFrame, watermark: str = "10 minutes") -> Dat
 
 
 def gold_transform(
-    silver_df: DataFrame,
-    watermark: str | None = "10 minutes",
-    with_processing_time: bool = False,
+    silver_df: DataFrame, watermark: str | None = "10 minutes"
 ) -> DataFrame:
     """Silver rides → hourly-per-driver aggregate (03:46-67).
 
@@ -80,7 +75,7 @@ def gold_transform(
     src = silver_df
     if watermark is not None and silver_df.isStreaming:
         src = silver_df.withWatermark("event_timestamp", watermark)
-    return hourly_driver_agg(src, with_processing_time=with_processing_time)
+    return hourly_driver_agg(src)
 
 
 def batch_pipeline(bronze_df: DataFrame) -> DataFrame:

@@ -41,7 +41,7 @@ __all__ = ["registry", "register"]
 )
 def q_cast_project(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").withColumnRenamed("ts", "timestamp")
-    return ops.cast_project(ev, value_col="event_id", ts_col="timestamp")
+    return ops.cast_project(ev, value_col="event_id")
 
 
 @register(
@@ -94,7 +94,7 @@ def q_struct_star(spark, sf_dir):
     parsed = ops.parse_json_events(
         ev, json_col="props", schema=T.StructType([T.StructField("k", T.IntegerType())])
     )
-    return ops.expand_struct(parsed, "data", "event_id")
+    return ops.expand_struct(parsed, "event_id")
 
 
 @register(
@@ -315,7 +315,7 @@ def q_gold_point_lookup(spark, sf_dir):
 )
 def q_topn(spark, sf_dir):
     g = _gold_twin(spark, sf_dir)
-    return ops.top_n(g, [F.col("window_end").desc(), F.col("user_id").asc()], 100)
+    return ops.top_n(g, [F.col("window_end").desc(), F.col("user_id").asc()])
 
 
 @register(
@@ -329,7 +329,7 @@ def q_row_number(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
-    return ops.latest_per_key(ev, keys=("user_id",), ts_col="ts", tiebreak="event_id")
+    return ops.latest_per_key(ev)
 
 
 # =========================================================================
@@ -348,7 +348,7 @@ def q_join_inner(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders")
     return J.join_fact_dim(
-        li, o, li.l_orderkey == o.o_orderkey, "inner", broadcast_dim=True
+        li, o, li.l_orderkey == o.o_orderkey, "inner"
     ).select("l_orderkey", "l_linenumber", "o_custkey", "o_orderstatus", "l_extendedprice")
 
 
@@ -362,7 +362,7 @@ def q_join_left(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     return J.join_fact_dim(
-        o, c, o.o_custkey == c.c_custkey, "left", broadcast_dim=True
+        o, c, o.o_custkey == c.c_custkey, "left"
     ).select("o_orderkey", "o_totalprice", "c_name", "c_mktsegment")
 
 

@@ -320,7 +320,7 @@ def q_pagerank(spark, sf_dir):
         .distinct()
     )
     edges = e0.unionAll(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    ranks = pagerank_int(edges, iterations=3, scale=10**12, damping_pct=85)
+    ranks = pagerank_int(edges)
     return (
         ranks.select("node", F.col("r").alias("rank_scaled"))
         .orderBy(F.desc("rank_scaled"), "node")
@@ -1708,7 +1708,7 @@ def q_max_concurrency(spark, sf_dir):
             "e"
         ),
     )
-    return sweep_max_concurrency(iv, "s", "e", unit="day")
+    return sweep_max_concurrency(iv)
 
 
 @register(

@@ -1158,10 +1158,10 @@ def _char_bigrams(col):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _fitted_bigram_vocab(d, sf_dir: str, top: int = 64) -> list[str]:
-    """Corpus-wide top-``top`` char bigrams by (count DESC, bigram ASC) —
-    a deterministic total order, so the fit is replayable. The collect is
-    BOUNDED (``top`` two-char strings, ~128 bytes) — the fit-small/
+def _fitted_bigram_vocab(d) -> list[str]:
+    """Corpus-wide top-64 char bigrams by (count DESC, bigram ASC) — a
+    deterministic total order, so the fit is replayable. The collect is
+    BOUNDED (64 two-char strings, ~128 bytes) — the fit-small/
     broadcast-big shape shared with bloom words and k-means centroids.
     Refit on EVERY call: no module-level memo of data-derived results —
     each bench/oracle invocation computes from the parquet inputs."""
@@ -1170,7 +1170,7 @@ def _fitted_bigram_vocab(d, sf_dir: str, top: int = 64) -> list[str]:
         .groupBy("g")
         .count()
         .orderBy(F.col("count").desc(), F.col("g"))
-        .limit(top)
+        .limit(64)
         .collect()
     )
     return [r["g"] for r in rows]
@@ -1214,7 +1214,7 @@ def _fitted_bigram_vocab(d, sf_dir: str, top: int = 64) -> list[str]:
 )
 def q_charlm_coverage(spark, sf_dir):
     d = _t(spark, sf_dir, "documents", parallel=True)
-    vocab = _fitted_bigram_vocab(d, sf_dir)
+    vocab = _fitted_bigram_vocab(d)
     bg = _char_bigrams(F.col("text"))
     n_in = F.size(F.filter(bg, lambda b: b.isin(*vocab))).cast("long")
     return (

@@ -64,7 +64,7 @@ def q_asof_latest(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").filter(
         F.col("ts") <= F.lit("2024-01-15 00:00:00").cast("timestamp")
     )
-    return latest_per_key(ev, keys=("user_id",), ts_col="ts", tiebreak="event_id").select(
+    return latest_per_key(ev).select(
         "user_id",
         F.col("ts").alias("asof_ts"),
         F.col("value").alias("asof_value"),
@@ -198,9 +198,9 @@ def q_minhash_est_jaccard(spark, sf_dir):
     d = _t(spark, sf_dir, "documents", parallel=True).select("doc_id", "text")
     # shingles_col: one word_shingles evaluation feeds both the 64-hash
     # signature and the exact-jaccard `sh` sets (0.76×, OPTIMIZATION_r16.md).
-    s = TD.with_minhash_signature(
-        d, "text", n_hashes=64, shingle_words=3, shingles_col="sh"
-    ).select("doc_id", "sh", F.col("minhash"))
+    s = TD.with_minhash_signature(d, n_hashes=64, shingles_col="sh").select(
+        "doc_id", "sh", F.col("minhash")
+    )
     # Both self-join branches would recompute the 64x xxhash64 chain.
     s = s.localCheckpoint(eager=True)
     a = s.alias("a")
@@ -847,15 +847,14 @@ def q_cosine_topk(spark, sf_dir):
     return SIM.brute_force_topk(_t(spark, sf_dir, "embeddings"), qv, k=100)
 
 
-def _fitted_centroids(emb, sf_dir: str, k: int = 8, sample_n: int = 512,
-                      seed: int = 7) -> list[list[float]]:
-    """Seeded sampled k-means fit — DETERMINISTIC pure function of its
-    arguments (ordered sample, seeded init, driver Lloyd), so every caller
-    gets the identical model. Refit on EVERY call: no module-level memo of
-    data-derived results — each bench/oracle invocation computes from the
-    parquet inputs; the fit is one bounded sample collect + driver numpy,
-    ~0.2 s."""
-    return SIM.fit_centroids_kmeans(emb, k=k, sample_n=sample_n, seed=seed)
+def _fitted_centroids(emb) -> list[list[float]]:
+    """Seeded sampled k-means fit (k=8 over the first 512 vectors, seed
+    7) — DETERMINISTIC pure function of ``emb`` (ordered sample, seeded
+    init, driver Lloyd), so every caller gets the identical model. Refit
+    on EVERY call: no module-level memo of data-derived results — each
+    bench/oracle invocation computes from the parquet inputs; the fit is
+    one bounded sample collect + driver numpy, ~0.2 s."""
+    return SIM.fit_centroids_kmeans(emb, k=8, sample_n=512, seed=7)
 
 
 @register(
@@ -886,7 +885,7 @@ def q_embed_neardup(spark, sf_dir):
     # the scaling answer there is exact-dedup-first pipeline ordering
     # (q_curation_e2e), not K tuning. Full analysis: BASELINE.md
     # dedup-family probe.
-    cents = _fitted_centroids(emb, sf_dir)
+    cents = _fitted_centroids(emb)
     return SIM.cluster_pruned_pairs_above(emb, cents, 0.4)
 
 
@@ -930,7 +929,7 @@ def q_semdedup(spark, sf_dir):
     # invocation staging); connected_components eagerly checkpoints the
     # edge set, so the candidate machinery executes exactly once per
     # invocation even though the CC loop re-reads edges.
-    cents = _fitted_centroids(emb, sf_dir)
+    cents = _fitted_centroids(emb)
     pairs = SIM.cluster_pruned_pairs_above(emb, cents, 0.4).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
@@ -963,9 +962,9 @@ def q_semdedup(spark, sf_dir):
 )
 def q_ann_ivf(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings", parallel=True)
-    cents = _fitted_centroids(emb, sf_dir)
+    cents = _fitted_centroids(emb)
     qv = _query_vec(spark, sf_dir)
-    return SIM.ivf_topk(emb, cents, qv, k=10, n_probe=3)
+    return SIM.ivf_topk(emb, cents, qv, n_probe=3)
 
 
 # =========================================================================
@@ -2307,7 +2306,7 @@ def _lsh_oracle() -> str:
 
     planes = "[" + ", ".join(
         "[" + ", ".join("1.0" if x > 0 else "-1.0" for x in p) + "]"
-        for p in hyperplane_planes(16, 64)
+        for p in hyperplane_planes(16)
     ) + "]"
     pow8 = "[1, 2, 4, 8, 16, 32, 64, 128]"
     cos = _COSINE_SQL.format(q="b.embedding")

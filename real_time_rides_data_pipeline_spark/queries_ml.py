@@ -738,7 +738,11 @@ def q_knn_classify(spark, sf_dir):
 # =========================================================================
 
 
-def _bpe_oracle_sql(n_merges: int = 4, mode: str = "train") -> str:
+#: Merge rounds of the BPE fit, shared by the Spark leg and its oracle.
+BPE_MERGES = 4
+
+
+def _bpe_oracle_sql(mode: str = "train") -> str:
     """DuckDB twin of the FULL 4-round BPE training loop — what makes
     q_bpe_train value-checked instead of rows-only.
 
@@ -780,7 +784,7 @@ def _bpe_oracle_sql(n_merges: int = 4, mode: str = "train") -> str:
          FROM words
        )"""
     ]
-    for k in range(1, n_merges + 1):
+    for k in range(1, BPE_MERGES + 1):
         parts.append(
             f""", p{k} AS (
          SELECT pr[1] AS l, pr[2] AS r, CAST(sum(n) AS BIGINT) AS freq
@@ -810,7 +814,7 @@ def _bpe_oracle_sql(n_merges: int = 4, mode: str = "train") -> str:
         tail = f""", enc AS (
          SELECT word, CAST(len(string_split(s, {sep})) - 1 AS BIGINT)
                     AS n_tok
-         FROM seg{n_merges}
+         FROM seg{BPE_MERGES}
        ), dw AS (
          SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+'))
                     AS word
@@ -825,18 +829,18 @@ def _bpe_oracle_sql(n_merges: int = 4, mode: str = "train") -> str:
     sel = "\n       UNION ALL ".join(
         f"""SELECT CAST({k} AS INTEGER) AS step, l AS "left", r AS "right",
               l || r AS merged, freq FROM b{k}"""
-        for k in range(1, n_merges + 1)
+        for k in range(1, BPE_MERGES + 1)
     )
     return "".join(parts) + "\n       " + sel
 
 
-def _fit_bpe_merges(words, sf_dir: str, n_merges: int = 4):
+def _fit_bpe_merges(words):
     """BPE merge-table fit — deterministic pure function of the corpus.
     Refit on EVERY call: no module-level memo of data-derived results —
     each bench/oracle invocation computes from the parquet inputs."""
     from real_time_rides_data_pipeline_spark.operators.bpe import train_bpe
 
-    return train_bpe(words, n_merges=n_merges)
+    return train_bpe(words, n_merges=BPE_MERGES)
 
 
 @register(
@@ -865,7 +869,7 @@ def q_bpe_train(spark, sf_dir):
         .groupBy("word")
         .agg(F.count("*").alias("n"))
     )
-    merges = _fit_bpe_merges(words, sf_dir)
+    merges = _fit_bpe_merges(words)
     return spark.createDataFrame(
         merges, "step int, left string, right string, merged string, freq long"
     )
@@ -915,7 +919,7 @@ def q_bpe_encode(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=False)
     )
-    merges = _fit_bpe_merges(words, sf_dir)
+    merges = _fit_bpe_merges(words)
     enc = words.select("word", chars_of("word").alias("seg"))
     for _, l, r, _, _ in merges:
         enc = enc.select("word", merge_pair(F.col("seg"), l, r).alias("seg"))
@@ -1274,7 +1278,7 @@ def _fit_pca_components(emb, sf_dir: str) -> tuple[list[float], list[float]]:
     parquet inputs."""
     from real_time_rides_data_pipeline_spark.operators.pca import fit_top2_gramian
 
-    return fit_top2_gramian(emb, vec_col="embedding")
+    return fit_top2_gramian(emb)
 
 
 @register(
@@ -2082,7 +2086,7 @@ def q_ann_recall(spark, sf_dir):
     )
 
     emb = _t(spark, sf_dir, "embeddings", parallel=True)
-    cents = _fitted_centroids(emb, sf_dir)
+    cents = _fitted_centroids(emb)
     q, pairs, w_top = _knn_pairs(emb)
     exact_top = (
         pairs.withColumn("rn", F.row_number().over(w_top))
@@ -2133,7 +2137,7 @@ def q_ann_recall(spark, sf_dir):
     qv = _query_vec(spark, sf_dir)
     train = emb.filter(F.pmod(F.col("vec_id"), 20) != 0)
     n_match = (
-        SIM.ivf_topk(train, cents, qv, k=10, n_probe=len(cents))
+        SIM.ivf_topk(train, cents, qv, n_probe=len(cents))
         .join(SIM.brute_force_topk(train, qv, k=10), ["vec_id", "cosine_sim"])
         .agg(F.count(F.lit(1)).alias("n_match"))
     )
@@ -2231,7 +2235,6 @@ def q_tcloseness(spark, sf_dir):
         cust.select("c_nationkey", "c_mktsegment", band.alias("band")),
         ["c_nationkey", "c_mktsegment"],
         "band",
-        t_ppm=250000,
     )
     return out.withColumnRenamed("violates_t", "violates_t25")
 
@@ -2344,7 +2347,7 @@ def _jl_oracle_sql() -> str:
         hyperplane_planes,
     )
 
-    m = _jl_planes_sql(hyperplane_planes(n_planes=4, dim=64))
+    m = _jl_planes_sql(hyperplane_planes(n_planes=4))
     return (
         "SELECT vec_id, "
         + ", ".join(
@@ -2384,7 +2387,7 @@ def q_jl_project(spark, sf_dir):
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    planes = hyperplane_planes(n_planes=4, dim=64)
+    planes = hyperplane_planes(n_planes=4)
     xs = as_double(F.col("embedding"))
     projs = F.transform(
         mat_lit(planes), lambda p: F.floor(dot(xs, p) * 1000000).cast("long")

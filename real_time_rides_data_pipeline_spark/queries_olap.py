@@ -1000,7 +1000,7 @@ def q_resize_meta(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.operators import multimodal as MM
 
     d = MM.with_binary_payload(_t(spark, sf_dir, "documents", parallel=True))
-    return MM.resize_images(d, 32, 32).select("doc_id", "resized_len")
+    return MM.resize_images(d).select("doc_id", "resized_len")
 
 
 # =========================================================================

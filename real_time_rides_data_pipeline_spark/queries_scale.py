@@ -1188,7 +1188,7 @@ def q_systematic_sample(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events")
     w = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("wt"))
-    c = global_prefix_sum(w, ["user_id"], "wt", out_col="cum")
+    c = global_prefix_sum(w, ["user_id"], "wt")
     tot = w.agg(F.sum("wt").alias("total")).select(
         F.expr("greatest(total div 50, 1)").alias("stride"),
         F.expr("greatest(total div 50, 1) div 2").alias("noff"),

@@ -1,9 +1,10 @@
-"""Layer schemas for the rides pipeline + fixture-table schemas.
+"""Ride and Bronze schemas for the rides pipeline + fixture-table schemas.
 
 Ride schema mirrors the reference's hand-declared Silver parse schema
-(``/root/reference/src/02_silver_realtime_rides.py:25-34``); bronze/gold follow
-``01_bronze_realtime_rides.py:76`` and the Gold DDL
-(``03_gold_realtime_rides.py:77-87``).
+(``src/02_silver_realtime_rides.py:25-34``); bronze follows
+``01_bronze_realtime_rides.py:76``. The Silver schema is whatever
+``pipeline.silver_transform`` emits, and the Gold columns are
+``ddl.GOLD_DDL_COLUMNS``.
 """
 
 from __future__ import annotations
@@ -31,31 +32,6 @@ BRONZE_SCHEMA = T.StructType(
     [
         T.StructField("raw_json_data", T.StringType(), True),
         T.StructField("timestamp", T.TimestampType(), True),
-    ]
-)
-
-#: Silver: RIDE_SCHEMA + derived columns (02:57-70, 02:99-103) + kafka timestamp.
-SILVER_SCHEMA = T.StructType(
-    list(RIDE_SCHEMA.fields)
-    + [
-        T.StructField("trip_duration_seconds", T.LongType(), True),
-        T.StructField("trip_distance_km", T.DoubleType(), True),
-        T.StructField("timestamp", T.TimestampType(), True),
-        T.StructField("is_suspicious", T.BooleanType(), True),
-    ]
-)
-
-#: Gold: hourly-per-driver aggregate, MERGE key = (window_start, window_end,
-#: driver_id) (03:77-87, condition 03:108).
-GOLD_SCHEMA = T.StructType(
-    [
-        T.StructField("window_start", T.TimestampType(), True),
-        T.StructField("window_end", T.TimestampType(), True),
-        T.StructField("driver_id", T.StringType(), True),
-        T.StructField("total_rides_hourly", T.LongType(), True),
-        T.StructField("avg_fare_hourly", T.DoubleType(), True),
-        T.StructField("total_suspicious_rides_hourly", T.LongType(), True),
-        T.StructField("processing_time", T.TimestampType(), True),
     ]
 )
 

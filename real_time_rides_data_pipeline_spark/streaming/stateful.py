@@ -109,10 +109,11 @@ try:  # pragma: no cover - requires Spark >= 4.0 AND protobuf (the state
         StatefulProcessorHandle,
     )
 
-    HAVE_TWS = True
-except ImportError:  # pragma: no cover
+    _TWS_IMPORT_ERROR: ImportError | None = None
+except ImportError as e:  # pragma: no cover
     StatefulProcessor = object  # type: ignore[assignment,misc]
-    HAVE_TWS = False
+    _TWS_IMPORT_ERROR = e
+HAVE_TWS = _TWS_IMPORT_ERROR is None
 
 TOPK_OUTPUT = T.StructType(
     [
@@ -181,8 +182,10 @@ class TopValuesProcessor(StatefulProcessor):
 def running_top_values(events: DataFrame) -> DataFrame:
     """Per-user top-2 tracker over (user_id, event_id, value) rows —
     streaming or batch, update-mode emissions per touched key."""
-    if not HAVE_TWS:  # pragma: no cover
-        raise NotImplementedError("transformWithState requires Spark >= 4.0")
+    if not HAVE_TWS:
+        raise NotImplementedError(
+            f"transformWithState is unavailable: {_TWS_IMPORT_ERROR}"
+        ) from _TWS_IMPORT_ERROR
     return events.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=TopValuesProcessor(),
         outputStructType=TOPK_OUTPUT,

@@ -65,13 +65,13 @@ def main() -> None:
     for rep in range(REPS):
         print(f"--- rep {rep} ---")
         emb = _t(spark, SF_DIR, "embeddings", parallel=True)
-        cents = phase("sd.fit", lambda: _fitted_centroids(emb, SF_DIR))
+        cents = phase("sd.fit", lambda: _fitted_centroids(emb))
         pp = SIM.cluster_pruned_pairs_above(emb, cents, 0.4).select(
             F.col("id_a").alias("src"), F.col("id_b").alias("dst")
         )
         phase("sd.A pairjoin noop", lambda: pp.write.format("noop").mode("overwrite").save())
         release_persisted(spark)
-        cents = _fitted_centroids(emb, SF_DIR)
+        cents = _fitted_centroids(emb)
         pp = SIM.cluster_pruned_pairs_above(emb, cents, 0.4).select(
             F.col("id_a").alias("src"), F.col("id_b").alias("dst")
         )

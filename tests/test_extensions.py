@@ -294,7 +294,7 @@ def test_ivf_recall_at_10_floor(spark):
         brute = {r["vec_id"] for r in SIM.brute_force_topk(emb, qv, k=10).collect()}
         ivf = {
             r["vec_id"]
-            for r in SIM.ivf_topk(emb, cents, qv, k=10, n_probe=3).collect()
+            for r in SIM.ivf_topk(emb, cents, qv, n_probe=3).collect()
         }
         recalls.append(len(brute & ivf) / 10)
     assert sum(recalls) / len(recalls) >= 0.5, recalls
@@ -373,7 +373,7 @@ def test_hyperplane_planes_distinct_and_balanced():
         hyperplane_planes,
     )
 
-    planes = hyperplane_planes(16, 64)
+    planes = hyperplane_planes(16)
     assert len({tuple(p) for p in planes}) == 16
     for p in planes:  # roughly balanced signs — not constant planes
         pos = sum(1 for x in p if x > 0)
@@ -505,12 +505,12 @@ def test_ivf_recall_floor_and_full_probe_exactness(spark):
     ]
     ivf3 = {
         r.vec_id
-        for r in SIM.ivf_topk(emb, cents, qv, k=10, n_probe=3).collect()
+        for r in SIM.ivf_topk(emb, cents, qv, n_probe=3).collect()
     }
     assert len(ivf3 & set(brute10)) / 10 >= 0.5, (ivf3, brute10)
     ivf_all = {
         r.vec_id
-        for r in SIM.ivf_topk(emb, cents, qv, k=10, n_probe=8).collect()
+        for r in SIM.ivf_topk(emb, cents, qv, n_probe=8).collect()
     }
     assert ivf_all == set(brute10), (ivf_all, brute10)
 

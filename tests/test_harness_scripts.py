@@ -65,6 +65,19 @@ def _package_sources() -> dict[str, str]:
     return out
 
 
+def _caller_sources() -> dict[str, str]:
+    """The package plus every place that may call it: tests/, perfbench/,
+    scripts/, bench.py and __spark_entry__.py."""
+    sources = _package_sources()
+    others = [os.path.join(REPO_DIR, f) for f in ("bench.py", "__spark_entry__.py")]
+    for sub in ("tests", "perfbench", "scripts"):
+        others += glob.glob(os.path.join(REPO_DIR, sub, "**", "*.py"), recursive=True)
+    for path in others:
+        with open(path) as f:
+            sources[os.path.relpath(path, REPO_DIR)] = f.read()
+    return sources
+
+
 def test_package_carries_no_scale_claims_or_round_history():
     """Docstrings, comments and registry descriptions state what the code
     does at the sizes it is measured at, and the constraints a reader
@@ -108,13 +121,7 @@ def test_every_package_function_has_a_caller():
                     yield n.value
 
     package = _package_sources()
-    others = [os.path.join(REPO_DIR, f) for f in ("bench.py", "__spark_entry__.py")]
-    for sub in ("tests", "perfbench", "scripts"):
-        others += glob.glob(os.path.join(REPO_DIR, sub, "**", "*.py"), recursive=True)
-    sources = dict(package)
-    for path in others:
-        with open(path) as f:
-            sources[os.path.relpath(path, REPO_DIR)] = f.read()
+    sources = _caller_sources()
 
     refs = collections.Counter()
     candidates = []
@@ -137,6 +144,67 @@ def test_every_package_function_has_a_caller():
                     candidates.append((rel, node.name, own))
     uncalled = [f"{rel}:{name}" for rel, name, own in candidates if refs[name] <= own]
     assert uncalled == [], uncalled
+
+
+#: Defaulted parameters that keep one value yet stay settable, with why.
+ONE_VALUE_OPTIONS = {
+    ("pipeline.py", "run_streaming_silver", "trigger_seconds"): (
+        "perfbench/medallion.py passes trigger_seconds=None by keyword"
+    ),
+    ("pipeline.py", "run_streaming_gold", "trigger_seconds"): (
+        "perfbench/medallion.py passes trigger_seconds=None by keyword"
+    ),
+}
+
+
+def test_every_package_option_takes_two_values():
+    """Every defaulted parameter of a top-level package function (query
+    keys ``q_*`` aside) is set to a value other than its default by some
+    call, by position or keyword, comparing source text. A ``*args`` or
+    ``**kwargs`` call counts as setting every parameter. A parameter that
+    only ever takes its default is a constant."""
+    import ast
+    import collections
+
+    package = _package_sources()
+    trees = {rel: ast.parse(src) for rel, src in _caller_sources().items()}
+    calls = collections.defaultdict(list)
+    for tree in trees.values():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                name = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+                calls[name].append(n)
+
+    def varied(fn, name, index, default):
+        for c in calls[fn]:
+            if any(isinstance(a, ast.Starred) for a in c.args) or any(
+                k.arg is None for k in c.keywords
+            ):
+                return True
+            passed = [ast.unparse(k.value) for k in c.keywords if k.arg == name]
+            if index is not None and index < len(c.args):
+                passed.append(ast.unparse(c.args[index]))
+            if any(v != default for v in passed):
+                return True
+        return False
+
+    one_value = []
+    for rel in package:
+        for node in trees[rel].body:
+            if not isinstance(node, ast.FunctionDef) or node.name.startswith("q_"):
+                continue
+            a = node.args
+            pos = a.posonlyargs + a.args
+            defaults = [None] * (len(pos) - len(a.defaults)) + a.defaults
+            params = [(arg.arg, i, d) for i, (arg, d) in enumerate(zip(pos, defaults)) if d]
+            params += [(arg.arg, None, d) for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+            for name, index, default in params:
+                key = (os.path.basename(rel), node.name, name)
+                if key in ONE_VALUE_OPTIONS:
+                    continue
+                if not varied(node.name, name, index, ast.unparse(default)):
+                    one_value.append(f"{rel}:{node.name}({name}={ast.unparse(default)})")
+    assert one_value == [], f"{len(one_value)} one-value options:\n" + "\n".join(one_value)
 
 
 def test_query_modules_leave_input_staging_to_the_helpers():

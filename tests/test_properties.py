@@ -903,7 +903,7 @@ def test_pagerank_int_matches_python_reference(spark, n, edge_idx):
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r.node: r.r
-        for r in pagerank_int(df, iterations=3, scale=10**9, damping_pct=85).collect()
+        for r in pagerank_int(df, scale=10**9).collect()
     }
     want = _pagerank_int_py(edges, iterations=3, scale=10**9, damping=85)
     assert got == want, (edges, got, want)
@@ -1067,7 +1067,7 @@ def test_sweep_max_concurrency_matches_brute_force(spark, iv):
     df = spark.createDataFrame(rows, "s timestamp, e timestamp")
     got = {
         r["day"]: (r["max_concurrent"], r["first_peak_ts"])
-        for r in sweep_max_concurrency(df, "s", "e", unit="day").collect()
+        for r in sweep_max_concurrency(df).collect()
     }
     # Python mirror: split at midnight, evaluate concurrency(t) at every
     # piece boundary of the day (half-open: s <= t < e).

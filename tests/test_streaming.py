@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -71,11 +72,10 @@ def test_generator_is_deterministic():
     assert [e["json"] for e in a] == [e["json"] for e in b]
 
 
-def test_silver_stream_equals_batch(spark, workdir, bronze_input):
-    """Exact stream≡batch equality needs a watermark wide enough that no
-    generated event is dropped (batch ignores watermarks); the tight-
-    watermark late-drop contract is pinned separately below."""
-    input_path, events = bronze_input
+@pytest.fixture(scope="module")
+def silver_stream(spark, workdir, bronze_input):
+    """The Silver stream's output over ``bronze_input``, drained once."""
+    input_path, _ = bronze_input
     silver_path = f"{workdir}/silver"
     q = run_streaming_silver(
         parquet_stream(spark, input_path, BRONZE_SCHEMA),
@@ -86,7 +86,15 @@ def test_silver_stream_equals_batch(spark, workdir, bronze_input):
     )
     q.processAllAvailable()
     q.stop()
+    return silver_path
 
+
+def test_silver_stream_equals_batch(spark, bronze_input, silver_stream):
+    """Exact stream≡batch equality needs a watermark wide enough that no
+    generated event is dropped (batch ignores watermarks); the tight-
+    watermark late-drop contract is pinned separately below."""
+    input_path, events = bronze_input
+    silver_path = silver_stream
     streamed = spark.read.parquet(silver_path)
     batch = silver_transform(spark.read.parquet(input_path))
     cols = ["ride_id", "event_timestamp", "fare", "trip_duration_seconds", "is_suspicious"]
@@ -103,11 +111,9 @@ def test_silver_stream_equals_batch(spark, workdir, bronze_input):
     assert 0.05 * streamed.count() <= susp <= 0.22 * streamed.count()
 
 
-def test_gold_stream_merge_equals_batch(spark, workdir, bronze_input):
+def test_gold_stream_merge_equals_batch(spark, workdir, bronze_input, silver_stream):
     input_path, _ = bronze_input
-    silver_path = f"{workdir}/silver"  # written by the previous test
-    if not os.path.exists(silver_path):
-        pytest.skip("silver test must run first")
+    silver_path = silver_stream
     gold_path = f"{workdir}/gold"
     q = run_streaming_gold(
         parquet_stream(spark, silver_path, spark.read.parquet(silver_path).schema),
@@ -262,6 +268,26 @@ def test_tws_top_values_stream_equals_batch(spark, workdir):
     got = {r.user_id: (r.n_events, r.top1_event_id) for r in df.collect()}
     ev = spark.read.parquet(f"{SMOKE_SF}/events.parquet")
     assert len(got) == ev.select("user_id").distinct().count()
+
+
+def test_tws_unavailable_error_names_the_missing_module(spark, monkeypatch):
+    """Without protobuf, running_top_values reports the failed import, not
+    a Spark version it may well have."""
+    import importlib.util
+
+    from real_time_rides_data_pipeline_spark.streaming import stateful
+
+    monkeypatch.setitem(sys.modules, "google.protobuf", None)
+    monkeypatch.setitem(sys.modules, "google.protobuf.descriptor", None)
+    spec = importlib.util.spec_from_file_location(
+        "stateful_without_protobuf", stateful.__file__
+    )
+    without = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(without)
+    assert not without.HAVE_TWS
+    with pytest.raises(NotImplementedError, match="google") as err:
+        without.running_top_values(spark.range(1))
+    assert "Spark >= 4.0" not in str(err.value)
 
 
 def test_dedup_within_watermark_drops_retries_with_skewed_timestamps(spark, workdir):
