@@ -1,5 +1,5 @@
-"""Column-expression libraries: text analysis, vector similarity, JSON."""
+"""Column-expression libraries: text analysis, vector similarity."""
 
-from real_time_rides_data_pipeline_spark.functions import jsonx, text, vectors
+from real_time_rides_data_pipeline_spark.functions import text, vectors
 
-__all__ = ["text", "vectors", "jsonx"]
+__all__ = ["text", "vectors"]

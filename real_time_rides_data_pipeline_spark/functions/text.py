@@ -153,11 +153,6 @@ def quality_score(text: Column) -> Column:
 # --- fingerprinting ---------------------------------------------------------
 
 
-def md5_fingerprint(text: Column) -> Column:
-    """Exact-dup content fingerprint (hex md5) — engine-portable."""
-    return F.md5(text)
-
-
 def md5_int60(col: Column) -> Column:
     """First 15 md5 hex nibbles (60 bits) as a nonnegative BIGINT — the
     ENGINE-PORTABLE integer hash of this codebase (xxhash64/hash are

@@ -36,17 +36,6 @@ def join_fact_dim(
     return fact.join(F.broadcast(dim), on, how)
 
 
-def semi_join(fact: DataFrame, other: DataFrame, on) -> DataFrame:
-    """EXISTS filtering (left_semi): keeps fact columns only, never
-    duplicates fact rows on multi-matches — cheaper than inner+distinct."""
-    return fact.join(other, on, "left_semi")
-
-
-def anti_join(fact: DataFrame, other: DataFrame, on) -> DataFrame:
-    """NOT EXISTS filtering (left_anti)."""
-    return fact.join(other, on, "left_anti")
-
-
 def star_join(fact: DataFrame, dims: list[tuple[DataFrame, object]]) -> DataFrame:
     """Chain fact → dim1 → dim2 → …, broadcasting every dim. One scan of the
     fact, zero shuffles when all dims broadcast (the classic star-schema plan).

@@ -376,7 +376,7 @@ def q_join_left(spark, sf_dir):
 def q_join_semi(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 45)
-    return J.semi_join(o, li, o.o_orderkey == li.l_orderkey).select(
+    return o.join(li, o.o_orderkey == li.l_orderkey, "left_semi").select(
         "o_orderkey", "o_totalprice"
     )
 
@@ -390,7 +390,7 @@ def q_join_semi(spark, sf_dir):
 def q_join_anti(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
-    return J.anti_join(c, o, c.c_custkey == o.o_custkey).select("c_custkey", "c_name")
+    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
 
 
 @register(

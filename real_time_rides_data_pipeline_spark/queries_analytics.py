@@ -52,11 +52,9 @@ from real_time_rides_data_pipeline_spark.operators.joins import (
     bucketed_interval_overlap_join,
 )
 from real_time_rides_data_pipeline_spark.registry import _t, register
-from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
-from real_time_rides_data_pipeline_spark.session import scoped_writer_session
 from real_time_rides_data_pipeline_spark.streaming.replay import (
+    replay_stream,
     run_to_completion,
-    stage_batches,
 )
 from real_time_rides_data_pipeline_spark.streaming.stateful import _DECAY_TAPS
 
@@ -494,7 +492,6 @@ def q_stream_decayed(spark, sf_dir):
         foreach_batch_merge,
         merge_upsert_parquet,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
     from real_time_rides_data_pipeline_spark.streaming.stateful import (
         running_decayed_scores,
     )
@@ -504,13 +501,11 @@ def q_stream_decayed(spark, sf_dir):
         .filter(F.col("event_type") == "purchase")
         .select("user_id", "ts", "event_id", "value")
     )
-    inp = stage_batches("decayed", sf_dir, lambda: [ev.repartition(2)])
-    run_dir = _scratch_dir(prefix="decayed_run_")
+    # same state-store shuffle-width knee as q_stateful_running (16 @ 32c)
+    stream, run_dir = replay_stream(
+        spark, "decayed", sf_dir, lambda: [ev.repartition(2)], ev.schema, width=16
+    )
     out, ckpt = f"{run_dir}/out", f"{run_dir}/ckpt"
-    # same state-store shuffle-width knee as q_stateful_running (16 @ 32c),
-    # pinned on a per-writer session clone, never the shared session conf
-    writer = scoped_writer_session(spark, shuffle_partitions=16)
-    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
     run_to_completion(
         foreach_batch_merge(
             running_decayed_scores(stream),
@@ -1150,15 +1145,14 @@ def q_stream_ohlc(spark, sf_dir):
         foreach_batch_merge,
         merge_distributive_parquet,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     ev = _t(spark, sf_dir, "events").select(
         "event_type", "ts", "event_id", "value"
     )
-    inp = stage_batches("ohlcstream", sf_dir, lambda: [ev.repartition(2)])
-    run_dir = _scratch_dir(prefix="ohlcstream_run_")
+    stream, run_dir = replay_stream(
+        spark, "ohlcstream", sf_dir, lambda: [ev.repartition(2)], ev.schema
+    )
     state, ckpt = f"{run_dir}/bars", f"{run_dir}/ckpt"
-    stream = parquet_stream(spark, inp, ev.schema, max_files_per_trigger=1)
 
     def partials(batch_df):
         c = cents(F.col("value"))

@@ -25,11 +25,9 @@ from pyspark.sql.types import StructType
 from real_time_rides_data_pipeline_spark.functions import text as X
 from real_time_rides_data_pipeline_spark.functions.precision import cents
 from real_time_rides_data_pipeline_spark.registry import _t, register
-from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
-from real_time_rides_data_pipeline_spark.session import scoped_writer_session
 from real_time_rides_data_pipeline_spark.streaming.replay import (
+    replay_stream,
     run_to_completion,
-    stage_batches,
 )
 
 # =========================================================================
@@ -612,7 +610,7 @@ def q_paragraph_dedup(spark, sf_dir):
 def q_incremental_dedup(spark, sf_dir):
     d = _t(spark, sf_dir, "documents", parallel=True)
     corpus = d.filter(F.col("doc_id") < 400).select(
-        X.md5_fingerprint(F.col("text")).alias("fp")
+        F.md5(F.col("text")).alias("fp")
     )
     # re-crawl ids live in the +1e6 band; enforce the no-collision
     # precondition in-plan (the guard produces the output column, so
@@ -637,7 +635,7 @@ def q_incremental_dedup(spark, sf_dir):
         )
     )
     new = batch.select(
-        "doc_id", "lang", "source", X.md5_fingerprint(F.col("text")).alias("fp")
+        "doc_id", "lang", "source", F.md5(F.col("text")).alias("fp")
     )
     return new.join(corpus, "fp", "left_anti").select("doc_id", "lang", "source")
 
@@ -2091,16 +2089,12 @@ def q_stream_quantile_merge(spark, sf_dir):
         foreach_batch_merge,
         merge_distributive_parquet,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import (
-        parquet_stream,
-    )
 
     ev = _t(spark, sf_dir, "events").select("event_id", "value")
-    inp = stage_batches("qsketchstream", sf_dir, lambda: [ev.repartition(2)])
-    run_dir = _scratch_dir(prefix="qsketch_run_")
+    stream, run_dir = replay_stream(
+        spark, "qsketchstream", sf_dir, lambda: [ev.repartition(2)], ev.schema, width=4
+    )
     state, ckpt = f"{run_dir}/hist", f"{run_dir}/ckpt"
-    writer = scoped_writer_session(spark, shuffle_partitions=4)
-    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
 
     def fold(batch_df, batch_id: int) -> None:
         partial = (
@@ -2244,20 +2238,16 @@ def q_stream_sliding_distinct(spark, sf_dir):
         foreach_batch_merge,
         merge_distributive_parquet,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import (
-        parquet_stream,
-    )
 
     ev = (
         _t(spark, sf_dir, "events")
         .filter(F.col("event_id") % 3 == 0)
         .select("user_id", "ts")
     )
-    inp = stage_batches("slidedistinct", sf_dir, lambda: [ev.repartition(2)])
-    run_dir = _scratch_dir(prefix="slidedistinct_run_")
+    stream, run_dir = replay_stream(
+        spark, "slidedistinct", sf_dir, lambda: [ev.repartition(2)], ev.schema, width=4
+    )
     state, ckpt = f"{run_dir}/counts", f"{run_dir}/ckpt"
-    writer = scoped_writer_session(spark, shuffle_partitions=4)
-    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
 
     member = (
         stream.withWatermark("ts", "30 days")

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from real_time_rides_data_pipeline_spark.functions import text as X
 from real_time_rides_data_pipeline_spark.functions import vectors as V
-from real_time_rides_data_pipeline_spark.functions.jsonx import json_get_int
 from real_time_rides_data_pipeline_spark.functions.precision import floor_round
 from real_time_rides_data_pipeline_spark.operators import (
     keep_first_per_key,
@@ -28,9 +27,9 @@ from real_time_rides_data_pipeline_spark.registry import _t, register
 from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
 from real_time_rides_data_pipeline_spark.session import scoped_writer_session
 from real_time_rides_data_pipeline_spark.streaming.replay import (
+    replay_stream,
     run_to_completion,
     sentinel_frame,
-    stage_batches,
 )
 
 # =========================================================================
@@ -48,7 +47,8 @@ from real_time_rides_data_pipeline_spark.streaming.replay import (
 )
 def q_json_extract(spark, sf_dir):
     ev = _t(spark, sf_dir, "events", parallel=True)
-    return ev.select("event_id", json_get_int(F.col("props"), "k").alias("prop_k"), "user_id")
+    prop_k = F.get_json_object(F.col("props"), "$.k").cast("int").alias("prop_k")
+    return ev.select("event_id", prop_k, "user_id")
 
 
 @register(
@@ -133,7 +133,7 @@ def q_doc_fingerprint(spark, sf_dir):
     d = _t(spark, sf_dir, "documents", parallel=True)
     return d.select(
         "doc_id",
-        X.md5_fingerprint(F.col("text")).alias("fp"),
+        F.md5(F.col("text")).alias("fp"),
         F.length("text").cast("long").alias("n_chars"),
     )
 
@@ -1501,23 +1501,20 @@ def q_stateful_running(spark, sf_dir):
         foreach_batch_merge,
         merge_upsert_parquet,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
     from real_time_rides_data_pipeline_spark.streaming.stateful import (
         running_user_stats,
     )
 
     ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
-    inp = stage_batches("stateful", sf_dir, lambda: [ev.repartition(2)])
-    run_dir = _scratch_dir(prefix="stateful_run_")
-    out, ckpt = f"{run_dir}/out", f"{run_dir}/ckpt"
     # Stateful shuffle width is frozen into the checkpoint at first batch;
     # size it to the state, not the session default: each state partition
     # costs a state-store (RocksDB) instance load per micro-batch, but too
     # few partitions serialize the Arrow/pandas fold. Sweep at sf0.1 on 32
     # cores: 2→16.1s, 4→10.4s, 8→7.9s, 16→7.2s, 32→8.4s — 16 is the knee.
-    # Pinned on a per-WRITER session clone, never the shared session conf.
-    writer = scoped_writer_session(spark, shuffle_partitions=16)
-    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
+    stream, run_dir = replay_stream(
+        spark, "stateful", sf_dir, lambda: [ev.repartition(2)], ev.schema, width=16
+    )
+    out, ckpt = f"{run_dir}/out", f"{run_dir}/ckpt"
     run_to_completion(
         foreach_batch_merge(
             running_user_stats(stream),
@@ -1580,7 +1577,7 @@ def q_stream_dedup_ttl(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.operators import (
         stream_dedup_within_watermark,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
+    from real_time_rides_data_pipeline_spark.sinks import stream_append_parquet
 
     ev = (
         _t(spark, sf_dir, "events")
@@ -1589,7 +1586,7 @@ def q_stream_dedup_ttl(spark, sf_dir):
     )
     # Two-batch replay: batch 1 seeds the dedup state, batch 2's
     # redeliveries hit it live. No spacer batch is needed here (unlike
-    # _wm_staged_input): dedup STATE commits at the end of the batch that
+    # _wm_replay): dedup STATE commits at the end of the batch that
     # created it — only the FILTER watermark lags a batch, and the 45-day
     # delay keeps it below all data.
     def frames():
@@ -1599,30 +1596,26 @@ def q_stream_dedup_ttl(spark, sf_dir):
         late = ev.filter(F.col("ts") >= cutoff).unionAll(redelivered)
         return [early.coalesce(1), late.coalesce(1)]
 
-    inp = stage_batches("ttl_pre", sf_dir, frames)
-    run_dir = _scratch_dir(prefix="ttldedup_run_")
-    out, ckpt = f"{run_dir}/out", f"{run_dir}/ckpt"
-    writer = scoped_writer_session(spark, shuffle_partitions=2)
-    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
+    stream, run_dir = replay_stream(
+        spark, "ttl_pre", sf_dir, frames, ev.schema, width=2
+    )
     deduped = stream_dedup_within_watermark(
         stream, keys=("event_id", "ts"), event_time_col="ts",
         watermark="45 days",
     )
+    out = f"{run_dir}/out"
     run_to_completion(
-        deduped.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
+        stream_append_parquet(deduped, out, f"{run_dir}/ckpt", trigger_seconds=None)
     )
     return spark.read.parquet(out)
 
 
-def _wm_staged_input(spark, sf_dir):
-    """Shared replay input for the watermark-drop twins (q_watermark,
-    q_stream_late_metrics): the 5% events subset split into an early
-    batch, a ZERO-ROW SPACER, and a late batch carrying stragglers
-    re-keyed 72 h back — far below batch 1's watermark, so ONLY the
-    watermark can drop them, never the dedup. Returns (input_dir,
-    schema).
+def _wm_replay(spark, sf_dir):
+    """The replay stream of the watermark-drop twins (q_watermark,
+    q_stream_late_metrics) and its run dir: the 5% events subset split
+    into an early batch, a ZERO-ROW SPACER, and a late batch carrying
+    stragglers re-keyed 72 h back — far below batch 1's watermark, so
+    ONLY the watermark can drop them, never the dedup.
 
     The spacer is LOAD-BEARING: the watermark a batch FILTERS with
     lags one batch behind the data that produced it (batch N's filter
@@ -1630,7 +1623,12 @@ def _wm_staged_input(spark, sf_dir):
     batch commits batch 1's advance before the late file is read —
     without it the stragglers land in the very batch after the early
     data and sail past the still-1970 filter watermark (verified live:
-    734 rows instead of 500)."""
+    734 rows instead of 500).
+
+    Width 2 per state-width A/Bs (4 -> 2, min-of-2 at sf0.1: q_watermark
+    2.71 -> 2.29 s, q_stream_late_metrics 3.05 -> 2.53 s): over a
+    5%-sampled stream, dedup state is a few thousand keys, and per-batch
+    store commits scale with width."""
     ev = (
         _t(spark, sf_dir, "events")
         .filter(F.col("event_id") % 20 == 0)
@@ -1649,7 +1647,7 @@ def _wm_staged_input(spark, sf_dir):
         late = ev.filter(F.col("ts") >= cutoff).unionAll(stragglers)
         return [early.coalesce(1), ev.limit(0), late.coalesce(1)]
 
-    return stage_batches("wm_pre", sf_dir, frames), ev.schema
+    return replay_stream(spark, "wm_pre", sf_dir, frames, ev.schema, width=2)
 
 
 @register(
@@ -1661,28 +1659,19 @@ def _wm_staged_input(spark, sf_dir):
     "stragglers stamped 72 h in the past — every straggler lands below "
     "the watermark and must be dropped, so the output is exactly the "
     "genuine events. Batches are pre-placed with a zero-row spacer "
-    "(_wm_staged_input — the watermark-commit-lag mechanic). State is "
+    "(_wm_replay — the watermark-commit-lag mechanic). State is "
     "bounded by the watermark (SURVEY §2.6 / §7.4.6).",
 )
 def q_watermark(spark, sf_dir):
 
     from real_time_rides_data_pipeline_spark.operators import stream_dedup
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
+    from real_time_rides_data_pipeline_spark.sinks import stream_append_parquet
 
-    inp, schema = _wm_staged_input(spark, sf_dir)
-    run_dir = _scratch_dir(prefix="wm_run_")
-    out, ckpt = f"{run_dir}/out", f"{run_dir}/ckpt"
-    # Width 2 per a state-width A/B (4 -> 2 = 2.71 -> 2.29 s
-    # min-of-2 at sf0.1): two micro-batches over a 5%-sampled stream —
-    # dedup state is a few thousand keys; per-batch store commits scale
-    # with width.
-    writer = scoped_writer_session(spark, shuffle_partitions=2)
-    stream = parquet_stream(writer, inp, schema, max_files_per_trigger=1)
+    stream, run_dir = _wm_replay(spark, sf_dir)
     deduped = stream_dedup(stream, keys=("event_id", "ts"), event_time_col="ts")
+    out = f"{run_dir}/out"
     run_to_completion(
-        deduped.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
+        stream_append_parquet(deduped, out, f"{run_dir}/ckpt", trigger_seconds=None)
     )
     return spark.read.parquet(out)
 
@@ -1708,14 +1697,13 @@ def q_output_complete(spark, sf_dir):
     import uuid
 
     from real_time_rides_data_pipeline_spark.operators.agg import hourly_driver_agg
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    inp = stage_batches("complete", sf_dir, lambda: [ev.repartition(2)])
-    writer = scoped_writer_session(spark, shuffle_partitions=4)
-    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
+    stream, _ = replay_stream(
+        spark, "complete", sf_dir, lambda: [ev.repartition(2)], ev.schema, width=4
+    )
     agg = hourly_driver_agg(
         stream.withColumn("is_suspicious", F.col("event_type") == "error"),
         ts_col="ts",
@@ -1730,7 +1718,7 @@ def q_output_complete(spark, sf_dir):
         .outputMode("complete")
     )
     # Memory sink registers its view in the session that STARTED the query.
-    return writer.table(name)
+    return stream.sparkSession.table(name)
 
 
 from real_time_rides_data_pipeline_spark.streaming.stateful import HAVE_TWS
@@ -1752,12 +1740,12 @@ def q_stream_dim_join(spark, sf_dir):
     import uuid
 
     from real_time_rides_data_pipeline_spark.operators.joins import join_fact_dim
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_mktsegment")
-    inp = stage_batches("sdjoin", sf_dir, lambda: [ev.repartition(2)])
-    stream = parquet_stream(spark, inp, ev.schema, max_files_per_trigger=1)
+    stream, _ = replay_stream(
+        spark, "sdjoin", sf_dir, lambda: [ev.repartition(2)], ev.schema
+    )
     joined = join_fact_dim(
         stream, cust, on=stream.user_id == cust.c_custkey, how="left"
     ).select("event_id", "user_id", "c_name", "c_mktsegment")
@@ -1788,16 +1776,17 @@ def q_stream_stream_join(spark, sf_dir):
     import uuid
 
     from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
+    from real_time_rides_data_pipeline_spark.streaming.replay import stage_batches
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
     inp = stage_batches("ssjoin", sf_dir, lambda: [ev.repartition(2)])
     # Symmetric-hash join state is per-partition PER SIDE — width pinned on
-    # a per-writer session clone (sweep rationale below), not the shared
-    # session conf. Width 4 per a state-width A/B (8 -> 4 =
-    # 2.66 -> 2.38 s min-of-2 at sf0.1): a stream-stream join keeps TWO
-    # keyed state stores per partition, so per-batch store open/commit
-    # scales with width x sides; size to the buffered state (tens of
-    # thousands of rows here), not the session's fact-table default.
+    # a per-writer session clone, not the shared session conf. Width 4 per
+    # a state-width A/B (8 -> 4 = 2.66 -> 2.38 s min-of-2 at sf0.1): a
+    # stream-stream join keeps TWO keyed state stores per partition, so
+    # per-batch store open/commit scales with width x sides; size to the
+    # buffered state (tens of thousands of rows here), not the session's
+    # fact-table default.
     writer = scoped_writer_session(spark, shuffle_partitions=4)
 
     def side(tag: str, typ: str):
@@ -1830,9 +1819,6 @@ def q_stream_stream_join(spark, sf_dir):
         F.col("click_user").alias("user_id"),
     )
     name = f"ssjoin_out_{uuid.uuid4().hex[:8]}"
-    # Width 8 (sweep: 4→3.7s, 8→4.2s, 16→3.9s, 32→5.7s at sf0.1) keeps 2×8
-    # state-store instances instead of 2×32 for a few thousand buffered
-    # rows.
     run_to_completion(
         joined.writeStream.format("memory")
         .queryName(name)
@@ -1871,8 +1857,6 @@ def q_stream_stream_join(spark, sf_dir):
 def q_stream_stream_join_outer(spark, sf_dir):
     import uuid
 
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
@@ -1886,17 +1870,20 @@ def q_stream_stream_join_outer(spark, sf_dir):
             for hours, uid in ((1, -1), (2, -2))
         ]
 
-    cdir = stage_batches("ssjout_clicks", sf_dir, lambda: frames("click"))
-    vdir = stage_batches("ssjout_views", sf_dir, lambda: frames("view"))
     # Width 2 per a state-width A/B (8 -> 2 = 8.2 -> 5.1 s, 1 -> 7.1,
     # 4 -> 5.9 min-of-2 at sf0.1):
     # ~15k buffered rows per side fit comfortably in 2 partitions; at
     # real scale this parameter sizes to buffered-state volume (the
-    # scoped_writer_session contract), not to CPU count.
-    writer = scoped_writer_session(spark, shuffle_partitions=2)
+    # scoped_writer_session contract), not to CPU count. The view side
+    # joins in the click side's session.
+    clicks, _ = replay_stream(
+        spark, "ssjout_clicks", sf_dir, lambda: frames("click"), base.schema, width=2
+    )
+    views, _ = replay_stream(
+        clicks.sparkSession, "ssjout_views", sf_dir, lambda: frames("view"), base.schema
+    )
 
-    def side(tag: str, path: str):
-        s = parquet_stream(writer, path, base.schema, max_files_per_trigger=1)
+    def side(tag: str, s):
         return s.withWatermark("ts", "10 minutes").select(
             F.col("event_id").alias(f"{tag}_id"),
             F.col("user_id").alias(f"{tag}_user"),
@@ -1904,9 +1891,9 @@ def q_stream_stream_join_outer(spark, sf_dir):
         )
 
     joined = (
-        side("click", cdir)
+        side("click", clicks)
         .join(
-            side("view", vdir),
+            side("view", views),
             (F.col("click_user") == F.col("view_user"))
             & (F.col("view_ts") >= F.col("click_ts") - F.expr("INTERVAL 5 MINUTES"))
             & (F.col("view_ts") <= F.col("click_ts")),
@@ -1925,7 +1912,7 @@ def q_stream_stream_join_outer(spark, sf_dir):
     )
     # Sentinel rows (negative user ids) are dropped from the sink table —
     # a batch filter, safely pushable here.
-    return writer.table(name).filter(F.col("user_id") >= 0)
+    return clicks.sparkSession.table(name).filter(F.col("user_id") >= 0)
 
 
 @register(
@@ -2044,17 +2031,15 @@ def q_tws_top_values(spark, sf_dir):
         foreach_batch_merge,
         merge_upsert_parquet,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
     from real_time_rides_data_pipeline_spark.streaming.stateful import (
         running_top_values,
     )
 
     ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "value")
-    inp = stage_batches("tws", sf_dir, lambda: [ev.repartition(2)])
-    work = _scratch_dir(prefix="tws_run_")
-    out, ckpt = f"{work}/out", f"{work}/ckpt"
-    writer = scoped_writer_session(spark, shuffle_partitions=8)
-    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
+    stream, run_dir = replay_stream(
+        spark, "tws", sf_dir, lambda: [ev.repartition(2)], ev.schema, width=8
+    )
+    out, ckpt = f"{run_dir}/out", f"{run_dir}/ckpt"
     run_to_completion(
         foreach_batch_merge(
             running_top_values(stream),
@@ -2613,10 +2598,6 @@ def q_patchify_meta(spark, sf_dir):
 )
 def q_schema_evolve_stream(spark, sf_dir):
 
-    from real_time_rides_data_pipeline_spark.sources.files import (
-        parquet_stream,
-    )
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
@@ -2631,16 +2612,18 @@ def q_schema_evolve_stream(spark, sf_dir):
         F.unix_micros("ts").alias("us"),
         F.concat(F.lit("s"), (F.col("user_id") % 10)).alias("session_tag"),
     )
-    in1 = stage_batches("sev_v1", sf_dir, lambda: [v1.coalesce(1)])
-    in2 = stage_batches("sev_v2", sf_dir, lambda: [v2.coalesce(1)])
-    work = _scratch_dir(prefix="sev_")
-    out = f"{work}/out"
     # Stateless append streams: width irrelevant, keep the tiny default.
-    writer = scoped_writer_session(spark, shuffle_partitions=2)
-    for i, (src, schema) in enumerate(((in1, v1.schema), (in2, v2.schema))):
+    # The v2 run restarts in the v1 run's session.
+    s1, work = replay_stream(
+        spark, "sev_v1", sf_dir, lambda: [v1.coalesce(1)], v1.schema, width=2
+    )
+    s2, _ = replay_stream(
+        s1.sparkSession, "sev_v2", sf_dir, lambda: [v2.coalesce(1)], v2.schema
+    )
+    out = f"{work}/out"
+    for i, stream in enumerate((s1, s2)):
         run_to_completion(
-            parquet_stream(writer, src, schema, max_files_per_trigger=1)
-            .writeStream.foreachBatch(
+            stream.writeStream.foreachBatch(
                 lambda bdf, _bid: bdf.write.mode("append").parquet(out)
             )
             .option("checkpointLocation", f"{work}/cp{i}")

@@ -103,12 +103,10 @@ from pyspark.sql import functions as F
 
 from real_time_rides_data_pipeline_spark.functions import text as X
 from real_time_rides_data_pipeline_spark.registry import _t, register
-from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
-from real_time_rides_data_pipeline_spark.session import scoped_writer_session
 from real_time_rides_data_pipeline_spark.streaming.replay import (
+    replay_stream,
     run_to_completion,
     sentinel_frame,
-    stage_batches,
 )
 
 # =========================================================================
@@ -417,15 +415,13 @@ def q_stream_cms_merge(spark, sf_dir):
         foreach_batch_merge,
         merge_distributive_parquet,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     d = _t(spark, sf_dir, "documents", parallel=True)
     docs = d.select("doc_id", "text")
-    inp = stage_batches("cmsstream", sf_dir, lambda: [docs.repartition(2)])
-    run_dir = _scratch_dir(prefix="cmsstream_run_")
+    stream, run_dir = replay_stream(
+        spark, "cmsstream", sf_dir, lambda: [docs.repartition(2)], docs.schema, width=8
+    )
     state, ckpt = f"{run_dir}/sketch", f"{run_dir}/ckpt"
-    writer = scoped_writer_session(spark, shuffle_partitions=8)
-    stream = parquet_stream(writer, inp, docs.schema, max_files_per_trigger=1)
 
     def fold(batch_df, batch_id: int) -> None:
         part = build_cms(
@@ -608,8 +604,6 @@ def q_cogroup_asof(spark, sf_dir):
 def q_stream_session(spark, sf_dir):
     import uuid
 
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
-
     ev = (
         _t(spark, sf_dir, "events")
         .filter(F.col("event_id") % 5 == 0)
@@ -626,9 +620,9 @@ def q_stream_session(spark, sf_dir):
             for hours, uid in ((72, -1), (73, -2))
         ]
 
-    inp = stage_batches("sesstream_pre", sf_dir, frames)
-    writer = scoped_writer_session(spark, shuffle_partitions=8)
-    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
+    stream, _ = replay_stream(
+        spark, "sesstream_pre", sf_dir, frames, ev.schema, width=8
+    )
     sessions = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
@@ -645,7 +639,7 @@ def q_stream_session(spark, sf_dir):
         sessions.writeStream.format("memory")
         .queryName(name)
     )
-    return writer.table(name).filter(F.col("user_id") >= 0)
+    return stream.sparkSession.table(name).filter(F.col("user_id") >= 0)
 
 
 # =========================================================================
@@ -1023,27 +1017,18 @@ def q_clamped_running_balance(spark, sf_dir):
 )
 def q_stream_late_metrics(spark, sf_dir):
     from real_time_rides_data_pipeline_spark.operators import stream_dedup
-    from real_time_rides_data_pipeline_spark.queries_ext import (
-        _wm_staged_input,
-    )
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
+    from real_time_rides_data_pipeline_spark.queries_ext import _wm_replay
+    from real_time_rides_data_pipeline_spark.sinks import stream_append_parquet
 
-    # Shared pre-placed replay input with q_watermark (early batch,
-    # zero-row spacer, late+stragglers batch — see _wm_staged_input for
-    # the watermark-commit-lag rationale); one processAllAvailable
-    # replays the schedule and the drop metric reads identically.
-    inp, schema = _wm_staged_input(spark, sf_dir)
-    run_dir = _scratch_dir(prefix="latemetrics_run_")
-    out, ckpt = f"{run_dir}/out", f"{run_dir}/ckpt"
-    # Width 2 per a state-width A/B (4 -> 2 = 3.05 -> 2.53 s
-    # min-of-2 at sf0.1) — same sizing rationale as q_watermark's twin.
-    writer = scoped_writer_session(spark, shuffle_partitions=2)
-    stream = parquet_stream(writer, inp, schema, max_files_per_trigger=1)
+    # The replay q_watermark runs (early batch, zero-row spacer,
+    # late+stragglers batch — see _wm_replay for the watermark-commit-lag
+    # rationale); one drain replays the schedule and the drop metric
+    # reads identically.
+    stream, run_dir = _wm_replay(spark, sf_dir)
     deduped = stream_dedup(stream, keys=("event_id", "ts"), event_time_col="ts")
+    out = f"{run_dir}/out"
     q = run_to_completion(
-        deduped.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
+        stream_append_parquet(deduped, out, f"{run_dir}/ckpt", trigger_seconds=None)
     )
     n_dropped = sum(
         so.numRowsDroppedByWatermark
@@ -1303,16 +1288,14 @@ def q_stream_kmv(spark, sf_dir):
         foreach_batch_merge,
         merge_topk_parquet,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
     from pyspark.sql import Window as W
 
     K = 256
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    inp = stage_batches("kmvstream", sf_dir, lambda: [ev.repartition(2)])
-    run_dir = _scratch_dir(prefix="kmvstream_run_")
+    stream, run_dir = replay_stream(
+        spark, "kmvstream", sf_dir, lambda: [ev.repartition(2)], ev.schema, width=4
+    )
     state, ckpt = f"{run_dir}/sketch", f"{run_dir}/ckpt"
-    writer = scoped_writer_session(spark, shuffle_partitions=4)
-    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
 
     def partial_sketches(batch_df):
         in_a = F.col("event_type") == "purchase"
@@ -1434,16 +1417,14 @@ def q_stream_leaderboard(spark, sf_dir):
         foreach_batch_merge,
         merge_topk_parquet,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
     from pyspark.sql import Window as W
 
     K = 10
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    inp = stage_batches("lbstream", sf_dir, lambda: [ev.repartition(2)])
-    run_dir = _scratch_dir(prefix="lbstream_run_")
+    stream, run_dir = replay_stream(
+        spark, "lbstream", sf_dir, lambda: [ev.repartition(2)], ev.schema, width=4
+    )
     state, ckpt = f"{run_dir}/board", f"{run_dir}/ckpt"
-    writer = scoped_writer_session(spark, shuffle_partitions=4)
-    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
 
     def partials(batch_df):
         # Packing preconditions enforced IN the plan (the _packed_bar_order

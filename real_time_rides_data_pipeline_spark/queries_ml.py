@@ -94,15 +94,12 @@ from pyspark.sql import functions as F
 
 from real_time_rides_data_pipeline_spark.functions.precision import cents
 from real_time_rides_data_pipeline_spark.functions.vectors import as_double
+from real_time_rides_data_pipeline_spark.operators.clean import KNUTH_MULT
 from real_time_rides_data_pipeline_spark.registry import _t, register
-from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
-from real_time_rides_data_pipeline_spark.session import scoped_writer_session
 from real_time_rides_data_pipeline_spark.streaming.replay import (
+    replay_stream,
     run_to_completion,
-    stage_batches,
 )
-
-_KNUTH = 2654435761
 
 # =========================================================================
 # Closed-form OLS via exact integer moments
@@ -194,14 +191,12 @@ def q_stream_linreg(spark, sf_dir):
         foreach_batch_merge,
         merge_distributive_parquet,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     ev = _t(spark, sf_dir, "events").select("event_type", "ts", "value")
-    inp = stage_batches("linregstream", sf_dir, lambda: [ev.repartition(2)])
-    run_dir = _scratch_dir(prefix="linregstream_run_")
+    stream, run_dir = replay_stream(
+        spark, "linregstream", sf_dir, lambda: [ev.repartition(2)], ev.schema, width=8
+    )
     state, ckpt = f"{run_dir}/moments", f"{run_dir}/ckpt"
-    writer = scoped_writer_session(spark, shuffle_partitions=8)
-    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
 
     def fold(batch_df, batch_id: int) -> None:
         merge_distributive_parquet(
@@ -339,7 +334,7 @@ _CM_PRED_SQL = (
 )
 def q_confusion_matrix(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    h = F.pmod(F.pmod(F.col("vec_id"), 97) * F.lit(_KNUTH % 97), F.lit(97))
+    h = F.pmod(F.pmod(F.col("vec_id"), 97) * F.lit(KNUTH_MULT % 97), F.lit(97))
     predicted = F.pmod(
         F.col("label") + F.when(h < 10, 1).otherwise(0), F.lit(10)
     ).cast("long")
@@ -517,8 +512,8 @@ def q_rolling_median(spark, sf_dir):
 # =========================================================================
 
 _GRID_PTS_SQL = f"""SELECT o_orderkey AS pid,
-           ((o_orderkey % 1009) * ({_KNUTH} % 1009)) % 1009 AS x,
-           ((o_custkey % 1013) * ({_KNUTH} % 1013)) % 1013 AS y
+           ((o_orderkey % 1009) * ({KNUTH_MULT} % 1009)) % 1009 AS x,
+           ((o_custkey % 1013) * ({KNUTH_MULT} % 1013)) % 1013 AS y
     FROM orders WHERE o_orderkey % 23 = 0"""
 
 
@@ -544,8 +539,8 @@ def q_grid_join_radius(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     pts = o.filter(F.col("o_orderkey") % 23 == 0).select(
         F.col("o_orderkey").alias("pid"),
-        (F.pmod(F.col("o_orderkey"), 1009) * F.lit(_KNUTH % 1009) % 1009).alias("x"),
-        (F.pmod(F.col("o_custkey"), 1013) * F.lit(_KNUTH % 1013) % 1013).alias("y"),
+        (F.pmod(F.col("o_orderkey"), 1009) * F.lit(KNUTH_MULT % 1009) % 1009).alias("x"),
+        (F.pmod(F.col("o_custkey"), 1013) * F.lit(KNUTH_MULT % 1013) % 1013).alias("y"),
     )
     radius = 32
     cells = pts.select(
@@ -1675,7 +1670,7 @@ def q_brier_score(spark, sf_dir):
 )
 def q_cohens_kappa(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    h = F.pmod(F.pmod(F.col("vec_id"), 97) * F.lit(_KNUTH % 97), F.lit(97))
+    h = F.pmod(F.pmod(F.col("vec_id"), 97) * F.lit(KNUTH_MULT % 97), F.lit(97))
     predicted = F.pmod(
         F.col("label") + F.when(h < 10, 1).otherwise(0), F.lit(10)
     ).cast("long")
@@ -1902,7 +1897,7 @@ def q_tscv_splits(spark, sf_dir):
 )
 def q_mcc(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    h = F.pmod(F.pmod(F.col("vec_id"), 97) * F.lit(_KNUTH % 97), F.lit(97))
+    h = F.pmod(F.pmod(F.col("vec_id"), 97) * F.lit(KNUTH_MULT % 97), F.lit(97))
     pred10 = F.pmod(
         F.col("label") + F.when(h < 10, 1).otherwise(0), F.lit(10)
     )
@@ -4062,14 +4057,12 @@ def q_stream_srm(spark, sf_dir):
         foreach_batch_merge,
         merge_distributive_parquet,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     ev = _t(spark, sf_dir, "events").select("event_type", "user_id")
-    inp = stage_batches("srmstream", sf_dir, lambda: [ev.repartition(2)])
-    run_dir = _scratch_dir(prefix="srmstream_run_")
+    stream, run_dir = replay_stream(
+        spark, "srmstream", sf_dir, lambda: [ev.repartition(2)], ev.schema, width=8
+    )
     state, ckpt = f"{run_dir}/counts", f"{run_dir}/ckpt"
-    writer = scoped_writer_session(spark, shuffle_partitions=8)
-    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
 
     def fold(batch_df, batch_id: int) -> None:
         merge_distributive_parquet(

@@ -29,11 +29,9 @@ from real_time_rides_data_pipeline_spark.functions import text as X
 from real_time_rides_data_pipeline_spark.functions.precision import cents
 from real_time_rides_data_pipeline_spark.operators.clean import KNUTH_MULT
 from real_time_rides_data_pipeline_spark.registry import _t, register
-from real_time_rides_data_pipeline_spark.scratch import scratch_dir as _scratch_dir
-from real_time_rides_data_pipeline_spark.session import scoped_writer_session
 from real_time_rides_data_pipeline_spark.streaming.replay import (
+    replay_stream,
     run_to_completion,
-    stage_batches,
 )
 
 # =========================================================================
@@ -728,13 +726,13 @@ def q_cdc_stream(spark, sf_dir):
         foreach_batch_merge,
         merge_cdc_parquet,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "event_id", cents(F.col("value")).alias("cents")
     )
-    inp = stage_batches("cdcstream", sf_dir, lambda: [ev.repartition(2)])
-    run_dir = _scratch_dir(prefix="cdc_stream_")
+    stream, run_dir = replay_stream(
+        spark, "cdcstream", sf_dir, lambda: [ev.repartition(2)], ev.schema
+    )
     target, ckpt = f"{run_dir}/state", f"{run_dir}/ckpt"
 
     def apply_batch(bdf, batch_id):
@@ -769,7 +767,6 @@ def q_cdc_stream(spark, sf_dir):
             batch_id=batch_id,
         )
 
-    stream = parquet_stream(spark, inp, ev.schema, max_files_per_trigger=1)
     run_to_completion(foreach_batch_merge(stream, ckpt, apply_batch))
     return (
         spark.read.parquet(target)
@@ -1490,16 +1487,12 @@ def q_stream_ivm_retract(spark, sf_dir):
         foreach_batch_merge,
         merge_distributive_parquet,
     )
-    from real_time_rides_data_pipeline_spark.sources.files import (
-        parquet_stream,
-    )
 
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    inp = stage_batches("ivmretract", sf_dir, lambda: [ev.repartition(2)])
-    run_dir = _scratch_dir(prefix="ivmretract_run_")
+    stream, run_dir = replay_stream(
+        spark, "ivmretract", sf_dir, lambda: [ev.repartition(2)], ev.schema, width=4
+    )
     state, ckpt = f"{run_dir}/view", f"{run_dir}/ckpt"
-    writer = scoped_writer_session(spark, shuffle_partitions=4)
-    stream = parquet_stream(writer, inp, ev.schema, max_files_per_trigger=1)
 
     signs = F.when(
         (F.col("event_id") % 10 != 0) & (F.col("event_id") % 7 == 0),

@@ -1,7 +1,7 @@
 """Bounded stream runs over a file replay (tests, benchmarks, backfills):
-stage the replay input once per process, start a query, drain every
-available micro-batch, stop it — plus the sentinel row that flushes a
-watermark.
+stage the replay input once per process, open it as a stream with its
+own run directory, drain every available micro-batch, stop the query —
+plus the sentinel row that flushes a watermark.
 
 A file source lists new files in modification-time order, so a
 directory whose files are stamped in order replays the same micro-batch
@@ -15,11 +15,14 @@ import os
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from real_time_rides_data_pipeline_spark.scratch import staged
+from real_time_rides_data_pipeline_spark.scratch import scratch_dir, staged
+from real_time_rides_data_pipeline_spark.session import scoped_writer_session
+from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
 #: Seconds between the mtimes of consecutive frames. Filesystem mtime
 #: granularity can be as coarse as 1-2 s, so files written back to back
@@ -58,6 +61,29 @@ def stage_batches(
                 os.utime(os.path.join(d, f), (t, t))
 
     return staged((tag, sf_dir), write)
+
+
+def replay_stream(
+    spark: SparkSession,
+    tag: str,
+    sf_dir: str,
+    frames: Callable[[], list[DataFrame]],
+    schema: T.StructType,
+    width: int | None = None,
+) -> tuple[DataFrame, str]:
+    """The staged replay of ``frames()`` as a stream, one file per
+    micro-batch, and a fresh scratch directory for this run's sink and
+    checkpoint.
+
+    The input is staged once per process per ``(tag, sf_dir)``
+    (``stage_batches``). With ``width``, the stream runs in a
+    ``scoped_writer_session`` clone whose stateful shuffle width is
+    pinned to it; without, in ``spark`` itself — pass another stream's
+    ``sparkSession`` to join or restart in that stream's session."""
+    inp = stage_batches(tag, sf_dir, frames)
+    session = spark if width is None else scoped_writer_session(spark, width)
+    stream = parquet_stream(session, inp, schema, max_files_per_trigger=1)
+    return stream, scratch_dir(prefix=f"{tag}_run_")
 
 
 def sentinel_frame(

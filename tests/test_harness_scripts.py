@@ -251,3 +251,40 @@ def test_query_modules_leave_input_staging_to_the_helpers():
             ):
                 hits.append(f"{rel}:{node.lineno}: module-level memo container")
     assert hits == [], "\n".join(hits)
+
+
+#: Query keys that open a staged replay without ``replay_stream``, with why.
+OWN_REPLAY_KEYS = {
+    "q_stream_stream_join": "reads both staged files in one micro-batch "
+    "(maxFilesPerTrigger=2)",
+    "q_stream_restart_recovery": "writes input while the query is down",
+    "q_stream_restart_evolve": "writes input while the query is down",
+}
+
+
+def test_query_modules_open_staged_streams_through_replay_stream():
+    """Query keys open a staged replay only through
+    ``streaming.replay.replay_stream``: no ``stage_batches``,
+    ``parquet_stream`` or ``scoped_writer_session`` call in a
+    ``queries*.py`` module outside the keys in ``OWN_REPLAY_KEYS``."""
+    import ast
+
+    glue = {"stage_batches", "parquet_stream", "scoped_writer_session"}
+    hits, exempt_used = [], set()
+    for rel, src in _package_sources().items():
+        if not os.path.basename(rel).startswith("queries"):
+            continue
+        for top in ast.parse(src).body:
+            owner = getattr(top, "name", None)
+            for n in ast.walk(top):
+                if not isinstance(n, ast.Call):
+                    continue
+                name = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+                if name not in glue:
+                    continue
+                if owner in OWN_REPLAY_KEYS:
+                    exempt_used.add(owner)
+                else:
+                    hits.append(f"{rel}:{n.lineno}: {owner}: {name}(")
+    assert hits == [], "\n".join(hits)
+    assert exempt_used == set(OWN_REPLAY_KEYS)

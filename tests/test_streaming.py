@@ -27,6 +27,7 @@ from real_time_rides_data_pipeline_spark.schemas import BRONZE_SCHEMA
 from real_time_rides_data_pipeline_spark.sinks import merge_upsert_parquet
 from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 from real_time_rides_data_pipeline_spark.streaming.replay import (
+    replay_stream,
     run_to_completion,
     sentinel_frame,
     stage_batches,
@@ -1255,6 +1256,32 @@ def test_stage_batches_second_call_is_a_pure_lookup(spark, workdir):
     assert again == first
     assert calls == [1]
     assert set(tracker.getJobIdsForGroup()) - jobs_before == set()
+
+
+def test_replay_stream_pins_width_on_a_clone_only(spark, workdir):
+    """With a width, the stream runs in a session clone whose shuffle
+    width is pinned and the parent's width is left as it was; without
+    one, it runs in the parent session. One tag stages its frames once,
+    and every call gets its own run dir."""
+    calls = []
+
+    def frames():
+        calls.append(1)
+        return [spark.range(3).coalesce(1)]
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != "3"
+    schema = spark.range(0).schema
+    pinned, run1 = replay_stream(spark, "replay_width", workdir, frames, schema, width=3)
+    plain, run2 = replay_stream(spark, "replay_width", workdir, frames, schema)
+    assert pinned.sparkSession is not spark
+    assert pinned.sparkSession.conf.get(key) == "3"
+    assert spark.conf.get(key) == before
+    assert plain.sparkSession is spark
+    assert calls == [1]
+    assert run1 != run2
+    assert os.path.isdir(run1) and os.path.isdir(run2)
 
 
 def test_sentinel_frame_is_max_plus_hours_under_a_non_utc_driver(spark):
