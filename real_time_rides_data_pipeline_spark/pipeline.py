@@ -15,9 +15,8 @@ from pyspark.sql import DataFrame
 
 from real_time_rides_data_pipeline_spark.operators import (
     drop_malformed,
-    expand_struct,
     hourly_driver_agg,
-    parse_json_events,
+    parse_ride_columns,
     stream_dedup,
     validity_filter,
     with_suspicious_flag,
@@ -41,16 +40,10 @@ def silver_transform(bronze_df: DataFrame, watermark: str = "10 minutes") -> Dat
 
     Order matters for scale: malformed filter and validity predicate run
     BEFORE the stateful dedup so state stores only ever hold valid rows.
+    One plan shape for batch and stream: ``parse_ride_columns`` parses
+    each row's JSON once in both, so neither needs a materializing barrier.
     """
-    parsed = parse_json_events(drop_malformed(bronze_df))
-    rides = expand_struct(parsed, "timestamp")
-    if not rides.isStreaming:
-        # Parse-once barrier: CollapseProject would otherwise inline from_json
-        # into every downstream field reference (the validity filter alone
-        # re-parses per field) — measured ~4× on the batch pipeline. A lazy
-        # localCheckpoint materializes the expanded columns exactly once.
-        # Streaming keeps pure lineage (micro-batches materialize per batch).
-        rides = rides.localCheckpoint(eager=False)
+    rides = parse_ride_columns(drop_malformed(bronze_df), "timestamp")
     rides = with_trip_duration(rides)
     rides = with_trip_distance(rides)
     rides = validity_filter(rides)

@@ -94,9 +94,9 @@ def merge_upsert_parquet(
     def fold(target: DataFrame | None) -> DataFrame:
         if target is None:
             return updates
-        keep = target.join(
-            updates.select(*keys).distinct(), list(keys), "left_anti"
-        )
+        # No distinct on the key side: duplicate right keys cannot change
+        # a left_anti result, and the distinct costs an aggregate stage.
+        keep = target.join(updates.select(*keys), list(keys), "left_anti")
         return keep.unionByName(updates)
 
     try:
@@ -254,8 +254,10 @@ def _merge_into(
         and batch_id <= prior_marker
     ):
         return
+    # Every commit writes a fold's schema, and ``fold(None)`` has it: read
+    # the table with it instead of running a schema-inference job.
     existing = (
-        spark.read.parquet(target_path)
+        spark.read.schema(fold(None).schema).parquet(target_path)
         if os.path.exists(target_path)
         else None
     )

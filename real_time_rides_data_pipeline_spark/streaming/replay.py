@@ -3,10 +3,13 @@ stage the replay input once per process, open it as a stream with its
 own run directory, drain every available micro-batch, stop the query —
 plus the sentinel row that flushes a watermark.
 
-A file source lists new files in modification-time order, so a
-directory whose files are stamped in order replays the same micro-batch
-schedule on every run: under ``maxFilesPerTrigger=1`` each file is one
-micro-batch, and a zero-row file is a zero-row batch.
+A file source reads new files in modification-time order, and files
+that share an mtime in directory-listing order, which can change from
+run to run. ``stage_batches`` gives every staged file its own mtime, so
+a staged directory replays the same micro-batch schedule on every run:
+under ``maxFilesPerTrigger=1`` each file is one micro-batch, in frame
+order and within a frame in part-file order, and a zero-row file is a
+zero-row batch.
 """
 
 from __future__ import annotations
@@ -24,9 +27,10 @@ from real_time_rides_data_pipeline_spark.scratch import scratch_dir, staged
 from real_time_rides_data_pipeline_spark.session import scoped_writer_session
 from real_time_rides_data_pipeline_spark.sources.files import parquet_stream
 
-#: Seconds between the mtimes of consecutive frames. Filesystem mtime
-#: granularity can be as coarse as 1-2 s, so files written back to back
-#: may share a timestamp and list in either order; 4 s apart they cannot.
+#: Seconds between the mtimes of consecutive staged files. Filesystem
+#: mtime granularity can be as coarse as 1-2 s, so files written back to
+#: back may share a timestamp and list in either order; 4 s apart they
+#: cannot.
 FRAME_SPACING_S = 4
 
 
@@ -36,29 +40,28 @@ def stage_batches(
     """Write the DataFrames ``frames()`` returns into one directory, once
     per process per ``(tag, sf_dir)``, and return that directory.
 
-    Each frame is written as it is (its partitions set its file count),
-    and every file of frame *i* gets an mtime older than every file of
-    frame *i+1*, so a file stream replays the frames in list order.
+    Each frame is written as it is (its partitions set its file count).
+    Every file gets its own mtime, ``FRAME_SPACING_S`` apart: frame *i*'s
+    files are older than frame *i+1*'s, and within a frame they go in
+    file-name order (the ``part-0000N`` index), so a file stream replays
+    the frames in list order and each frame's files in partition order.
     ``frames`` runs only on the first call: later calls return the
     staged path without analysing or writing anything."""
 
     def write(d: str) -> None:
-        batches = []
+        files = []
         for df in frames():
             before = set(os.listdir(d))
             df.write.mode("append").parquet(d)
-            batches.append(
-                [
-                    f
-                    for f in set(os.listdir(d)) - before
-                    if not f.startswith(("_", "."))
-                ]
+            files += sorted(
+                f
+                for f in set(os.listdir(d)) - before
+                if not f.startswith(("_", "."))
             )
-        t0 = time.time() - FRAME_SPACING_S * len(batches)
-        for i, files in enumerate(batches):
+        t0 = time.time() - FRAME_SPACING_S * len(files)
+        for i, f in enumerate(files):
             t = t0 + i * FRAME_SPACING_S
-            for f in files:
-                os.utime(os.path.join(d, f), (t, t))
+            os.utime(os.path.join(d, f), (t, t))
 
     return staged((tag, sf_dir), write)
 

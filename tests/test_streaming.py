@@ -3,6 +3,7 @@ full medallion pipeline, generator-replay invariants, and MERGE semantics."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import sys
@@ -110,6 +111,92 @@ def test_silver_stream_equals_batch(spark, bronze_input, silver_stream):
     # with fare > 300 occurs naturally: duration 1-15 min, fare 50-1000)
     susp = streamed.filter("is_suspicious").count()
     assert 0.05 * streamed.count() <= susp <= 0.22 * streamed.count()
+
+
+def test_silver_parses_each_ride_once_in_batch_and_stream(spark, workdir, bronze_input):
+    """Silver's optimized plan holds one ``from_json`` in batch and in
+    stream, with no ``localCheckpoint`` barrier (a ``LogicalRDD``): the
+    validity filter on the parsed fields must not be pushed below the
+    parse and copy it per field."""
+    input_path, _ = bronze_input
+    batch = silver_transform(spark.read.parquet(input_path))
+    plan = batch._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json(") == 1, plan
+    assert "LogicalRDD" not in plan, plan
+
+    q = run_to_completion(
+        silver_transform(parquet_stream(spark, input_path, BRONZE_SCHEMA))
+        .writeStream.format("noop")
+        .option("checkpointLocation", f"{workdir}/parse_once_ckpt")
+    )
+    explained = q._jsq.explainInternal(True)
+    plan = explained.split("== Optimized Logical Plan ==")[1].split("== Physical Plan ==")[0]
+    assert plan.count("from_json(") == 1, plan
+    assert "LogicalRDD" not in plan, plan
+
+
+def _two_step_silver(bronze_df):
+    """Silver as it was built before ``parse_ride_columns``: the JSON
+    parsed into a struct column, the struct expanded with ``data.*``, and
+    (batch only) a lazy ``localCheckpoint`` after the expansion."""
+    from real_time_rides_data_pipeline_spark import operators as ops
+
+    rides = ops.expand_struct(
+        ops.parse_json_events(ops.drop_malformed(bronze_df)), "timestamp"
+    )
+    if not rides.isStreaming:
+        rides = rides.localCheckpoint(eager=False)
+    rides = ops.validity_filter(
+        ops.with_trip_distance(ops.with_trip_duration(rides))
+    )
+    rides = ops.stream_dedup(
+        rides, keys=("ride_id", "event_timestamp"), event_time_col="event_timestamp"
+    )
+    return ops.with_suspicious_flag(rides)
+
+
+def test_silver_odd_json_payloads_match_the_two_step_parse(spark, workdir):
+    """Payloads that are valid JSON but not a ride object (``123``, ``[]``,
+    ``"x"``, ``null``, ``{}``) pass ``drop_malformed``; parsed once through
+    ``inline`` they give the same columns and the same Silver rows as the
+    struct-then-``data.*`` parse, in batch and in stream. A real ride rides
+    along so the Silver comparison is not between two empty tables."""
+    from real_time_rides_data_pipeline_spark import operators as ops
+
+    odd = ["123", "[]", '"x"', "null", "{}"]
+    ride = generate_events(GenConfig(seed=7, n_events=1))[0]
+    ts = ride["timestamp"]
+    path = f"{workdir}/odd_payloads"
+    spark.createDataFrame(
+        [(p, ts) for p in odd] + [(ride["json"], ts)], BRONZE_SCHEMA
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+    bronze = spark.read.parquet(path)
+    assert bronze.filter(F.try_parse_json("raw_json_data").isNull()).count() == 0
+
+    kept = ops.drop_malformed(bronze)
+    one = ops.parse_ride_columns(kept, "timestamp")
+    two = ops.expand_struct(ops.parse_json_events(kept), "timestamp")
+    assert one.schema == two.schema
+    assert sorted(map(tuple, one.collect()), key=repr) == sorted(
+        map(tuple, two.collect()), key=repr
+    )
+    assert one.count() == len(odd) + 1
+
+    cols = silver_transform(bronze).columns
+    batch_rows = _sorted_rows(silver_transform(bronze), cols)
+    assert batch_rows == _sorted_rows(_two_step_silver(bronze), cols)
+    assert [r[0] for r in batch_rows] == [json.loads(ride["json"])["ride_id"]]
+
+    streamed = {}
+    for name, build in (("odd_one", silver_transform), ("odd_two", _two_step_silver)):
+        run_to_completion(
+            build(parquet_stream(spark, path, BRONZE_SCHEMA))
+            .writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", f"{workdir}/{name}_ckpt")
+        )
+        streamed[name] = _sorted_rows(spark.table(name), cols)
+    assert streamed["odd_one"] == streamed["odd_two"] == batch_rows
 
 
 def test_gold_stream_merge_equals_batch(spark, workdir, bronze_input, silver_stream):
@@ -850,6 +937,82 @@ def test_stream_checkpoint_commits_fork_no_process_per_file(spark, workdir):
     assert forks < 1_150, f"{forks} processes forked by a two-batch drain"
 
 
+def _stream_thread_ticks(pid: int) -> tuple[int, int]:
+    """(user + system CPU clock ticks spent so far, thread count) of the
+    JVM ``pid``'s stream execution threads. Linux keeps the first 15
+    characters of a thread's name."""
+    ticks = threads = 0
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/stat") as f:
+                head, rest = f.read().rsplit(")", 1)
+        except OSError:  # the thread ended while being read
+            continue
+        if head.split("(", 1)[1] == "stream execution"[:15]:
+            fields = rest.split()
+            ticks += int(fields[11]) + int(fields[12])
+            threads += 1
+    return ticks, threads
+
+
+@pytest.mark.skipif(
+    not os.path.exists("/proc/self/task") or bool(os.environ.get("SPARK_MASTER")),
+    reason="reads the local driver JVM's threads from /proc on Linux",
+)
+def test_idle_file_stream_does_not_spin(spark, workdir):
+    """A stream without a trigger interval that finds no new data sleeps
+    ``spark.sql.streaming.pollingDelay`` and then asks its file source
+    again, which re-reads the upstream sink's ``_spark_metadata`` log.
+    Over 3 idle seconds after draining a stream over a 5-batch file-sink
+    directory, the driver JVM's stream execution thread spent 0.94 CPU s
+    at Spark's 10 ms delay and 0.16 s at the session's 100 ms (4 CPUs,
+    this module run whole); the bound sits midway, so a session edit
+    that brings the 10 ms spin back fails here. The stream runs in a
+    writer-session clone, which must poll at its parent's delay, also
+    one set at runtime."""
+    import time
+
+    from real_time_rides_data_pipeline_spark.session import scoped_writer_session
+
+    key = "spark.sql.streaming.pollingDelay"
+    delay = spark.conf.get(key)
+    spark.conf.set(key, "150ms")  # a runtime value, not the SparkConf's
+    try:
+        assert scoped_writer_session(spark, 2).conf.get(key) == "150ms"
+    finally:
+        spark.conf.set(key, delay)
+    clone = scoped_writer_session(spark, 2)
+    schema = spark.range(0).schema
+    input_path, sink = f"{workdir}/idle_input", f"{workdir}/idle_sink"
+    for i in range(5):
+        spark.range(i * 100, (i + 1) * 100).coalesce(1).write.mode(
+            "append"
+        ).parquet(input_path)
+    run_to_completion(
+        parquet_stream(spark, input_path, schema, max_files_per_trigger=1)
+        .writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", f"{workdir}/idle_sink_ckpt")
+    )
+    sq = (
+        parquet_stream(clone, sink, schema)
+        .writeStream.format("noop")
+        .option("checkpointLocation", f"{workdir}/idle_ckpt")
+        .start()
+    )
+    try:
+        sq.processAllAvailable()
+        jvm = spark._jvm.java.lang.ProcessHandle.current().pid()
+        before, threads = _stream_thread_ticks(jvm)
+        time.sleep(3)
+        idle = _stream_thread_ticks(jvm)[0] - before
+    finally:
+        sq.stop()
+    assert threads >= 1, "no stream execution thread found in /proc"
+    tick = os.sysconf("SC_CLK_TCK")
+    assert idle / tick < 0.55, f"{idle / tick:.2f} CPU s spent by an idle stream in 3 s"
+
+
 def test_socket_source_streams_live_lines(spark, workdir):
     """A LIVE network streaming source end-to-end — the closest available
     analog to the reference's Kafka read (sources/kafka.py is
@@ -1238,6 +1401,27 @@ def test_stage_batches_replays_one_batch_per_frame_in_order(spark, workdir):
         .option("checkpointLocation", f"{workdir}/stage_order_ckpt")
     )
     assert [p.numInputRows for p in q.recentProgress] == [25, 0, 7]
+
+
+def test_stage_batches_replays_a_frames_files_in_part_order(spark, workdir):
+    """A two-file frame replays one file per micro-batch in part-file
+    order (rows 0-2, then 3-6), then the next frame: every staged file
+    has its own mtime, so the schedule does not follow the listing order
+    of the part files' random names."""
+    inp = stage_batches(
+        "stage_parts",
+        workdir,
+        lambda: [spark.range(0, 7, numPartitions=2), spark.range(7, 8).coalesce(1)],
+    )
+    files = sorted(f for f in os.listdir(inp) if f.endswith(".parquet"))
+    mtimes = [os.path.getmtime(os.path.join(inp, f)) for f in files]
+    assert len(set(mtimes)) == len(files) == 3
+    q = run_to_completion(
+        parquet_stream(spark, inp, spark.range(0).schema, max_files_per_trigger=1)
+        .writeStream.format("noop")
+        .option("checkpointLocation", f"{workdir}/stage_parts_ckpt")
+    )
+    assert [p.numInputRows for p in q.recentProgress] == [3, 4, 1]
 
 
 def test_stage_batches_second_call_is_a_pure_lookup(spark, workdir):
