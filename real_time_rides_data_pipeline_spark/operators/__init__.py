@@ -10,7 +10,6 @@ from real_time_rides_data_pipeline_spark.operators.parse import (
     parse_json_events,
     drop_malformed,
     expand_struct,
-    parse_ride_columns,
 )
 from real_time_rides_data_pipeline_spark.operators.clean import (
     with_trip_duration,
@@ -34,7 +33,6 @@ __all__ = [
     "parse_json_events",
     "drop_malformed",
     "expand_struct",
-    "parse_ride_columns",
     "with_trip_duration",
     "with_trip_distance",
     "validity_filter",

@@ -6,7 +6,6 @@ Semantics per the reference (cited file:line are into /root/reference/src/):
 - ``parse_json_events`` — 02_silver_realtime_rides.py:46-47 (schema 02:25-34)
 - ``drop_malformed``    — 02_silver_realtime_rides.py:48
 - ``expand_struct``     — 02_silver_realtime_rides.py:49
-- ``parse_ride_columns`` — 02_silver_realtime_rides.py:46-49 as one step
 """
 
 from __future__ import annotations
@@ -62,23 +61,15 @@ def drop_malformed(df: DataFrame, json_col: str = "raw_json_data") -> DataFrame:
 
 def expand_struct(df: DataFrame, *keep: str) -> DataFrame:
     """Flatten the parsed ``data`` struct to top-level columns (``SELECT
-    data.*``), carrying through any extra columns named in ``keep``."""
-    return df.select("data.*", *keep)
+    data.*``), carrying through any extra columns named in ``keep``.
 
-
-def parse_ride_columns(df: DataFrame, *keep: str) -> DataFrame:
-    """Parse ``raw_json_data`` into ``RIDE_SCHEMA``'s fields as top-level
-    columns, followed by the columns named in ``keep``, with the JSON
-    parsed once per row in batch and in stream.
-
-    ``parse_json_events`` then ``expand_struct`` leaves one ``from_json``
-    per field reference after CollapseProject, and Catalyst pushes a
-    filter on those fields through the projection, so a validity filter
-    over n fields parses each row n more times (10 ``from_json`` in
-    streaming Silver). Here the struct leaves through
-    ``inline(array(...))``, a ``Generate``: a predicate on generator
-    output is never pushed below it, so nothing downstream copies the
-    parse. A one-element array yields one row per input row, also when
-    ``from_json`` returns NULL (a row of NULLs, as ``data.*`` gives)."""
-    parsed = F.from_json(F.col("raw_json_data"), RIDE_SCHEMA)
-    return df.select(F.inline(F.array(parsed)), *keep)
+    The struct leaves through ``inline(array(data))``, a ``Generate``, not
+    a ``data.*`` projection. After ``parse_json_events`` a projection
+    would leave ``data`` as an alias of ``from_json``, and Catalyst pushes
+    a filter on the expanded fields through it, copying the parse once per
+    field referenced (10 ``from_json`` in streaming Silver). A predicate on
+    generator output is never pushed below the ``Generate``, so the JSON
+    is parsed once per row, in batch and in stream. A one-element array
+    yields one row per input row, also when ``data`` is NULL (a row of
+    NULLs, as ``data.*`` gives)."""
+    return df.select(F.inline(F.array("data")), *keep)

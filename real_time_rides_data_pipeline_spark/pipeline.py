@@ -15,8 +15,9 @@ from pyspark.sql import DataFrame
 
 from real_time_rides_data_pipeline_spark.operators import (
     drop_malformed,
+    expand_struct,
     hourly_driver_agg,
-    parse_ride_columns,
+    parse_json_events,
     stream_dedup,
     validity_filter,
     with_suspicious_flag,
@@ -40,10 +41,12 @@ def silver_transform(bronze_df: DataFrame, watermark: str = "10 minutes") -> Dat
 
     Order matters for scale: malformed filter and validity predicate run
     BEFORE the stateful dedup so state stores only ever hold valid rows.
-    One plan shape for batch and stream: ``parse_ride_columns`` parses
-    each row's JSON once in both, so neither needs a materializing barrier.
+    One plan shape for batch and stream: ``expand_struct`` leaves each
+    row's JSON parsed once in both, so neither needs a materializing
+    barrier.
     """
-    rides = parse_ride_columns(drop_malformed(bronze_df), "timestamp")
+    parsed = parse_json_events(drop_malformed(bronze_df))
+    rides = expand_struct(parsed, "timestamp")
     rides = with_trip_duration(rides)
     rides = with_trip_distance(rides)
     rides = validity_filter(rides)

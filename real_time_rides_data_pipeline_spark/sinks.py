@@ -254,14 +254,29 @@ def _merge_into(
         and batch_id <= prior_marker
     ):
         return
-    # Every commit writes a fold's schema, and ``fold(None)`` has it: read
-    # the table with it instead of running a schema-inference job.
-    existing = (
-        spark.read.schema(fold(None).schema).parquet(target_path)
+    # The table is read with ``fold(None)``'s schema, not by a schema-
+    # inference job. That is the committed schema only for a fold whose
+    # column types do not change from merge to merge: BIGINT and double
+    # sums, min/max, latest-wins rows. A ``sum`` over DECIMAL(p,s) widens
+    # to DECIMAL(p+10,s) on every merge, so the types are compared (an
+    # analysis, no job) and a widening fold fails before it writes. The
+    # comparison is by name: a fold may reorder columns (a join puts its
+    # keys first), and parquet is read by name.
+    schema = fold(None).schema
+    merged = fold(
+        spark.read.schema(schema).parquet(target_path)
         if os.path.exists(target_path)
         else None
     )
-    _commit_with_marker(fold(existing), target_path, batch_id, prior_marker)
+    before, after = (
+        sorted(f.simpleString() for f in s) for s in (schema, merged.schema)
+    )
+    if after != before:
+        raise ValueError(
+            f"merge into {target_path} would change its column types from "
+            f"{before} to {after}"
+        )
+    _commit_with_marker(merged, target_path, batch_id, prior_marker)
 
 
 def merge_cdc_parquet(

@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -418,6 +419,36 @@ def test_merge_commit_path_survives_crash_replay_and_failure(spark, tmp_path, na
     assert _tree_bytes(target) == files
     assert _rows(spark, target) == rows
     assert sinks._read_batch_marker(target) == 1
+
+
+def test_merge_refuses_a_fold_that_widens_its_column_types(spark, tmp_path):
+    """``_merge_into`` reads the table with the bootstrap fold's schema, so
+    a fold whose types change from merge to merge (``sum`` over DECIMAL
+    widens its precision each time) must fail before it writes, leaving
+    table and marker as the last commit left them. A fold that only
+    reorders the columns (an upsert on a key that is not the first
+    column) keeps merging."""
+    reordered = str(tmp_path / "upsert")
+    for v in (1, 2):
+        df = spark.createDataFrame([(v, 1)], "v long, k long")
+        sinks.merge_upsert_parquet(spark, df, reordered, ("k",))
+    assert _rows(spark, reordered) == [(1, 2)]
+
+    target = str(tmp_path / "state")
+    cols = "k long, v decimal(10,2)"
+
+    def merge(rows, batch_id):
+        sinks.merge_distributive_parquet(
+            spark, spark.createDataFrame(rows, cols), target, keys=("k",),
+            agg_spec={"v": "sum"}, batch_id=batch_id,
+        )
+
+    merge([(1, Decimal("1.50"))], 0)
+    files = _tree_bytes(target)
+    with pytest.raises(ValueError, match="column types"):
+        merge([(1, Decimal("2.25"))], 1)
+    assert _tree_bytes(target) == files
+    assert sinks._read_batch_marker(target) == 0
 
 
 def test_merge_commit_and_stream_adapter_exist_once():
